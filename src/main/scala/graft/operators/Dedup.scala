@@ -1359,10 +1359,12 @@ object Dedup {
     // score column — size(tokens(text)) for q133 — over the ENTIRE
     // corpus scan. With the projection above the broadcast join, the
     // expensive expression runs on members only; same rows, same values.
+    // The join key is private (`_mid`), not `id`: a corpus whose id
+    // column is itself named `id` would otherwise carry two `id` columns.
     val memberScores = df
-      .select(col(idCol).cast("long").as("id") +: df.columns.map(col): _*)
-      .join(hint(comp), Seq("id"))
-      .select(col("id"), col("comp"), score.as("_score"))
+      .select(col(idCol).cast("long").as("_mid") +: df.columns.map(col): _*)
+      .join(hint(comp.select(col("id").as("_mid"), col("comp").as("_comp"))), Seq("_mid"))
+      .select(col("_mid").as("id"), col("_comp").as("comp"), score.as("_score"))
     val winners = memberScores.groupBy(col("comp"))
       .agg(max(struct(col("_score"), (-col("id")).as("_nid"),
         col("id").as("_win"))).as("_m"))

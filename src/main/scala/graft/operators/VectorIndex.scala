@@ -19,7 +19,16 @@ import org.apache.spark.sql.types._
   *
   * Layout: `<path>/corpus/bucket=<b>/…` (IVF) or
   * `<path>/corpus/table=<t>/bucket=<b>/…` (LSH, corpus written `tables`
-  * times), plus `<path>/meta/` (one small parquet).
+  * times), plus `<path>/meta/` (one small parquet) and, for IVF-PQ,
+  * `<path>/pqmeta/` and the optional `<path>/opqmeta/`.
+  *
+  * The path stays the only input, but the IVF sidecars are not re-read
+  * per call: each reader decodes its sidecar once per sidecar VERSION and
+  * memoizes the result by file identity — the (name, mtime, length) of
+  * every file in the sidecar dir, checked with one `listStatus` on every
+  * call. Spark part-file names carry a per-write UUID, so any rewrite of a
+  * sidecar misses the memo; appends touch only `corpus/bucket=*`, whose
+  * files are listed afresh by every probe.
   */
 object VectorIndex {
 
@@ -38,9 +47,14 @@ object VectorIndex {
     writeCentroidMeta(df.sparkSession, centroids, path)
   }
 
-  def readIvfCentroids(spark: SparkSession, path: String): Seq[Seq[Double]] =
-    spark.read.parquet(s"$path/meta").orderBy("bucket").collect()
-      .map(_.getSeq[Double](1).toSeq).toSeq
+  /** The coarse centroids in bucket order, memoized per `meta` version. */
+  def readIvfCentroids(spark: SparkSession, path: String): Seq[Seq[Double]] = {
+    val dir = s"$path/meta"
+    centroidMemo(dir, listing(spark, dir)) {
+      readSidecar(spark, dir, CentroidMetaSchema).sortBy(_.getInt(0))
+        .map(_.getSeq[Double](1).toSeq).toSeq
+    }
+  }
 
   /** Incremental append to a written IVF index — the ingest-side twin of
     * [[writeIvf]]: the new batch is assigned against the SIDECAR centroids
@@ -96,7 +110,7 @@ object VectorIndex {
       excludeId: Option[Long] = None): DataFrame = {
     val centroids = readIvfCentroids(spark, path)
     val probe = Similarity.probeBuckets(centroids, query, nprobe)
-    val corpus = spark.read.parquet(s"$path/corpus")
+    val corpus = readIvfCorpus(spark, path)
       .where(col("bucket").isin(probe: _*))
     Similarity.bruteTopK(corpus, idCol, vecCol, query, k, excludeId)
   }
@@ -133,7 +147,7 @@ object VectorIndex {
       excludeId: Option[Long] = None): DataFrame = {
     val centroids = readIvfCentroids(spark, path)
     val probe = Similarity.probeBuckets(centroids, query, nprobe)
-    val corpus = spark.read.parquet(s"$path/corpus")
+    val corpus = readIvfCorpus(spark, path)
       .where(col("bucket").isin(probe: _*))
       .withColumn("_vec",
         transform(col("q8"), b => b.cast("double") * col("scale") / 127.0))
@@ -224,17 +238,21 @@ object VectorIndex {
     * encoded purely from the path's three sidecars (centroids, codebooks,
     * optional rotation) — no rebuild, no driver state, O(batch) work —
     * and appended into the same `bucket=` dirs so probes keep pruning
-    * over old + new rows. */
+    * over old + new rows. The sidecars come from the per-version memo
+    * (object doc): a warm append runs no sidecar-read job, only its own
+    * write. The append rewrites no sidecar, so it keeps the memo warm for
+    * the probes that follow. */
   def appendIvfPq(
       df: DataFrame, idCol: String, vecCol: String, path: String): Unit = {
     val spark = df.sparkSession
+    // first: the pending-marker refusal runs before any memo lookup
+    val rotation = readOpqRotation(spark, path)
     val centroids = readIvfCentroids(spark, path)
-    val model = readPqMeta(spark, path)
-    val residual = readPqResidual(spark, path)
+    val (model, residual) = readPq(spark, path)
     val raw =
       if (residual) ProductQuantizer.residualCol(col(vecCol), col("bucket"), centroids)
       else col(vecCol)
-    val codeSrc = readOpqRotation(spark, path) match {
+    val codeSrc = rotation match {
       case Some((d, flat)) => graft.functions.ArrayMath.matVec(raw, new graft.functions.RotMat(d, flat))
       case None => raw
     }
@@ -283,23 +301,31 @@ object VectorIndex {
     * columns (m lookups/row off the narrow scan), broadcast the
     * `shortlist` ids back as a pushed-down semi-join on the SAME pruned
     * dirs to fetch raw vectors, exact-rank those. Recall is spec-measured;
-    * cost per probe is (pruned rows × 8 B) + (shortlist × dim × 4 B). */
+    * cost per probe is (pruned rows × 8 B) + (shortlist × dim × 4 B).
+    *
+    * The path is the only input. Its sidecars (centroids, codebooks,
+    * residual flag, rotation) and the corpus read schema come from the
+    * per-version memo (object doc), so a warm probe costs three
+    * `listStatus` calls, one marker check and the probe's own jobs; the
+    * corpus files themselves are listed on every call, so rows appended
+    * since the last probe are scanned. */
   def ivfTopKPq(
       spark: SparkSession, path: String, idCol: String, vecCol: String,
       query: Seq[Double], nprobe: Int, k: Int, shortlist: Int = 100,
       excludeId: Option[Long] = None): DataFrame = {
     require(shortlist >= k, "shortlist must cover k")
+    // first: the pending-marker refusal runs before any memo lookup
+    val rotation = readOpqRotation(spark, path)
     val centroids = readIvfCentroids(spark, path)
-    val model = readPqMeta(spark, path)
-    val residual = readPqResidual(spark, path)
+    val (model, residual) = readPq(spark, path)
     // OPQ index: codes live in rotated space, so the ADC query rotates
     // ONCE here; the exact re-rank below stays in raw space untouched
-    val adcQuery = readOpqRotation(spark, path) match {
+    val adcQuery = rotation match {
       case Some((d, flat)) => Opq.OpqModel(d, flat, model).rotate(query)
       case None => query
     }
     val probe = Similarity.probeBuckets(centroids, query, nprobe)
-    val pruned = spark.read.parquet(s"$path/corpus")
+    val pruned = readIvfCorpus(spark, path)
       .where(col("bucket").isin(probe: _*))
     // residual codes reconstruct v − c_b, so the ADC dot gets the
     // per-bucket constant q·c_b back (C-length literal, indexed by the
@@ -325,12 +351,7 @@ object VectorIndex {
       (book, j) <- model.books.zipWithIndex
       (cent, c) <- book.zipWithIndex
     } yield Row(j, c, cent, residual)
-    val schema = StructType(Seq(
-      StructField("subspace", IntegerType, nullable = false),
-      StructField("cell", IntegerType, nullable = false),
-      StructField("centroid", ArrayType(DoubleType), nullable = false),
-      StructField("residual", BooleanType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), PqMetaSchema)
       .write.mode("overwrite").parquet(s"$path/pqmeta")
   }
 
@@ -339,10 +360,7 @@ object VectorIndex {
     val rows = (0 until opq.d).map { r =>
       Row(r, opq.rotFlat.slice(r * opq.d, (r + 1) * opq.d).toSeq)
     }
-    val schema = StructType(Seq(
-      StructField("row", IntegerType, nullable = false),
-      StructField("coeffs", ArrayType(DoubleType), nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), OpqMetaSchema)
       .write.mode("overwrite").parquet(s"$path/opqmeta")
   }
 
@@ -376,7 +394,10 @@ object VectorIndex {
   /** The index's OPQ rotation, if one was written — `(dim, row-major
     * d×d)`; `None` means plain (unrotated) codes. Probes and appends call
     * this, so an index's rotation is part of the path like everything
-    * else. */
+    * else. The pending-marker refusal runs on EVERY call, before the
+    * memo is consulted: a torn publish refuses on a warm memo exactly as
+    * on a cold one. The decoded rotation is memoized per `opqmeta`
+    * version (object doc); each call gets its own copy of the array. */
   def readOpqRotation(spark: SparkSession, path: String): Option[(Int, Array[Double])] = {
     val fs = opqPendingPath(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -385,22 +406,28 @@ object VectorIndex {
         "its corpus write and its rotation sidecar) — run repairIvfPqOpq " +
         "(or re-run writeIvfPqOpq) before probing or appending; decoding " +
         "these codes without their rotation would silently degrade recall")
-    readOpqRotationUnchecked(spark, path)
+    val dir = s"$path/opqmeta"
+    val files = listing(spark, dir)
+    rotationMemo(dir, files)(decodeRotation(spark, dir, files))
+      .map { case (d, flat) => (d, flat.clone()) }
   }
 
-  /** [[readOpqRotation]] WITHOUT the pending-marker refusal — only the
-    * repair path may look at a torn publish's sidecar state. */
+  /** [[readOpqRotation]] WITHOUT the pending-marker refusal and without
+    * the memo — only the repair path may look at a torn publish's
+    * sidecar state, and it reads what is on disk now. */
   private def readOpqRotationUnchecked(
       spark: SparkSession, path: String): Option[(Int, Array[Double])] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/opqmeta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val rows = spark.read.parquet(s"$path/opqmeta").orderBy("row").collect()
-      val d = rows.length
-      Some((d, rows.flatMap(_.getSeq[Double](1)).toArray))
-    }
+    val dir = s"$path/opqmeta"
+    decodeRotation(spark, dir, listing(spark, dir))
   }
+
+  private def decodeRotation(
+      spark: SparkSession, dir: String, files: Seq[FileId]): Option[(Int, Array[Double])] =
+    if (files.isEmpty) None
+    else {
+      val rows = readSidecar(spark, dir, OpqMetaSchema).sortBy(_.getInt(0))
+      Some((rows.length, rows.flatMap(_.getSeq[Double](1)).toArray))
+    }
 
   /** Recovery verb for a torn publish ([[readOpqRotation]]'s refusal):
     * re-derives a CONSISTENT index from what survived on disk, with no
@@ -469,29 +496,105 @@ object VectorIndex {
 
   /** Whether the index's codes quantize residuals (older sidecars without
     * the column read as plain-PQ). */
-  def readPqResidual(spark: SparkSession, path: String): Boolean = {
-    val meta = spark.read.parquet(s"$path/pqmeta")
-    if (meta.columns.contains("residual")) meta.select("residual").head().getBoolean(0)
-    else false
+  def readPqResidual(spark: SparkSession, path: String): Boolean = readPq(spark, path)._2
+
+  def readPqMeta(spark: SparkSession, path: String): ProductQuantizer.PqModel =
+    readPq(spark, path)._1
+
+  /** Codebooks and residual flag: ONE read of `pqmeta`, memoized per
+    * version. A `pqmeta` written before the `residual` column existed
+    * reads the column as null: plain PQ. */
+  private def readPq(
+      spark: SparkSession, path: String): (ProductQuantizer.PqModel, Boolean) = {
+    val dir = s"$path/pqmeta"
+    pqMemo(dir, listing(spark, dir)) {
+      val rows = readSidecar(spark, dir, PqMetaSchema)
+      val books = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+        .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toSeq).toSeq)
+      val residual = rows.headOption.exists(r => !r.isNullAt(3) && r.getBoolean(3))
+      (ProductQuantizer.PqModel(books.size, books.head.head.length, books), residual)
+    }
   }
 
-  def readPqMeta(spark: SparkSession, path: String): ProductQuantizer.PqModel = {
-    val rows = spark.read.parquet(s"$path/pqmeta")
-      .orderBy("subspace", "cell").collect()
-    val m = rows.map(_.getInt(0)).max + 1
-    val books = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toSeq).toSeq)
-    ProductQuantizer.PqModel(m, books.head.head.length, books)
-  }
-
-  private def writeCentroidMeta(
+  private[graft] def writeCentroidMeta(
       spark: SparkSession, centroids: Seq[Seq[Double]], path: String): Unit = {
     val rows = centroids.zipWithIndex.map { case (c, i) => Row(i, c) }
-    val schema = StructType(Seq(
-      StructField("bucket", IntegerType, nullable = false),
-      StructField("centroid", ArrayType(DoubleType), nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), CentroidMetaSchema)
       .write.mode("overwrite").parquet(s"$path/meta")
+  }
+
+  // ------------------------------------------------------ sidecar memo
+
+  // the schemas the sidecar writers fix: a cold read needs no footer
+  // inference job
+  private val CentroidMetaSchema = StructType(Seq(
+    StructField("bucket", IntegerType, nullable = false),
+    StructField("centroid", ArrayType(DoubleType), nullable = false)))
+  private val PqMetaSchema = StructType(Seq(
+    StructField("subspace", IntegerType, nullable = false),
+    StructField("cell", IntegerType, nullable = false),
+    StructField("centroid", ArrayType(DoubleType), nullable = false),
+    StructField("residual", BooleanType, nullable = false)))
+  private val OpqMetaSchema = StructType(Seq(
+    StructField("row", IntegerType, nullable = false),
+    StructField("coeffs", ArrayType(DoubleType), nullable = false)))
+
+  /** A sidecar's rows in file order (callers sort on the driver: a
+    * handful of rows needs no sort job). Read nullable, so a column an
+    * older writer did not emit reads as null instead of failing. */
+  private def readSidecar(spark: SparkSession, dir: String, schema: StructType): Array[Row] =
+    spark.read.schema(StructType(schema.map(_.copy(nullable = true)))).parquet(dir).collect()
+
+  /** A file's identity: (name, modification time, length). */
+  private type FileId = (String, Long, Long)
+
+  /** Every entry of `dir` (data files, checksums, commit markers) by
+    * identity; empty when the dir does not exist. */
+  private def listing(spark: SparkSession, dir: String): Seq[FileId] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try fs.listStatus(p).toSeq
+      .map(s => (s.getPath.getName, s.getModificationTime, s.getLen)).sorted
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  /** Values decoded from a sidecar dir, kept while the dir still lists
+    * the files they were decoded from. LRU, bounded at [[MemoEntries]]
+    * index paths. A decode runs outside the lock; two callers missing
+    * together both decode, and either result is valid for the listing. */
+  private final class SidecarMemo[T] {
+    private val entries =
+      new java.util.LinkedHashMap[String, (Seq[FileId], T)](16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[String, (Seq[FileId], T)]): Boolean = size() > MemoEntries
+      }
+
+    def apply(key: String, files: Seq[FileId])(decode: => T): T =
+      entries.synchronized(Option(entries.get(key))) match {
+        case Some((seen, v)) if seen == files => v
+        case _ =>
+          val v = decode
+          entries.synchronized(entries.put(key, (files, v)))
+          v
+      }
+  }
+
+  private val MemoEntries = 64
+  private val centroidMemo = new SidecarMemo[Seq[Seq[Double]]]
+  private val pqMemo = new SidecarMemo[(ProductQuantizer.PqModel, Boolean)]
+  private val rotationMemo = new SidecarMemo[Option[(Int, Array[Double])]]
+  private val corpusSchemaMemo = new SidecarMemo[StructType]
+
+  /** An IVF corpus as a probe reads it. The read schema is inferred once
+    * per `meta` version: every writer that replaces the corpus
+    * (`writeIvf*`, [[writeIvfPqEncoded]]) also rewrites `meta`, and
+    * appends add rows of the same schema. The files are listed on every
+    * call, so appended rows are scanned. */
+  private def readIvfCorpus(spark: SparkSession, path: String): DataFrame = {
+    val dir = s"$path/corpus"
+    val schema = corpusSchemaMemo(dir, listing(spark, s"$path/meta"))(
+      spark.read.parquet(dir).schema)
+    spark.read.schema(schema).parquet(dir)
   }
 
   // ------------------------------------------------------------------ LSH

@@ -60,16 +60,7 @@ object StreamingSemDedup {
       .repartition(col("bucket"))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("bucket", "batch_id").parquet(s"$path/corpus")
-    val spark = df.sparkSession
-    import org.apache.spark.sql.types._
-    val rows = centroids.zipWithIndex.map { case (ct, i) =>
-      org.apache.spark.sql.Row(i, ct)
-    }
-    val schema = StructType(Seq(
-      StructField("bucket", IntegerType, nullable = false),
-      StructField("centroid", ArrayType(DoubleType), nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
+    VectorIndex.writeCentroidMeta(df.sparkSession, centroids, path)
   }
 
   /** Process one micro-batch idempotently (see class doc). Package-private

@@ -246,6 +246,25 @@ class DedupSpec extends AnyFunSuite {
     assert(minId == Set(1L, 4L, 5L), s"got $minId")
   }
 
+  test("dedupCorpusBy: an id column named `id` keeps the same survivors as `doc_id`") {
+    val base = (1 to 20).map(i => s"w$i").mkString(" ")
+    val rows = Seq(
+      (1L, base), (2L, base + " extra tail words here"), (3L, base),
+      (4L, "a lonely singleton document with its own words"),
+      (5L, "x1 x2 x3 x4 x5 x6 x7 x8 x9 x10"), (6L, "x1 x2 x3 x4 x5 x6 x7 x8 x9 x10"))
+    val score = size(graft.operators.TextAnalysis.tokens(col("text")))
+    def survivors(idCol: String, limit: Int): Set[Long] =
+      Dedup.dedupCorpusBy(rows.toDF(idCol, "text"), idCol, "text", n = 3, tau = 0.6, score,
+          broadcastLoserLimit = limit)
+        .select(idCol).as[Long].collect().toSet
+    // both join shapes: broadcast members, and the unhinted shuffle
+    for (limit <- Seq(1 << 20, 0)) {
+      val byDocId = survivors("doc_id", limit)
+      assert(byDocId == Set(2L, 4L, 5L), s"doc_id, limit $limit: got $byDocId")
+      assert(survivors("id", limit) == byDocId, s"id, limit $limit")
+    }
+  }
+
   test("minhash LSH candidates verify to the same pairs as exact ngram jaccard") {
     val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.6)
       .orderBy("a", "b").as[(Long, Long, Double)].collect()

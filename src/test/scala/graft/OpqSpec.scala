@@ -338,6 +338,182 @@ class OpqSpec extends AnyFunSuite {
       "the directed remedy (publish re-run) must restore the healthy index")
   }
 
+  // ---------------------------------------------------- sidecar memo
+  // Probes and appends decode an index's sidecars once per sidecar
+  // version. These cases pin that a memoized read is indistinguishable
+  // from a fresh one: same rows warm and cold, every re-publish seen, the
+  // torn-publish refusal intact, appended rows visible, and the job
+  // savings real.
+
+  private lazy val residualModels = {
+    val (_, df) = residualFixture
+    val centroids = Similarity.kMeans(df, "vec_id", "embedding", c = 8, iters = 2)
+    val opq = graft.operators.VectorIndex
+      .trainResidualOpq(df, "vec_id", "embedding", centroids, m = 4, k = 16)
+    (centroids, opq)
+  }
+
+  private def tempIndex(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft-memo-$tag").toString
+
+  private def probeOf(
+      path: String, qid: Long, exclude: Boolean = true, nprobe: Int = 8, shortlist: Int = 60) = {
+    val (vecs, _) = residualFixture
+    val q = vecs(qid.toInt)._2.map(_.toDouble)
+    graft.operators.VectorIndex.ivfTopKPq(spark, path, "vec_id", "embedding", q,
+        nprobe = nprobe, k = 10, shortlist = shortlist,
+        excludeId = if (exclude) Some(qid) else None)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+  }
+
+  /** Jobs submitted while `f` runs, and the dirs its Dataset actions
+    * scanned (roots of every file relation in the executed plans). */
+  private def traced[T](f: => T): (T, Int, Seq[String]) = {
+    import org.apache.spark.graftshim.ListenerShim
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val scanListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.analyzed.foreach {
+          case r: LogicalRelation => r.relation match {
+            case h: HadoopFsRelation =>
+              h.location.rootPaths.foreach(p => scanned.add(p.toUri.getPath.stripSuffix("/")))
+            case _ => ()
+          }
+          case _ => ()
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerShim.drain(sc)
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(scanListener)
+    try {
+      val out = f
+      ListenerShim.drain(sc)
+      import scala.jdk.CollectionConverters._
+      (out, jobs.get, scanned.asScala.toSeq)
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(scanListener)
+    }
+  }
+
+  test("sidecar memo: warm probe == cold probe in fewer jobs; warm appends read no sidecar") {
+    import graft.operators.VectorIndex
+    import org.apache.spark.sql.functions.col
+    val (_, df) = residualFixture
+    val (centroids, opq) = residualModels
+    val path = tempIndex("warm")
+    VectorIndex.writeIvfPqOpq(df.where(col("vec_id") < 160), "vec_id", "embedding",
+      centroids, opq, path, residual = true)
+    val sidecars = Seq("meta", "pqmeta", "opqmeta").map(d => s"$path/$d")
+    def sidecarScans(dirs: Seq[String]) = dirs.filter(d => sidecars.exists(d.endsWith))
+
+    val (cold, coldJobs, coldScans) = traced(probeOf(path, 3L))
+    val (warm, warmJobs, warmScans) = traced(probeOf(path, 3L))
+    info(s"ivfTopKPq(...).collect(): $coldJobs jobs cold, $warmJobs warm")
+    assert(warm == cold, "a memoized probe must return the cold probe's rows")
+    assert(sidecarScans(coldScans).toSet.size == 3, s"cold probe scanned $coldScans")
+    assert(sidecarScans(warmScans).isEmpty, s"warm probe re-read sidecars: $warmScans")
+    assert(coldJobs <= 7, s"cold probe ran $coldJobs jobs")
+    assert(warmJobs <= 3, s"warm probe ran $warmJobs jobs")
+
+    // a warm append encodes from the memo: its only jobs are its write's
+    val (_, appendJobs, appendScans) = traced(
+      VectorIndex.appendIvfPq(df.where(col("vec_id") >= 160), "vec_id", "embedding", path))
+    info(s"warm appendIvfPq: $appendJobs jobs")
+    assert(sidecarScans(appendScans).isEmpty, s"warm append re-read sidecars: $appendScans")
+
+    // append-then-probe on the warm memo sees the appended rows, exactly
+    // as a one-shot build of the same rows does
+    val full = tempIndex("full")
+    VectorIndex.writeIvfPqOpq(df, "vec_id", "embedding", centroids, opq, full, residual = true)
+    val appendedSelf = probeOf(path, 200L, exclude = false)
+    assert(appendedSelf.map(_._1).contains(200L), s"appended id 200 missing: $appendedSelf")
+    assert(appendedSelf == probeOf(full, 200L, exclude = false))
+    assert(probeOf(path, 3L) == probeOf(full, 3L))
+  }
+
+  test("sidecar memo: a re-publish at the same path is probed as published") {
+    import graft.operators.VectorIndex
+    val (_, df) = residualFixture
+    val (centroids, opq) = residualModels
+    // two pruned cells and no re-rank slack: the rows depend on the
+    // centroids, the codebooks and the rotation alike
+    def probes(path: String) =
+      Seq(10L, 17L, 21L, 30L).map(q => probeOf(path, q, nprobe = 2, shortlist = 10))
+    val path = tempIndex("republish")
+    VectorIndex.writeIvfPqOpq(df, "vec_id", "embedding", centroids, opq, path, residual = true)
+    val opqProbe = probes(path)
+    assert(probes(path) == opqProbe) // warm
+
+    // new centroids AND new codebooks, plain over OPQ: the rotation goes
+    val centroids2 = Similarity.kMeans(df, "vec_id", "embedding", c = 6, iters = 3)
+    val plain2 = VectorIndex.trainResidualPq(df, "vec_id", "embedding", centroids2,
+      m = 4, k = 16, iters = 3)
+    VectorIndex.writeIvfPq(df, "vec_id", "embedding", centroids2, plain2, path, residual = true)
+    val fresh = tempIndex("republish-fresh")
+    VectorIndex.writeIvfPq(df, "vec_id", "embedding", centroids2, plain2, fresh, residual = true)
+    assert(VectorIndex.readOpqRotation(spark, path).isEmpty, "stale rotation served")
+    assert(VectorIndex.readIvfCentroids(spark, path) == centroids2, "stale centroids served")
+    assert(VectorIndex.readPqMeta(spark, path).books == plain2.books, "stale codebooks served")
+    val plainProbe = probes(path)
+    assert(plainProbe == probes(fresh),
+      "a re-published path must probe like a fresh path with the same index")
+    assert(plainProbe != opqProbe, "the fixture must tell the two indexes apart")
+
+    // and back to OPQ: the rotation returns with the original publish
+    VectorIndex.writeIvfPqOpq(df, "vec_id", "embedding", centroids, opq, path, residual = true)
+    assert(probes(path) == opqProbe)
+  }
+
+  test("sidecar memo: a re-publish with another vec element type refreshes the corpus schema") {
+    import graft.operators.VectorIndex
+    import org.apache.spark.sql.functions.col
+    val (_, df) = residualFixture
+    val (centroids, opq) = residualModels
+    val path = tempIndex("vectype")
+    VectorIndex.writeIvfPqOpq(df, "vec_id", "embedding", centroids, opq, path, residual = true)
+    probeOf(path, 17L) // warms the memo on array<float>
+    val asDouble = df.withColumn("embedding", col("embedding").cast("array<double>"))
+    VectorIndex.writeIvfPqOpq(asDouble, "vec_id", "embedding", centroids, opq, path,
+      residual = true)
+    val fresh = tempIndex("vectype-fresh")
+    VectorIndex.writeIvfPqOpq(asDouble, "vec_id", "embedding", centroids, opq, fresh,
+      residual = true)
+    assert(probeOf(path, 17L) == probeOf(fresh, 17L))
+  }
+
+  test("sidecar memo: a pending marker refuses probes and appends on a warm memo") {
+    import graft.operators.VectorIndex
+    import org.apache.spark.sql.functions.col
+    val (_, df) = residualFixture
+    val (centroids, opq) = residualModels
+    val path = tempIndex("pending")
+    VectorIndex.writeIvfPqOpq(df.where(col("vec_id") < 200), "vec_id", "embedding",
+      centroids, opq, path, residual = true)
+    val healthy = probeOf(path, 21L)
+    val marker = new org.apache.hadoop.fs.Path(s"$path/_opq_pending")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(marker, true).close()
+    val errProbe = intercept[IllegalArgumentException](probeOf(path, 21L))
+    assert(errProbe.getMessage.contains("partially published"))
+    val errAppend = intercept[IllegalArgumentException] {
+      VectorIndex.appendIvfPq(df.where(col("vec_id") >= 200), "vec_id", "embedding", path)
+    }
+    assert(errAppend.getMessage.contains("partially published"))
+    fs.delete(marker, false)
+    assert(probeOf(path, 21L) == healthy)
+  }
+
   test("planted reversal rotation (q160 fixture): mat-vec == exact element reversal") {
     // The q160 oracle's load-bearing identity: with a permutation matrix
     // the codegen'd mat-vec fold produces EXACTLY the permuted elements

@@ -109,6 +109,39 @@ class ProductQuantizerSpec extends AnyFunSuite {
     assert(scan.metadata("PartitionFilters").contains("bucket"), scan.metadata.toString)
   }
 
+  test("IVF-PQ sidecars: a pqmeta without the residual column reads as plain PQ, warm or cold") {
+    import graft.operators.{Similarity, VectorIndex}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val (vecs, df) = fixture
+    val centroids = Similarity.kMeans(df, "vec_id", "embedding", c = 8, iters = 2)
+    val model = ProductQuantizer.train(df, "vec_id", "embedding", m = 4, k = 16, iters = 2)
+    val path = java.nio.file.Files.createTempDirectory("graft-ivfpq-legacy").toString
+    VectorIndex.writeIvfPq(df, "vec_id", "embedding", centroids, model, path)
+    val q = vecs(10)._2.map(_.toDouble)
+    def probe() = VectorIndex.ivfTopKPq(spark, path, "vec_id", "embedding", q,
+        nprobe = 8, k = 10, shortlist = 60, excludeId = Some(10L))
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val current = probe()
+    assert(probe() == current, "warm probe must equal the cold one")
+    assert(!VectorIndex.readPqResidual(spark, path))
+
+    // the pre-residual writer's layout: (subspace, cell, centroid) only
+    val rows = for {
+      (book, j) <- model.books.zipWithIndex
+      (cent, c) <- book.zipWithIndex
+    } yield Row(j, c, cent)
+    val legacy = StructType(Seq(
+      StructField("subspace", IntegerType, nullable = false),
+      StructField("cell", IntegerType, nullable = false),
+      StructField("centroid", ArrayType(DoubleType), nullable = false)))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), legacy)
+      .write.mode("overwrite").parquet(s"$path/pqmeta")
+    assert(!VectorIndex.readPqResidual(spark, path))
+    assert(VectorIndex.readPqMeta(spark, path).books == model.books)
+    assert(probe() == current, "a legacy pqmeta must probe as the plain index it describes")
+  }
+
   test("shortlist+rerank recall vs brute force on clustered vectors") {
     // ADC alone cannot rank inside a quantization cell (cluster members
     // collapse to one code tuple — measured recall@10 ~0.2 here), which is
