@@ -22,17 +22,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    // SPARK_GRAFT_IPN_MULT: AQE initial-partition multiplier override for
-    // A/B sizing probes (the round-11 sf10 re-audit ran paired A/B/A
-    // probes under host-steal windows — recompiling between arms would
-    // have shifted the window under the measurement). The fallback MUST
-    // track GraftSession's adopted default (×32 since round 11) so a
-    // default bench run reproduces committed boards; the var is purely
-    // an A/B override.
-    val ipnMult = sys.env.getOrElse("SPARK_GRAFT_IPN_MULT", "32").toInt
     val spark: SparkSession = graft.core.GraftSession
-      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt,
-        initialPartitionMultiplier = ipnMult)
+      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (scheduler, parquet reader, codegen pipeline) so the

@@ -11,8 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
   def builder(
-      master: String = "local[32]", shufflePartitions: Int = 32,
-      initialPartitionMultiplier: Int = 32): SparkSession.Builder =
+      master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -35,11 +34,12 @@ object GraftSession {
       // ×32 regressed the sf1 dense family ~2× did NOT reproduce
       // post-demotion-fix (paired sf1 probe: parity or faster under ×32;
       // the original reading was a steal-window artifact). The ceiling
-      // wants to SCALE with data — on a cluster pass a larger multiplier
-      // (or higher shufflePartitions) for >10× corpora; Bench exposes
-      // SPARK_GRAFT_IPN_MULT for paired sizing probes.
+      // wants to SCALE with data — on a cluster pass a higher
+      // shufflePartitions (or set initialPartitionNum through
+      // SPARK_GRAFT_EXTRA_CONF, as paired sizing probes do) for >10×
+      // corpora.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (shufflePartitions * initialPartitionMultiplier).toString)
+        (shufflePartitions * 32).toString)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // Let AQE coalesce shuffles INSIDE cached/persisted subtrees (off by
       // default since 3.2 — SPARK-38697 family — because a cache's output
@@ -52,18 +52,17 @@ object GraftSession {
       // feeds every downstream map side at 1024 tasks too (round-14
       // ProbeStages). Pinned scopes (withPinnedShuffle) and user-numbered
       // repartitions are unaffected — AQE never touches either.
-      // SPARK_GRAFT_CACHE_AQE=false restores the default for paired A/B
-      // probes (tools/paired_probe.sh) — the default stays ON.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // A/B instrument (round 15, the SPARK_GRAFT_CACHE_AQE pattern):
-      // ';'-separated k=v pairs applied last, so paired probes can flip
-      // graft.* knobs (e.g. graft.dedup.slimPairs=false) without
-      // recompiling between arms — recompilation shifts the host-steal
-      // window under the measurement. Unset = exactly the shipped confs.
+      // The one A/B instrument (tools/paired_probe.sh): ';'-separated
+      // k=v pairs applied last, so paired probes can flip any Spark or
+      // graft.* conf (e.g.
+      // spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false)
+      // without recompiling between arms — recompilation shifts the
+      // host-steal window under the measurement. Unset = exactly the
+      // shipped confs.
       .applyExtraConf()
 
   private implicit class BuilderOps(val b: SparkSession.Builder) extends AnyVal {

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.BroadcastGuard.{hintIfSmall, withinLimit}
 
 /** Deduplication operators for document/embedding corpora.
   *
@@ -452,51 +453,6 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String, n: Int, tau: Double): DataFrame =
     ngramJaccardPairsPrefix(df, idCol, textCol, n, tau)
 
-  /** Exact meeting-pair intersection counts (a, b, sa, sb, common) for
-    * every pair a < b sharing ≥ 1 shingle — the PRE-AGGREGATED POSTINGS
-    * dense generator shared by the Jaccard and containment fallbacks.
-    *
-    * Structure (round 12, replacing the sort-merge self-join): the
-    * exploded (_id, sh) rows are regrouped by shingle ONCE into a sorted
-    * posting array of (id, setSize) structs; every C(df, 2) candidate
-    * pair is then GENERATED from its posting row (codegen'd posexplode ×
-    * tail-slice explode) straight into the map-side partial count — the
-    * exploded rows are never re-shuffled, and set sizes RIDE the
-    * postings as struct fields, so the billion-row pair stream never
-    * joins a sizes table (a < b and sa/sb functionally depend on a/b, so
-    * grouping by all four keeps pair cardinality unchanged).
-    *
-    * The sf10 probe that motivated this (round 12, ProbeStages on q31):
-    * the old self-join's join+partial-count stage ran as 33 tasks —
-    * AQE coalesces a stage by its INPUT bytes (0.75 GB of 8-byte
-    * hashes), but this stage's OUTPUT is the ~1B-row meet volume, so
-    * each task aggregated ~30M pairs and spilled 350 GB (42 GB disk,
-    * 493 s of the query's 691 s); the downstream sizes joins sorted the
-    * pair stream twice more (another ~70 GB spill). A stage whose
-    * output is 1000× its input must be sized by its output: the meet
-    * mass Σ C(df, 2) is known EXACTLY from the routing aggregate, so the
-    * whole dense plan runs under [[graft.core.GraftSession
-    * .withShufflePartitions]] pinned to mass / `pairsPerPartition`
-    * tasks (clamped to [cores, AQE ceiling] by [[graft.core.GraftSession
-    * .iterPartitions]] — on a cluster the ceiling scales with the
-    * session's initialPartitionNum). `finish` completes the per-pair
-    * plan (threshold filter, direction explode) INSIDE the pinned scope
-    * so the materialization never checkpoints unfiltered pair volume.
-    *
-    * Per-shingle skew bound: one shingle's posting array is ONE row, so
-    * its C(df, 2) pairs cannot split across tasks — `pairsPerPartition`
-    * is an AVERAGE, and the true per-task bound is
-    * max(pairsPerPartition, max_sh C(df_sh, 2)). The routed callers keep
-    * that bound tight structurally: the prefix path demotes every
-    * shingle with df > hotMinDf=64 (≤ 2016 pairs per posting), and the
-    * dense route is taken exactly when sharing is UNIFORM (no dominant
-    * shingle) or template-saturated via the hot-overflow exit — in the
-    * overflow case a single hot shingle CAN still concentrate C(df, 2)
-    * pairs in one task (AQE skew-split cannot help: pinned scope, single
-    * row). If that corpus shape ever shows up in a board, split
-    * oversized postings into chunked sub-arrays before the tail-slice
-    * explode (chunking the OUTER posexplode side preserves the a < b
-    * enumeration). */
   /** Disk budget for the dense generator's pair-stream shuffle (bytes).
     * Knob `graft.dedup.maxPairShuffleBytes` (-1 = unlimited); default on a
     * `local[*]` master is HALF the usable space of the first shuffle
@@ -518,151 +474,191 @@ object Dedup {
         } else Long.MaxValue
       }
 
+  /** On-disk bytes the budget charges per generated pair. The pair stream
+    * is near-unique (candidates are mostly singleton meets), so the
+    * partial aggregate writes ~mass rows to the shuffle, as lz4-compressed
+    * blocks: the r12 sf10 board measured 2.75e9 pairs (MassProbe) → ~17 GB
+    * per query ≈ 6.2 B/pair, and 8 leaves margin for less-compressible
+    * id distributions. */
+  private val PairShuffleBytesPerPair = 8L
+
+  /** Exact meeting-pair intersection counts for every pair of docs
+    * sharing ≥ 1 shingle — the PRE-AGGREGATED POSTINGS dense generator
+    * shared by the Jaccard and containment fallbacks.
+    *
+    * `finish` receives one row per unordered pair, (a, b, sa, sb,
+    * common): a and b are dense int RANKS, sa/sb their set sizes. It
+    * filters and shapes those rows inside the mass-pinned scope; its `a`
+    * and `b` columns are then mapped back to the original ids, so only
+    * filtered rows ever meet the id table. Each pair is oriented by rank
+    * — smaller set first, ties by smaller id — which is NOT id order: a
+    * caller that wants a < b in id space reorients after the call.
+    *
+    * Shape:
+    *  - Ranks. The sizes pass over `sh` gives each doc its set size; a
+    *    distributed sort on (size, id), materialized once, numbers the
+    *    docs 0..n−1. The key is unique, so the numbering is
+    *    deterministic. Ranks fit an int for any corpus under 2^31 docs
+    *    and ANY long ids; a larger corpus is refused before the postings
+    *    are built.
+    *  - Postings. The ranks join onto `sh` (broadcast up to
+    *    `rankBroadcastLimit` docs, so the shingle rows are not shuffled
+    *    for it) and regroup by shingle into sorted int arrays.
+    *  - Generation fused with the partial count. One mapPartitions pass
+    *    enumerates i < j off each primitive posting array, packs the pair
+    *    into one long key (a<<32|b) and counts it in a bounded
+    *    [[PairCountMap]]. The exchange carries (packed pair, partial
+    *    count) — one word of identity per pair — and the downstream sum is
+    *    exact over flush fragments. (A declarative posexplode ×
+    *    slice-explode chain measured ~4 µs/pair of codegen+GC at sf10: it
+    *    carries the full posting array on every outer row and allocates a
+    *    tail slice per position.)
+    *  - Set sizes. Ranks are size-ordered, so a rank's set size is its
+    *    size class's: sa/sb are a binary search over the start rank of
+    *    each distinct size. That array has one entry per distinct set
+    *    size, so it does not grow with the corpus.
+    *
+    * Sizing: a stage whose output is 1000× its input must be sized by its
+    * output. AQE coalesces a stage by its INPUT bytes — the round-12 sf10
+    * probe on q31 saw the join+partial-count stage run as 33 tasks of
+    * ~30M pairs each and spill 350 GB. The meet mass Σ C(df, 2) is known
+    * EXACTLY (from the routing aggregate, or one vocab aggregate here), so
+    * the whole plan runs under [[graft.core.GraftSession
+    * .withPinnedShuffle]] at mass / `pairsPerPartition` tasks (clamped to
+    * [cores, AQE ceiling] by [[graft.core.GraftSession.iterPartitions]] —
+    * on a cluster the ceiling scales with the session's
+    * initialPartitionNum). PINNED, not just sized: the postings exchange
+    * is ~1000× smaller than the pair volume its consumer generates, and
+    * the sized-but-coalescible variant collapsed back to ~cores tasks
+    * with 426 GB of aggregation spill. `finish` runs INSIDE the pinned
+    * scope so the materialization never checkpoints unfiltered pairs.
+    *
+    * Per-shingle skew bound: one shingle's posting array is ONE row, so
+    * its C(df, 2) pairs cannot split across tasks — `pairsPerPartition`
+    * is an AVERAGE, and the true per-task bound is
+    * max(pairsPerPartition, max_sh C(df_sh, 2)). The routed callers keep
+    * that bound tight structurally: the prefix path demotes every
+    * shingle with df > hotMinDf=64 (≤ 2016 pairs per posting), and the
+    * dense route is taken exactly when sharing is UNIFORM (no dominant
+    * shingle) or template-saturated via the hot-overflow exit — in the
+    * overflow case a single hot shingle CAN still concentrate C(df, 2)
+    * pairs in one task (AQE skew-split cannot help: pinned scope, single
+    * row). If that corpus shape ever shows up in a board, split
+    * oversized postings into chunked sub-arrays before the pair
+    * enumeration (chunking the OUTER index preserves the i < j
+    * enumeration). */
   private[graft] def densePairCounts(
       sh: DataFrame, massHint: Long,
-      pairsPerPartition: Long = 2L * 1000 * 1000)(
+      pairsPerPartition: Long = 2L * 1000 * 1000,
+      rankBroadcastLimit: Int = 16 * 1000 * 1000)(
       finish: DataFrame => DataFrame): DataFrame = {
     val spark = sh.sparkSession
+    import spark.implicits._
     val mass =
       if (massHint >= 0L) massHint
       else sh.groupBy("sh").agg(count(lit(1)).as("_df"))
         .agg(coalesce(sum(expr("(_df * (_df - 1)) DIV 2")), lit(0L)))
         .head().getLong(0)
-    // Certify-or-refuse pre-flight (round 14, r12 VERDICT item 6): the
-    // generated pair stream is near-unique (candidates are mostly
-    // singleton meets), so the partial aggregate writes ~mass rows of
-    // (a, b, sa, sb, count) to the shuffle. On DISK those are
-    // lz4-compressed blocks, not UnsafeRows: calibrated against the r12
-    // sf10 board — 2.75e9 pairs (MassProbe) → ~17 GB/query measured ≈
-    // 6.2 B/pair — the default charges 8 B/pair (knob
-    // graft.dedup.bytesPerPair; margin for less-compressible id
-    // distributions). When the estimate cannot fit the budget, refuse
-    // LOUDLY naming the bytes instead of dying with ENOSPC mid-shuffle
-    // an hour in — the r12 sf30 attempt wrote ~70 GB of a ~150 GB
-    // (= 3×2.75e9 pairs × ~6.2 B) trio shuffle into 69 GB of free disk
-    // (the q113/q115 certify-or-refuse house style).
-    val bytesPerPair = spark.conf.getOption("graft.dedup.bytesPerPair")
-      .map(_.toLong).getOrElse(8L)
+    // Certify-or-refuse pre-flight (round 14, r12 VERDICT item 6): when
+    // the estimated pair shuffle cannot fit the budget, refuse LOUDLY
+    // naming the bytes instead of dying with ENOSPC mid-shuffle an hour
+    // in — the r12 sf30 attempt wrote ~70 GB of a ~150 GB trio shuffle
+    // into 69 GB of free disk (the q113/q115 certify-or-refuse style).
     val estBytes =
-      if (bytesPerPair > 0 && mass > Long.MaxValue / bytesPerPair) Long.MaxValue
-      else mass * bytesPerPair
+      if (mass > Long.MaxValue / PairShuffleBytesPerPair) Long.MaxValue
+      else mass * PairShuffleBytesPerPair
     val budget = pairShuffleBudget(spark)
     if (estBytes > budget) throw new IllegalStateException(
       s"dense pair generation refused: estimated pair-stream shuffle " +
-        s"$estBytes bytes ($mass pairs x $bytesPerPair B/pair) exceeds " +
+        s"$estBytes bytes ($mass pairs x $PairShuffleBytesPerPair B/pair) exceeds " +
         s"the shuffle-disk budget $budget bytes. Raise " +
         s"graft.dedup.maxPairShuffleBytes (or set -1 to disable), free " +
         s"local-dir disk, or cut the meet mass (higher tau / hotter " +
         s"hot-shingle cutoff).")
+    // docs in (set size, id) order, materialized ONCE: a re-run sort may
+    // cut its range partitions elsewhere, which would move ranks between
+    // the counting pass and the numbering pass below
+    val bySize = sh.groupBy("_id").agg(count(lit(1)).as("sz"))
+      .orderBy("sz", "_id").as[(Long, Long)].localCheckpoint()
+    // one counting pass: docs per set size in each sorted partition. A
+    // partition holds a contiguous size range, so this is about
+    // partitions + distinct sizes entries; collect keeps partition order.
+    val parts = bySize.rdd.mapPartitions { it =>
+      val h = scala.collection.mutable.LongMap.empty[Long]
+      it.foreach { case (_, sz) => h(sz) = h.getOrElse(sz, 0L) + 1L }
+      Iterator(h.toArray)
+    }.collect()
+    val nDocs = parts.iterator.flatMap(_.iterator.map(_._2)).sum
+    if (nDocs > Int.MaxValue) throw new IllegalStateException(
+      s"dense pair generation refused: $nDocs documents exceed the " +
+        s"${Int.MaxValue} int ranks a packed pair can hold. Dedup the " +
+        s"corpus in shards below that count.")
+    val partStart = parts.map(_.iterator.map(_._2).sum).scanLeft(0L)(_ + _)
+    val classes = parts.flatten.groupMapReduce(_._1)(_._2)(_ + _).toArray.sortBy(_._1)
+    val classStart = classes.map(_._2).scanLeft(0L)(_ + _).init.map(_.toInt)
+    val classSize = classes.map(_._1)
+    val numbered = bySize.rdd.mapPartitionsWithIndex { (i, it) =>
+      var r = partStart(i).toInt
+      it.map { case (id, _) => r += 1; (id, r - 1) }
+    }.toDF("_id", "_r")
+    // the doc count is exact here, so no limit probe is needed
+    val ranks = if (nDocs <= rankBroadcastLimit) broadcast(numbered) else numbered
     val p = graft.core.GraftSession.iterPartitions(spark, mass, pairsPerPartition)
-    // SLIM pair stream (round 15, r14 VERDICT item 1): the legacy stream
-    // shuffles (a, b, sa, sb) + count — five longs per generated pair —
-    // and the r15 sf10 ProbeStages put 360 s of q31's 448 s wall in
-    // exactly that stage pair (49.6 GB partial-agg shuffle ≈ 18 B/pair ×
-    // 2.75e9 pairs, then a 55 s final aggregate over it). sa/sb are
-    // FUNCTIONS of a/b (they ride the key only so the threshold filter
-    // can see them), and the set sizes live in a doc-sized table — so
-    // when that table is provably broadcastable, shuffle NOTHING but the
-    // pair identity: ids narrowed to int (§2.3 narrower types), the pair
-    // packed into ONE long key (a<<32|b — hash/compare one word instead
-    // of four), postings as plain sorted int arrays (halves the regroup
-    // exchange and the collect_list peak), and sa/sb re-attached AFTER
-    // the aggregate by two broadcast hash joins in the same stage.
-    // Identical pair enumeration (ascending id order either way) and
-    // identical output columns; DedupSpec pins slim == legacy. The
-    // legacy shape remains THE path whenever the corpus is too big or
-    // the ids don't fit: > slimSizesLimit docs (the broadcast budget —
-    // ~16M rows ≈ 0.5 GB built relation), or ids outside [0, 2^31).
-    // The decision costs one doc-stats aggregate over the (caller-
-    // cached) hash rows — linear, ~1% of the pair stage it sizes.
-    val sizesPlan = sh.groupBy("_id").agg(count(lit(1)).as("sz"))
-    val slimLimit = spark.conf.getOption("graft.dedup.slimSizesLimit")
-      .map(_.toLong).getOrElse(16L * 1000 * 1000)
-    val slimOn = spark.conf.getOption("graft.dedup.slimPairs")
-      .forall(_.toBoolean) // default true; the spec's A/B kill-switch
-    val st = sizesPlan
-      .agg(count(lit(1)).as("n"), min(col("_id")).as("lo"),
-        max(col("_id")).as("hi")).head()
-    val nDocs = st.getLong(0)
-    val idsFit = nDocs == 0L ||
-      (st.getLong(1) >= 0L && st.getLong(2) < (1L << 31))
-    val slim = slimOn && nDocs <= slimLimit && idsFit
-    // PINNED (coalesce disabled), not just sized: AQE coalesces stages by
-    // map-output bytes, and the postings exchange is ~1000× smaller than
-    // the pair volume its consumer generates — the r12 sf10 probe
-    // measured the sized-but-coalescible variant collapsing back to
-    // ~cores tasks with 426 GB of aggregation spill.
     graft.core.GraftSession.withPinnedShuffle(spark, p) {
-      if (slim) {
-        val spark2 = spark
-        import spark2.implicits._
-        val sizes = sizesPlan.localCheckpoint() // ≤ slimLimit rows
-        val postings = sh
-          .select(col("_id").cast("int").as("i"), col("sh"))
-          .groupBy("sh")
-          .agg(sort_array(collect_list(col("i"))).as("ps"))
-        // FUSED generation + partial count (round 15): the declarative
-        // posexplode × slice-explode chain carries the FULL posting array
-        // on every outer row and allocates a fresh tail slice per
-        // position — measured ~4 µs/pair of codegen+GC (355 s for
-        // 2.75e9 pairs at sf10, the board's dominant stage). One
-        // mapPartitions pass enumerates i<j directly off the primitive
-        // int array and partial-counts into an open-addressing
-        // long→long map (the Tungsten partial aggregate's role, minus
-        // per-pair row traffic); the map flushes at a bounded entry
-        // count, so per-task memory stays capped regardless of posting
-        // skew, and the exchange carries (packed pair, partial count) —
-        // the downstream sum is exact over flush fragments.
-        val counts = postings
-          .select(col("ps")).as[Array[Int]]
-          .mapPartitions { it =>
-            val m = new PairCountMap(1 << 16, 4 << 20)
-            it.flatMap { a =>
-              var flushed: Iterator[(Long, Long)] = Iterator.empty
-              var i = 0
-              val n = a.length
-              while (i < n - 1) {
-                val hi = a(i).toLong << 32
-                var j = i + 1
-                while (j < n) {
-                  val pk = hi | a(j)
-                  if (!m.add(pk)) { // at cap: drain, then the add retries
-                    flushed = flushed ++ m.drainAndReset()
-                    m.add(pk)
-                  }
-                  j += 1
+      val postings = sh.join(ranks, "_id")
+        .groupBy("sh")
+        .agg(sort_array(collect_list(col("_r"))).as("ps"))
+      val counts = postings
+        .select(col("ps")).as[Array[Int]]
+        .mapPartitions { it =>
+          val m = new PairCountMap(1 << 16, 4 << 20)
+          it.flatMap { a =>
+            var flushed: Iterator[(Long, Long)] = Iterator.empty
+            var i = 0
+            val n = a.length
+            while (i < n - 1) {
+              val hi = a(i).toLong << 32
+              var j = i + 1
+              while (j < n) {
+                val pk = hi | a(j)
+                if (!m.add(pk)) { // at cap: drain, then the add retries
+                  flushed = flushed ++ m.drainAndReset()
+                  m.add(pk)
                 }
-                i += 1
+                j += 1
               }
-              flushed
-            } ++ m.iterator
-          }
-          .toDF("pk", "_pc")
-          .groupBy("pk").agg(sum(col("_pc")).as("common"))
-          .select(shiftrightunsigned(col("pk"), 32).cast("long").as("a"),
-            col("pk").bitwiseAND(lit(0xFFFFFFFFL)).as("b"), col("common"))
-          .join(broadcast(sizes.select(col("_id").as("a"), col("sz").as("sa"))), "a")
-          .join(broadcast(sizes.select(col("_id").as("b"), col("sz").as("sb"))), "b")
-          .select(col("a"), col("b"), col("sa"), col("sb"), col("common"))
-        graft.core.GraftSession.dumpPlanIfAsked(
-          finish(counts), "densePairCounts_slim").localCheckpoint()
-      } else {
-        val sizes = sizesPlan
-        val postings = sh.join(sizes, "_id") // AQE broadcasts the doc-sized side
-          .groupBy("sh")
-          .agg(sort_array(collect_list(struct(col("_id").as("i"), col("sz").as("z"))))
-            .as("ps"))
-        val counts = postings
-          .select(posexplode(col("ps")).as(Seq("_p", "x")), col("ps"))
-          .select(col("x"), explode(slice(col("ps"), col("_p") + lit(2),
-            size(col("ps")) - col("_p") - lit(1))).as("y"))
-          .groupBy(col("x.i").as("a"), col("y.i").as("b"),
-            col("x.z").as("sa"), col("y.z").as("sb"))
-          .agg(count(lit(1)).as("common"))
-        graft.core.GraftSession.dumpPlanIfAsked(
-          finish(counts), "densePairCounts_legacy").localCheckpoint()
-      }
+              i += 1
+            }
+            flushed
+          } ++ m.iterator
+        }
+        .toDF("pk", "_pc")
+        .groupBy("pk").agg(sum(col("_pc")).as("common"))
+        .as[(Long, Long)]
+        .map { case (pk, common) =>
+          val a = (pk >>> 32).toInt
+          val b = pk.toInt
+          (a, b, rankSize(classStart, classSize, a),
+            rankSize(classStart, classSize, b), common)
+        }
+        .toDF("a", "b", "sa", "sb", "common")
+      val out = finish(counts)
+      // both sides join the same rank relation, so they share one broadcast
+      val withIds = out
+        .join(ranks.as("ra"), col("a") === col("ra._r"))
+        .join(ranks.as("rb"), col("b") === col("rb._r"))
+        .select(col("ra._id").as("a") +: col("rb._id").as("b") +:
+          out.columns.filterNot(Set("a", "b")).map(out(_)): _*)
+      graft.core.GraftSession.dumpPlanIfAsked(withIds, "densePairCounts")
+        .localCheckpoint()
     }
+  }
+
+  /** Set size of rank `r` under a (size, id) rank order: the size of the
+    * last class whose start rank is ≤ r. */
+  private def rankSize(classStart: Array[Int], classSize: Array[Long], r: Int): Long = {
+    val i = java.util.Arrays.binarySearch(classStart, r)
+    classSize(if (i >= 0) i else -i - 2)
   }
 
   /** [[ngramJaccardPairs]] over a precomputed (_id, sh) intermediate
@@ -671,7 +667,8 @@ object Dedup {
     * threshold applied inside the mass-pinned scope; result is
     * materialized (localCheckpoint), so the caller may release `sh`
     * immediately. `massHint` lets the router pass the meet mass it
-    * already computed instead of re-aggregating the vocabulary. */
+    * already computed instead of re-aggregating the vocabulary. Pairs
+    * come back as a < b in id space. */
   def ngramJaccardPairsFromHashes(
       sh: DataFrame, tau: Double, massHint: Long = -1L): DataFrame =
     densePairCounts(sh, massHint) { counts =>
@@ -680,7 +677,8 @@ object Dedup {
           col("common").cast("double") / (col("sa") + col("sb") - col("common")))
         .where(col("jaccard") >= tau)
         .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
-    }
+    }.select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"),
+      col("jaccard"))
 
   /** Prefix-filtered exact Jaccard pairs — same output as
     * [[ngramJaccardPairs]], far fewer candidate pairs at corpus scale.
@@ -939,23 +937,23 @@ object Dedup {
 
   /** Dense directed containment (the fallback and the spec's reference
     * implementation) — [[densePairCounts]]' postings generator (the
-    * intersection is symmetric, so each pair is counted once under
-    * a < b), with both directions materialized from the grouped row in
-    * one projection: a→b divides by |Sa|, b→a by |Sb|, each filtered on
-    * its own threshold, all inside the mass-pinned scope. */
+    * intersection is symmetric, so each pair is counted once), with both
+    * directions materialized from the grouped row in one projection:
+    * a→b divides by |Sa|, b→a by |Sb|, each filtered on its own
+    * threshold, all inside the mass-pinned scope. Each row keeps its
+    * direction when the ranks map back to ids. */
   private[graft] def denseContainment(
       sh: DataFrame, tau: Double, massHint: Long = -1L): DataFrame =
     densePairCounts(sh, massHint) { counts =>
       counts
         // filter BEFORE the direction explode (round 15): the explode
         // doubles the ~mass-row aggregated stream only for the per-
-        // direction filter to drop almost all of it; a pair can survive
-        // in SOME direction iff the greater of the two quotients passes,
-        // computed with the IDENTICAL cast/divide expressions, so the
-        // per-direction filter below keeps exactly the same rows while
-        // the explode runs over qualifying pairs only
-        .where(greatest(col("common").cast("double") / col("sa"),
-          col("common").cast("double") / col("sb")) >= tau)
+        // direction filter to drop almost all of it. Ranks are
+        // size-ordered, so sa ≤ sb and a→b is the greater quotient: a
+        // pair survives in SOME direction iff a→b passes, computed with
+        // the IDENTICAL cast/divide expression as the per-direction
+        // filter below
+        .where(col("common").cast("double") / col("sa") >= tau)
         .select(explode(array(
           struct(col("a"), col("b"),
             (col("common").cast("double") / col("sa")).as("containment")),
@@ -988,17 +986,6 @@ object Dedup {
       .withColumn("containment", col("common").cast("double") / col("sa"))
       .where(col("containment") >= tau)
       .select(col("a"), col("b"), round(col("containment"), 6).as("containment"))
-  }
-
-  /** True iff `df` (cached/checkpointed by the caller, so the probe does
-    * not recompute an expensive plan) holds at most `limit` rows — a
-    * limit-probe, never a full count of an oversized set. The shared
-    * guard for "edge-bounded, so it broadcasts" claims: above the limit
-    * the caller falls back to an unhinted (shuffle) join instead of
-    * force-broadcasting an unbounded frame into the driver. */
-  private def withinLimit(df: DataFrame, limit: Int): Boolean = {
-    val l = math.min(limit, Int.MaxValue - 1) // limit+1 must not overflow
-    df.limit(l + 1).count() <= l
   }
 
   /** Exact Jaccard verification restricted to candidate pairs: full sets
@@ -1201,15 +1188,12 @@ object Dedup {
     // ADVICE); the limit-probe below reads the one materialization
     val cands = lshCandidates(
       df, idCol, vecCol, bitsPerTable, tables, seed, hotCellLimit)
-    val hintC =
-      if (withinLimit(cands, broadcastPairLimit)) broadcast(cands) else cands
-    val out = hintC
+    hintIfSmall(cands, broadcastPairLimit)
       .join(df.select(col(idCol).cast("long").as("a"), col(vecCol).as("_va")), Seq("a"))
       .join(df.select(col(idCol).cast("long").as("b"), col(vecCol).as("_vb")), Seq("b"))
       .withColumn("cosine", ArrayMath.cosine(col("_va"), col("_vb")))
       .where(col("cosine") >= tau)
       .select(col("a"), col("b"), round(col("cosine"), 6).as("cosine"))
-    out
   }
 
   /** Candidate pairs (a, b) for [[embeddingCosinePairsLsh]] — each pair
@@ -1324,8 +1308,8 @@ object Dedup {
       .where(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id").as("_loser"))
       .localCheckpoint()
-    val hinted = if (withinLimit(losers, broadcastLoserLimit)) broadcast(losers) else losers
-    df.join(hinted, col(idCol).cast("long") === col("_loser"), "left_anti")
+    df.join(hintIfSmall(losers, broadcastLoserLimit),
+      col(idCol).cast("long") === col("_loser"), "left_anti")
   }
 
   /** [[dedupCorpus]] with a QUALITY-AWARE keeper: within each near-dup
@@ -1353,18 +1337,24 @@ object Dedup {
     val comp = connectedComponents(pairs, "a", "b").localCheckpoint()
     val small = withinLimit(comp, broadcastLoserLimit)
     def hint(d: DataFrame): DataFrame = if (small) broadcast(d) else d
-    // join FIRST, score AFTER (round 15, §1.2 "don't compute what you
-    // throw away"): scores are only consumed for cluster MEMBERS (the
-    // edge-bounded comp table), but scoring before the join computed the
-    // score column — size(tokens(text)) for q133 — over the ENTIRE
-    // corpus scan. With the projection above the broadcast join, the
-    // expensive expression runs on members only; same rows, same values.
     // The join key is private (`_mid`), not `id`: a corpus whose id
     // column is itself named `id` would otherwise carry two `id` columns.
-    val memberScores = df
-      .select(col(idCol).cast("long").as("_mid") +: df.columns.map(col): _*)
-      .join(hint(comp.select(col("id").as("_mid"), col("comp").as("_comp"))), Seq("_mid"))
-      .select(col("_mid").as("id"), col("_comp").as("comp"), score.as("_score"))
+    val members = comp.select(col("id").as("_mid"), col("comp").as("_comp"))
+    // Broadcast members: join FIRST, score AFTER (round 15, §1.2 "don't
+    // compute what you throw away") — the score column (size(tokens(text))
+    // for q133) runs on the edge-bounded members only, not the whole
+    // corpus scan, and no corpus row crosses an exchange. Shuffled
+    // members: score FIRST, so only (id, score) crosses the join's
+    // exchange instead of every corpus column.
+    val memberScores =
+      if (small) df
+        .select(col(idCol).cast("long").as("_mid") +: df.columns.map(col): _*)
+        .join(broadcast(members), Seq("_mid"))
+        .select(col("_mid").as("id"), col("_comp").as("comp"), score.as("_score"))
+      else df
+        .select(col(idCol).cast("long").as("_mid"), score.as("_score"))
+        .join(members, Seq("_mid"))
+        .select(col("_mid").as("id"), col("_comp").as("comp"), col("_score"))
     val winners = memberScores.groupBy(col("comp"))
       .agg(max(struct(col("_score"), (-col("id")).as("_nid"),
         col("id").as("_win"))).as("_m"))
@@ -1409,8 +1399,8 @@ object Dedup {
     val emb = embeddedDocs(df, idCol, textCol, n, tau)
       .select(col("id").as("_loser"))
       .localCheckpoint()
-    val hinted = if (withinLimit(emb, broadcastLoserLimit)) broadcast(emb) else emb
-    df.join(hinted, col(idCol).cast("long") === col("_loser"), "left_anti")
+    df.join(hintIfSmall(emb, broadcastLoserLimit),
+      col(idCol).cast("long") === col("_loser"), "left_anti")
   }
 
   /** Cosine of two float-vector columns, computed in double with a

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.BroadcastGuard.hintIfSmall
 
 /** Exact "ids sharing >= minShared identical fingerprints" pairs with a
   * degenerate-fingerprint guard (q73 byte-window frames, q145 GIF frames).
@@ -161,11 +162,4 @@ object FrameOverlap {
         "— the limit is set far below corpus scale; raise it")
     if (hot.isEmpty) fr else fr.where(!fp.isin(hot.toIndexedSeq: _*))
   }
-
-  /** SpanDedup.withinLimit discipline: limit-probe, never a full count. */
-  private def withinLimit(df: DataFrame, limit: Int): Boolean =
-    df.limit(limit + 1).count() <= limit
-
-  private def hintIfSmall(df: DataFrame, limit: Int): DataFrame =
-    if (withinLimit(df, limit)) broadcast(df) else df
 }

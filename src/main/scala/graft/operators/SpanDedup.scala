@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.BroadcastGuard.hintIfSmall
 
 /** Substring-level (span) deduplication: find — and optionally cut out —
   * long character spans that occur at more than one site in the corpus,
@@ -59,18 +60,6 @@ object SpanDedup {
       .where(col("sites") > 1)
     keyed.join(dup, "_k").drop("_k", "span")
   }
-
-  /** True iff `df` (cheap to recompute — the caller materializes its
-    * parents) holds at most `limit` rows: a limit-probe, never a full
-    * count of an oversized set (the Dedup.withinLimit discipline). */
-  private def withinLimit(df: DataFrame, limit: Int): Boolean =
-    df.limit(limit + 1).count() <= limit
-
-  /** Broadcast `df` iff a limit-probe proves it small; unhinted (shuffle
-    * join, AQE skew-split eligible) otherwise. Caller must have
-    * materialized `df` (cache/localCheckpoint) so the probe is a scan. */
-  private def hintIfSmall(df: DataFrame, limit: Int): DataFrame =
-    if (withinLimit(df, limit)) broadcast(df) else df
 
   /** Duplicated span spines hold l-char STRINGS — keep the default
     * broadcast budget an order under the 8-byte-key limits elsewhere.

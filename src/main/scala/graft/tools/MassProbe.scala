@@ -4,9 +4,9 @@ import org.apache.spark.sql.functions._
 
 /** Print the dense generator's pair meet mass Σ C(df, 2) for the word-3-gram
   * corpus at a scale dir — the number [[graft.operators.Dedup.densePairCounts]]'s
-  * round-14 shuffle-budget pre-flight multiplies by bytes/pair. Used to
-  * calibrate `graft.dedup.bytesPerPair` against a measured board's shuffle
-  * bytes. Usage: `graft.tools.MassProbe <sfdir>`. */
+  * round-14 shuffle-budget pre-flight multiplies by its constant 8 B/pair.
+  * Read against a measured board's shuffle bytes to recheck that constant.
+  * Usage: `graft.tools.MassProbe <sfdir>`. */
 object MassProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf10")

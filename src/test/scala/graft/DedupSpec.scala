@@ -263,6 +263,26 @@ class DedupSpec extends AnyFunSuite {
       assert(byDocId == Set(2L, 4L, 5L), s"doc_id, limit $limit: got $byDocId")
       assert(survivors("id", limit) == byDocId, s"id, limit $limit")
     }
+    // shuffle joins only: the member join must carry (id, score), so the
+    // one exchange holding `text` is the final anti-join's corpus side (a
+    // reused exchange counts: the member join would read `text` again)
+    val conf = spark.conf
+    try {
+      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      for (idCol <- Seq("doc_id", "id")) {
+        val out = Dedup.dedupCorpusBy(rows.toDF(idCol, "text"), idCol, "text", n = 3,
+          tau = 0.6, score, broadcastLoserLimit = 0)
+        assert(out.collect().map(_.getAs[Long](idCol)).toSet == Set(2L, 4L, 5L), idCol)
+        val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        val textShuffles = helper.collect(out.queryExecution.executedPlan) {
+          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+              if e.output.exists(_.name == "text") => e
+          case e: org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+              if e.output.exists(_.name == "text") => e
+        }
+        assert(textShuffles.size == 1, s"$idCol: ${out.queryExecution.executedPlan}")
+      }
+    } finally conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("minhash LSH candidates verify to the same pairs as exact ngram jaccard") {
@@ -345,48 +365,75 @@ class DedupSpec extends AnyFunSuite {
     } finally conf.unset("graft.dedup.maxPairShuffleBytes")
   }
 
-  test("densePairCounts: slim packed-pair path equals the legacy wide-key path") {
-    // randomized corpus with mutation families so thresholds cut inside a
-    // family (the prefix-equality fixture's shape); exercises BOTH finish
-    // shapes (Jaccard and directed containment) on both generator paths
+  test("densePairCounts: the size-ordered generator equals a brute-force model on four id layouts") {
+    // randomized mutation families (thresholds cut inside a family); each
+    // copy is also SHORTER than its base, so set sizes differ inside a
+    // family and rank order (size, then id) disagrees with id order
     val rnd = new scala.util.Random(23L)
     val vocab = (0 until 150).map(i => f"v$i%03d")
-    val base = (0 until 20).map { i =>
-      (i.toLong, (0 until 25).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" "))
-    }
-    val mutated = base.flatMap { case (id, text) =>
-      (1 to 2).map { m =>
-        val w = text.split(" ")
-        (0 until m * 2).foreach(_ => w(rnd.nextInt(w.length)) = vocab(rnd.nextInt(vocab.size)))
-        (id + 1000L * m, w.mkString(" "))
+    val docs0 = (0 until 20).flatMap { i =>
+      val w = Array.fill(22 + i)(vocab(rnd.nextInt(vocab.size)))
+      (i.toLong, w.mkString(" ")) +: (1 to 2).map { m =>
+        val v = w.dropRight(m)
+        (0 until m * 2).foreach(_ => v(rnd.nextInt(v.length)) = vocab(rnd.nextInt(vocab.size)))
+        (i + 1000L * m, v.mkString(" "))
       }
     }
-    val corpus = (base ++ mutated).toDF("doc_id", "text")
-    val conf = spark.conf
-    def run() = {
-      val sh = Dedup.shingleHashes(corpus, "doc_id", "text", n = 3).cache()
-      val j = Dedup.ngramJaccardPairsFromHashes(sh, 0.5)
-        .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
-      val c = Dedup.denseContainment(sh, 0.6)
-        .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
-      sh.unpersist()
-      (j, c)
+    val sets0 = docs0.map { case (id, t) =>
+      id -> t.split(" ").sliding(3).map(_.mkString(" ")).toSet }.toMap
+    // the largest set gets the smallest id: rank order is the reverse of
+    // id order, so a pair emitted in rank orientation shows as a > b
+    val bySizeDesc = sets0.toSeq.sortBy { case (id, s) => (-s.size, id) }
+      .map(_._1).zipWithIndex.toMap
+    val layouts = Seq[(String, Long => Long)](
+      "ids as given" -> identity,
+      "ids + 5e9" -> (_ + 5_000_000_000L),
+      "negative ids" -> (id => -id - 1L),
+      "size falls as id rises" -> (id => bySizeDesc(id).toLong))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
+    def check(what: String, got: Seq[(Long, Long, Double)], exp: Seq[(Long, Long, Double)]): Unit = {
+      assert(got.map(r => (r._1, r._2)) == exp.map(r => (r._1, r._2)) && exp.nonEmpty, what)
+      got.zip(exp).foreach { case (g, e) => assert(math.abs(g._3 - e._3) <= 5e-7, s"$what: $g vs $e") }
     }
-    val (slimJ, slimC) = run() // default: slim fires (small ids, small corpus)
-    val (legJ, legC) =
-      try { conf.set("graft.dedup.slimPairs", "false"); run() }
-      finally conf.unset("graft.dedup.slimPairs")
-    assert(slimJ == legJ && slimJ.nonEmpty)
-    assert(slimC == legC && slimC.nonEmpty)
-    // ids past 2^31 must take the legacy path (packing needs [0, 2^31))
-    // and still produce the offset-identical pair set
-    val big = corpus.withColumn("doc_id", col("doc_id") + lit(5_000_000_000L))
-    val shB = Dedup.shingleHashes(big, "doc_id", "text", n = 3).cache()
-    val bigJ = Dedup.ngramJaccardPairsFromHashes(shB, 0.5)
-      .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
-    shB.unpersist()
-    assert(bigJ == slimJ.map { case (a, b, x) =>
-      (a + 5_000_000_000L, b + 5_000_000_000L, x) })
+    val conf = spark.conf
+    for ((name, f) <- layouts) {
+      val sets = sets0.map { case (id, s) => f(id) -> s }
+      val ids = sets.keys.toSeq.sorted
+      val common = (for (a <- ids; b <- ids if a != b) yield (a, b) -> (sets(a) & sets(b)).size).toMap
+      val expJ = for ((a, b) <- common.keys.toSeq.sorted if a < b;
+                      c = common((a, b)); j = c.toDouble / (sets(a).size + sets(b).size - c)
+                      if j >= 0.5) yield (a, b, j)
+      val expC = for ((a, b) <- common.keys.toSeq.sorted;
+                      x = common((a, b)).toDouble / sets(a).size if x >= 0.6) yield (a, b, x)
+      val sh = Dedup.shingleHashes(docs0.map { case (id, t) => (f(id), t) }.toDF("doc_id", "text"),
+        "doc_id", "text", n = 3).cache()
+      val (tier, prefix, _) = Dedup.jaccardRoute(sh, 0.5, 1 << 20)
+      prefix.foreach(_.unpersist())
+      assert(tier == 2, s"$name: the prefix path must be the routed one")
+      check(s"$name dense jaccard", rows(Dedup.ngramJaccardPairsFromHashes(sh, 0.5)), expJ)
+      check(s"$name prefix jaccard", rows(Dedup.ngramJaccardPairsPrefixFromHashes(sh, 0.5)), expJ)
+      check(s"$name dense containment", rows(Dedup.denseContainment(sh, 0.6)), expC)
+      check(s"$name prefix containment", rows(Dedup.ngramContainmentPairsFromHashes(sh, 0.6)), expC)
+      // the raw generator, with the rank table forced through shuffle joins
+      // and the rank sort left uncoalesced (several sorted partitions to
+      // number): every meeting pair once, oriented smaller set first (ties:
+      // smaller id), with exact sizes and intersection
+      val raw = try {
+        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        Dedup.densePairCounts(sh, -1L, rankBroadcastLimit = 0)(identity)
+          .as[(Long, Long, Long, Long, Long)].collect().toSet
+      } finally {
+        conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      }
+      val expRaw = common.collect { case ((a, b), c) if c > 0 &&
+          (sets(a).size < sets(b).size || sets(a).size == sets(b).size && a < b) =>
+        (a, b, sets(a).size.toLong, sets(b).size.toLong, c.toLong) }.toSet
+      assert(raw == expRaw, s"$name raw counts")
+      sh.unpersist()
+    }
   }
 
   test("candidatePairs: each banded pair exactly once, set equals the naive shared-bucket model") {

@@ -75,15 +75,17 @@ class FrameOverlapSpec extends AnyFunSuite {
       (for (d <- 1L to 6L; f <- 1L to nHot.toLong) yield (d, 10000L + f)) ++
         Seq((1L, 1L), (2L, 1L), (3L, 2L), (4L, 2L), (3L, 3L), (4L, 3L))
       ).toDF("doc_id", "luma_fp")
-    def run(nHot: Int) =
+    def run(nHot: Int, limit: Int = 1 << 20) =
       FrameOverlap.pairs(corpus(nHot), "doc_id", "luma_fp", minShared = 2,
-        hotFpLimit = 4)
+        hotFpLimit = 4, maskBroadcastLimit = limit)
         .as[(Long, Long, Long)].collect().toSet
     val mask = run(63)   // 63 hot fps -> mask fast path
     val join = run(65)   // 65 hot fps -> join-back path
     // same structure, counts differ only by the 2 extra hot fps
     assert(mask === Set((1L, 2L, 64L), (3L, 4L, 65L)))
     assert(join === Set((1L, 2L, 66L), (3L, 4L, 67L)))
+    // the largest broadcast limit is a limit like any other on both paths
+    assert(run(63, Int.MaxValue) === mask && run(65, Int.MaxValue) === join)
   }
 
   test("empty hot set executes the PLAIN plan: no mask join, no bit_count, one pair join") {

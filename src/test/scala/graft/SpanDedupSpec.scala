@@ -192,6 +192,23 @@ class SpanDedupSpec extends AnyFunSuite {
     assert(strip(1L).contains(boiler) && !strip(2L).contains(boiler))
   }
 
+  test("spanBroadcastLimit = Int.MaxValue gives the same rows as the default limit") {
+    val boiler = "ALL-RIGHTS-RESERVED-BOILERPLATE-BLOCK"
+    val docs = (1L to 12L).map(i => (i, s"doc$i start $boiler end u${i}x${i * 31}"))
+      .toDF("doc_id", "text")
+    val (l, max) = (20, Int.MaxValue)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val sites = rows(SpanDedup.dupSpanSites(docs, "doc_id", "text", l, 1))
+    assert(sites.nonEmpty)
+    assert(rows(SpanDedup.dupSpanSites(docs, "doc_id", "text", l, 1, max)) === sites)
+    assert(rows(SpanDedup.stripDupSpans(docs, "doc_id", "text", l, 1, max)) ===
+      rows(SpanDedup.stripDupSpans(docs, "doc_id", "text", l, 1)))
+    assert(rows(SpanDedup.dupSpanStatsWinnowed(docs, "doc_id", "text", l, spanBroadcastLimit = max)) ===
+      rows(SpanDedup.dupSpanStatsWinnowed(docs, "doc_id", "text", l)))
+    assert(rows(SpanDedup.stripDupSpansWinnowed(docs, "doc_id", "text", l, spanBroadcastLimit = max)) ===
+      rows(SpanDedup.stripDupSpansWinnowed(docs, "doc_id", "text", l)))
+  }
+
   test("winnow gate is sound on self-overlapping periodic repeats") {
     // "abababab…": the duplicated window at pos p and p+2 OVERLAPS itself;
     // the gate stays sound because the two winnow alignment windows are

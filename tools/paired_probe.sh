@@ -7,9 +7,14 @@
 # change (SURVEY §15 "probe methodology note").
 #
 # Usage:
-#   tools/paired_probe.sh <sfdir> <queries> <ENV_VAR> <valA> <valB> [pairs]
-# Example (re-running the r11 IPN decision):
-#   tools/paired_probe.sh /tmp/sf10 q101_dup_spans SPARK_GRAFT_IPN_MULT 16 32 2
+#   tools/paired_probe.sh <sfdir> <queries> <confA> <confB> [pairs]
+# Each arm is ';'-separated k=v confs, passed as SPARK_GRAFT_EXTRA_CONF
+# (applied after the shipped confs; '' = exactly the shipped confs).
+# Example (re-running the r11 ×16 vs ×32 initial-partition decision on a
+# 32-core host):
+#   tools/paired_probe.sh /tmp/sf10 q101_dup_spans \
+#     spark.sql.adaptive.coalescePartitions.initialPartitionNum=512 \
+#     spark.sql.adaptive.coalescePartitions.initialPartitionNum=1024 2
 #
 # Each arm is one run_bench.sh pass (REPS=1, SPARK_GRAFT_ONLY=<queries>);
 # results land in /tmp/paired_probe/<n>_<arm>.json and a per-query summary
@@ -17,30 +22,30 @@
 # arm's calib before believing a difference.
 set -e
 cd "$(dirname "$0")/.."
-SF=${1:?sfdir}; QUERIES=${2:?queries}; VAR=${3:?env var}
-VALA=${4:?value A}; VALB=${5:?value B}; PAIRS=${6:-2}
+SF=${1:?sfdir}; QUERIES=${2:?queries}
+VALA=${3?conf A}; VALB=${4?conf B}; PAIRS=${5:-2}
 OUT=/tmp/paired_probe
 mkdir -p "$OUT"
 for i in $(seq 1 "$PAIRS"); do
   for arm in A B; do
     v=$VALA; [ "$arm" = B ] && v=$VALB
     f="$OUT/${i}_${arm}.json"
-    echo "== pair $i arm $arm: $VAR=$v =="
-    env "$VAR=$v" SPARK_GRAFT_BENCH_REPS=1 SPARK_GRAFT_ONLY="$QUERIES" \
+    echo "== pair $i arm $arm: SPARK_GRAFT_EXTRA_CONF='$v' =="
+    SPARK_GRAFT_EXTRA_CONF="$v" SPARK_GRAFT_BENCH_REPS=1 SPARK_GRAFT_ONLY="$QUERIES" \
       tools/run_bench.sh "$SF" "$f" >/dev/null
   done
 done
-python3 - "$OUT" "$VAR" "$VALA" "$VALB" "$PAIRS" <<'EOF'
+python3 - "$OUT" "$VALA" "$VALB" "$PAIRS" <<'EOF'
 import json, sys
-out, var, va, vb, pairs = sys.argv[1], sys.argv[2], sys.argv[3], sys.argv[4], int(sys.argv[5])
+out, va, vb, pairs = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
 arms = {}
 for i in range(1, pairs + 1):
-    for arm, val in (("A", va), ("B", vb)):
-        d = json.load(open(f"{out}/{i}_{arm}.json"))
-        arms[(i, arm)] = d
+    for arm in "AB":
+        arms[(i, arm)] = json.load(open(f"{out}/{i}_{arm}.json"))
 qs = sorted(next(iter(arms.values()))["queries"])
-print(f"\n{'query':<36}" + "".join(f"{i}{a}({var}={va if a=='A' else vb})".rjust(22)
-                                   for i in range(1, pairs + 1) for a in "AB"))
+print(f"\nA: '{va}'\nB: '{vb}'")
+print(f"{'query':<36}" + "".join(f"{i}{a}".rjust(22)
+                                 for i in range(1, pairs + 1) for a in "AB"))
 print(f"{'calib_s':<36}" + "".join(f"{arms[(i,a)]['calib_s']:>22.2f}"
                                    for i in range(1, pairs + 1) for a in "AB"))
 for q in qs:
