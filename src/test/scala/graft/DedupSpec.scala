@@ -436,6 +436,71 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("densePairCounts: slim packed-pair path equals the legacy wide-key path") {
+    // the wide-key generator is gone from Dedup; this keeps it as a
+    // reference model (long ids, (id, size) structs in the postings, every
+    // i < j meeting grouped on (a, b, sa, sb)) and pins the packed-pair
+    // path's Jaccard and directed-containment output to it, row for row
+    val rnd = new scala.util.Random(23L)
+    val vocab = (0 until 150).map(i => f"v$i%03d")
+    val base = (0 until 20).map { i =>
+      (i.toLong, (0 until 25).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    }
+    val mutated = base.flatMap { case (id, text) =>
+      (1 to 2).map { m =>
+        val w = text.split(" ")
+        (0 until m * 2).foreach(_ => w(rnd.nextInt(w.length)) = vocab(rnd.nextInt(vocab.size)))
+        (id + 1000L * m, w.mkString(" "))
+      }
+    }
+    val corpus = (base ++ mutated).toDF("doc_id", "text")
+    def wideKeyCounts(sh: org.apache.spark.sql.DataFrame) = {
+      val sizes = sh.groupBy("_id").agg(count(lit(1)).as("sz"))
+      sh.join(sizes, "_id")
+        .groupBy("sh")
+        .agg(sort_array(collect_list(struct(col("_id").as("i"), col("sz").as("z")))).as("ps"))
+        .select(posexplode(col("ps")).as(Seq("_p", "x")), col("ps"))
+        .select(col("x"), explode(slice(col("ps"), col("_p") + lit(2),
+          size(col("ps")) - col("_p") - lit(1))).as("y"))
+        .groupBy(col("x.i").as("a"), col("y.i").as("b"), col("x.z").as("sa"), col("y.z").as("sb"))
+        .agg(count(lit(1)).as("common"))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
+    def run(df: org.apache.spark.sql.DataFrame) = {
+      val sh = Dedup.shingleHashes(df, "doc_id", "text", n = 3).cache()
+      val j = rows(Dedup.ngramJaccardPairsFromHashes(sh, 0.5))
+      val c = rows(Dedup.denseContainment(sh, 0.6))
+      val wide = wideKeyCounts(sh)
+      val legJ = rows(wide
+        .withColumn("jaccard",
+          col("common").cast("double") / (col("sa") + col("sb") - col("common")))
+        .where(col("jaccard") >= 0.5)
+        .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard")))
+      val legC = rows(wide
+        .select(explode(array(
+          struct(col("a"), col("b"),
+            (col("common").cast("double") / col("sa")).as("containment")),
+          struct(col("b").as("a"), col("a").as("b"),
+            (col("common").cast("double") / col("sb")).as("containment")))).as("r"))
+        .select(col("r.a").as("a"), col("r.b").as("b"), col("r.containment"))
+        .where(col("containment") >= 0.6)
+        .select(col("a"), col("b"), round(col("containment"), 6).as("containment")))
+      sh.unpersist()
+      (j, c, legJ, legC)
+    }
+    val (slimJ, slimC, legJ, legC) = run(corpus)
+    assert(slimJ == legJ && slimJ.nonEmpty)
+    assert(slimC == legC && slimC.nonEmpty)
+    // ids past 2^31 (the wide-key path's old territory) give the
+    // offset-identical pair set, and still match the reference
+    val big = corpus.withColumn("doc_id", col("doc_id") + lit(5_000_000_000L))
+    val (bigJ, bigC, bigLegJ, bigLegC) = run(big)
+    assert(bigJ == bigLegJ && bigC == bigLegC)
+    assert(bigJ == slimJ.map { case (a, b, x) =>
+      (a + 5_000_000_000L, b + 5_000_000_000L, x) })
+  }
+
   test("candidatePairs: each banded pair exactly once, set equals the naive shared-bucket model") {
     // hand-built k=8 signatures over 4 bands of 2: docs 1/2 identical
     // (share ALL four bands), 3 meets them only in band 0, 4 meets 1/2 in
