@@ -369,13 +369,6 @@ object Bench {
         (100000L + i, a.mkString(" "))
       }
       val tau = 0.8
-      // built from the PARAMETER, not expr("c"), which silently resolved
-      // whatever column happened to be aliased "c" (r9 ADVICE). The halve
-      // is shiftright — exact on longs (c*(c−1) is non-negative and even),
-      // where Column./ would detour through double and lose exactness for
-      // df beyond ~9.5e7 (the r8 ADVICE integral-DIV fix, kept intact)
-      val mass = (c: org.apache.spark.sql.Column) =>
-        sum(org.apache.spark.sql.functions.shiftright(c * (c - lit(1L)), 1))
       val shZ = Dedup.shingleHashes(
         (zbase ++ fams).toDF("doc_id", "text"), "doc_id", "text", 3).cache()
       shZ.count()
@@ -391,7 +384,7 @@ object Bench {
       if (tierZ != 2)
         routeBreach += s"boilerplate corpus routed tier $tierZ, expected prefix (2); "
       val meets = shZ.groupBy("sh").agg(count(lit(1)).as("c"))
-        .agg(mass(col("c"))).head().getLong(0)
+        .agg(graft.core.GraftSession.meetMass(col("c"))).head().getLong(0)
       val cand = Dedup.prefixCandidates(shZ, tau).count()
       // shuffle bytes per path ride the same listener as the board: on a
       // network-bound cluster the exchange volume — not the local wall,

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Session + table-loading helpers.
   *
@@ -106,6 +106,16 @@ object GraftSession {
       .map(_.toInt).getOrElse(cores)
     val want = ((bigSideRows + rowsPerPartition - 1) / rowsPerPartition).toInt
     math.min(math.max(want, cores), math.max(ipn, cores))
+  }
+
+  /** Meet mass Σ C(df, 2) over a column of group sizes: the exact pair
+    * count a self-join of those groups generates, and the quantity
+    * [[iterPartitions]] sizes pair-exploding stages from. Integral `div`,
+    * never `/`: Divide detours through double and loses exactness for df
+    * beyond ~9.5e7. 0 over no rows. */
+  def meetMass(df: Column): Column = {
+    import org.apache.spark.sql.functions.{call_function, coalesce, lit, sum}
+    coalesce(sum(call_function("div", df * (df - lit(1L)), lit(2L))), lit(0L))
   }
 
   /** Run `body` with both the shuffle-partition floor and the AQE initial

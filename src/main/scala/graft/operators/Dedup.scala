@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.BroadcastGuard.{hintIfSmall, withinLimit}
+import graft.core.GraftSession.meetMass
 
 /** Deduplication operators for document/embedding corpora.
   *
@@ -557,7 +558,7 @@ object Dedup {
     val mass =
       if (massHint >= 0L) massHint
       else sh.groupBy("sh").agg(count(lit(1)).as("_df"))
-        .agg(coalesce(sum(expr("(_df * (_df - 1)) DIV 2")), lit(0L)))
+        .agg(meetMass(col("_df")))
         .head().getLong(0)
     // Certify-or-refuse pre-flight (round 14, r12 VERDICT item 6): when
     // the estimated pair shuffle cannot fit the budget, refuse LOUDLY
@@ -769,12 +770,10 @@ object Dedup {
     // heavy sf1 corpus has a ~100M-row shingle vocabulary, and its cache
     // forced 1.6 GB of aggregate spill per query.
     val obs = org.apache.spark.sql.Observation()
-    // DIV (integral) — Divide would cast to double and lose exactness for
-    // df beyond ~9.5e7, right where a 100M-row vocabulary puts routing
-    // decisions near the threshold (r8 ADVICE)
+    // exact to the pair: a 100M-row vocabulary puts routing decisions near
+    // the threshold (r8 ADVICE)
     val hot = sh.groupBy("sh").agg(count(lit(1)).as("_df"))
-      .observe(obs, coalesce(sum(expr("(_df * (_df - 1)) DIV 2")), lit(0L))
-        .as("mass"))
+      .observe(obs, meetMass(col("_df")).as("mass"))
       .where(col("_df") > hotMinDf)
       .orderBy(col("_df").desc, col("sh").asc).limit(maxHot + 1)
       .select("sh").collect().map(_.getLong(0))
@@ -853,10 +852,10 @@ object Dedup {
     val (hot, tier0Dense, denseMass) = jaccardDfRouting(sh, broadcastPairLimit)
     if (tier0Dense) return (0, None, denseMass)
     val prefix = freqOrderedPrefix(sh, tau, hot).cache()
-    val meetMass = prefix.groupBy("sh").agg(count(lit(1)).as("c"))
-      .agg(coalesce(sum(expr("(c * (c - 1)) DIV 2")), lit(0L)))
+    val prefixMass = prefix.groupBy("sh").agg(count(lit(1)).as("c"))
+      .agg(meetMass(col("c")))
       .head().getLong(0)
-    if (meetMass > broadcastPairLimit.toLong) {
+    if (prefixMass > broadcastPairLimit.toLong) {
       prefix.unpersist()
       (1, None, denseMass)
     } else (2, Some(prefix), denseMass)
@@ -1196,14 +1195,20 @@ object Dedup {
       .select(col("a"), col("b"), round(col("cosine"), 6).as("cosine"))
   }
 
-  /** Candidate pairs (a, b) for [[embeddingCosinePairsLsh]] — each pair
-    * exactly once (first-shared-table arithmetic), vectors never
-    * shuffled. Exposed so the spec can measure hot-cell candidate
-    * reduction directly. */
+  /** Candidate pairs (a, b) for [[embeddingCosinePairsLsh]]: the pairs
+    * [[Banding.pairs]] finds sharing a (table, cell) key — each pair once,
+    * vectors never shuffled — returned localCheckpointed. Exposed so the
+    * spec can measure hot-cell candidate reduction directly. */
   private[graft] def lshCandidates(
       df: DataFrame, idCol: String, vecCol: String,
       bitsPerTable: Int, tables: Int, seed: Long,
-      hotCellLimit: Int): DataFrame = {
+      hotCellLimit: Int, rowsPerTask: Long = Banding.RowsPerTask): DataFrame = {
+    // Similarity.lshTopK's bounds: lshBucket sets bit j as the Int `1 << j`,
+    // whose shift distance Java masks to 5 bits, so from 33 bits on two
+    // hyperplanes would set the same bit and distinct buckets merge
+    require(bitsPerTable > 0 && bitsPerTable < 31,
+      s"bitsPerTable must be in [1, 30], got $bitsPerTable")
+    require(tables > 0, s"tables must be > 0, got $tables")
     val dim = Similarity.vecDim(df, vecCol, "embeddingCosinePairsLsh")
     val basePlanes = Similarity.hyperplanes(bitsPerTable * tables, dim, seed)
       .grouped(bitsPerTable).toSeq
@@ -1261,29 +1266,15 @@ object Dedup {
             coalesce(col(s"_ishot$t"), lit(false))): _*))
           .drop((0 until tables).map(t => s"_ishot$t"): _*)
       }
-    // cell key per table: (t, base, sub-if-hot) — cool cells keep the
-    // plain base key, hot cells require the refinement hash to agree too
-    val keyed = flagged.select(col("_id"), col("_bb"), col("_sb"), col("_hot"),
-      explode(array((0 until tables).map(t =>
-        struct(lit(t).as("t"), col("_bb")(t).as("b"),
-          when(col("_hot")(t), col("_sb")(t)).otherwise(lit(-1L)).as("s"))): _*))
-        .as("_cell"))
-    val x = keyed.select(col("_id").as("a"), col("_bb").as("_ba"),
-      col("_sb").as("_sa"), col("_hot").as("_ha"), col("_cell"))
-    val y = keyed.select(col("_id").as("b"), col("_bb").as("_bc"),
-      col("_sb").as("_sc"), col("_cell"))
-    // first-shared-table: a pair colliding in several tables survives only
-    // in the smallest one — pure arithmetic over the carried bucket arrays,
-    // no distinct/dropDuplicates exchange. Collision at t' means equal base
-    // buckets AND (cell cool OR equal sub buckets); hotness is a property
-    // of the CELL, so when the bases agree both rows carry the same flag.
-    val noEarlier = !exists(
-      filter(sequence(lit(0), lit(tables - 1)), i => i < col("_cell.t")),
-      i => col("_ba")(i) === col("_bc")(i) &&
-        (!col("_ha")(i) || col("_sa")(i) === col("_sc")(i)))
-    val out = x.join(y, Seq("_cell"))
-      .where(col("a") < col("b"))
-      .where(noEarlier)
+    // cell key per table: the base bucket, plus the sub-bucket when the
+    // cell is hot — equal keys are exactly equal cells, because hotness is
+    // a property of the cell (equal bases carry the same flag) and both
+    // buckets are < 2^bitsPerTable
+    val keyed = flagged.select(col("_id"), array((0 until tables).map { t =>
+      col("_bb")(t) + when(col("_hot")(t),
+        shiftleft(col("_sb")(t) + 1L, bitsPerTable)).otherwise(0L)
+    }: _*).as("_sig"))
+    val out = Banding.pairs(keyed, tables, (s, t) => s(t), rowsPerTask)
       .select(col("a"), col("b"))
       .localCheckpoint()
     slim.unpersist()

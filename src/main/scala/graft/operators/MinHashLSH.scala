@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** MinHash signatures + LSH banding for near-duplicate candidate generation.
@@ -25,8 +25,7 @@ object MinHashLSH {
     * recipe applied to the MinHash family. */
   def signaturesWith(
       shingleHashes: DataFrame, k: Int,
-      perm: (Int, org.apache.spark.sql.Column) => org.apache.spark.sql.Column)
-      : DataFrame = {
+      perm: (Int, Column) => Column): DataFrame = {
     val mins = (0 until k).map(i => min(perm(i, col("sh"))).as(s"_h$i"))
     shingleHashes.groupBy("_id")
       .agg(mins.head, mins.tail: _*)
@@ -40,93 +39,50 @@ object MinHashLSH {
 
   /** [[candidatePairs]] with the BAND BUCKET KEY INJECTED
     * (`bandKey(j, slice)` = the bucket id of band j's signature slice):
-    * identical banding topology — b rows per doc, equi-join on
-    * (band, bucket), one row per candidate pair — under any
-    * engine-replicable key.
-    *
-    * Stage sizing (round 14, the [[SimHash.hammingPairs]] discipline
-    * applied to its last remaining instance): each (band, bucket) of df
-    * rows generates C(df, 2) pairs INSIDE the join task — output ≫
-    * map-output bytes, so AQE (which coalesces by map bytes) would
-    * collapse the stage to ~cores tasks streaming the whole band meet
-    * volume. The meet mass Σ C(df, 2) comes from one aggregate over the
-    * b·N banded rows (the band table is checkpointed first, so the probe
-    * is one cheap job — and the checkpoint also keeps the signature
-    * subtree, an md5-vocab aggregate for q162, from executing on both
-    * sides of the self-join), and when the mass wants more tasks than
-    * the default parallelism the banded table is repartitioned on the
-    * join keys with an explicit user-numbered count AQE never coalesces;
-    * the self-join reuses that distribution (one exchange, zero extras)
-    * and the result stays a LAZY plan. Small corpora skip the
-    * repartition — the default AQE plan was already optimal there and
-    * the finer blocks only cost (the r13 q140/q143 lesson).
-    *
-    * Dedup is arithmetic, not an exchange: a pair sharing several band
-    * buckets is kept only in the FIRST shared band, decided from the two
-    * band arrays already aboard the joined row (the q87/q74/SimHash
-    * discipline) — the old `.distinct()` re-shuffled every multi-band
-    * pair b times. Per-bucket skew caveat (same as densePairCounts):
-    * one bucket's C(df, 2) pairs cannot split across tasks. */
+    * the same [[Banding.pairs]] join — one row per doc per band,
+    * equi-join on (band, bucket), each candidate pair once — under any
+    * engine-replicable key. A signature whose length is not
+    * `bands × rowsPerBand` fails the call by name. */
   def candidatePairsWith(
       sigs: DataFrame, bands: Int, rowsPerBand: Int,
-      bandKey: (Int, Seq[org.apache.spark.sql.Column]) => org.apache.spark.sql.Column)
-      : DataFrame = {
-    val spark = sigs.sparkSession
+      bandKey: (Int, Seq[Column]) => Column): DataFrame =
+    candidatePairsWith(sigs, bands, rowsPerBand, bandKey, Banding.RowsPerTask)
+
+  private[graft] def candidatePairsWith(
+      sigs: DataFrame, bands: Int, rowsPerBand: Int,
+      bandKey: (Int, Seq[Column]) => Column,
+      rowsPerTask: Long): DataFrame = {
+    require(bands > 0 && rowsPerBand > 0,
+      s"bands ($bands) and rowsPerBand ($rowsPerBand) must be > 0")
+    val k = bands * rowsPerBand
     val bandHashes = array((0 until bands).map { j =>
       val slice = (0 until rowsPerBand).map(r => col("sig").getItem(j * rowsPerBand + r))
       bandKey(j, slice)
     }: _*)
-    val s = sigs.select(col("_id"), bandHashes.as("_bands")).localCheckpoint()
-    val banded = s.select(col("_id"), col("_bands"),
-      posexplode(col("_bands")).as(Seq("band", "bh")))
-    val mass = banded.groupBy("band", "bh").agg(count(lit(1)).as("_df"))
-      .agg(coalesce(sum(expr("(_df * (_df - 1)) DIV 2")), lit(0L)))
-      .head().getLong(0)
-    val rowsPerTask = 2L * 1000 * 1000
-    // skip gate retuned round 15 (see SimHash.hammingPairs — the same
-    // r14 condition assumed the default join would run ~cores tasks;
-    // AQE sizes it by bytes, so a small blocked table coalesces to ~1
-    // task streaming the whole band meet volume): the skip engages only
-    // when the mass also fits the DEFAULT plan's estimated parallelism.
-    val skip = spark.conf.getOption("graft.simhash.probeSkip") match {
-      case Some("on") => true
-      case Some("off") => false
-      case _ =>
-        val bandedRows = bands.toLong * s.count() // s checkpointed: cheap
-        val advisory = spark.conf
-          .getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-          .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-          .getOrElse(64L * 1024 * 1024)
-        val estDefaultTasks = math.max(1L, bandedRows * 16L / advisory)
-        mass <= rowsPerTask *
-          math.min(spark.sparkContext.defaultParallelism.toLong, estDefaultTasks)
-    }
-    val bx =
-      if (skip) banded
-      else banded.repartition(
-        graft.core.GraftSession.iterPartitions(spark, mass, rowsPerTask),
-        col("band"), col("bh"))
-    // "shared earlier band" must mean exactly "the equi-join at that band
-    // would have matched" — plain (null-rejecting) equality, coalesced to
-    // false so a null key can never veto the whole predicate
-    val firstShared =
-      if (bands == 1) lit(true)
-      else !(0 until bands - 1).map { j =>
-        coalesce(col("x.band") > j &&
-          col("x._bands").getItem(j) === col("y._bands").getItem(j), lit(false))
-      }.reduce(_ || _)
-    bx.as("x").join(bx.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x._id") < col("y._id"))
-      .where(firstShared)
-      .select(col("x._id").as("a"), col("y._id").as("b"))
+    // checked in the banding projection itself, so it costs no extra job:
+    // a longer signature would silently drop its tail, a shorter one die
+    // in an unnamed array-index error
+    val checked = when(size(col("sig")) =!= k, raise_error(concat(
+        lit("MinHash signature length "), size(col("sig")).cast("string"),
+        lit(s" != bands x rowsPerBand = $bands x $rowsPerBand"))))
+      .otherwise(bandHashes)
+    Banding.pairs(sigs.select(col("_id"), checked.as("_sig")), bands,
+        (s, j) => s.getItem(j), rowsPerTask)
+      .select(col("a"), col("b"))
   }
+
+  /** Band j's bucket under the production key: xxhash64 of (j, slice). */
+  private[graft] val xxhashBandKey: (Int, Seq[Column]) => Column =
+    (j, slice) => xxhash64((lit(j) +: slice): _*)
+
+  /** Band j's bucket under q162's planted key: the '|'-join of its slice. */
+  private[graft] val md5BandKey: (Int, Seq[Column]) => Column =
+    (_, slice) => concat_ws("|", slice: _*)
 
   /** Candidate pairs (a < b) sharing at least one LSH band bucket.
     * bands * rowsPerBand must equal the signature length. */
   def candidatePairs(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
-    candidatePairsWith(sigs, bands, rowsPerBand,
-      (j, slice) => xxhash64((lit(j) +: slice): _*))
+    candidatePairsWith(sigs, bands, rowsPerBand, xxhashBandKey)
 
   /** End-to-end near-dup pairs: MinHash/LSH candidates, then exact Jaccard
     * verification (>= tau) against the shingle sets. */
@@ -146,8 +102,8 @@ object MinHashLSH {
     * controls caching — see [[graft.Graft.dedupSuite]]). */
   def nearDupPairsFromHashes(
       sh: DataFrame, k: Int, bands: Int, tau: Double): DataFrame = {
-    require(k % bands == 0, "k must be divisible by bands")
-    verifiedPairs(sh, candidatePairs(signatures(sh, k), bands, k / bands), tau)
+    val r = rowsPerBand(k, bands)
+    verifiedPairs(sh, candidatePairs(signatures(sh, k), bands, r), tau)
   }
 
   /** The MinHash band/verify machinery under PLANTED md5 mixes — q162's
@@ -164,7 +120,7 @@ object MinHashLSH {
     * verification join ([[verifiedPairs]]) as the production path. */
   def nearDupPairsMd5(
       sh: DataFrame, k: Int, bands: Int, tau: Double): DataFrame = {
-    require(k % bands == 0, "k must be divisible by bands")
+    val r = rowsPerBand(k, bands)
     // Evaluate the shingle subtree ONCE at full width (round 14): `sh`
     // arrives as a lazy explode over the corpus scan — parquet-split
     // parallelism (2 tasks at sf1) — and this operator consumes it FOUR
@@ -187,9 +143,14 @@ object MinHashLSH {
     val s = graft.core.Par.fanOut(sh).localCheckpoint()
     val sigs = signaturesWith(s, k,
       (i, c) => md5(concat(c, lit(":" + i))))
-    val cands = candidatePairsWith(sigs, bands, k / bands,
-      (_, slice) => concat_ws("|", slice: _*))
+    val cands = candidatePairsWith(sigs, bands, r, md5BandKey)
     verifiedPairs(s, cands, tau)
+  }
+
+  private def rowsPerBand(k: Int, bands: Int): Int = {
+    require(bands > 0 && k > 0 && k % bands == 0,
+      s"k ($k) must be a positive multiple of bands ($bands)")
+    k / bands
   }
 
   /** Exact-Jaccard verification of candidate pairs against the shingle

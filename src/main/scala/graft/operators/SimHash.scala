@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -77,114 +77,21 @@ object SimHash {
     hammingPairs(simhashes(df, idCol, textCol), maxHamming)
 
   /** Pigeonhole hamming-pair join over ANY 64-bit signature table
-    * `(_id, simhash)` — the banding core shared by text simhash and
-    * [[graft.multimodal.Binary.perceptualNearDups]]'s perceptual aHash:
-    * 4 blocks of 16 bits, candidates from an equi-join on (block, value)
-    * (any pair within hamming <= 3 agrees on a whole block), exact
-    * `bit_count` verify after. Never a cross join, and no dedupe
-    * exchange either (round 8): a pair agreeing on several blocks —
-    * EVERY pair of near-identical signatures agrees on all four — is
-    * kept only in the FIRST shared block, decided arithmetically from
-    * the two signatures already in the joined row (the q87/q74
-    * discipline), where the old `.distinct()` shuffled each such
-    * candidate four times with both signatures aboard.
-    *
-    * Stage sizing (round 13, the [[graft.operators.Dedup.densePairCounts]]
-    * lesson applied to its last remaining instance — but via PLAN shape,
-    * not conf scoping): the banding self-join's map output is 4 rows ×
-    * 24 bytes per signature, but each (blk, bv) bucket of df rows
-    * generates C(df, 2) candidate pairs INSIDE the join task — output ≫
-    * input, so AQE (which coalesces by map-output bytes) collapses the
-    * stage to ~cores tasks and each task streams the whole band meet
-    * volume. The band meet mass Σ_buckets C(df, 2) is known exactly from
-    * one aggregate over the 4N blocked rows (the signature table is
-    * already checkpointed, so the probe is one cheap job), and the join
-    * runs at mass / 2M tasks by REPARTITIONING the blocked table on the
-    * join keys with an explicit partition count: AQE never coalesces a
-    * user-numbered repartition, the self-join reuses its partitioning
-    * (one exchange, ReuseExchange across the two sides, zero extra
-    * shuffles), and the result stays a LAZY plan — the r13 first cut
-    * materialized the pair list inside a conf-pinned scope instead, and
-    * checkpointing 344M pairs at sf30 doubled q153's wall. Per-bucket
-    * skew caveat (same as densePairCounts): one bucket's pairs cannot
-    * split across tasks, so a single saturated 16-bit bucket still
-    * bounds a task at C(df_max, 2) pairs. */
-  def hammingPairs(sig: DataFrame, maxHamming: Int): DataFrame = {
+    * `(_id, simhash)` — shared by text simhash, the perceptual image and
+    * payload hashes and the audio fingerprint: the signature splits into 4
+    * blocks of 16 bits, any pair within hamming <= 3 agrees on a whole
+    * block, so candidates come from [[Banding.pairs]] over the blocks and
+    * an exact `bit_count` verify follows. (a, b, hamming), a < b. */
+  def hammingPairs(sig: DataFrame, maxHamming: Int): DataFrame =
+    hammingPairs(sig, maxHamming, Banding.RowsPerTask)
+
+  private[graft] def hammingPairs(
+      sig: DataFrame, maxHamming: Int, rowsPerTask: Long): DataFrame = {
     require(maxHamming <= 3, "4 blocks of 16 bits guarantee recall only for hamming <= 3")
-    val spark = sig.sparkSession
-    def block(c: Column, j: Int): Column =
-      shiftrightunsigned(c, j * 16).bitwiseAND(0xFFFFL)
-    val blocks = array((0 until 4).map { j =>
-      shiftrightunsigned(col("simhash"), j * 16).bitwiseAND(0xFFFFL)
-    }: _*)
-    // Materialize the signature table BEFORE the self-join: the two join
-    // sides are separate lambda instances to Catalyst (mapPartitions
-    // closures never canonicalize equal), so ReuseExchange cannot fire
-    // and an expensive sig subtree — a full image decode for the
-    // perceptual callers, a corpus hash pass for text — would run TWICE
-    // (plan-verified: q145's executed plan carried two complete decode
-    // subtrees, zero ReusedExchange). Sixteen bytes per row.
-    val s = sig.select(col("_id"), col("simhash")).localCheckpoint()
-    val blocked = s.select(col("_id"), col("simhash"), posexplode(blocks).as(Seq("blk", "bv")))
-    val mass = blocked.groupBy("blk", "bv").agg(count(lit(1)).as("_df"))
-      .agg(coalesce(sum(expr("(_df * (_df - 1)) DIV 2")), lit(0L)))
-      .head().getLong(0)
-    // Small-corpus skip (round 14): when the meet mass wants no more
-    // tasks than the default parallelism, the pre-r13 default AQE plan
-    // was already optimal — the explicit repartition only added an
-    // exchange with finer blocks (q140 8.2 → 15.2 s, q143 6.7 → 8.3 s at
-    // sf10 on the r13 board). The probe job above is cheap (the sig
-    // table is checkpointed); only the fine partitioning costs, so it
-    // now engages exactly when the mass says it pays.
-    val rowsPerTask = 2L * 1000 * 1000
-    // graft.simhash.probeSkip: "on" forces the skip, "off" forces the
-    // repartition — the r15 A/B instrument for adjudicating the q97
-    // regression (r14 VERDICT item 3); unset = the sizing heuristic.
-    //
-    // Heuristic RETUNED (round 15): the r14 skip condition compared the
-    // mass against rowsPerTask × defaultParallelism — assuming the
-    // DEFAULT plan would run ~cores join tasks. It does not: AQE sizes
-    // the join's exchange by map-output BYTES, and a small corpus's
-    // blocked table is a few MB, so the default join coalesces to ~1
-    // task streaming the whole meet volume (q97 at sf1: paired A/B/A/B
-    // measured skip-ON 2.49 s vs skip-OFF 1.73-1.99 s at matched calib —
-    // a real ~30 % regression; r13's always-repartition 1.51 s). The
-    // skip now engages only when the mass also fits the parallelism the
-    // DEFAULT plan would actually provide — estimated from the blocked
-    // row count × ~16 B/row against the AQE advisory partition size —
-    // so tiny-byte/huge-mass corpora repartition again while the
-    // q140/q143 small-mass sf10 shape (where the extra exchange only
-    // costs) keeps the skip. sf10 A/B: q140 8.7 on / 10.0 off,
-    // q143/q153/q97 parity — the skip's win is small and real there.
-    val skipConf = spark.conf.getOption("graft.simhash.probeSkip")
-    val skip = skipConf match {
-      case Some("on") => true
-      case Some("off") => false
-      case _ =>
-        val blockedRows = 4L * s.count() // s is checkpointed: cheap count
-        val advisory = spark.conf
-          .getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-          .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-          .getOrElse(64L * 1024 * 1024)
-        val estDefaultTasks = math.max(1L, blockedRows * 16L / advisory)
-        mass <= rowsPerTask *
-          math.min(spark.sparkContext.defaultParallelism.toLong, estDefaultTasks)
-    }
-    val bx =
-      if (skip) blocked
-      else blocked.repartition(
-        graft.core.GraftSession.iterPartitions(spark, mass, rowsPerTask),
-        col("blk"), col("bv"))
-    val firstShared = !(0 until 3).map { j =>
-      (col("x.blk") > j) &&
-        (block(col("x.simhash"), j) === block(col("y.simhash"), j))
-    }.reduce(_ || _)
-    bx.as("x").join(bx.as("y"),
-        col("x.blk") === col("y.blk") && col("x.bv") === col("y.bv") &&
-          col("x._id") < col("y._id"))
-      .where(firstShared)
-      .select(col("x._id").as("a"), col("y._id").as("b"),
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
+    Banding.pairs(sig.select(col("_id"), col("simhash").as("_sig")), 4,
+        (s, j) => shiftrightunsigned(s, j * 16).bitwiseAND(0xFFFFL), rowsPerTask)
+      .select(col("a"), col("b"),
+        bit_count(col("_siga").bitwiseXOR(col("_sigb"))).as("hamming"))
       .where(col("hamming") <= maxHamming)
   }
 }

@@ -18,7 +18,7 @@ object MassProbe {
     val t0 = System.nanoTime()
     val row = sh.groupBy("sh").agg(count(lit(1)).as("_df"))
       .agg(
-        coalesce(sum(expr("(_df * (_df - 1)) DIV 2")), lit(0L)).as("mass"),
+        graft.core.GraftSession.meetMass(col("_df")).as("mass"),
         count(lit(1)).as("vocab"),
         coalesce(sum(col("_df")), lit(0L)).as("occurrences"),
         max(col("_df")).as("max_df"))

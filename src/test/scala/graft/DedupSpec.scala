@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.ArrayMath
-import graft.operators.{Dedup, MinHashLSH, SimHash}
+import graft.operators.{Banding, Dedup, MinHashLSH, SimHash}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -526,6 +526,136 @@ class DedupSpec extends AnyFunSuite {
     assert(got.toSet == model)
   }
 
+  /** Runs `f`, returning its value, the Spark jobs it started and the
+    * physical plans (AQE re-plans included) of the SQL executions it ran. */
+  private def traced[T](f: => T): (T, Int, Seq[String]) = {
+    import org.apache.spark.graftshim.ListenerShim
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription); ()
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.physicalPlanDescription); ()
+        case _ => ()
+      }
+    }
+    ListenerShim.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      ListenerShim.drain(sc)
+      import scala.jdk.CollectionConverters._
+      (out, jobs.get, plans.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Whether a plan repartitions the banded rows to a user-numbered count
+    * on (band, key): the sized arm of Banding.pairs. */
+  private def sizedBanding(plans: Seq[String]): Boolean = {
+    val sized = """hashpartitioning\(band#\d+L?, key#\d+L?, \d+\), REPARTITION_BY_NUM""".r
+    plans.exists(p => sized.findFirstIn(p).isDefined)
+  }
+
+  /** Pairs of `run(rowsPerTask)` with the banded join forced to its sized
+    * arm (rowsPerTask = 1) and at the default, each checked for its plan
+    * shape; both must equal `model`. */
+  private def assertBothArms(what: String, model: Set[(Long, Long)])(
+      run: Long => org.apache.spark.sql.DataFrame): Unit =
+    for ((rowsPerTask, sized) <- Seq(1L -> true, Banding.RowsPerTask -> false)) {
+      val (got, _, plans) = traced(
+        run(rowsPerTask).select("a", "b").as[(Long, Long)].collect())
+      assert(got.length == got.distinct.length, s"$what: duplicate pairs")
+      assert(got.toSet == model, s"$what, rowsPerTask $rowsPerTask: pairs differ from the model")
+      assert(sizedBanding(plans) == sized,
+        s"$what, rowsPerTask $rowsPerTask: sized repartition expected $sized")
+    }
+
+  test("banded join, sized and default arms: MinHash xxhash and md5 keys equal the shared-bucket model") {
+    val sigs = Seq(
+      (1L, Seq(10L, 11L, 20L, 21L, 30L, 31L, 40L, 41L)),
+      (2L, Seq(10L, 11L, 20L, 21L, 30L, 31L, 40L, 41L)),
+      (3L, Seq(10L, 11L, 99L, 98L, 97L, 96L, 95L, 94L)),
+      (4L, Seq(77L, 76L, 20L, 21L, 75L, 74L, 40L, 41L)),
+      (5L, Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L)),
+      (6L, Seq(1L, 2L, 20L, 21L, 0L, 0L, 7L, 8L))
+    ).toDF("_id", "sig")
+    val rows = sigs.as[(Long, Seq[Long])].collect()
+    val model = (for {
+      (a, sa) <- rows; (b, sb) <- rows if a < b
+      if (0 until 4).exists(j => sa.slice(2 * j, 2 * j + 2) == sb.slice(2 * j, 2 * j + 2))
+    } yield (a, b)).toSet
+    assertBothArms("xxhash", model)(r =>
+      MinHashLSH.candidatePairsWith(sigs, 4, 2, MinHashLSH.xxhashBandKey, r))
+    val hexSigs = sigs.select(col("_id"), transform(col("sig"), _.cast("string")).as("sig"))
+    assertBothArms("md5", model)(r =>
+      MinHashLSH.candidatePairsWith(hexSigs, 4, 2, MinHashLSH.md5BandKey, r))
+  }
+
+  test("banded join, sized and default arms: text and perceptual simhash equal brute-force hamming") {
+    import graft.multimodal.Binary
+    // every 5th document planted again with its last byte changed: a
+    // near-dup payload and text (the q97 fixture)
+    val base = graft.core.Tables.load(spark, "/root/testdata/sf0.001", "documents")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    val corpus = base.unionByName(base.where(col("doc_id") % 5 === 0).select(
+      (col("doc_id") + 1000000L).as("doc_id"),
+      concat(expr("substring(text, 1, length(text) - 1)"), lit("x")).as("text")))
+    val perceptual = Binary.aHashes(spark, Binary.withPayload(corpus, "text"), "doc_id")
+      .where(col("simhash") =!= 0L)
+    val text = SimHash.simhashes(corpus, "doc_id", "text")
+    for ((what, sig) <- Seq("perceptual" -> perceptual, "text" -> text)) {
+      val hs = sig.select("_id", "simhash").as[(Long, Long)].collect()
+      val brute = (for {
+        (a, ha) <- hs; (b, hb) <- hs if a < b
+        if java.lang.Long.bitCount(ha ^ hb) <= 3
+      } yield (a, b)).toSet
+      assert(brute.nonEmpty, s"$what: the model must have pairs")
+      assertBothArms(what, brute)(r => SimHash.hammingPairs(sig, 3, r))
+    }
+  }
+
+  test("banding sizes itself in one aggregate: MinHash and SimHash job counts per call") {
+    val sigs = MinHashLSH.signatures(Dedup.shingleHashes(docs, "doc_id", "text", 3), 64)
+    val (_, minhashJobs, _) = traced(MinHashLSH.candidatePairs(sigs, 16, 4))
+    val simhashes = SimHash.simhashes(docs, "doc_id", "text")
+    val (_, simhashJobs, _) = traced(SimHash.hammingPairs(simhashes, 3))
+    // the call runs the signature checkpoint and the one sizing aggregate
+    // (its AQE map stage, then the result); the pair join stays lazy. A
+    // separate row count of the checkpoint would add two more jobs.
+    assert(minhashJobs <= 6, s"candidatePairs ran $minhashJobs jobs")
+    assert(simhashJobs <= 5, s"hammingPairs ran $simhashJobs jobs")
+  }
+
+  test("candidatePairs/nearDupPairs refuse a non-positive band shape by name") {
+    val sigs = Seq((1L, Seq(1L, 2L)), (2L, Seq(1L, 2L))).toDF("_id", "sig")
+    for ((bands, rows) <- Seq(0 -> 2, 2 -> 0, -1 -> 2)) {
+      val e = intercept[IllegalArgumentException](
+        MinHashLSH.candidatePairs(sigs, bands, rows))
+      assert(e.getMessage.contains("bands") && e.getMessage.contains("rowsPerBand"))
+    }
+    for (bands <- Seq(0, -4)) {
+      val e = intercept[IllegalArgumentException](
+        MinHashLSH.nearDupPairs(docs, "doc_id", "text", n = 3, k = 64, bands = bands, tau = 0.6))
+      assert(e.getMessage.contains("bands"))
+    }
+  }
+
+  test("candidatePairs: a signature longer or shorter than bands x rowsPerBand fails by name") {
+    for (len <- Seq(9, 7)) {
+      val sigs = Seq((1L, Seq.tabulate(8)(_.toLong)), (2L, Seq.tabulate(len)(_.toLong)))
+        .toDF("_id", "sig")
+      val e = intercept[Exception](
+        MinHashLSH.candidatePairs(sigs, bands = 4, rowsPerBand = 2).collect())
+      assert(e.getMessage.contains(s"MinHash signature length $len != bands x rowsPerBand = 4 x 2"),
+        e.getMessage)
+    }
+  }
+
   test("simhash: identical docs at hamming 0; unrelated docs not paired") {
     val pairs = SimHash.nearDupPairs(docs, "doc_id", "text", maxHamming = 3)
       .as[(Long, Long, Int)].collect().toSet
@@ -713,6 +843,51 @@ class DedupSpec extends AnyFunSuite {
     val exact = Dedup.embeddingCosinePairs(df, "id", "vec", tau = 0.99)
       .select("a", "b").as[(Long, Long)].collect().toSet
     assert(pairsHot.subsetOf(exact))
+  }
+
+  test("embeddingCosinePairsLsh refuses a bad LSH shape by name") {
+    val emb = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(1.0f, 0.1f))).toDF("id", "vec")
+    for ((bits, tables, named) <- Seq((8, 0, "tables"), (0, 4, "bitsPerTable"),
+        (33, 4, "bitsPerTable"), (31, 1, "bitsPerTable"))) {
+      val e = intercept[IllegalArgumentException](
+        Dedup.embeddingCosinePairsLsh(emb, "id", "vec", tau = 0.9,
+          bitsPerTable = bits, tables = tables))
+      assert(e.getMessage.startsWith(s"requirement failed: $named must be"), e.getMessage)
+    }
+  }
+
+  test("banded join, sized and default arms: embedding LSH candidates equal the dropDuplicates cells") {
+    import graft.operators.Similarity
+    import org.apache.spark.sql.expressions.Window
+    val emb = graft.core.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val (bits, tables, seed) = (6, 3, 42L)
+    val dim = emb.select(size(col("embedding"))).head().getInt(0)
+    def planes(sd: Long) = Similarity.hyperplanes(bits * tables, dim, sd).grouped(bits).toSeq
+    val cells = planes(seed).zip(planes(seed ^ 0x9E3779B97F4A7C15L)).zipWithIndex.map {
+      case ((base, sub), t) => struct(lit(t).as("t"),
+        Similarity.lshBucket(col("embedding"), base).as("b"),
+        Similarity.lshBucket(col("embedding"), sub).as("s"))
+    }
+    val bucketed = emb.select(col("vec_id").cast("long").as("_id"),
+        explode(array(cells: _*)).as("c"))
+      .select(col("_id"), col("c.t"), col("c.b"), col("c.s"))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("t", "b")))
+    // the candidate plan before the shared join: one (table, bucket) cell
+    // per row and table, sub-split by the second hash when the cell holds
+    // more than hotCellLimit rows; self-join, dropDuplicates
+    def reference(hotCellLimit: Int): Set[(Long, Long)] = {
+      val keyed = bucketed.select(col("_id"), col("t"), col("b"),
+        when(col("n") > hotCellLimit, col("s")).otherwise(lit(-1)).as("s"))
+      keyed.withColumnRenamed("_id", "a")
+        .join(keyed.withColumnRenamed("_id", "b_id"), Seq("t", "b", "s"))
+        .where(col("a") < col("b_id")).select(col("a"), col("b_id").as("b"))
+        .dropDuplicates("a", "b").as[(Long, Long)].collect().toSet
+    }
+    val (cool, hot) = (reference(Int.MaxValue), reference(8))
+    assert(hot.nonEmpty && hot.size < cool.size, "the hot split must engage and cut pairs")
+    for ((hotCellLimit, model) <- Seq(Int.MaxValue -> cool, 8 -> hot))
+      assertBothArms(s"hotCellLimit $hotCellLimit", model)(r =>
+        Dedup.lshCandidates(emb, "vec_id", "embedding", bits, tables, seed, hotCellLimit, r))
   }
 
   test("embedding cosine pairs: exact values, norm precompute matches direct") {
