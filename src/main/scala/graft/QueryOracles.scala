@@ -71,8 +71,8 @@ private[graft] trait QueryOracles extends AnyRef {
     * grid centroids ([[QueryFixtures.gridCentroids]] — the literals below
     * are generated from the same Seq). Stages mirror the implementation
     * term for term: per-vector bucket = cosine argmax with lowest-index
-    * ties ([[graft.operators.Similarity.assignBuckets]]'s greatest +
-    * first-match), probed buckets = top-nprobe centroids by cosine to the
+    * ties ([[graft.operators.Similarity.assignBuckets]]'s kernel: first
+    * maximum), probed buckets = top-nprobe centroids by cosine to the
     * query with lower-index ties ([[Similarity.probeBuckets]]), result =
     * exact brute top-k over ONLY the probed buckets' rows
     * ([[Similarity.bruteTopK]]: round 6dp THEN order, id-asc ties). */

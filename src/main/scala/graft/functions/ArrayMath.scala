@@ -5,10 +5,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /** Codegen'd dot product of two numeric array columns (float or double
   * elements), accumulated in double with a strict left-to-right fold — the
@@ -138,6 +138,95 @@ case class MatVec(child: Expression, mat: RotMat) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** C centroids of one dimension, row-major (`flat(b * dim + i)`), plus
+  * the nearest-centroid loop [[NearestCentroid]] runs per row — the
+  * [[PqBooks]] pattern, so planning cost does not grow with C×dim the way
+  * a tree of per-centroid cosine columns does. Scores are bit-identical
+  * to the column form `dot(v, c) / (norm2(v) * norm2(c))` ([[ArrayMath]]):
+  * every dot and norm is the sequential fold of [[DotProduct]], and the
+  * first maximum under Spark's double ordering wins, as `greatest` orders
+  * (NaN greatest; ties to the lowest index). */
+final class CentroidTable private (val c: Int, val dim: Int, val flat: Array[Double])
+    extends Serializable {
+
+  private val norms: Array[Double] = Array.tabulate(c) { b =>
+    var s = 0.0
+    var i = 0
+    while (i < dim) { val x = flat(b * dim + i); s += x * x; i += 1 }
+    math.sqrt(s)
+  }
+  private val zero = norms.indexOf(0.0)
+  require(zero < 0, s"CentroidTable: centroid $zero has zero norm")
+
+  /** Index of the centroid with the greatest cosine to `vec`; refuses a
+    * vector whose length is not `dim` and a zero-norm vector by name. */
+  def nearest(vec: ArrayData, isFloat: Boolean): Int = {
+    val n = vec.numElements()
+    if (n != dim) throw new IllegalArgumentException(
+      s"nearest centroid: vector length $n != centroid dim $dim")
+    val v = Array.tabulate(dim)(i => if (isFloat) vec.getFloat(i).toDouble else vec.getDouble(i))
+    var vv = 0.0
+    var i = 0
+    while (i < dim) { vv += v(i) * v(i); i += 1 }
+    val vn = math.sqrt(vv)
+    var best = Double.NegativeInfinity
+    var bestB = 0
+    var b = 0
+    while (b < c) {
+      var dot = 0.0
+      i = 0
+      while (i < dim) { dot += v(i) * flat(b * dim + i); i += 1 }
+      val den = vn * norms(b)
+      if (den == 0.0) throw new IllegalArgumentException(
+        s"nearest centroid: zero-norm vector (|v| * |c$b| = 0, cosine undefined)")
+      val sim = dot / den
+      if (SQLOrderingUtil.compareDoubles(sim, best) > 0) { best = sim; bestB = b }
+      b += 1
+    }
+    bestB
+  }
+}
+
+object CentroidTable {
+
+  /** Packs a driver-side centroid list, refusing an empty or ragged one. */
+  def apply(centroids: Seq[Seq[Double]]): CentroidTable = {
+    require(centroids.nonEmpty, "CentroidTable: no centroids")
+    val dim = centroids.head.length
+    val bad = centroids.indexWhere(_.length != dim)
+    require(bad < 0,
+      s"CentroidTable: centroid $bad has length ${centroids(bad).length}, centroid 0 has $dim")
+    new CentroidTable(centroids.length, dim, centroids.flatten.toArray)
+  }
+}
+
+/** Nearest-centroid bucket (int) of a numeric array column: one codegen
+  * node calling [[CentroidTable.nearest]]; a null vector gives null. */
+case class NearestCentroid(child: Expression, table: CentroidTable)
+    extends UnaryExpression {
+
+  override def dataType: DataType = IntegerType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "graft_nearest_centroid"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (PqCodecCheck.arrayOk(child)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires array<float|double>, got ${child.dataType.catalogString}")
+
+  override def nullSafeEval(vec: Any): Any =
+    table.nearest(vec.asInstanceOf[ArrayData], PqCodecCheck.isFloat(child))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("centroids", table, classOf[CentroidTable].getName)
+    val f = PqCodecCheck.isFloat(child)
+    nullSafeCodeGen(ctx, ev, vec => s"${ev.value} = $ref.nearest($vec, $f);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 /** Column-API entry points for the vector math expressions. */
 object ArrayMath {
 
@@ -148,6 +237,11 @@ object ArrayMath {
   /** R·v for a literal row-major rotation (array<double> out). */
   def matVec(v: Column, mat: RotMat): Column =
     ColumnShim.column(MatVec(ColumnShim.expression(v), mat))
+
+  /** Nearest-centroid bucket by cosine, ties to the lowest index
+    * ([[CentroidTable]]). */
+  def nearestCentroid(v: Column, centroids: Seq[Seq[Double]]): Column =
+    ColumnShim.column(NearestCentroid(ColumnShim.expression(v), CentroidTable(centroids)))
 
   /** L2 norm. */
   def norm2(v: Column): Column = sqrt(dot(v, v))

@@ -42,20 +42,31 @@ object Banding {
   private[graft] def pairs(
       df: DataFrame, nBands: Int, key: (Column, Int) => Column,
       rowsPerTask: Long): DataFrame = {
-    val spark = df.sparkSession
     // Materialized before the self-join: the two join sides are separate
     // plan instances to Catalyst (mapPartitions closures never
     // canonicalize equal), so an expensive `_sig` subtree — an image
     // decode, an md5 signature aggregate — would otherwise run twice.
     // The sizing aggregate then reads it cheaply.
     val s = df.select(col("_id"), col("_sig")).localCheckpoint()
+    val sizes = s.select(posexplode(array((0 until nBands).map(j => key(col("_sig"), j)): _*))
+        .as(Seq("band", "key")))
+      .groupBy("band", "key").agg(count(lit(1)).as("_df"))
+      .agg(meetMass(col("_df")), coalesce(sum(col("_df")), lit(0L)))
+      .head()
+    join(s, nBands, key, sizes.getLong(0), sizes.getLong(1), rowsPerTask)
+  }
+
+  /** The self-join of [[pairs]] over `(_id, _sig)` rows the caller holds
+    * materialized, sized as [[pairs]] documents from the caller's own
+    * `mass` (the buckets' meet mass, or an upper bound on it) and
+    * `bandedRows`: no checkpoint, no sizing aggregate. */
+  private[graft] def join(
+      s: DataFrame, nBands: Int, key: (Column, Int) => Column,
+      mass: Long, bandedRows: Long, rowsPerTask: Long): DataFrame = {
+    val spark = s.sparkSession
     val banded = s.select(col("_id"), col("_sig"),
       posexplode(array((0 until nBands).map(j => key(col("_sig"), j)): _*))
         .as(Seq("band", "key")))
-    val sizes = banded.groupBy("band", "key").agg(count(lit(1)).as("_df"))
-      .agg(meetMass(col("_df")), coalesce(sum(col("_df")), lit(0L)))
-      .head()
-    val (mass, bandedRows) = (sizes.getLong(0), sizes.getLong(1))
     val advisory = spark.conf
       .getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes")
       .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)

@@ -1182,12 +1182,11 @@ object Dedup {
       bitsPerTable: Int = 8, tables: Int = 4, seed: Long = 42L,
       hotCellLimit: Int = 4096, broadcastPairLimit: Int = 1 << 20): DataFrame = {
     import graft.functions.ArrayMath
-    // lshCandidates returns its pair list ALREADY localCheckpointed — a
-    // second checkpoint here would materialize the candidates twice (r8
-    // ADVICE); the limit-probe below reads the one materialization
-    val cands = lshCandidates(
-      df, idCol, vecCol, bitsPerTable, tables, seed, hotCellLimit)
-    hintIfSmall(cands, broadcastPairLimit)
+    // lshCandidates returns its pair list ALREADY localCheckpointed and
+    // broadcast-hinted when small — a second checkpoint here would
+    // materialize the candidates twice
+    lshCandidates(df, idCol, vecCol, bitsPerTable, tables, seed, hotCellLimit,
+        broadcastPairLimit = broadcastPairLimit)
       .join(df.select(col(idCol).cast("long").as("a"), col(vecCol).as("_va")), Seq("a"))
       .join(df.select(col(idCol).cast("long").as("b"), col(vecCol).as("_vb")), Seq("b"))
       .withColumn("cosine", ArrayMath.cosine(col("_va"), col("_vb")))
@@ -1196,13 +1195,15 @@ object Dedup {
   }
 
   /** Candidate pairs (a, b) for [[embeddingCosinePairsLsh]]: the pairs
-    * [[Banding.pairs]] finds sharing a (table, cell) key — each pair once,
-    * vectors never shuffled — returned localCheckpointed. Exposed so the
-    * spec can measure hot-cell candidate reduction directly. */
+    * [[Banding.join]] finds sharing a (table, cell) key — each pair once,
+    * vectors never shuffled — returned localCheckpointed, and hinted for
+    * broadcast when at most `broadcastPairLimit`. Exposed so the spec can
+    * measure hot-cell candidate reduction directly. */
   private[graft] def lshCandidates(
       df: DataFrame, idCol: String, vecCol: String,
       bitsPerTable: Int, tables: Int, seed: Long,
-      hotCellLimit: Int, rowsPerTask: Long = Banding.RowsPerTask): DataFrame = {
+      hotCellLimit: Int, rowsPerTask: Long = Banding.RowsPerTask,
+      broadcastPairLimit: Int = 1 << 20): DataFrame = {
     // Similarity.lshTopK's bounds: lshBucket sets bit j as the Int `1 << j`,
     // whose shift distance Java masks to 5 bits, so from 33 bits on two
     // hyperplanes would set the same bit and distinct buckets merge
@@ -1222,29 +1223,34 @@ object Dedup {
     val subArr = array(subPlanes.map(p =>
       Similarity.lshBucket(col(vecCol), p).cast("long")): _*)
     // ONE pass computes every table's buckets; vectors are dropped here
-    // and never enter a shuffle again
+    // and never enter a shuffle again. A checkpoint, not a cache: each plan
+    // reading a cached relation pays a cache-stage job
     val slim = graft.core.Par.fanOut(df.select(col(idCol), col(vecCol)))
       .select(col(idCol).cast("long").as("_id"),
         baseArr.as("_bb"), subArr.as("_sb"))
-      .cache()
-    val hotFrame = slim
+      .localCheckpoint()
+    val cells = slim
       .select(posexplode(col("_bb")).as(Seq("_t", "_b")))
       .groupBy("_t", "_b").agg(count(lit(1)).as("_n"))
-      .where(col("_n") > hotCellLimit)
-      .select(col("_t"), col("_b"))
+    // ONE aggregate over the cells counts the hot ones and sizes the join:
+    // every refined key is a base cell or a sub-split of one, so the base
+    // cells' meet mass bounds the keys' (and the candidates') from above
+    val stats = cells.agg(meetMass(col("_n")), coalesce(sum(col("_n")), lit(0L)),
+      count_if(col("_n") > hotCellLimit)).head()
+    val (massBound, bandedRows, hotCells) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
+    val hotFrame = cells.where(col("_n") > hotCellLimit).select(col("_t"), col("_b"))
     // there are at most N·tables/hotCellLimit hot cells by arithmetic —
-    // one bounded collect both detects hotness and (in the overwhelmingly
-    // common small case) hands the sets to a codegen'd InSet probe with
-    // ZERO extra joins; a pathological corpus past the collect limit
-    // degrades to broadcast-join flagging with identical output
+    // in the common case none, and no further job; a few are collected
+    // and handed to a codegen'd InSet probe with ZERO extra joins; a
+    // pathological corpus past the collect limit degrades to
+    // broadcast-join flagging with identical output
     val hotCollectLimit = 1 << 14
-    val hotRows = hotFrame.limit(hotCollectLimit + 1).collect()
     val flagged =
-      if (hotRows.isEmpty)
+      if (hotCells == 0L)
         slim.withColumn("_hot",
           array((0 until tables).map(_ => lit(false)): _*))
-      else if (hotRows.length <= hotCollectLimit) {
-        val byT = hotRows.groupBy(_.getInt(0))
+      else if (hotCells <= hotCollectLimit) {
+        val byT = hotFrame.collect().groupBy(_.getInt(0))
           .map { case (t, rs) => t -> rs.map(_.getLong(1)) }
         slim.withColumn("_hot",
           array((0 until tables).map { t =>
@@ -1274,11 +1280,12 @@ object Dedup {
       col("_bb")(t) + when(col("_hot")(t),
         shiftleft(col("_sb")(t) + 1L, bitsPerTable)).otherwise(0L)
     }: _*).as("_sig"))
-    val out = Banding.pairs(keyed, tables, (s, t) => s(t), rowsPerTask)
+    val out = Banding.join(keyed, tables, (s, t) => s(t), massBound, bandedRows,
+        rowsPerTask)
       .select(col("a"), col("b"))
       .localCheckpoint()
-    slim.unpersist()
-    out
+    // within the limit by the mass bound: no limit-probe needed
+    if (massBound <= broadcastPairLimit) broadcast(out) else hintIfSmall(out, broadcastPairLimit)
   }
 
   /** The end-to-end pipeline verb: `df` minus every non-canonical

@@ -41,8 +41,6 @@ object ProductQuantizer {
     def toBooks: PqBooks = ProductQuantizer.flatten(m, dsub, books)
   }
 
-  private def litVec(v: Seq[Double]): Column = array(v.map(lit): _*)
-
   /** Pack nested codebooks into the [[PqBooks]] layout
     * (`flat((j*k+c)*dsub + i) = books(j)(c)(i)`). */
   private def flatten(m: Int, dsub: Int, books: Seq[Seq[Seq[Double]]]): PqBooks = {
@@ -127,12 +125,11 @@ object ProductQuantizer {
     * quantizes the (much smaller) within-bucket offsets instead of
     * absolute positions — on clustered data plain PQ spends its codes
     * re-stating the cluster and collapses within it, exactly where the
-    * search happens. Pure projection (the C×dim centroid table is a
+    * search happens. Pure projection (the C×dim centroid table is one
     * literal), zero shuffles. */
-  def residualCol(vecCol: Column, bucketCol: Column, centroids: Seq[Seq[Double]]): Column = {
-    val cents = array(centroids.map(litVec): _*)
-    zip_with(vecCol, element_at(cents, bucketCol + 1), (a, b) => a.cast("double") - b)
-  }
+  def residualCol(vecCol: Column, bucketCol: Column, centroids: Seq[Seq[Double]]): Column =
+    zip_with(vecCol, element_at(typedLit(centroids), bucketCol + 1),
+      (a, b) => a.cast("double") - b)
 
   /** Encode the corpus: `idCol`, `pq_code` (array<tinyint>, one cell per
     * subspace) and `pq_norm` (float L2 norm, for cosine at query time) —
@@ -179,15 +176,15 @@ object ProductQuantizer {
       query: Seq[Double], k: Int, excludeId: Option[Long] = None,
       dotOffset: Column = lit(0.0)): DataFrame = {
     val qNorm = math.sqrt(query.map(x => x * x).sum)
-    val luts = (0 until model.m).map { j =>
+    val luts = typedLit((0 until model.m).map { j =>
       val qj = query.slice(j * model.dsub, (j + 1) * model.dsub)
-      litVec(model.books(j).map(c => c.zip(qj).map { case (a, b) => a * b }.sum))
-    }
+      model.books(j).map(c => c.zip(qj).map { case (a, b) => a * b }.sum)
+    })
     // tinyint codes are SIGNED on the wire: cells >= 128 (k up to 256)
     // round-trip as negative bytes, so mask back to unsigned before the
     // 1-based lookup — element_at(arr, -n) would silently read from the END
     val dotApprox = (0 until model.m).map(j =>
-      element_at(luts(j),
+      element_at(luts.getItem(j),
         col("pq_code").getItem(j).cast("int").bitwiseAND(lit(255)) + 1))
       .reduce(_ + _) + dotOffset
     val base = excludeId.map(i => encoded.where(col(idCol) =!= i)).getOrElse(encoded)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.ArrayMath
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,8 +18,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: centroid training is [[Similarity.kMeans]] (one
   * map-side-combining groupBy per round, C×dim driver state); assignment is
-  * a shuffle-free codegen argmax over literal-broadcast centroids; candidate
-  * generation is a self-equi-join ON THE CLUSTER ID — one shuffle of
+  * a shuffle-free codegen argmax over a reference-held
+  * [[graft.functions.CentroidTable]] (the [[Similarity.assignBuckets]]
+  * kernel, appended as a `bucket` column that keeps every input column);
+  * candidate generation is a self-equi-join ON THE CLUSTER ID — one shuffle of
   * (id, vec, bucket) rows, never all-pairs. Verification is one codegen'd
   * cosine per within-cluster pair, so precision is exact; recall misses only
   * pairs split across cluster boundaries (measured in the spec, and the
@@ -29,32 +32,13 @@ import org.apache.spark.sql.functions._
   */
 object SemDedup {
 
-  /** Appends a `bucket` column (nearest-centroid cosine argmax, ties to the
-    * lowest index) while KEEPING every existing column — unlike
-    * [[Similarity.assignBuckets]], which projects down to (id, vec, bucket).
-    * Per-centroid cosines materialize as temp columns so each is computed
-    * once, then drop. */
-  private def withBucket(
-      df: DataFrame, vecCol: String, centroids: Seq[Seq[Double]]): DataFrame = {
-    val sims = centroids.zipWithIndex.map { case (ct, i) =>
-      Similarity.cosineToQuery(col(vecCol), ct).as(s"_c$i")
-    }
-    val best = greatest(centroids.indices.map(i => col(s"_c$i")): _*)
-    val bucket = coalesce(centroids.indices.map(i =>
-      when(col(s"_c$i") === best, lit(i))): _*)
-    df.select(col("*") +: sims: _*)
-      .withColumn("bucket", bucket)
-      .drop(centroids.indices.map(i => s"_c$i"): _*)
-  }
-
   /** Within-cluster cosine near-dup pairs (cosine >= tau), given a trained
     * centroid list. Returns (a, b, bucket, cosine) with a < b. */
   def pairs(
       df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]], tau: Double): DataFrame = {
-    import graft.functions.ArrayMath
-    val assigned = withBucket(
-      graft.core.Par.fanOut(df.select(col(idCol), col(vecCol))), vecCol, centroids)
+    val assigned = graft.core.Par.fanOut(df.select(col(idCol), col(vecCol)))
+      .withColumn("bucket", ArrayMath.nearestCentroid(col(vecCol), centroids))
       .withColumn("_n", ArrayMath.norm2(col(vecCol)))
     val x = assigned.select(
       col(idCol).as("a"), col(vecCol).as("_va"), col("_n").as("_na"), col("bucket"))
@@ -95,7 +79,7 @@ object SemDedup {
     val losers = Dedup.connectedComponents(p, "a", "b")
       .where(col("id") =!= col("comp"))
       .select(col("id").as("_loser"))
-    withBucket(df, vecCol, centroids)
+    df.withColumn("bucket", ArrayMath.nearestCentroid(col(vecCol), centroids))
       .join(broadcast(losers), col(idCol).cast("long") === col("_loser"), "left_anti")
   }
 }

@@ -1,25 +1,25 @@
 package graft.operators
 
+import graft.functions.ArrayMath
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
   * Scale design (SURVEY §4): brute force is a single O(N) scan with a
-  * codegen'd dot product against the (tiny, literal-broadcast) query vector,
+  * codegen'd dot product against the (tiny, single-literal) query vector,
   * finished by TakeOrdered top-k — no shuffle of the corpus. IVF buckets the
-  * corpus by nearest centroid (broadcast centroid list, argmax in
-  * expressions); a query then scans only the `nprobe` closest buckets. On a
-  * real cluster the assignment is written bucket-partitioned so a probe
-  * prunes to nprobe partitions of ~N/C vectors.
+  * corpus by nearest centroid: one codegen node over a reference-held
+  * [[graft.functions.CentroidTable]], so planning cost does not grow with
+  * C; a query then scans only the `nprobe` closest buckets. On a real
+  * cluster the assignment is written bucket-partitioned so a probe prunes
+  * to nprobe partitions of ~N/C vectors.
   */
 object Similarity {
 
-  private def litVec(v: Seq[Double]): Column = array(v.map(lit): _*)
-
   /** Cosine between a vector column and a literal query vector. */
   def cosineToQuery(vecCol: Column, query: Seq[Double]): Column =
-    Dedup.cosine(vecCol, litVec(query))
+    Dedup.cosine(vecCol, typedLit(query))
 
   /** Exact top-k by cosine against `query` (excluding `excludeId` if set). */
   def bruteTopK(
@@ -42,7 +42,6 @@ object Similarity {
   def knnJoin(
       corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String, k: Int): DataFrame = {
-    import graft.functions.ArrayMath
     val c = corpus.select(col(idCol), col(vecCol).as("_cv"))
       .withColumn("_cn", ArrayMath.norm2(col("_cv")))
     val q = queries.select(col(qIdCol).as("query_id"), col(qVecCol).as("_qv"))
@@ -56,69 +55,58 @@ object Similarity {
       .select(col("query_id"), col(idCol), round(col("cosine"), 6).as("cosine"), col("rank"))
   }
 
-  /** Assigns each vector to its nearest centroid (cosine argmax; ties take
-    * the lowest centroid index). Centroids are a driver-side list — they are
-    * tiny (C × dim) and become literal expressions, i.e. broadcast for free. */
+  /** Assigns each vector to its nearest centroid: cosine argmax, ties to
+    * the lowest centroid index, a null vector to a null bucket. One
+    * projection through [[graft.functions.CentroidTable]], which refuses
+    * an empty or ragged centroid list, a zero-norm centroid or vector and a
+    * vector whose length is not the centroid dim, each by name. Output:
+    * (id, vec, bucket). */
   def assignBuckets(
       df: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]]): DataFrame = {
-    val sims = centroids.zipWithIndex.map { case (c, i) =>
-      cosineToQuery(col(vecCol), c).as(s"_c$i")
-    }
-    val best = greatest(centroids.indices.map(i => col(s"_c$i")): _*)
-    val bucket = coalesce(centroids.indices.map(i =>
-      when(col(s"_c$i") === best, lit(i))): _*)
-    df.select((col(idCol) +: col(vecCol).as("_vec") +: sims): _*)
-      .withColumn("bucket", bucket)
-      .select(col(idCol), col("_vec").as(vecCol), col("bucket"))
-  }
+      centroids: Seq[Seq[Double]]): DataFrame =
+    df.select(col(idCol), col(vecCol).as(vecCol),
+      ArrayMath.nearestCentroid(col(vecCol), centroids).as("bucket"))
 
   /** Deterministic k-means-lite (Lloyd) centroid training for IVF.
     *
     * Init is the first C vectors by id (deterministic, no RNG); each round
-    * assigns every vector to its nearest centroid (codegen cosine argmax,
-    * broadcast centroids) and recomputes centroids as per-bucket means —
-    * ONE groupBy shuffle per round carrying C×dim doubles per partition
-    * after map-side partial aggregation. Rounds are few and fixed (the
-    * centroids only gate recall, not correctness). Empty buckets keep
-    * their previous centroid. */
+    * assigns every vector through [[assignBuckets]] and recomputes
+    * centroids as per-bucket means — ONE groupBy shuffle per round carrying
+    * C×dim doubles per partition after map-side partial aggregation. The
+    * assignment is one codegen node at any C, so this one loop serves
+    * every C. Rounds are few and fixed (the centroids only gate recall, not
+    * correctness). Empty buckets keep their previous centroid. */
   def kMeans(
       df: DataFrame, idCol: String, vecCol: String,
       c: Int, iters: Int): Seq[Seq[Double]] = {
+    require(c > 0, s"kMeans: c must be > 0, got $c")
     // Lloyd re-scans the corpus every round (dim probe + init + one agg per
     // iteration): cache the two columns it reads for the loop's lifetime —
     // the classic iterative-ML persist — and release before returning.
     val vecs = df.select(col(idCol), col(vecCol)).cache()
-    // the columnar round builds C cosine columns and dim sum-aggregates —
-    // fine at IVF-coarse shapes, codegen-hostile once C reaches the
-    // hundreds; the treeAggregate path has no per-centroid expressions
-    try
-      if (c > 64) kMeansTreeCached(vecs, idCol, vecCol, c, iters)
-      else kMeansCached(vecs, idCol, vecCol, c, iters)
-    finally { vecs.unpersist(); () }
-  }
-
-  /** Lloyd rounds via RDD `treeAggregate` — the large-C path ([[kMeans]]
-    * dispatches here above C = 64, or call directly). Semantics match the
-    * columnar rounds: first-C-by-id init, cosine argmax with first-max
-    * (lowest index) ties — NaN ordered greatest, as Spark's `greatest`
-    * orders doubles — and empty buckets keep their previous centroid.
-    *
-    * Per partition ONE flat (c×dim sums, c counts) accumulator is filled
-    * in a tight JVM loop (no per-centroid Columns, no codegen blowup);
-    * partials combine in a depth-2 tree, so the driver merges
-    * O(√partitions) buffers instead of every partition's — the classic
-    * treeAggregate bargain for C in the thousands. Float caveat: combine
-    * order is scheduler-dependent, so centroid sums carry the usual
-    * last-ulp addition-order jitter (the columnar path's shuffled partial
-    * aggregation has the same property — neither is bit-pinned).
-    */
-  def kMeansTree(
-      df: DataFrame, idCol: String, vecCol: String,
-      c: Int, iters: Int, depth: Int = 2): Seq[Seq[Double]] = {
-    val vecs = df.select(col(idCol), col(vecCol)).cache()
-    try kMeansTreeCached(vecs, idCol, vecCol, c, iters, depth)
-    finally { vecs.unpersist(); () }
+    try {
+      val dim = vecDim(vecs, vecCol, "kMeans")
+      var centroids: Seq[Seq[Double]] = vecs.orderBy(col(idCol)).limit(c)
+        .select(col(vecCol)).collect()
+        .map(_.getSeq[Any](0).map(_.asInstanceOf[Number].doubleValue()).toSeq).toSeq
+      (1 to iters).foreach { _ =>
+        val sums = assignBuckets(vecs, idCol, vecCol, centroids)
+          .select(col("bucket"), transform(col(vecCol), x => x.cast("double")).as("_v"))
+          .groupBy("bucket")
+          .agg(
+            count(lit(1)).as("_n"),
+            array((0 until dim).map(i => sum(col("_v").getItem(i))): _*).as("_s"))
+          .collect()
+        val next = centroids.toArray
+        sums.foreach { r =>
+          val b = r.getInt(0)
+          val n = r.getLong(1).toDouble
+          next(b) = r.getSeq[Double](2).map(_ / n).toSeq
+        }
+        centroids = next.toSeq
+      }
+      centroids
+    } finally { vecs.unpersist(); () }
   }
 
   /** Vector dimensionality from the first row — a loud, named refusal on
@@ -129,92 +117,6 @@ object Similarity {
     val row = df.select(size(col(vecCol))).limit(1).collect()
     require(row.nonEmpty, s"$who: input has no rows - cannot infer vector dimension")
     row.head.getInt(0)
-  }
-
-  private def kMeansTreeCached(
-      df: DataFrame, idCol: String, vecCol: String,
-      c: Int, iters: Int, depth: Int = 2): Seq[Seq[Double]] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val dim = vecDim(df, vecCol, "kMeans")
-    var centroids: Array[Array[Double]] = df.orderBy(col(idCol)).limit(c)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    val data = df.select(col(vecCol)).as[Array[Float]].rdd
-    (1 to iters).foreach { _ =>
-      val bc = spark.sparkContext.broadcast(centroids)
-      val (sums, counts) = data.treeAggregate(
-        (new Array[Double](c * dim), new Array[Long](c)))(
-        seqOp = { case ((s, n), v) =>
-          val cs = bc.value
-          // argmax of dot/(|v||c|): same fold order as the codegen cosine
-          var best = Double.NegativeInfinity
-          var bestI = 0
-          var vn = 0.0
-          var i = 0
-          while (i < dim) { vn += v(i).toDouble * v(i).toDouble; i += 1 }
-          val vnorm = math.sqrt(vn)
-          var b = 0
-          while (b < cs.length) {
-            val cv = cs(b)
-            var dot = 0.0
-            var cn = 0.0
-            i = 0
-            while (i < dim) {
-              dot += v(i).toDouble * cv(i); cn += cv(i) * cv(i); i += 1
-            }
-            val sim = dot / (vnorm * math.sqrt(cn))
-            // Double.compare orders NaN greatest — Spark greatest() parity
-            if (java.lang.Double.compare(sim, best) > 0) { best = sim; bestI = b }
-            b += 1
-          }
-          i = 0
-          while (i < dim) { s(bestI * dim + i) += v(i).toDouble; i += 1 }
-          n(bestI) += 1
-          (s, n)
-        },
-        combOp = { case ((s1, n1), (s2, n2)) =>
-          var i = 0
-          while (i < s1.length) { s1(i) += s2(i); i += 1 }
-          i = 0
-          while (i < n1.length) { n1(i) += n2(i); i += 1 }
-          (s1, n1)
-        },
-        depth = depth)
-      bc.destroy()
-      centroids = centroids.zipWithIndex.map { case (prev, b) =>
-        if (counts(b) == 0L) prev
-        else Array.tabulate(dim)(i => sums(b * dim + i) / counts(b))
-      }
-    }
-    centroids.map(_.toSeq).toSeq
-  }
-
-  private def kMeansCached(
-      df: DataFrame, idCol: String, vecCol: String,
-      c: Int, iters: Int): Seq[Seq[Double]] = {
-    val dim = vecDim(df, vecCol, "kMeans")
-    var centroids: Seq[Seq[Double]] = df.orderBy(col(idCol)).limit(c)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toSeq).toSeq
-    (1 to iters).foreach { _ =>
-      val assigned = assignBuckets(df, idCol, vecCol, centroids)
-      val sums = assigned
-        .select(col("bucket"), transform(col(vecCol), x => x.cast("double")).as("_v"))
-        .groupBy("bucket")
-        .agg(
-          count(lit(1)).as("_n"),
-          array((0 until dim).map(i => sum(col("_v").getItem(i))): _*).as("_s"))
-        .collect()
-      val next = centroids.toArray
-      sums.foreach { r =>
-        val b = r.getInt(0)
-        val n = r.getLong(1).toDouble
-        next(b) = r.getSeq[Double](2).map(_ / n).toSeq
-      }
-      centroids = next.toSeq
-    }
-    centroids
   }
 
   /** The `nprobe` bucket indices whose centroids are cosine-closest to the
@@ -262,7 +164,7 @@ object Similarity {
     * no shuffle. */
   def lshBucket(vecCol: Column, planes: Seq[Seq[Double]]): Column =
     planes.zipWithIndex.map { case (p, j) =>
-      when(graft.functions.ArrayMath.dot(vecCol, litVec(p)) >= 0, lit(1 << j)).otherwise(lit(0))
+      when(ArrayMath.dot(vecCol, typedLit(p)) >= 0, lit(1 << j)).otherwise(lit(0))
     }.reduce(_ + _)
 
   /** Per-table multiprobe bucket sequence (Lv et al., "Multi-Probe LSH",

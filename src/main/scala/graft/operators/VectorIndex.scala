@@ -34,10 +34,11 @@ object VectorIndex {
 
   // ------------------------------------------------------------------ IVF
 
-  /** Builds the IVF index: one assignment pass (broadcast centroids,
-    * codegen argmax) + one write repartitioned BY BUCKET, so each bucket
-    * directory is one task's single file — parallel across buckets and
-    * no small-file spray, whatever the input split count. */
+  /** Builds the IVF index: one assignment pass ([[Similarity.assignBuckets]]:
+    * one codegen argmax over a reference-held centroid table) + one write
+    * repartitioned BY BUCKET, so each bucket directory is one task's
+    * single file — parallel across buckets and no small-file spray,
+    * whatever the input split count. */
   def writeIvf(
       df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]], path: String): Unit = {
@@ -333,7 +334,7 @@ object VectorIndex {
     val offset =
       if (residual) {
         val qDotC = centroids.map(c => c.zip(query).map { case (a, b) => a * b }.sum)
-        element_at(array(qDotC.map(lit): _*), col("bucket").cast("int") + 1)
+        element_at(typedLit(qDotC), col("bucket").cast("int") + 1)
       } else lit(0.0)
     val short = ProductQuantizer.adcTopK(
       pruned.select(col(idCol), col("pq_code"), col("pq_norm"), col("bucket")),

@@ -631,6 +631,19 @@ class DedupSpec extends AnyFunSuite {
     assert(simhashJobs <= 5, s"hammingPairs ran $simhashJobs jobs")
   }
 
+  test("embedding LSH sizes its banded join from its cell aggregate: jobs per call") {
+    val emb = graft.core.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val (_, jobs, _) = traced(
+      Dedup.embeddingCosinePairsLsh(emb, "vec_id", "embedding", tau = 0.9))
+    // the dim probe, the bucketed-row checkpoint (its AQE map stage, then
+    // the result), the one cell aggregate (two map stages, the result) and
+    // the candidate checkpoint (map stage, result); the cosine join stays
+    // lazy. A second sizing aggregate, a checkpoint of the keyed rows or a
+    // broadcast limit-probe the pair bound already answers would each add
+    // jobs: with all three the call ran 13.
+    assert(jobs <= 8, s"embeddingCosinePairsLsh ran $jobs jobs")
+  }
+
   test("candidatePairs/nearDupPairs refuse a non-positive band shape by name") {
     val sigs = Seq((1L, Seq(1L, 2L)), (2L, Seq(1L, 2L))).toDF("_id", "sig")
     for ((bands, rows) <- Seq(0 -> 2, 2 -> 0, -1 -> 2)) {

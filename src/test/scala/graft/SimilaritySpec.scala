@@ -1,12 +1,92 @@
 package graft
 
-import graft.operators.Similarity
+import graft.functions.CentroidTable
+import graft.operators.{Dedup, Similarity}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class SimilaritySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** The bucket column of the column form `assignBuckets` had before the
+    * centroid kernel, kept as a reference model: one cosine column per
+    * literal centroid, their `greatest`, and the first index whose cosine
+    * equals it. */
+  private def columnFormBuckets(
+      df: DataFrame, vecCol: String, centroids: Seq[Seq[Double]]): DataFrame = {
+    val sims = centroids.zipWithIndex.map { case (ct, i) =>
+      Dedup.cosine(col(vecCol), array(ct.map(lit): _*)).as(s"_c$i")
+    }
+    val best = greatest(centroids.indices.map(i => col(s"_c$i")): _*)
+    df.select(col("*") +: sims: _*)
+      .withColumn("bucket", coalesce(centroids.indices.map(i =>
+        when(col(s"_c$i") === best, lit(i))): _*))
+  }
+
+  /** The treeAggregate Lloyd loop `kMeans` ran above C = 64 before the
+    * centroid kernel, kept as a reference model: first-C-by-id init, a JVM
+    * cosine argmax over broadcast centroids with first-max ties (NaN
+    * greatest), per-bucket means, empty buckets keep their centroid. */
+  private def treeKMeans(
+      df: DataFrame, idCol: String, vecCol: String, c: Int, iters: Int): Seq[Seq[Double]] = {
+    val dim = df.select(size(col(vecCol))).head().getInt(0)
+    var centroids: Array[Array[Double]] = df.orderBy(col(idCol)).limit(c)
+      .select(col(vecCol)).collect()
+      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+    val data = df.select(col(vecCol)).as[Array[Float]].rdd
+    (1 to iters).foreach { _ =>
+      val bc = spark.sparkContext.broadcast(centroids)
+      val (sums, counts) = data.treeAggregate(
+        (new Array[Double](c * dim), new Array[Long](c)))(
+        seqOp = { case ((s, n), v) =>
+          val cs = bc.value
+          var best = Double.NegativeInfinity
+          var bestI = 0
+          var vn = 0.0
+          var i = 0
+          while (i < dim) { vn += v(i).toDouble * v(i).toDouble; i += 1 }
+          val vnorm = math.sqrt(vn)
+          var b = 0
+          while (b < cs.length) {
+            val cv = cs(b)
+            var dot = 0.0
+            var cn = 0.0
+            i = 0
+            while (i < dim) {
+              dot += v(i).toDouble * cv(i); cn += cv(i) * cv(i); i += 1
+            }
+            val sim = dot / (vnorm * math.sqrt(cn))
+            if (java.lang.Double.compare(sim, best) > 0) { best = sim; bestI = b }
+            b += 1
+          }
+          i = 0
+          while (i < dim) { s(bestI * dim + i) += v(i).toDouble; i += 1 }
+          n(bestI) += 1
+          (s, n)
+        },
+        combOp = { case ((s1, n1), (s2, n2)) =>
+          var i = 0
+          while (i < s1.length) { s1(i) += s2(i); i += 1 }
+          i = 0
+          while (i < n1.length) { n1(i) += n2(i); i += 1 }
+          (s1, n1)
+        },
+        depth = 2)
+      bc.destroy()
+      centroids = centroids.zipWithIndex.map { case (prev, b) =>
+        if (counts(b) == 0L) prev
+        else Array.tabulate(dim)(i => sums(b * dim + i) / counts(b))
+      }
+    }
+    centroids.map(_.toSeq).toSeq
+  }
+
+  /** Whether `e` or any of its causes carries `text` in its message. */
+  private def named(e: Throwable, text: String): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains(text))
 
   test("bruteTopK orders by cosine desc with id tiebreak and excludes self") {
     val vecs = Seq(
@@ -49,17 +129,103 @@ class SimilaritySpec extends AnyFunSuite {
   test("kMeansTree: matches the columnar rounds; large-C dispatch works") {
     val dir = "/root/testdata/sf0.001"
     val emb = graft.core.Tables.load(spark, dir, "embeddings")
-    val columnar = Similarity.kMeans(emb, "vec_id", "embedding", c = 8, iters = 3)
-    val tree = Similarity.kMeansTree(emb, "vec_id", "embedding", c = 8, iters = 3)
-    assert(tree.length == 8 && tree.forall(_.length == 64))
-    // same assignments + means modulo combine-order float jitter
-    val maxDiff = columnar.zip(tree)
-      .flatMap { case (a, b) => a.zip(b).map { case (x, y) => math.abs(x - y) } }
-      .max
-    assert(maxDiff < 1e-9, s"centroid drift $maxDiff")
-    // c > 64 routes kMeans through the tree path and still converges
-    val big = Similarity.kMeans(emb, "vec_id", "embedding", c = 70, iters = 1)
-    assert(big.length == 70 && big.forall(_.length == 64))
+    // the one Lloyd loop against the deleted tree loop, at a C the
+    // columnar rounds always served and one the tree served above C = 64
+    for ((c, iters) <- Seq(8 -> 3, 70 -> 1)) {
+      val columnar = Similarity.kMeans(emb, "vec_id", "embedding", c, iters)
+      val tree = treeKMeans(emb, "vec_id", "embedding", c, iters)
+      assert(columnar.length == c && columnar.forall(_.length == 64))
+      // same assignments + means modulo combine-order float jitter
+      val maxDiff = columnar.zip(tree)
+        .flatMap { case (a, b) => a.zip(b).map { case (x, y) => math.abs(x - y) } }
+        .max
+      assert(maxDiff < 1e-9, s"c = $c: centroid drift $maxDiff")
+    }
+  }
+
+  test("centroid kernel equals the greatest/coalesce column form: ties, NaN, nulls, float and double") {
+    val dim = 8
+    val rnd = new java.util.Random(7L)
+    def gauss(): Seq[Double] = Seq.fill(dim)(rnd.nextGaussian())
+    val axis = (j: Int) => Seq.tabulate(dim)(i => if (i == j) 1.0 else 0.0)
+    val randomVecs = Seq.fill(400)(gauss())
+    for (c <- Seq(2, 16, 70)) {
+      // c0, c1 are axes (a vector on their diagonal ties exactly, and no
+      // other centroid reaches into their plane); the last centroid
+      // repeats c0, so every vector nearest c0 ties again
+      val centroids =
+        if (c == 2) Seq(axis(0), axis(1))
+        else Seq(axis(0), axis(1)) ++
+          Seq.fill(c - 3)(Seq(0.0, 0.0) ++ gauss().drop(2)) :+ axis(0)
+      val special: Seq[Option[Seq[Double]]] = Seq(
+        Some(Seq(1.0, 1.0) ++ Seq.fill(dim - 2)(0.0)),
+        Some(Seq(3.0, 3.0) ++ Seq.fill(dim - 2)(0.0)),
+        Some(Double.NaN +: Seq.fill(dim - 1)(1.0)),
+        Some(Seq.fill(dim)(Double.NaN)),
+        None) ++ centroids.map(Some(_))
+      // bisectors of random centroid pairs: the two cosines agree to the
+      // last few ulps, so the winner depends on the exact fold order
+      def unit(v: Seq[Double]) = { val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n) }
+      val bisectors = if (c == 2) Nil else Seq.fill(200) {
+        val (i, j) = (2 + rnd.nextInt(c - 3), 2 + rnd.nextInt(c - 3))
+        Some(unit(centroids(i)).zip(unit(centroids(j))).map { case (x, y) => x + y })
+      }
+      val vecs = (randomVecs.map(Some(_)) ++ special ++ bisectors).zipWithIndex
+        .map { case (v, i) => (i.toLong, v.map(_.toArray)) }
+        .toDF("vec_id", "embedding")
+      for (v <- Seq(col("embedding"), col("embedding").cast("array<float>"))) {
+        val df = vecs.select(col("vec_id"), v.as("embedding"))
+        val kernel = Similarity.assignBuckets(df, "vec_id", "embedding", centroids)
+          .select("vec_id", "bucket").as[(Long, Option[Int])].collect().toMap
+        val model = columnFormBuckets(df, "embedding", centroids)
+          .select("vec_id", "bucket").as[(Long, Option[Int])].collect().toMap
+        val wrong = model.keys.filter(id => kernel.get(id) != Some(model(id)))
+        assert(kernel.size == model.size, s"c = $c, $v: row counts differ")
+        assert(wrong.isEmpty, s"c = $c, $v: ${wrong.size} buckets differ, e.g. ids ${wrong.take(3)}")
+        val diag = randomVecs.length.toLong
+        assert(kernel(diag) == Some(0) && kernel(diag + 1) == Some(0),
+          s"c = $c: a diagonal tie goes to the lowest index")
+        assert(kernel(diag + 2) == Some(0) && kernel(diag + 3) == Some(0),
+          s"c = $c: a NaN score counts as greatest, the first one wins")
+        assert(kernel(diag + 4).isEmpty, s"c = $c: a null vector gets a null bucket")
+        if (c > 2)
+          assert(kernel(diag + 5 + c - 1) == Some(0), s"c = $c: a repeated centroid ties low")
+      }
+    }
+  }
+
+  test("centroid kernel refuses bad shapes by name; C = 1 assigns bucket 0") {
+    val vecs = Seq((1L, Array(1.0f, 0.5f)), (2L, Array(-1.0f, 2.0f))).toDF("vec_id", "embedding")
+    val one = Similarity.assignBuckets(vecs, "vec_id", "embedding", Seq(Seq(0.3, 0.7)))
+      .select("bucket").as[Int].collect()
+    assert(one.toSeq == Seq(0, 0))
+    val k1 = Similarity.kMeans(vecs, "vec_id", "embedding", c = 1, iters = 2)
+    assert(k1.length == 1 && k1.head == Seq(0.0, 1.25))
+    val asDouble = vecs.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+    assert(Similarity.kMeans(asDouble, "vec_id", "embedding", c = 1, iters = 2) == k1)
+    for (c <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](
+        Similarity.kMeans(vecs, "vec_id", "embedding", c, iters = 1))
+      assert(e.getMessage.contains("kMeans: c must be > 0"), e.getMessage)
+    }
+    for ((cents, text) <- Seq(
+        Seq.empty[Seq[Double]] -> "CentroidTable: no centroids",
+        Seq(Seq(1.0, 0.0), Seq(0.0, 0.0)) -> "CentroidTable: centroid 1 has zero norm",
+        Seq(Seq(1.0, 0.0), Seq(0.0, 1.0, 0.0)) -> "CentroidTable: centroid 1 has length 3")) {
+      val e = intercept[IllegalArgumentException](CentroidTable(cents))
+      assert(e.getMessage.contains(text), e.getMessage)
+    }
+    val cents = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))
+    for ((v, text) <- Seq(
+        Array(0.0f, 0.0f) -> "nearest centroid: zero-norm vector",
+        Array(1.0f, 0.0f, 0.0f) -> "nearest centroid: vector length 3 != centroid dim 2",
+        Array(1.0f) -> "nearest centroid: vector length 1 != centroid dim 2")) {
+      val df = Seq((1L, Array(1.0f, 0.0f)), (2L, v)).toDF("vec_id", "embedding")
+        .repartition(2)
+      val e = intercept[Exception](
+        Similarity.assignBuckets(df, "vec_id", "embedding", cents).collect())
+      assert(named(e, text), e.toString)
+    }
   }
 
   test("IVF recall vs brute force on the sf0.001 embeddings corpus") {
