@@ -208,13 +208,13 @@ object Graft {
     * MinHash/LSH near-dup pairs, and corpus top-k n-grams — off ONE
     * tokenize→hash shingle pass (SURVEY §9's shared-scan plan): the fused
     * [[operators.Dedup.shingleHashes]] intermediate is persisted
-    * (memory-and-disk, spillable) and every view consumes it, so the
-    * corpus text is tokenized once per session instead of once per
-    * operator. The only additional corpus read is [[operators.Dedup
-    * .topNgramsFromHashes]]' winner-string resolution scan, which is gated
-    * to the broadcast winner set by construction. Outputs are lazy; the
-    * shared pass materializes at the first action and is reused by the
-    * rest. */
+    * (memory-and-disk, spillable) and every view consumes it; MinHash
+    * regroups it once into its per-doc (_id, sig, _set) table and verifies
+    * by `_set` intersection. The only other corpus read is [[operators
+    * .Dedup.topNgramsFromHashes]]' winner-string resolution scan, gated to
+    * the broadcast winner set by construction. The Jaccard and MinHash
+    * views run their routing and banding jobs (so the shared pass) when
+    * the suite is built; top-k stays lazy. */
   def dedupSuite(
       docs: DataFrame, idCol: String, textCol: String, n: Int = 3,
       tau: Double = 0.8, k: Int = 64, bands: Int = 16,

@@ -213,9 +213,8 @@ object Dedup {
       .select(col(idCol).as("_id"), explode(sh).as("shingle"))
   }
 
-  /** [[shingles]] as one fused mapPartitions pass (tokenize → window →
-    * per-doc string dedup), preceded by a width repartition — the
-    * [[shingleHashes]] treatment for the STRING-keyed path. The
+  /** [[shingles]] as one fused per-document pass ([[perDocShingles]]) —
+    * the [[shingleHashes]] treatment for the STRING-keyed path. The
     * declarative chain's higher-order functions are interpreted and
     * allocate per shingle, and a local corpus arrives as a handful of
     * parquet splits, so q162's shingle pass ran ~45 s on 2 tasks at sf1
@@ -226,31 +225,10 @@ object Dedup {
   def shinglesFused(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long"), col(textCol))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          val toks = if (text == null) Array.empty[String] else text.trim.split("\\s+")
-          if (toks.length < n) Iterator.empty
-          else {
-            val seen = new java.util.HashSet[String]()
-            val sb = new java.lang.StringBuilder()
-            (0 to toks.length - n).iterator.flatMap { i =>
-              sb.setLength(0)
-              var j = 0
-              while (j < n) {
-                if (j > 0) sb.append(' ')
-                sb.append(toks(i + j))
-                j += 1
-              }
-              val s = sb.toString
-              if (seen.add(s)) Iterator.single((id, s)) else Iterator.empty
-            }
-          }
-        }
-      }
-      .toDF("_id", "shingle")
+    perDocShingles(df, idCol, textCol, n) { (id, ws) =>
+      val seen = new java.util.HashSet[String]()
+      ws.filter(s => seen.add(s)).map(s => (id, s))
+    }.toDF("_id", "shingle")
   }
 
   /** Distinct shingles reduced to 64-bit xxhash64 tokens: (_id, sh) rows.
@@ -260,46 +238,68 @@ object Dedup {
     * principle (~1e-6 expected over 10M shingles) but never observed at
     * test scale; the string-keyed `shingles` path remains available.
     *
-    * Computed in one fused mapPartitions pass (tokenize → window → hash →
-    * per-doc dedup) instead of the declarative explode(array_distinct(
-    * transform(...))) chain: the higher-order functions are interpreted and
-    * allocate a string per shingle, which made this the dominant cost (and
-    * GC load) of every shingle-based operator. Hashes are identical to SQL
-    * `xxhash64(shingle)` (seed 42), so results are unchanged. The input is
-    * repartitioned to the session default parallelism first — local corpus
-    * files arrive as a single split, which would otherwise serialize this
-    * CPU-bound pass on one core (at scale, inputs are already split). */
+    * Computed in the fused per-document pass ([[perDocShingles]]) instead
+    * of the declarative explode(array_distinct(transform(...))) chain:
+    * the higher-order functions are interpreted and allocate a string per
+    * shingle, which made this the dominant cost (and GC load) of every
+    * shingle-based operator. Hashes are identical to SQL
+    * `xxhash64(shingle)` (seed 42), so results are unchanged. */
   def shingleHashes(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    import org.apache.spark.unsafe.types.UTF8String
+    val spark = df.sparkSession
+    import spark.implicits._
+    perDocShingles(df, idCol, textCol, n) { (id, ws) =>
+      val seen = new java.util.HashSet[Long]()
+      ws.map(xxh64).filter(h => seen.add(h)).map(h => (id, h))
+    }.toDF("_id", "sh")
+  }
+
+  /** [[shingleHashes]] kept per document, from the same pass with no
+    * shuffle: (_id, _set) with `_set` the doc's distinct hashes as a sorted
+    * array<long>. Docs shorter than n tokens get no row. */
+  private[graft] def shingleSets(
+      df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    perDocShingles(df, idCol, textCol, n) { (id, ws) =>
+      Iterator.single((id, ws.map(xxh64).toArray.distinct.sorted))
+    }.toDF("_id", "_set")
+  }
+
+  /** The fused per-document pass behind [[shinglesFused]], [[shingleHashes]]
+    * and [[shingleSets]]: `rows` gets each doc's id and [[windows]] (docs
+    * with none produce nothing), after a repartition to the session default
+    * parallelism — a local corpus often arrives as one split, which would
+    * serialize this CPU-bound pass on one core. */
+  private def perDocShingles[T: org.apache.spark.sql.Encoder](
+      df: DataFrame, idCol: String, textCol: String, n: Int)(
+      rows: (Long, Iterator[String]) => Iterator[T]): org.apache.spark.sql.Dataset[T] = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(idCol).cast("long"), col(textCol))
       .repartition(spark.sparkContext.defaultParallelism)
       .as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          val toks = if (text == null) Array.empty[String] else text.trim.split("\\s+")
-          if (toks.length < n) Iterator.empty
-          else {
-            val seen = new java.util.HashSet[Long]()
-            val sb = new java.lang.StringBuilder()
-            (0 to toks.length - n).iterator.flatMap { i =>
-              sb.setLength(0)
-              var j = 0
-              while (j < n) {
-                if (j > 0) sb.append(' ')
-                sb.append(toks(i + j))
-                j += 1
-              }
-              val u = UTF8String.fromString(sb.toString)
-              val h = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
-              if (seen.add(h)) Iterator.single((id, h)) else Iterator.empty
-            }
-          }
-        }
+      .mapPartitions(_.flatMap { case (id, text) =>
+        val ws = windows(text, n)
+        if (ws.hasNext) rows(id, ws) else Iterator.empty
+      })
+  }
+
+  /** The one tokenize → window loop: `text` split on whitespace runs
+    * (after a trim), then its n-token windows, space-joined, in order and
+    * with repeats. Null text and texts shorter than n tokens have none. */
+  private def windows(text: String, n: Int): Iterator[String] = {
+    val toks = if (text == null) Array.empty[String] else text.trim.split("\\s+")
+    val sb = new java.lang.StringBuilder()
+    (0 to toks.length - n).iterator.map { i =>
+      sb.setLength(0)
+      var j = 0
+      while (j < n) {
+        if (j > 0) sb.append(' ')
+        sb.append(toks(i + j))
+        j += 1
       }
-      .toDF("_id", "sh")
+      sb.toString
+    }
   }
 
   /** HOT shingle hashes of a corpus — document frequency above
@@ -342,8 +342,8 @@ object Dedup {
       .select(col("_id"), explode(slice(col("_ord"), lit(1), plen)).as("sh"))
   }
 
-  /** xxhash64 (seed 42) of a string — identical to SQL `xxhash64(s)` and
-    * to [[shingleHashes]]' fused-pass hashing. */
+  /** xxhash64 (seed 42) of a string — identical to SQL `xxhash64(s)`;
+    * the shingle token of [[shingleHashes]] and [[shingleSets]]. */
   private def xxh64(s: String): Long = {
     import org.apache.spark.sql.catalyst.expressions.XXH64
     import org.apache.spark.unsafe.types.UTF8String
@@ -401,26 +401,10 @@ object Dedup {
         val m = bc.value
         val emitted = new java.util.HashSet[Long]()
         val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-        val sb = new java.lang.StringBuilder()
         it.foreach { text =>
-          if (text != null && emitted.size < m.size) {
-            val toks = text.trim.split("\\s+")
-            if (toks.length >= n) {
-              var i = 0
-              while (i <= toks.length - n) {
-                sb.setLength(0)
-                var j = 0
-                while (j < n) {
-                  if (j > 0) sb.append(' ')
-                  sb.append(toks(i + j))
-                  j += 1
-                }
-                val s = sb.toString
-                val h = xxh64(s)
-                if (m.contains(h) && emitted.add(h)) out += ((s, m(h)))
-                i += 1
-              }
-            }
+          if (emitted.size < m.size) windows(text, n).foreach { s =>
+            val h = xxh64(s)
+            if (m.contains(h) && emitted.add(h)) out += ((s, m(h)))
           }
         }
         out.iterator

@@ -1,41 +1,61 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 
 /** MinHash signatures + LSH banding for near-duplicate candidate generation.
   *
-  * Scale design (SURVEY §4): the k=64 signature is computed in ONE pass over
-  * the hashed shingles — 64 `min(xxhash64(seed_i, sh))` aggregate
-  * expressions with map-side partial aggregation, so the shuffle carries one
-  * 64-long row per doc, not the shingles. Each permutation re-hashes the
-  * 8-byte base shingle hash (one codegen'd hashLong round), never the
-  * string. Banding emits b rows per doc (not k), candidate generation is an
-  * equi-join on (band, band_hash) buckets — never a cross join — and only
-  * candidate pairs are re-joined against the hashed shingle sets for exact
-  * Jaccard verification.
+  * Scale design (SURVEY §4): every path works off ONE per-document table
+  * (_id, sig, _set): `_set` holds the doc's distinct shingle tokens as a
+  * sorted array and `sig` its k minhash values, computed from `_set` in the
+  * same row. The table is materialized once. Banding emits b rows per doc
+  * (not k), candidate generation is an equi-join on (band, band_hash)
+  * buckets — never a cross join — and each candidate pair is verified by
+  * an exact intersection count of its two docs' `_set`s, looked up in that
+  * table: no shingle-row join, regroup or size aggregate.
   */
 object MinHashLSH {
 
   /** (id, signature array) — one row per doc, k minhash values, with the
     * PER-PERMUTATION MIX INJECTED (`perm(i, shCol)` = the i-th
-    * permutation's image of a shingle token): the exact same one-pass
-    * k-min aggregate as [[signatures]], exposed so a caller (q162's
-    * full-oracle gate) can plant engine-replicable mixes — the q157/q158
-    * recipe applied to the MinHash family. */
+    * permutation's image of a shingle token): one k-min aggregate over
+    * (_id, sh) rows, exposed so a caller (q162's full-oracle gate) can
+    * plant engine-replicable mixes — the q157/q158 recipe applied to the
+    * MinHash family. */
   def signaturesWith(
       shingleHashes: DataFrame, k: Int,
-      perm: (Int, Column) => Column): DataFrame = {
-    val mins = (0 until k).map(i => min(perm(i, col("sh"))).as(s"_h$i"))
-    shingleHashes.groupBy("_id")
-      .agg(mins.head, mins.tail: _*)
-      .select(col("_id"), array((0 until k).map(i => col(s"_h$i")): _*).as("sig"))
-  }
+      perm: (Int, Column) => Column): DataFrame =
+    setsOf(shingleHashes, minsOf(k, perm)).select("_id", "sig")
+
+  /** The k-min signature aggregate under `perm`, as one array column. */
+  private def minsOf(k: Int, perm: (Int, Column) => Column): Column =
+    array((0 until k).map(i => min(perm(i, col("sh")))): _*).as("sig")
 
   /** (id, signature array<long>) — one row per doc, k minhash values.
     * `shingleHashes` must be (_id, sh) distinct rows (Dedup.shingleHashes). */
   def signatures(shingleHashes: DataFrame, k: Int): DataFrame =
-    signaturesWith(shingleHashes, k, (i, sh) => xxhash64(lit(i), sh))
+    signed(setsOf(shingleHashes), k).select("_id", "sig")
+
+  /** (_id, _set, aggs…) from distinct (_id, sh) rows: one groupBy(_id). */
+  private def setsOf(sh: DataFrame, aggs: Column*): DataFrame =
+    sh.groupBy("_id").agg(sort_array(collect_list(col("sh"))).as("_set"), aggs: _*)
+
+  /** (_id, _set: array<long>) rows with each doc's k-value signature, from
+    * the one signature kernel: element i is the minimum over the set of
+    * `XXH64.hashLong(sh, XXH64.hashInt(i, 42))`, bit-identical to SQL
+    * `min(xxhash64(i, sh))` (xxhash64 folds its arguments left to right
+    * from seed 42). Each token is read once, as 8 bytes, never a string. */
+  private[graft] def signed(sets: DataFrame, k: Int): DataFrame = {
+    val spark = sets.sparkSession
+    import spark.implicits._
+    val seeds = Array.tabulate(k)(i => XXH64.hashInt(i, 42L))
+    sets.as[(Long, Array[Long])].map { case (id, set) =>
+      val sig = Array.fill(k)(Long.MaxValue)
+      for (sh <- set; i <- 0 until k) sig(i) = math.min(sig(i), XXH64.hashLong(sh, seeds(i)))
+      (id, sig, set)
+    }.toDF("_id", "sig", "_set")
+  }
 
   /** [[candidatePairs]] with the BAND BUCKET KEY INJECTED
     * (`bandKey(j, slice)` = the bucket id of band j's signature slice):
@@ -85,26 +105,25 @@ object MinHashLSH {
     candidatePairsWith(sigs, bands, rowsPerBand, xxhashBandKey)
 
   /** End-to-end near-dup pairs: MinHash/LSH candidates, then exact Jaccard
-    * verification (>= tau) against the shingle sets. */
+    * verification (>= tau) against the shingle sets. The per-doc table
+    * comes straight from the shingling pass ([[Dedup.shingleSets]]). */
   def nearDupPairs(
       df: DataFrame, idCol: String, textCol: String,
-      n: Int, k: Int, bands: Int, tau: Double): DataFrame = {
-    // materialize the (edge-bounded) pair list, then release the shingle
-    // cache — a lazily returned plan over it would leak the cache into the
-    // session (the ADVICE r5 class; see Dedup.ngramJaccardPairs)
-    val sh = Dedup.shingleHashes(df, idCol, textCol, n).cache()
-    val out = nearDupPairsFromHashes(sh, k, bands, tau).localCheckpoint()
-    sh.unpersist()
-    out
-  }
+      n: Int, k: Int, bands: Int, tau: Double): DataFrame =
+    nearDupPairs(df, idCol, textCol, n, k, bands, tau, 1 << 20)
+
+  private[graft] def nearDupPairs(
+      df: DataFrame, idCol: String, textCol: String,
+      n: Int, k: Int, bands: Int, tau: Double, broadcastPairLimit: Int): DataFrame =
+    verifiedCandidates(signed(Dedup.shingleSets(df, idCol, textCol, n), k),
+      k, bands, xxhashBandKey, tau, broadcastPairLimit)
 
   /** [[nearDupPairs]] over a precomputed (_id, sh) intermediate (caller
-    * controls caching — see [[graft.Graft.dedupSuite]]). */
+    * controls caching — see [[graft.Graft.dedupSuite]]), regrouped once
+    * into the per-doc table. */
   def nearDupPairsFromHashes(
-      sh: DataFrame, k: Int, bands: Int, tau: Double): DataFrame = {
-    val r = rowsPerBand(k, bands)
-    verifiedPairs(sh, candidatePairs(signatures(sh, k), bands, r), tau)
-  }
+      sh: DataFrame, k: Int, bands: Int, tau: Double): DataFrame =
+    verifiedCandidates(signed(setsOf(sh), k), k, bands, xxhashBandKey, tau)
 
   /** The MinHash band/verify machinery under PLANTED md5 mixes — q162's
     * full-oracle twin of q32 (the q156-q160 discipline: the trained/
@@ -114,22 +133,16 @@ object MinHashLSH {
     * second engine reproduces): permutation i is the lexicographic order
     * of `md5(sh || ':' || i)` and band j's bucket key the '|'-join of its
     * slice — both byte-replicable in any engine with md5 (lowercase-hex
-    * min/concat is plain binary string arithmetic). Same one-pass k-min
-    * signature aggregate ([[signaturesWith]]), same (band, bucket)
-    * equi-join topology ([[candidatePairsWith]]), same exact-Jaccard
-    * verification join ([[verifiedPairs]]) as the production path. */
+    * min/concat is plain binary string arithmetic). Its k-min aggregate
+    * (the [[signaturesWith]] form) also collects each doc's sorted string
+    * `_set`; banding and the `_set` intersection verify are the production
+    * path's. */
   def nearDupPairsMd5(
       sh: DataFrame, k: Int, bands: Int, tau: Double): DataFrame = {
-    val r = rowsPerBand(k, bands)
-    // Evaluate the shingle subtree ONCE at full width (round 14): `sh`
-    // arrives as a lazy explode over the corpus scan — parquet-split
-    // parallelism (2 tasks at sf1) — and this operator consumes it FOUR
-    // times (signatures, verify x/y, sizes). The uncached form re-ran
-    // the ~45 s two-task explode for every consumer: the whole 64.8 s
-    // sf1 wall the round-13 board pinned on md5 was actually explode
-    // re-evaluation at split-bound width (ProbeStages r14). fanOut
-    // spreads the explode across every core; the checkpoint caps it at
-    // one evaluation.
+    // `sh` (a lazy explode over the corpus scan) is read ONCE, by the
+    // per-doc aggregate whose (_id, sig, _set) table the verify
+    // materializes; fanOut spreads it across every core (at parquet-split
+    // width, 2 tasks at sf1, the explode alone took ~45 s — r14).
     //
     // The md5 mix itself stays INLINE in the min aggregate — a
     // vocab×k-digest join was probed and REVERTED (r14): shingle rows
@@ -140,35 +153,38 @@ object MinHashLSH {
     // occurrences × 8 hex digests (9.3 GB shuffle, 8.7 GB spill,
     // 1137 s at sf10 vs zero spill inline). k md5 rounds per occurrence
     // are ~2 µs of codegen'd CPU each — the cheap side of the trade.
-    val s = graft.core.Par.fanOut(sh).localCheckpoint()
-    val sigs = signaturesWith(s, k,
-      (i, c) => md5(concat(c, lit(":" + i))))
-    val cands = candidatePairsWith(sigs, bands, r, md5BandKey)
-    verifiedPairs(s, cands, tau)
+    val perm = (i: Int, c: Column) => md5(concat(c, lit(":" + i)))
+    verifiedCandidates(setsOf(graft.core.Par.fanOut(sh), minsOf(k, perm)),
+      k, bands, md5BandKey, tau)
   }
 
-  private def rowsPerBand(k: Int, bands: Int): Int = {
+  /** Banded candidates of a per-doc (_id, sig, _set) table, verified by
+    * exact Jaccard |A∩B| / (|A| + |B| − |A∩B|) >= tau over their `_set`s,
+    * rounded to 6 dp. The table and the candidate list are each
+    * materialized once, the list counted as it is. Both `_set` lookups
+    * stream the table against the candidate side: broadcast while the
+    * list holds at most `broadcastPairLimit` pairs, shuffle joins with
+    * identical rows past it. The returned plan is lazy over the two. */
+  private def verifiedCandidates(
+      table: DataFrame, k: Int, bands: Int, bandKey: (Int, Seq[Column]) => Column,
+      tau: Double, broadcastPairLimit: Int = 1 << 20): DataFrame = {
     require(bands > 0 && k > 0 && k % bands == 0,
       s"k ($k) must be a positive multiple of bands ($bands)")
-    k / bands
-  }
-
-  /** Exact-Jaccard verification of candidate pairs against the shingle
-    * sets — the shared tail of every MinHash path (token-type agnostic:
-    * the counting join only needs equality on `sh`). */
-  private def verifiedPairs(
-      sh: DataFrame, cands: DataFrame, tau: Double): DataFrame = {
-    val sizes = sh.groupBy("_id").agg(count(lit(1)).as("sz"))
-    val common = cands
-      .join(sh.as("x"), col("a") === col("x._id"))
-      .join(sh.as("y"), col("b") === col("y._id") && col("x.sh") === col("y.sh"))
-      .groupBy("a", "b").agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.withColumnRenamed("_id", "a").withColumnRenamed("sz", "sa"), "a")
-      .join(sizes.withColumnRenamed("_id", "b").withColumnRenamed("sz", "sb"), "b")
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("sa") + col("sb") - col("common")))
-      .where(col("jaccard") >= tau)
+    val t = table.localCheckpoint()
+    val obs = org.apache.spark.sql.Observation() // the limit probe, minus its jobs
+    val cands = candidatePairsWith(t, bands, k / bands, bandKey, Banding.RowsPerTask)
+      .observe(obs, count(lit(1)).as("n")).localCheckpoint()
+    def hint(df: DataFrame): DataFrame =
+      if (obs.get("n").asInstanceOf[Long] <= broadcastPairLimit) broadcast(df) else df
+    val withA = t.select(col("_id").as("a"), col("_set").as("_sa")).join(hint(cands), "a")
+    t.select(col("_id").as("b"), col("_set").as("_sb")).join(hint(withA), "b")
+      .select(col("a"), col("b"), size(col("_sa")).as("sa"), size(col("_sb")).as("sb"),
+        size(array_intersect(col("_sa"), col("_sb"))).as("common"))
+      .select(col("a"), col("b"),
+        (col("common").cast("double") / (col("sa") + col("sb") - col("common"))).as("jaccard"))
+      // typed, so it is not pushed into the join condition, which would
+      // inline the intersection there twice more
+      .filter((r: org.apache.spark.sql.Row) => r.getDouble(2) >= tau)
       .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
   }
 }

@@ -295,6 +295,67 @@ class DedupSpec extends AnyFunSuite {
     assert(lsh === exact)
   }
 
+  test("minhash: both _set verification arms equal exact ngram jaccard") {
+    val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.6)
+      .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
+    assert(exact.nonEmpty)
+    def run(limit: Int): (Seq[(Long, Long, Double)], Seq[String]) = {
+      val (got, _, plans) = traced(MinHashLSH.nearDupPairs(docs, "doc_id", "text",
+          n = 3, k = 64, bands = 16, tau = 0.6, broadcastPairLimit = limit)
+        .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq)
+      (got, plans)
+    }
+    // default limit: both _set lookups stream the doc table against a
+    // broadcast of the candidate side
+    val (dflt, dfltPlans) = run(1 << 20)
+    assert(dflt == exact)
+    assert(dfltPlans.exists(_.contains("BroadcastHashJoin")), "broadcast arm expected")
+    // limit 0 with no size-based broadcast: both lookups become shuffle
+    // joins with identical rows
+    val conf = spark.conf
+    try {
+      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val (shuffled, plans) = run(0)
+      assert(shuffled == exact)
+      assert(!plans.exists(_.contains("BroadcastHashJoin")), "shuffle arm expected")
+    } finally conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  test("minhash signature kernel equals the xxhash64 column form; shingle sets equal the hash rows") {
+    val rnd = new scala.util.Random(47L)
+    val fuzz = (1 to 80).map { i =>
+      val words = (0 until rnd.nextInt(30)).map(_ => f"w${rnd.nextInt(12)}")
+      (i.toLong * (if (i % 3 == 0) -1L else 1L) + (if (i % 4 == 0) 3000000000L else 0L),
+        words.mkString(if (rnd.nextBoolean()) " " else "  "))
+    }
+    val edge = Seq(
+      (-1001L, ""), (-1002L, "   "), (-1003L, null: String), (-1004L, "one two"),
+      (Int.MaxValue.toLong + 1L, "a a a a a a a"), // one shingle, repeated
+      (Long.MinValue, "x y z x y z x y z"), // repeated shingles
+      (Long.MaxValue, "p q r"))
+    val df = (fuzz ++ edge).toDF("doc_id", "text")
+    val sh = Dedup.shingleHashes(df, "doc_id", "text", 3).cache()
+    val rows = sh.as[(Long, Long)].collect().groupBy(_._1)
+      .map { case (id, r) => id -> r.map(_._2).sorted.toSeq }
+    // empty, null and short docs get no row; the others keep every shingle
+    assert(Seq(-1001L, -1002L, -1003L, -1004L).forall(id => !rows.contains(id)))
+    assert(rows(Int.MaxValue.toLong + 1L).size == 1 && rows(Long.MinValue).size == 3)
+    val sets = Dedup.shingleSets(df, "doc_id", "text", 3).cache()
+    assert(sets.as[(Long, Seq[Long])].collect().toMap == rows)
+    for (k <- Seq(8, 64)) {
+      val model = MinHashLSH.signaturesWith(sh, k, (i, c) => xxhash64(lit(i), c))
+        .as[(Long, Seq[Long])].collect().toMap
+      assert(model.keySet == rows.keySet)
+      assert(MinHashLSH.signatures(sh, k).as[(Long, Seq[Long])].collect().toMap == model,
+        s"k=$k: signatures(sh, k) differs from the column form")
+      val fromSets = MinHashLSH.signed(sets, k).select("_id", "sig")
+        .as[(Long, Seq[Long])].collect().toMap
+      assert(fromSets == model, s"k=$k: the kernel over the shingle sets differs")
+    }
+    sets.unpersist()
+    sh.unpersist()
+  }
+
   test("planted-md5 minhash (q162 seam): verified subset of exact pairs, exact dups guaranteed, driver-model signatures") {
     val shs = Dedup.shingles(docs, "doc_id", "text", n = 3)
       .withColumnRenamed("shingle", "sh").cache()
@@ -506,7 +567,7 @@ class DedupSpec extends AnyFunSuite {
     // (share ALL four bands), 3 meets them only in band 0, 4 meets 1/2 in
     // the non-contiguous bands 1 and 3, 5 isolated. The first-shared-band
     // arithmetic must emit multi-band pairs ONCE — a duplicate would
-    // double-count `common` in verifiedPairs and corrupt the jaccard.
+    // reach the `_set` intersection verify twice and emit its pair twice.
     val sigs = Seq(
       (1L, Seq(10L, 11L, 20L, 21L, 30L, 31L, 40L, 41L)),
       (2L, Seq(10L, 11L, 20L, 21L, 30L, 31L, 40L, 41L)),
@@ -642,6 +703,20 @@ class DedupSpec extends AnyFunSuite {
     // broadcast limit-probe the pair bound already answers would each add
     // jobs: with all three the call ran 13.
     assert(jobs <= 8, s"embeddingCosinePairsLsh ran $jobs jobs")
+  }
+
+  test("minhash nearDupPairs runs from one per-doc table: jobs per call") {
+    val (_, jobs, _) = traced(
+      MinHashLSH.nearDupPairs(docs, "doc_id", "text", n = 3, k = 64, bands = 16, tau = 0.6)
+        .collect())
+    // the shingling pass's width exchange (map stage, then the table
+    // checkpoint), Banding's signature checkpoint and its sizing aggregate
+    // (two map stages, the result), the banded join's map stage and the
+    // candidate checkpoint (which counts the candidates as it runs), then
+    // the two `_set` broadcasts and the collect: 11. The shingle-row path
+    // it replaces (cached (_id, sh) rows, a signature regroup, a limit
+    // probe and two counting joins) ran 17 on the same call.
+    assert(jobs <= 11, s"nearDupPairs ran $jobs jobs")
   }
 
   test("candidatePairs/nearDupPairs refuse a non-positive band shape by name") {

@@ -4,6 +4,15 @@
 #          tools/run_bench.sh [sfdir] [bench_file] [xmx]
 set -e
 cd "$(dirname "$0")/.."
+# `sbt compile` does not copy src/main/resources, so the sas7bdat data
+# source registration can be missing from the classes dir: fail here
+# rather than run every query and lose the ones that read sas7bdat.
+SERVICES=target/scala-2.13/classes/META-INF/services/org.apache.spark.sql.sources.DataSourceRegister
+if [ ! -f "$SERVICES" ]; then
+  echo "$(basename "$0"): $SERVICES is missing;" \
+    "run 'sbt Compile/copyResources' (copies src/main/resources) and retry" >&2
+  exit 1
+fi
 SF=${1:-/root/testdata/sf0.1}
 OUT=${2:-BENCH_local_last.json}
 XMX=${3:-24g}

@@ -3,6 +3,15 @@
 # Usage: tools/run_verify.sh [sfdir] [outdir]
 set -e
 cd "$(dirname "$0")/.."
+# `sbt compile` does not copy src/main/resources, so the sas7bdat data
+# source registration can be missing from the classes dir: fail here
+# rather than run every query and lose the ones that read sas7bdat.
+SERVICES=target/scala-2.13/classes/META-INF/services/org.apache.spark.sql.sources.DataSourceRegister
+if [ ! -f "$SERVICES" ]; then
+  echo "$(basename "$0"): $SERVICES is missing;" \
+    "run 'sbt Compile/copyResources' (copies src/main/resources) and retry" >&2
+  exit 1
+fi
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/graft_verify}
 rm -rf "$OUT"
