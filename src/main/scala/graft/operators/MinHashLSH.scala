@@ -17,6 +17,8 @@ import org.apache.spark.sql.functions._
   */
 object MinHashLSH {
 
+  private val PairBroadcastLimit = 1 << 20 // most pairs whose end rows are broadcast
+
   /** (id, signature array) — one row per doc, k minhash values, with the
     * PER-PERMUTATION MIX INJECTED (`perm(i, shCol)` = the i-th
     * permutation's image of a shingle token): one k-min aggregate over
@@ -32,8 +34,8 @@ object MinHashLSH {
   private def minsOf(k: Int, perm: (Int, Column) => Column): Column =
     array((0 until k).map(i => min(perm(i, col("sh")))): _*).as("sig")
 
-  /** (id, signature array<long>) — one row per doc, k minhash values.
-    * `shingleHashes` must be (_id, sh) distinct rows (Dedup.shingleHashes). */
+  /** (id, signature array<long>) — one row per doc, k minhash values. `shingleHashes`:
+    * distinct integer (_id, sh) rows (Dedup.shingleHashes), read as longs. */
   def signatures(shingleHashes: DataFrame, k: Int): DataFrame =
     signed(setsOf(shingleHashes), k).select("_id", "sig")
 
@@ -110,7 +112,7 @@ object MinHashLSH {
   def nearDupPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int, k: Int, bands: Int, tau: Double): DataFrame =
-    nearDupPairs(df, idCol, textCol, n, k, bands, tau, 1 << 20)
+    nearDupPairs(df, idCol, textCol, n, k, bands, tau, PairBroadcastLimit)
 
   private[graft] def nearDupPairs(
       df: DataFrame, idCol: String, textCol: String,
@@ -120,7 +122,7 @@ object MinHashLSH {
 
   /** [[nearDupPairs]] over a precomputed (_id, sh) intermediate (caller
     * controls caching — see [[graft.Graft.dedupSuite]]), regrouped once
-    * into the per-doc table. */
+    * into the per-doc table; integer `_id`, `sh` as for [[signatures]]. */
   def nearDupPairsFromHashes(
       sh: DataFrame, k: Int, bands: Int, tau: Double): DataFrame =
     verifiedCandidates(signed(setsOf(sh), k), k, bands, xxhashBandKey, tau)
@@ -140,19 +142,16 @@ object MinHashLSH {
   def nearDupPairsMd5(
       sh: DataFrame, k: Int, bands: Int, tau: Double): DataFrame = {
     // `sh` (a lazy explode over the corpus scan) is read ONCE, by the
-    // per-doc aggregate whose (_id, sig, _set) table the verify
-    // materializes; fanOut spreads it across every core (at parquet-split
-    // width, 2 tasks at sf1, the explode alone took ~45 s — r14).
-    //
-    // The md5 mix itself stays INLINE in the min aggregate — a
-    // vocab×k-digest join was probed and REVERTED (r14): shingle rows
-    // arrive doc-major, so the inline partial aggregate collapses to
-    // one row per doc per task (~80 MB shuffle at sf10), while joining
-    // digest arrays back onto occurrence rows re-keys them by SHINGLE —
-    // the partial agg then barely reduces and the shuffle carries
-    // occurrences × 8 hex digests (9.3 GB shuffle, 8.7 GB spill,
-    // 1137 s at sf10 vs zero spill inline). k md5 rounds per occurrence
-    // are ~2 µs of codegen'd CPU each — the cheap side of the trade.
+    // per-doc aggregate; fanOut spreads it over every core (at parquet-split
+    // width the explode alone took ~45 s at sf1 — r14). Rows arrive
+    // doc-major, so its partial side (object-hash for the `_set`
+    // collect_list, sorting past 128 docs per task) emits one row per doc
+    // per task: k digests plus the doc's shingle strings (sf0.1: 8.8 MB
+    // shuffle, 3.7 MB digests-only, no spill; larger scales unmeasured).
+    // The md5 mix stays INLINE: a vocab×k-digest join re-keys occurrence
+    // rows by SHINGLE and the partial agg barely reduces (r14, sf10: 9.3 GB
+    // shuffle, 8.7 GB spill, 1137 s vs ~80 MB inline); k md5 rounds per
+    // occurrence are ~2 µs of codegen'd CPU each.
     val perm = (i: Int, c: Column) => md5(concat(c, lit(":" + i)))
     verifiedCandidates(setsOf(graft.core.Par.fanOut(sh), minsOf(k, perm)),
       k, bands, md5BandKey, tau)
@@ -161,29 +160,30 @@ object MinHashLSH {
   /** Banded candidates of a per-doc (_id, sig, _set) table, verified by
     * exact Jaccard |A∩B| / (|A| + |B| − |A∩B|) >= tau over their `_set`s,
     * rounded to 6 dp. The table and the candidate list are each
-    * materialized once, the list counted as it is. Both `_set` lookups
-    * stream the table against the candidate side: broadcast while the
-    * list holds at most `broadcastPairLimit` pairs, shuffle joins with
-    * identical rows past it. The returned plan is lazy over the two. */
+    * materialized once, the list counted as it is. A pair's two end rows
+    * (a, b, _id) look up their `_set`s in one join and meet in one
+    * groupBy(a, b); only pair rows are broadcast, never a `_set`: the end
+    * rows while the list holds at most `broadcastPairLimit` pairs, nothing
+    * (a shuffle join, identical rows) past it. Lazy over the two. */
   private def verifiedCandidates(
       table: DataFrame, k: Int, bands: Int, bandKey: (Int, Seq[Column]) => Column,
-      tau: Double, broadcastPairLimit: Int = 1 << 20): DataFrame = {
+      tau: Double, broadcastPairLimit: Int = PairBroadcastLimit): DataFrame = {
     require(bands > 0 && k > 0 && k % bands == 0,
       s"k ($k) must be a positive multiple of bands ($bands)")
     val t = table.localCheckpoint()
     val obs = org.apache.spark.sql.Observation() // the limit probe, minus its jobs
     val cands = candidatePairsWith(t, bands, k / bands, bandKey, Banding.RowsPerTask)
       .observe(obs, count(lit(1)).as("n")).localCheckpoint()
-    def hint(df: DataFrame): DataFrame =
-      if (obs.get("n").asInstanceOf[Long] <= broadcastPairLimit) broadcast(df) else df
-    val withA = t.select(col("_id").as("a"), col("_set").as("_sa")).join(hint(cands), "a")
-    t.select(col("_id").as("b"), col("_set").as("_sb")).join(hint(withA), "b")
-      .select(col("a"), col("b"), size(col("_sa")).as("sa"), size(col("_sb")).as("sb"),
-        size(array_intersect(col("_sa"), col("_sb"))).as("common"))
+    val ends = cands.select(col("a"), col("b"), explode(array(col("a"), col("b"))).as("_id"))
+    val small = obs.get("n").asInstanceOf[Long] <= broadcastPairLimit
+    val (sa, sb) = (col("_s").getItem(0), col("_s").getItem(1)) // either order
+    t.select("_id", "_set").join(if (small) broadcast(ends) else ends, "_id")
+      .groupBy("a", "b").agg(collect_list(col("_set")).as("_s"))
+      .select(col("a"), col("b"), (size(sa) + size(sb)).as("n"),
+        size(array_intersect(sa, sb)).as("common"))
       .select(col("a"), col("b"),
-        (col("common").cast("double") / (col("sa") + col("sb") - col("common"))).as("jaccard"))
-      // typed, so it is not pushed into the join condition, which would
-      // inline the intersection there twice more
+        (col("common").cast("double") / (col("n") - col("common"))).as("jaccard"))
+      // typed, so no pushed-down predicate computes the intersection again
       .filter((r: org.apache.spark.sql.Row) => r.getDouble(2) >= tau)
       .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
   }

@@ -321,6 +321,40 @@ class DedupSpec extends AnyFunSuite {
     } finally conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
+  test("minhash verification broadcasts pair rows only, never a _set") {
+    // few candidate pairs (well under the broadcast limit) over large sets:
+    // four ~3000-token near-copies of one text and two unrelated texts
+    val rnd = new scala.util.Random(23L)
+    def text(): IndexedSeq[String] = IndexedSeq.fill(3000)(s"t${rnd.nextInt(50000)}")
+    val base = text()
+    val copies = (1 to 4).map { i =>
+      val edited = (0 until 20).foldLeft(base)((ws, _) => ws.updated(rnd.nextInt(3000), s"e$i"))
+      (i.toLong, edited.mkString(" "))
+    }
+    val big = (copies ++ Seq((5L, text().mkString(" ")), (6L, text().mkString(" "))))
+      .toDF("doc_id", "text")
+    val exact = Dedup.ngramJaccardPairs(big, "doc_id", "text", n = 3, tau = 0.6)
+      .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
+    assert(exact.size == 6)
+    val conf = spark.conf
+    try {
+      // only the operator's own hints may broadcast here
+      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val pairs = MinHashLSH.nearDupPairs(big, "doc_id", "text", n = 3, k = 64, bands = 16,
+        tau = 0.6).orderBy("a", "b")
+      val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(got == exact)
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+      import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+      val broadcasts = new AdaptiveSparkPlanHelper {}
+        .collect(pairs.queryExecution.executedPlan) { case b: BroadcastExchangeExec => b }
+      assert(broadcasts.nonEmpty, "the candidate side should be broadcast")
+      for (b <- broadcasts)
+        assert(!b.output.exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]),
+          s"a broadcast carries an array column: ${b.output.mkString(", ")}")
+    } finally conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
   test("minhash signature kernel equals the xxhash64 column form; shingle sets equal the hash rows") {
     val rnd = new scala.util.Random(47L)
     val fuzz = (1 to 80).map { i =>
@@ -352,6 +386,9 @@ class DedupSpec extends AnyFunSuite {
         .as[(Long, Seq[Long])].collect().toMap
       assert(fromSets == model, s"k=$k: the kernel over the shingle sets differs")
     }
+    // the kernel reads (_id, sh) as longs: a string id is refused by Spark's up-cast
+    intercept[org.apache.spark.sql.AnalysisException](
+      MinHashLSH.signatures(sh.withColumn("_id", col("_id").cast("string")), 8))
     sets.unpersist()
     sh.unpersist()
   }
@@ -713,7 +750,8 @@ class DedupSpec extends AnyFunSuite {
     // checkpoint), Banding's signature checkpoint and its sizing aggregate
     // (two map stages, the result), the banded join's map stage and the
     // candidate checkpoint (which counts the candidates as it runs), then
-    // the two `_set` broadcasts and the collect: 11. The shingle-row path
+    // the end-row broadcast, the pair regroup's map stage and the collect:
+    // 11. The shingle-row path
     // it replaces (cached (_id, sh) rows, a signature regroup, a limit
     // probe and two counting joins) ran 17 on the same call.
     assert(jobs <= 11, s"nearDupPairs ran $jobs jobs")
