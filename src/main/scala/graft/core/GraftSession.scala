@@ -67,16 +67,21 @@ object GraftSession {
 
   private implicit class BuilderOps(val b: SparkSession.Builder) extends AnyVal {
     def applyExtraConf(): SparkSession.Builder =
-      sys.env.get("SPARK_GRAFT_EXTRA_CONF").map(_.trim).filter(_.nonEmpty)
-        .fold(b) { s =>
-          s.split(";").map(_.trim).filter(_.nonEmpty).foldLeft(b) { (bb, kv) =>
-            kv.split("=", 2) match {
-              case Array(k, v) => bb.config(k, v)
-              case _ => bb
-            }
-          }
-        }
+      extraConf(sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", ""))
+        .foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
   }
+
+  /** The `k=v` pairs of a `SPARK_GRAFT_EXTRA_CONF` value, in order. An
+    * entry that is not `k=v` is a typo in the invocation: it is refused by
+    * name, since dropping it would run an arm without the conf it names. */
+  private[graft] def extraConf(spec: String): Seq[(String, String)] =
+    spec.split(";").map(_.trim).filter(_.nonEmpty).toSeq.map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.nonEmpty => (k, v)
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not k=v")
+      }
+    }
 
   def get(): SparkSession = {
     val s = builder().getOrCreate()

@@ -10,13 +10,15 @@ import java.nio.file.{Files, Paths}
   * except that queries whose builders run eager sizing probes (head() on
   * an aggregate, localCheckpoint) execute those probe jobs as part of
   * building the final DataFrame — the dumped plan is the one the noop
-  * sink would execute. The optional conf list forces scale-gated paths
-  * (e.g. graft.spandedup.hashGateMinRows=0) so a plan that only engages
-  * at large SF can be evidenced from the small test dirs. Usage:
-  *   DumpPlans <sfDir> <outDir> <suffix> <q1,q2,...> [k=v,k=v,...]
+  * sink would execute. Confs set through `SPARK_GRAFT_EXTRA_CONF` force
+  * scale-gated paths, so a plan that only engages at large SF can be
+  * evidenced from the small test dirs. Usage:
+  *   DumpPlans <sfDir> <outDir> <suffix> <q1,q2,...>
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
+    require(args.length == 4, "usage: DumpPlans <sfDir> <outDir> <suffix> <q1,q2,...>" +
+      " (confs go through SPARK_GRAFT_EXTRA_CONF)")
     val dir = args(0)
     val outDir = args(1)
     val suffix = args(2)
@@ -24,17 +26,6 @@ object DumpPlans {
     val spark: SparkSession = graft.core.GraftSession
       .builder(master = "local[8]", shufflePartitions = 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    if (args.length > 4) args(4).split(",").map(_.trim).filter(_.nonEmpty)
-      .foreach { kv =>
-        // a conf entry without '=' is a typo in the invocation — fail the
-        // run with a named error instead of a bare MatchError (r14 ADVICE)
-        kv.split("=", 2) match {
-          case Array(k, v) => spark.conf.set(k, v)
-          case _ =>
-            System.err.println(s"[plans] malformed conf entry '$kv' (need k=v)")
-            spark.stop(); sys.exit(2)
-        }
-      }
     Files.createDirectories(Paths.get(outDir))
     // A query whose dump fails must fail the INVOCATION (non-zero exit),
     // or a missing plan-evidence file goes unnoticed and a stale

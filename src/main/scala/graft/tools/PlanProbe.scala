@@ -1,8 +1,9 @@
 package graft.tools
 
 /** One-line join/exchange summary per named query — the quick audit for
-  * "did the small side actually broadcast" (complements PlanLint, which
-  * flags anti-patterns but not missed intent). Usage:
+  * "did the small side actually broadcast" (complements the plan lint
+  * that [[Sweep]]'s `twice` mode runs, which flags anti-patterns but not
+  * missed intent). Usage:
   * `runMain graft.tools.PlanProbe q86_boilerplate q93_curate_corpus`. */
 object PlanProbe {
   def main(args: Array[String]): Unit = {
