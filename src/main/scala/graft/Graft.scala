@@ -209,8 +209,8 @@ object Graft {
     * tokenize→hash shingle pass (SURVEY §9's shared-scan plan): the fused
     * [[operators.Dedup.shingleHashes]] intermediate is persisted
     * (memory-and-disk, spillable) and every view consumes it; MinHash
-    * regroups it once into its per-doc (_id, sig, _set) table and verifies
-    * by `_set` intersection. The only other corpus read is [[operators
+    * and the prefix-tier Jaccard each regroup it once into a per-doc
+    * `_set` table and verify by `_set` intersection. The only other corpus read is [[operators
     * .Dedup.topNgramsFromHashes]]' winner-string resolution scan, gated to
     * the broadcast winner set by construction. The Jaccard and MinHash
     * views run their routing and banding jobs (so the shared pass) when

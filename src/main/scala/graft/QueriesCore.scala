@@ -485,8 +485,9 @@ private[graft] trait QueriesCore extends QueryHelpers {
 
   /** q31's exact output through the prefix-filtered candidate path
     * (Chaudhuri et al. ICDE'06): candidates from a prefix×prefix join over
-    * each doc's (1−τ)-fraction smallest shingle hashes, verification
-    * restricted to candidate docs. Same oracle as q31 — the filter is
+    * each doc's (1−τ)-fraction rarest shingle hashes, each verified by an
+    * exact intersection of the two docs' shingle sets (the per-doc table
+    * the shingling pass builds). Same oracle as q31 — the filter is
     * provably lossless. */
   def q129JaccardPrefix(spark: SparkSession, dir: String): DataFrame =
     Dedup.ngramJaccardPairsPrefix(t(spark, dir, "documents"), "doc_id", "text",
@@ -498,7 +499,8 @@ private[graft] trait QueriesCore extends QueryHelpers {
     * extracted-chunk detection, where Jaccard goes blind as the
     * container grows). One-sided prefix filter under the frequency-aware
     * order (a-prefix × full-b), vocab-aggregate routing to the dense
-    * single-shuffle fallback, candidate-restricted exact verify. Full
+    * single-shuffle fallback, each candidate verified by an exact
+    * intersection of the two docs' shingle sets, divided by |Sa|. Full
     * oracle: DuckDB recomputes every shingle set and brute-forces all
     * directed pairs. */
   def q149NgramContainment(spark: SparkSession, dir: String): DataFrame =

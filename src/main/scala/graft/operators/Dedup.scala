@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.core.BroadcastGuard.{hintIfSmall, withinLimit}
 import graft.core.GraftSession.meetMass
@@ -265,6 +265,15 @@ object Dedup {
     }.toDF("_id", "_set")
   }
 
+  /** The [[shingleSets]] table of a precomputed pass: (_id, _set, aggs…)
+    * from distinct (_id, sh) rows, in one groupBy(_id). */
+  private[graft] def setsOf(sh: DataFrame, aggs: Column*): DataFrame =
+    sh.groupBy("_id").agg(sort_array(collect_list(col("sh"))).as("_set"), aggs: _*)
+
+  /** The (_id, sh) rows of a per-doc (_id, _set) table. */
+  private def setRows(sets: DataFrame): DataFrame =
+    sets.select(col("_id"), explode(col("_set")).as("sh"))
+
   /** The fused per-document pass behind [[shinglesFused]], [[shingleHashes]]
     * and [[shingleSets]]: `rows` gets each doc's id and [[windows]] (docs
     * with none produce nothing), after a repartition to the session default
@@ -302,20 +311,6 @@ object Dedup {
     }
   }
 
-  /** HOT shingle hashes of a corpus — document frequency above
-    * `hotMinDf`, worst offenders first, capped at `maxHot` (the bound
-    * that keeps the driver collect and the InSet probe small; past the
-    * cap the TOP offenders are still taken, so the filter degrades
-    * gracefully, never silently). One map-side-combined aggregate over
-    * the 8-byte hash rows. */
-  private def hotShingles(
-      sh: DataFrame, hotMinDf: Int, maxHot: Int): Array[Long] =
-    sh.groupBy("sh").agg(count(lit(1)).as("_df"))
-      .where(col("_df") > hotMinDf)
-      .orderBy(col("_df").desc, col("sh").asc)
-      .limit(maxHot)
-      .select("sh").collect().map(_.getLong(0))
-
   /** Per-doc PPJoin prefixes under the FREQUENCY-AWARE global order
     * (cold-by-hash, then hot-by-hash): the prefix theorem holds for ANY
     * fixed total order of the shingle universe, and ordering frequent
@@ -326,20 +321,21 @@ object Dedup {
     * all-pairs) because common 3-grams land in prefixes as often as rare
     * ones. With hot shingles (df > hotMinDf, broadcast InSet) pushed to
     * the back of the order, prefixes hold the rarest shingles and
-    * candidates collapse to near-dups plus rare coincidences. Emits
-    * (_id, sh) prefix rows. */
+    * candidates collapse to near-dups plus rare coincidences. Reads the
+    * per-doc (_id, _set) table: `_set` is sorted and `filter` keeps its
+    * order, so the order needs no sort and no regroup. Emits (_id, sh)
+    * prefix rows. */
   private def freqOrderedPrefix(
-      sh: DataFrame, tau: Double, hot: Array[Long]): DataFrame = {
-    val plen = (col("_sz") - ceil(lit(tau) * col("_sz") - lit(1e-9)) + lit(1))
-      .cast("int")
-    val isHot: Column => Column =
-      if (hot.isEmpty) _ => lit(false) else h => h.isin(hot.toSeq: _*)
-    sh.groupBy("_id")
-      .agg(collect_list(col("sh")).as("_hs"), count(lit(1)).as("_sz"))
-      .withColumn("_ord", concat(
-        sort_array(filter(col("_hs"), h => !isHot(h))),
-        sort_array(filter(col("_hs"), h => isHot(h)))))
-      .select(col("_id"), explode(slice(col("_ord"), lit(1), plen)).as("sh"))
+      sets: DataFrame, tau: Double, hot: Array[Long]): DataFrame = {
+    val sz = size(col("_set"))
+    val plen = (sz - ceil(lit(tau) * sz - lit(1e-9)) + lit(1)).cast("int")
+    val ord =
+      if (hot.isEmpty) col("_set")
+      else {
+        val isHot = (h: Column) => h.isin(hot.toSeq: _*)
+        concat(filter(col("_set"), h => !isHot(h)), filter(col("_set"), isHot))
+      }
+    sets.select(col("_id"), explode(slice(ord, lit(1), plen)).as("sh"))
   }
 
   /** xxhash64 (seed 42) of a string — identical to SQL `xxhash64(s)`;
@@ -649,24 +645,60 @@ object Dedup {
   /** [[ngramJaccardPairs]] over a precomputed (_id, sh) intermediate
     * (caller controls caching — see [[graft.Graft.dedupSuite]]). The
     * dense postings generator ([[densePairCounts]]) with the Jaccard
-    * threshold applied inside the mass-pinned scope; result is
-    * materialized (localCheckpoint), so the caller may release `sh`
-    * immediately. `massHint` lets the router pass the meet mass it
+    * threshold ([[jaccardScores]]) applied inside the mass-pinned scope;
+    * result is materialized (localCheckpoint), so the caller may release
+    * `sh` immediately. `massHint` lets the router pass the meet mass it
     * already computed instead of re-aggregating the vocabulary. Pairs
     * come back as a < b in id space. */
   def ngramJaccardPairsFromHashes(
       sh: DataFrame, tau: Double, massHint: Long = -1L): DataFrame =
-    densePairCounts(sh, massHint) { counts =>
-      counts
-        .withColumn("jaccard",
-          col("common").cast("double") / (col("sa") + col("sb") - col("common")))
-        .where(col("jaccard") >= tau)
-        .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
-    }.select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"),
-      col("jaccard"))
+    densePairCounts(sh, massHint)(jaccardScores(_, tau))
+      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"),
+        col("jaccard"))
+
+  /** The one candidate verifier: (a, b, sa, sb, common) for each candidate
+    * pair (a, b) of a per-doc (_id, _set) table, with sa = |S_a|, sb =
+    * |S_b| and common = |S_a ∩ S_b| — the row shape [[densePairCounts]]
+    * hands its `finish`. A pair's two end rows (a, b, _id) look up their
+    * `_set`s in one join and meet in one groupBy(a, b). Only pair rows are
+    * ever broadcast, never a `_set`: the end rows when `broadcastPairs`
+    * (the caller knows the list is small), nothing otherwise (a shuffle
+    * join, identical rows). Lazy. */
+  private[graft] def setPairCounts(
+      sets: DataFrame, cands: DataFrame, broadcastPairs: Boolean): DataFrame = {
+    val ends = cands.select(col("a"), col("b"), explode(array(col("a"), col("b"))).as("_id"))
+    def setOf(end: Column): Column = collect_list(when(col("_id") === end, col("_set")))(0)
+    sets.select("_id", "_set").join(if (broadcastPairs) broadcast(ends) else ends, "_id")
+      .groupBy("a", "b").agg(setOf(col("a")).as("_sa"), setOf(col("b")).as("_sb"))
+      .select(col("a"), col("b"), size(col("_sa")).as("sa"), size(col("_sb")).as("sb"),
+        size(array_intersect(col("_sa"), col("_sb"))).as("common"))
+  }
+
+  /** (a, b, jaccard) for the pair counts (a, b, sa, sb, common) whose
+    * Jaccard |A∩B| / (|A| + |B| − |A∩B|) is at least tau, rounded to 6 dp:
+    * the one Jaccard score, shared by the dense generator, the prefix tier
+    * and MinHash. */
+  private[graft] def jaccardScores(counts: DataFrame, tau: Double): DataFrame =
+    scored(counts, "jaccard",
+      col("common").cast("double") / (col("sa") + col("sb") - col("common")), tau)
+
+  /** (a, b, containment) for the directed pair counts whose containment
+    * |A∩B| / |A| is at least tau, rounded to 6 dp. */
+  private[graft] def containmentScores(counts: DataFrame, tau: Double): DataFrame =
+    scored(counts, "containment", col("common").cast("double") / col("sa"), tau)
+
+  /** (a, b, `name`) rows whose `score` is at least tau, rounded to 6 dp.
+    * The threshold is a typed filter, so no predicate is pushed below it:
+    * a column filter inlines the [[setPairCounts]] intersection into its
+    * condition once per use in the score, on top of the projection's own. */
+  private def scored(counts: DataFrame, name: String, score: Column, tau: Double): DataFrame =
+    counts.select(col("a"), col("b"), score.as(name))
+      .filter((r: Row) => r.getDouble(2) >= tau)
+      .select(col("a"), col("b"), round(col(name), 6).as(name))
 
   /** Prefix-filtered exact Jaccard pairs — same output as
-    * [[ngramJaccardPairs]], far fewer candidate pairs at corpus scale.
+    * [[ngramJaccardPairsFromHashes]], far fewer candidate pairs at corpus
+    * scale.
     *
     * The shared-shingle equi-join generates one candidate row per COMMON
     * shingle of every meeting pair; near-duplicate pairs (the very pairs
@@ -686,43 +718,55 @@ object Dedup {
     * prefixes hold the rarest shingles — without it a corpus of
     * stock-phrase-sharing documents degenerates toward all-pairs
     * candidates (57M pairs on 50k docs in the round-8 sf1 audit; ~2k
-    * with the ordering). Verification then counts TRUE intersections
-    * only for docs that produced a candidate: the full shingle sets are
-    * semi-joined down to candidate docs before the counting join, and
-    * the counting join itself is semi-joined to the candidate pair list
-    * (broadcast — near-dup candidates are edge-bounded), so no
-    * non-candidate pair is ever counted. Exact completeness AND exact
-    * precision; the corpus-wide shuffle carries only 8-byte hashes.
+    * with the ordering).
+    *
+    * Everything works off ONE per-document (_id, _set) table, built in
+    * the shingling pass ([[shingleSets]], no shuffle) and cached for the
+    * call: the vocab aggregate and the dense generator read its exploded
+    * (_id, sh) rows, the prefixes are slices of its sorted sets, and each
+    * candidate pair is verified by an exact intersection of its two sets
+    * ([[setPairCounts]], the verifier MinHash uses). Exact completeness
+    * AND exact precision; the corpus-wide shuffles carry 8-byte hashes.
     *
     * τ·|A| is computed with a 1e-9 downward guard before ⌈⌉ so a binary
     * rounding error can only LENGTHEN a prefix (safe), never shorten it. */
   def ngramJaccardPairsPrefix(
       df: DataFrame, idCol: String, textCol: String, n: Int, tau: Double,
-      broadcastPairLimit: Int = 1 << 20): DataFrame = {
-    val sh = shingleHashes(df, idCol, textCol, n).cache()
-    val out = ngramJaccardPairsPrefixFromHashes(sh, tau, broadcastPairLimit)
-    sh.unpersist()
-    out
+      broadcastPairLimit: Int = 1 << 20): DataFrame =
+    withSets(shingleSets(df, idCol, textCol, n)) { sets =>
+      prefixJaccard(setRows(sets), sets, tau, broadcastPairLimit)
+    }
+
+  /** `f` over `sets` cached, released once `f`'s materialized result is
+    * back. */
+  private def withSets(sets: DataFrame)(f: DataFrame => DataFrame): DataFrame = {
+    val cached = sets.cache()
+    try f(cached) finally cached.unpersist()
   }
 
   /** Candidate pairs (a, b) from the frequency-ordered prefix×prefix
     * join alone — exposed so the spec can measure the candidate
     * reduction vs the full equi-join. The hot set comes from
-    * [[jaccardDfRouting]] ITSELF (not a re-derivation), so the measured
-    * candidate set provably uses the same frequency order as the routed
-    * production path; the regroup is cached across the self-join sides
-    * and the materialized result released before returning (one regroup
-    * in the executed plan, not two). */
+    * [[jaccardDfRouting]] ITSELF (not a re-derivation) and the join is
+    * [[prefixPairs]], so the measured candidate set provably is the one
+    * the routed production path verifies; the prefix is cached across the
+    * self-join sides and the materialized result released before
+    * returning (one prefix build in the executed plan, not two). */
   private[graft] def prefixCandidates(sh: DataFrame, tau: Double): DataFrame = {
     val (hot, _, _) = jaccardDfRouting(sh, broadcastPairLimit = Int.MaxValue)
-    val prefix = freqOrderedPrefix(sh, tau, hot).cache()
-    val out = prefix.as("x").join(prefix.as("y"), col("x.sh") === col("y.sh"))
-      .where(col("x._id") < col("y._id"))
-      .select(col("x._id").as("a"), col("y._id").as("b"))
-      .distinct().localCheckpoint()
+    val prefix = freqOrderedPrefix(setsOf(sh), tau, hot).cache()
+    val out = prefixPairs(prefix).localCheckpoint()
     prefix.unpersist()
     out
   }
+
+  /** Distinct pairs (a < b) of docs whose (_id, sh) prefix rows share a
+    * shingle. */
+  private def prefixPairs(prefix: DataFrame): DataFrame =
+    prefix.as("x").join(prefix.as("y"), col("x.sh") === col("y.sh"))
+      .where(col("x._id") < col("y._id"))
+      .select(col("x._id").as("a"), col("y._id").as("b"))
+      .distinct()
 
   /** One vocab-sized df aggregate feeding BOTH routing tiers: the hot
     * set (df > `hotMinDf`, worst offenders first, capped) and the DENSE
@@ -734,10 +778,9 @@ object Dedup {
     * audit's 40-word-vocab synthetic, max df 25, candidates ≈ meets at
     * 57M on 50k docs). With nothing for the frequency order to push out
     * of prefixes, the filter provably has no lever, so the router goes
-    * dense WITHOUT paying the prefix regroup it would only throw away.
+    * dense WITHOUT paying the prefix build it would only throw away.
     * Routing is performance-only — every path emits identical pairs
-    * (spec-pinned per τ), and verifyPairs carries its own limit-probe
-    * broadcast guard independent of this decision.
+    * (spec-pinned per τ).
     *
     * Also returns the dense meet mass itself (third element): it is the
     * EXACT pair-row count of the dense generator, so the dense path
@@ -775,40 +818,41 @@ object Dedup {
   }
 
   /** [[ngramJaccardPairsPrefix]] over a precomputed (_id, sh)
-    * intermediate (caller keeps it cached — the hot-shingle aggregate,
-    * the prefix regroup, and verification all consume it).
+    * intermediate (caller keeps it cached): its per-doc (_id, _set) table
+    * is one groupBy(_id) over `sh` ([[setsOf]]), cached for the call and
+    * built only if the prefix tier is taken.
     *
-    * ADAPTIVE, two-tier ([[jaccardDfRouting]] decides tier 0 from the df
-    * aggregate alone): when the candidate list outgrows
-    * `broadcastPairLimit`, the prefix filter has failed to filter — a
-    * corpus whose documents share shingles UNIFORMLY (small
+    * ADAPTIVE, three tiers ([[jaccardRoute]]): when the prefix join's meet
+    * mass outgrows `broadcastPairLimit`, the prefix filter has failed to
+    * filter — a corpus whose documents share shingles UNIFORMLY (small
     * vocabularies, templated text; the round-8 sf1 audit measured 57M
     * candidates on 50k docs with NO shingle above df 25, where
     * frequency ordering has nothing to demote) makes candidates ≈
-    * meets, and the prefix path would then pay the dense counting join
-    * PLUS its own distinct and semi-join shuffles. Tier 0 catches the
-    * hot-empty degenerate case before any prefix is built; tier 1
-    * (below) decides the rest exactly on the prefix join's meet mass.
-    * Past either probe the plan falls back to the single-shuffle dense
-    * aggregate ([[ngramJaccardPairsFromHashes]]) — identical output by
-    * the same theorem, strictly fewer exchanges. Zipfian corpora (real
-    * text) stay on the prefix path with broadcast-sized candidates. */
+    * meets, and the prefix path would then pay the dense count PLUS its
+    * own candidate join. Tier 0 catches the hot-empty degenerate case
+    * before any prefix is built; tier 1 decides the rest exactly on the
+    * prefix meet mass. Either dense tier runs the single-shuffle dense
+    * aggregate ([[ngramJaccardPairsFromHashes]]) — identical output by the
+    * same theorem, strictly fewer exchanges. On tier 2 (Zipfian corpora,
+    * real text) the candidates verify through [[setPairCounts]] with their
+    * pair rows broadcast: the meet mass bounds the distinct candidates from
+    * above, so the tier itself proves the list fits. */
   def ngramJaccardPairsPrefixFromHashes(
       sh: DataFrame, tau: Double, broadcastPairLimit: Int = 1 << 20): DataFrame =
-    jaccardRoute(sh, tau, broadcastPairLimit) match {
+    withSets(setsOf(sh))(prefixJaccard(sh, _, tau, broadcastPairLimit))
+
+  /** The routed Jaccard pairs of one corpus, given as both its (_id, sh)
+    * rows and its (_id, _set) table. Every tier returns materialized. */
+  private def prefixJaccard(
+      sh: DataFrame, sets: DataFrame, tau: Double, broadcastPairLimit: Int): DataFrame =
+    route(sh, sets, tau, broadcastPairLimit) match {
       case (_, None, mass) =>
         // already materialized by the dense generator (checkpoint inside
         // its mass-pinned scope), so releasing `sh` afterwards is safe
         ngramJaccardPairsFromHashes(sh, tau, mass)
       case (_, Some(prefix), _) =>
-        val cands = prefix.as("x").join(prefix.as("y"), col("x.sh") === col("y.sh"))
-          .where(col("x._id") < col("y._id"))
-          .select(col("x._id").as("a"), col("y._id").as("b"))
-          .distinct().cache()
-        val v = verifyPairs(sh, sh.groupBy("_id").agg(count(lit(1)).as("sz")),
-          cands, tau, broadcastPairLimit)
-          .localCheckpoint() // materialize, then release the cache (ADVICE r5)
-        cands.unpersist()
+        val v = jaccardScores(setPairCounts(sets, prefixPairs(prefix), broadcastPairs = true), tau)
+          .localCheckpoint()
         prefix.unpersist()
         v
     }
@@ -823,19 +867,27 @@ object Dedup {
     * meet-mass probe; 2 = prefix. The tier-1 decision quantity is the
     * prefix join's MEET MASS Σ C(df_pfx, 2) — one vocab-sized aggregate
     * over the prefix rows, no pair join, and an upper bound on distinct
-    * candidate pairs (so it also proves the broadcast safe on the
-    * filtered path); probing the candidate list itself would execute
+    * candidate pairs, so on tier 2 it also proves the candidates'
+    * broadcast safe; probing the candidate list itself would execute
     * the very join the fallback exists to avoid. On tier 2 the returned
-    * prefix frame is CACHED — the caller must unpersist it. The third
-    * element is the DENSE meet mass Σ C(df, 2) from the routing
-    * aggregate — on a dense tier the fallback sizes its explosive
-    * stage from it ([[densePairCounts]]). */
+    * (_id, sh) prefix frame is CACHED — the caller must unpersist it. The
+    * prefixes are slices of the per-doc sets, here one groupBy(_id) over
+    * `sh` ([[setsOf]]). The third element is the DENSE meet mass
+    * Σ C(df, 2) from the routing aggregate — on a dense tier the fallback
+    * sizes its explosive stage from it ([[densePairCounts]]). */
   private[graft] def jaccardRoute(
       sh: DataFrame, tau: Double,
+      broadcastPairLimit: Int): (Int, Option[DataFrame], Long) =
+    route(sh, setsOf(sh), tau, broadcastPairLimit)
+
+  /** [[jaccardRoute]] over a corpus given as both its (_id, sh) rows and
+    * its (_id, _set) table. */
+  private def route(
+      sh: DataFrame, sets: DataFrame, tau: Double,
       broadcastPairLimit: Int): (Int, Option[DataFrame], Long) = {
     val (hot, tier0Dense, denseMass) = jaccardDfRouting(sh, broadcastPairLimit)
     if (tier0Dense) return (0, None, denseMass)
-    val prefix = freqOrderedPrefix(sh, tau, hot).cache()
+    val prefix = freqOrderedPrefix(sets, tau, hot).cache()
     val prefixMass = prefix.groupBy("sh").agg(count(lit(1)).as("c"))
       .agg(meetMass(col("c")))
       .head().getLong(0)
@@ -852,44 +904,49 @@ object Dedup {
     * misses all of these when the container is much larger; containment
     * is the quantity contamination and provenance checks actually want.
     *
-    * Same scale skeleton as the Jaccard family, asymmetric where the
-    * math is: the prefix theorem holds one-sided — |Sa∩Sb| ≥ ⌈τ·|Sa|⌉
+    * Same scale skeleton as [[ngramJaccardPairsPrefix]], asymmetric where
+    * the math is: the prefix theorem holds one-sided — |Sa∩Sb| ≥ ⌈τ·|Sa|⌉
     * forces a's first |Sa| − ⌈τ·|Sa|⌉ + 1 shingles (ANY fixed order) to
     * intersect Sb, with NO constraint on b — so candidates come from
     * a-prefix × full-b, under the same frequency-aware order (hot
     * shingles demoted out of prefixes, [[jaccardDfRouting]]'s one vocab
     * scan). Routing compares the prefix join's meet mass Σ pfx_df·(df−1)
-    * against the dense directed mass Σ df·(df−1) — both from vocab
-    * aggregates, no pair join — and falls back to the single-shuffle
-    * dense aggregate when the filter provably has no lever (identical
-    * output either way; the verification counts true intersections only
-    * for candidate pairs, broadcast-guarded by the same limit-probe
-    * discipline as [[ngramJaccardPairsPrefixFromHashes]]).
+    * (from vocab aggregates, no pair join) against the limit, and falls
+    * back to the single-shuffle dense aggregate when the filter provably
+    * has no lever (identical output either way). Under the limit
+    * that mass bounds the directed candidates from above, so they verify
+    * through [[setPairCounts]] with their pair rows broadcast, against the
+    * one per-doc (_id, _set) table the shingling pass builds
+    * ([[shingleSets]]), divisor |Sa| ([[containmentScores]]).
     * Returns (a, b, containment), a ≠ b, containment rounded to 6dp.
     * EAGER like [[ngramJaccardPairs]]: materialized at call time (every
     * branch checkpoints), not a lazy plan. */
   def ngramContainmentPairs(
       df: DataFrame, idCol: String, textCol: String, n: Int, tau: Double,
-      broadcastPairLimit: Int = 1 << 20): DataFrame = {
-    val sh = shingleHashes(df, idCol, textCol, n).cache()
-    val out = ngramContainmentPairsFromHashes(sh, tau, broadcastPairLimit)
-    sh.unpersist()
-    out
-  }
+      broadcastPairLimit: Int = 1 << 20): DataFrame =
+    withSets(shingleSets(df, idCol, textCol, n)) { sets =>
+      prefixContainment(setRows(sets), sets, tau, broadcastPairLimit)
+    }
 
   /** [[ngramContainmentPairs]] over a precomputed (_id, sh) intermediate
-    * (caller keeps it cached). */
+    * (caller keeps it cached); its per-doc table is one groupBy(_id) over
+    * `sh` ([[setsOf]]). */
   def ngramContainmentPairsFromHashes(
-      sh: DataFrame, tau: Double, broadcastPairLimit: Int = 1 << 20): DataFrame = {
-    val sizes = sh.groupBy("_id").agg(count(lit(1)).as("sz"))
+      sh: DataFrame, tau: Double, broadcastPairLimit: Int = 1 << 20): DataFrame =
+    withSets(setsOf(sh))(prefixContainment(sh, _, tau, broadcastPairLimit))
+
+  /** The routed containment pairs of one corpus, given as both its
+    * (_id, sh) rows and its (_id, _set) table. */
+  private def prefixContainment(
+      sh: DataFrame, sets: DataFrame, tau: Double, broadcastPairLimit: Int): DataFrame = {
     val (hot, hotOverflow, denseMass) = jaccardDfRouting(sh, broadcastPairLimit)
     // the Jaccard twin's tier-0 exit, honored here too (round 10): with
     // the hot set overflowed the prefix filter provably has no lever —
-    // building the prefix anyway pays a regroup the meet-mass probe
+    // building the prefix anyway pays for slices the meet-mass probe
     // immediately throws away
     if (hotOverflow)
       return denseContainment(sh, tau, denseMass)
-    val prefix = freqOrderedPrefix(sh, tau, hot).cache()
+    val prefix = freqOrderedPrefix(sets, tau, hot).cache()
     // both decision masses from vocab-sized aggregates — never a pair join
     val dfc = sh.groupBy("sh").agg(count(lit(1)).as("_df"))
     val pm = prefix.groupBy("sh").agg(count(lit(1)).as("_pdf"))
@@ -899,20 +956,18 @@ object Dedup {
     val out =
       // every branch returns MATERIALIZED (the dense generator checkpoints
       // inside its mass-pinned scope; the prefix branch checkpoints here —
-      // r9 ADVICE): the caller unpersists `sh` before any action on the
-      // result, so a lazily-returned plan would re-run the whole shingle
-      // pass on every action
+      // r9 ADVICE): the caller unpersists the sets before any action on
+      // the result, so a lazily-returned plan would re-run the whole
+      // shingle pass on every action
       if (pm > broadcastPairLimit.toLong)
         denseContainment(sh, tau, denseMass)
       else {
         val cands = prefix.as("x").join(sh.as("y"), col("x.sh") === col("y.sh"))
           .where(col("x._id") =!= col("y._id"))
           .select(col("x._id").as("a"), col("y._id").as("b"))
-          .distinct().cache()
-        val v = verifyContainment(sh, sizes, cands, tau, broadcastPairLimit)
+          .distinct()
+        containmentScores(setPairCounts(sets, cands, broadcastPairs = true), tau)
           .localCheckpoint()
-        cands.unpersist()
-        v
       }
     prefix.unpersist()
     out
@@ -922,85 +977,26 @@ object Dedup {
     * implementation) — [[densePairCounts]]' postings generator (the
     * intersection is symmetric, so each pair is counted once), with both
     * directions materialized from the grouped row in one projection:
-    * a→b divides by |Sa|, b→a by |Sb|, each filtered on its own
-    * threshold, all inside the mass-pinned scope. Each row keeps its
-    * direction when the ranks map back to ids. */
+    * a→b divides by |Sa|, b→a by |Sb| ([[containmentScores]] on each),
+    * all inside the mass-pinned scope. Each row keeps its direction when
+    * the ranks map back to ids. */
   private[graft] def denseContainment(
       sh: DataFrame, tau: Double, massHint: Long = -1L): DataFrame =
     densePairCounts(sh, massHint) { counts =>
-      counts
-        // filter BEFORE the direction explode (round 15): the explode
-        // doubles the ~mass-row aggregated stream only for the per-
-        // direction filter to drop almost all of it. Ranks are
-        // size-ordered, so sa ≤ sb and a→b is the greater quotient: a
-        // pair survives in SOME direction iff a→b passes, computed with
-        // the IDENTICAL cast/divide expression as the per-direction
-        // filter below
-        .where(col("common").cast("double") / col("sa") >= tau)
+      // filter BEFORE the direction explode (round 15): the explode
+      // doubles the ~mass-row aggregated stream only for the per-
+      // direction filter to drop almost all of it. Ranks are size-ordered,
+      // so sa ≤ sb and a→b is the greater quotient: a pair survives in
+      // SOME direction iff a→b passes, computed with the IDENTICAL
+      // cast/divide expression as the per-direction score
+      val either = counts.where(col("common").cast("double") / col("sa") >= tau)
         .select(explode(array(
-          struct(col("a"), col("b"),
-            (col("common").cast("double") / col("sa")).as("containment")),
-          struct(col("b").as("a"), col("a").as("b"),
-            (col("common").cast("double") / col("sb")).as("containment")))).as("r"))
-        .select(col("r.a").as("a"), col("r.b").as("b"), col("r.containment"))
-        .where(col("containment") >= tau)
-        .select(col("a"), col("b"), round(col("containment"), 6).as("containment"))
+          struct(col("a"), col("b"), col("sa"), col("common")),
+          struct(col("b").as("a"), col("a").as("b"), col("sb").as("sa"), col("common"))))
+          .as("r"))
+        .select("r.*")
+      containmentScores(either, tau)
     }
-
-  /** Exact containment verification restricted to candidate pairs —
-    * [[verifyPairs]]' discipline, directed: full sets semi-joined to
-    * candidate docs, the counting join semi-joined to the (a, b) list,
-    * divisor |Sa| only. */
-  private[graft] def verifyContainment(
-      sh: DataFrame, sizes: DataFrame, cands: DataFrame,
-      tau: Double, broadcastPairLimit: Int): DataFrame = {
-    val small = withinLimit(cands, broadcastPairLimit)
-    def hint(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val candIds = cands.select(col("a").as("_id"))
-      .unionByName(cands.select(col("b").as("_id"))).distinct()
-    val shc = sh.join(hint(candIds), Seq("_id"))
-    shc.as("x").join(shc.as("y"), col("x.sh") === col("y.sh"))
-      .where(col("x._id") =!= col("y._id"))
-      .join(hint(cands),
-        col("x._id") === col("a") && col("y._id") === col("b"), "left_semi")
-      .groupBy(col("x._id").as("a"), col("y._id").as("b"))
-      .agg(count(lit(1)).as("common"))
-      .join(sizes.withColumnRenamed("_id", "a").withColumnRenamed("sz", "sa"), "a")
-      .withColumn("containment", col("common").cast("double") / col("sa"))
-      .where(col("containment") >= tau)
-      .select(col("a"), col("b"), round(col("containment"), 6).as("containment"))
-  }
-
-  /** Exact Jaccard verification restricted to candidate pairs: full sets
-    * semi-joined to candidate docs, the counting join semi-joined to the
-    * pair list — no non-candidate pair is ever counted, and completeness
-    * is the prefix filter's theorem. The pair list is edge-bounded BY
-    * CONTRACT; `broadcastPairLimit` enforces it with a limit-probe — a
-    * pathological corpus whose candidates outgrow the knob degrades to
-    * distributed (shuffle) semi-joins with identical output
-    * (spec-proven) instead of an OOM'd driver broadcast. */
-  private def verifyPairs(
-      sh: DataFrame, sizes: DataFrame, cands: DataFrame,
-      tau: Double, broadcastPairLimit: Int): DataFrame = {
-    val small = withinLimit(cands, broadcastPairLimit)
-    def hint(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val candIds = cands.select(col("a").as("_id"))
-      .unionByName(cands.select(col("b").as("_id"))).distinct()
-    val shc = sh.join(hint(candIds), Seq("_id"))
-    val common = shc.as("x").join(shc.as("y"), col("x.sh") === col("y.sh"))
-      .where(col("x._id") < col("y._id"))
-      .join(hint(cands),
-        col("x._id") === col("a") && col("y._id") === col("b"), "left_semi")
-      .groupBy(col("x._id").as("a"), col("y._id").as("b"))
-      .agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.withColumnRenamed("_id", "a").withColumnRenamed("sz", "sa"), "a")
-      .join(sizes.withColumnRenamed("_id", "b").withColumnRenamed("sz", "sb"), "b")
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("sa") + col("sb") - col("common")))
-      .where(col("jaccard") >= tau)
-      .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
-  }
 
   /** Connected components over an undirected edge list, as (id, comp) with
     * comp = the minimum node id reachable from `id`.

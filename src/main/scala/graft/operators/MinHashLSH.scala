@@ -13,7 +13,10 @@ import org.apache.spark.sql.functions._
   * (not k), candidate generation is an equi-join on (band, band_hash)
   * buckets — never a cross join — and each candidate pair is verified by
   * an exact intersection count of its two docs' `_set`s, looked up in that
-  * table: no shingle-row join, regroup or size aggregate.
+  * table ([[Dedup.setPairCounts]], the one candidate verifier, which the
+  * prefix Jaccard and containment tiers share) and scored by the one exact
+  * Jaccard ([[Dedup.jaccardScores]]): no shingle-row join, regroup or size
+  * aggregate.
   */
 object MinHashLSH {
 
@@ -28,7 +31,7 @@ object MinHashLSH {
   def signaturesWith(
       shingleHashes: DataFrame, k: Int,
       perm: (Int, Column) => Column): DataFrame =
-    setsOf(shingleHashes, minsOf(k, perm)).select("_id", "sig")
+    Dedup.setsOf(shingleHashes, minsOf(k, perm)).select("_id", "sig")
 
   /** The k-min signature aggregate under `perm`, as one array column. */
   private def minsOf(k: Int, perm: (Int, Column) => Column): Column =
@@ -37,11 +40,7 @@ object MinHashLSH {
   /** (id, signature array<long>) — one row per doc, k minhash values. `shingleHashes`:
     * distinct integer (_id, sh) rows (Dedup.shingleHashes), read as longs. */
   def signatures(shingleHashes: DataFrame, k: Int): DataFrame =
-    signed(setsOf(shingleHashes), k).select("_id", "sig")
-
-  /** (_id, _set, aggs…) from distinct (_id, sh) rows: one groupBy(_id). */
-  private def setsOf(sh: DataFrame, aggs: Column*): DataFrame =
-    sh.groupBy("_id").agg(sort_array(collect_list(col("sh"))).as("_set"), aggs: _*)
+    signed(Dedup.setsOf(shingleHashes), k).select("_id", "sig")
 
   /** (_id, _set: array<long>) rows with each doc's k-value signature, from
     * the one signature kernel: element i is the minimum over the set of
@@ -125,7 +124,7 @@ object MinHashLSH {
     * into the per-doc table; integer `_id`, `sh` as for [[signatures]]. */
   def nearDupPairsFromHashes(
       sh: DataFrame, k: Int, bands: Int, tau: Double): DataFrame =
-    verifiedCandidates(signed(setsOf(sh), k), k, bands, xxhashBandKey, tau)
+    verifiedCandidates(signed(Dedup.setsOf(sh), k), k, bands, xxhashBandKey, tau)
 
   /** The MinHash band/verify machinery under PLANTED md5 mixes — q162's
     * full-oracle twin of q32 (the q156-q160 discipline: the trained/
@@ -153,18 +152,17 @@ object MinHashLSH {
     // shuffle, 8.7 GB spill, 1137 s vs ~80 MB inline); k md5 rounds per
     // occurrence are ~2 µs of codegen'd CPU each.
     val perm = (i: Int, c: Column) => md5(concat(c, lit(":" + i)))
-    verifiedCandidates(setsOf(graft.core.Par.fanOut(sh), minsOf(k, perm)),
+    verifiedCandidates(Dedup.setsOf(graft.core.Par.fanOut(sh), minsOf(k, perm)),
       k, bands, md5BandKey, tau)
   }
 
   /** Banded candidates of a per-doc (_id, sig, _set) table, verified by
-    * exact Jaccard |A∩B| / (|A| + |B| − |A∩B|) >= tau over their `_set`s,
-    * rounded to 6 dp. The table and the candidate list are each
-    * materialized once, the list counted as it is. A pair's two end rows
-    * (a, b, _id) look up their `_set`s in one join and meet in one
-    * groupBy(a, b); only pair rows are broadcast, never a `_set`: the end
-    * rows while the list holds at most `broadcastPairLimit` pairs, nothing
-    * (a shuffle join, identical rows) past it. Lazy over the two. */
+    * the shared `_set` intersection ([[Dedup.setPairCounts]]) and scored
+    * by the shared exact Jaccard ([[Dedup.jaccardScores]]: >= tau, 6 dp).
+    * The table and the candidate list are each materialized once, the
+    * list counted as it is: its pair rows are broadcast while it holds at
+    * most `broadcastPairLimit` pairs, and shuffled (identical rows) past
+    * it. Lazy over the two. */
   private def verifiedCandidates(
       table: DataFrame, k: Int, bands: Int, bandKey: (Int, Seq[Column]) => Column,
       tau: Double, broadcastPairLimit: Int = PairBroadcastLimit): DataFrame = {
@@ -174,17 +172,7 @@ object MinHashLSH {
     val obs = org.apache.spark.sql.Observation() // the limit probe, minus its jobs
     val cands = candidatePairsWith(t, bands, k / bands, bandKey, Banding.RowsPerTask)
       .observe(obs, count(lit(1)).as("n")).localCheckpoint()
-    val ends = cands.select(col("a"), col("b"), explode(array(col("a"), col("b"))).as("_id"))
     val small = obs.get("n").asInstanceOf[Long] <= broadcastPairLimit
-    val (sa, sb) = (col("_s").getItem(0), col("_s").getItem(1)) // either order
-    t.select("_id", "_set").join(if (small) broadcast(ends) else ends, "_id")
-      .groupBy("a", "b").agg(collect_list(col("_set")).as("_s"))
-      .select(col("a"), col("b"), (size(sa) + size(sb)).as("n"),
-        size(array_intersect(sa, sb)).as("common"))
-      .select(col("a"), col("b"),
-        (col("common").cast("double") / (col("n") - col("common"))).as("jaccard"))
-      // typed, so no pushed-down predicate computes the intersection again
-      .filter((r: org.apache.spark.sql.Row) => r.getDouble(2) >= tau)
-      .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
+    Dedup.jaccardScores(Dedup.setPairCounts(t, cands, small), tau)
   }
 }

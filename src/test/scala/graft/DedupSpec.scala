@@ -144,16 +144,22 @@ class DedupSpec extends AnyFunSuite {
         .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
       assert(got == exp, s"tau=$tau")
       assert(exp.nonEmpty, s"tau=$tau cut above every planted containment")
-      // the verify stage's no-broadcast degradation (limit-probe refuses
-      // every broadcast -> unhinted shuffle semi-joins), candidates = all
-      // directed pairs so completeness can't mask a verify bug
+      // the shared _set verifier's shuffle arm (pair rows not broadcast,
+      // and nothing broadcast by size) plus the containment divide,
+      // candidates = all directed pairs so completeness can't mask a
+      // verify bug
       val allPairs = sh.select(col("_id").as("a"))
         .crossJoin(sh.select(col("_id").as("b")))
         .where(col("a") =!= col("b")).distinct().localCheckpoint()
-      val sizes = sh.groupBy("_id").agg(count(lit(1)).as("sz"))
-      val nb = Dedup.verifyContainment(sh, sizes, allPairs, tau, broadcastPairLimit = 0)
-        .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
-      assert(nb == exp, s"no-broadcast tau=$tau")
+      val conf = spark.conf
+      try {
+        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        val (nb, _, plans) = traced(Dedup.containmentScores(
+            Dedup.setPairCounts(Dedup.setsOf(sh), allPairs, broadcastPairs = false), tau)
+          .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq)
+        assert(nb == exp, s"no-broadcast tau=$tau")
+        assert(!plans.exists(_.contains("BroadcastHashJoin")), s"tau=$tau: shuffle arm expected")
+      } finally conf.unset("spark.sql.autoBroadcastJoinThreshold")
       sh.unpersist()
     }
   }
@@ -336,22 +342,51 @@ class DedupSpec extends AnyFunSuite {
     val exact = Dedup.ngramJaccardPairs(big, "doc_id", "text", n = 3, tau = 0.6)
       .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
     assert(exact.size == 6)
+    // the prefix calls below verify their candidates through the same
+    // _set verifier: both must take the prefix tier here, and equal the
+    // dense generator
+    val sh = Dedup.shingleHashes(big, "doc_id", "text", 3).cache()
+    val (tier, prefix, _) = Dedup.jaccardRoute(sh, 0.6, 1 << 20)
+    prefix.foreach(_.unpersist())
+    assert(tier == 2, s"the large-set corpus routed tier $tier")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
+    assert(rows(Dedup.ngramJaccardPairsFromHashes(sh, 0.6)) == exact)
+    val expC = rows(Dedup.denseContainment(sh, 0.6))
+    assert(expC.size == 12)
+    sh.unpersist()
+    import org.apache.spark.sql.catalyst.expressions.ArrayIntersect
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val helper = new AdaptiveSparkPlanHelper {}
     val conf = spark.conf
     try {
-      // only the operator's own hints may broadcast here
+      // only the operators' own hints may broadcast here
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val pairs = MinHashLSH.nearDupPairs(big, "doc_id", "text", n = 3, k = 64, bands = 16,
-        tau = 0.6).orderBy("a", "b")
-      val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      assert(got == exact)
-      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-      import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-      val broadcasts = new AdaptiveSparkPlanHelper {}
-        .collect(pairs.queryExecution.executedPlan) { case b: BroadcastExchangeExec => b }
-      assert(broadcasts.nonEmpty, "the candidate side should be broadcast")
-      for (b <- broadcasts)
-        assert(!b.output.exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]),
-          s"a broadcast carries an array column: ${b.output.mkString(", ")}")
+      val calls = Seq[(String, () => Seq[(Long, Long, Double)], Seq[(Long, Long, Double)])](
+        ("minhash", () => rows(MinHashLSH.nearDupPairs(big, "doc_id", "text", n = 3, k = 64,
+          bands = 16, tau = 0.6)), exact),
+        ("prefix jaccard", () => rows(Dedup.ngramJaccardPairsPrefix(big, "doc_id", "text",
+          n = 3, tau = 0.6)), exact),
+        ("prefix containment", () => rows(Dedup.ngramContainmentPairs(big, "doc_id", "text",
+          n = 3, tau = 0.6)), expC))
+      for ((what, call, expected) <- calls) {
+        val (got, plans) = executedPlans(call())
+        assert(got == expected, what)
+        val broadcasts = plans.flatMap(p => helper.collect(p) { case b: BroadcastExchangeExec => b })
+        assert(broadcasts.nonEmpty, s"$what: the candidate side should be broadcast")
+        for (b <- broadcasts)
+          assert(!b.output.exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]),
+            s"$what: a broadcast carries an array column: ${b.output.mkString(", ")}")
+        // one intersection per verified pair: a pushed-down column filter
+        // over the score would evaluate it again in its condition
+        def intersections(p: SparkPlan): Int =
+          helper.flatMap(p)(_.expressions.flatMap(_.collect { case e: ArrayIntersect => e })).size
+        val verifying = plans.map(intersections).filter(_ > 0)
+        assert(verifying.nonEmpty, s"$what: no plan verifies by _set intersection")
+        assert(verifying.forall(_ == 1), s"$what: array_intersect per plan: $verifying")
+      }
     } finally conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
@@ -652,6 +687,28 @@ class DedupSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** `f`'s result and the executed plan of every action it ran. */
+  private def executedPlans[T](f: => T): (T, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import org.apache.spark.graftshim.ListenerShim
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerShim.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val out = f
+      ListenerShim.drain(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      (out, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   /** Whether a plan repartitions the banded rows to a user-numbered count
     * on (band, key): the sized arm of Banding.pairs. */
   private def sizedBanding(plans: Seq[String]): Boolean = {
@@ -755,6 +812,24 @@ class DedupSpec extends AnyFunSuite {
     // it replaces (cached (_id, sh) rows, a signature regroup, a limit
     // probe and two counting joins) ran 17 on the same call.
     assert(jobs <= 11, s"nearDupPairs ran $jobs jobs")
+  }
+
+  test("prefix jaccard tier 2 verifies from one per-doc table: jobs per call") {
+    val sh = Dedup.shingleHashes(docs, "doc_id", "text", 3).cache()
+    sh.count()
+    val (tier, prefix, _) = Dedup.jaccardRoute(sh, 0.6, 1 << 20)
+    prefix.foreach(_.unpersist())
+    assert(tier == 2, s"the fixture routed tier $tier")
+    val (_, jobs, _) = traced(Dedup.ngramJaccardPairsPrefixFromHashes(sh, 0.6).collect())
+    sh.unpersist()
+    // routing (the vocab aggregate's stages and its hot-set collect), the
+    // prefix-mass aggregate (which fills the set and prefix caches as it
+    // runs), the candidate self-join's stages and the end-row broadcast,
+    // the pair regroup's map stage, the checkpoint and the collect: 13.
+    // The self-join verifier it replaces (a sizes aggregate, a limit probe
+    // over the cached candidates, a candidate-doc semi-join and a counting
+    // join semi-joined to the pair list) ran 23 on the same call.
+    assert(jobs <= 13, s"tier-2 ngramJaccardPairsPrefixFromHashes ran $jobs jobs")
   }
 
   test("candidatePairs/nearDupPairs refuse a non-positive band shape by name") {
