@@ -10,6 +10,18 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * sized to ~2-3x total executor cores / managed by AQE).
   */
 object GraftSession {
+
+  /** Capacity of Spark's generated-class cache. Spark's default of 100
+    * is split over 4 LRU segments of 25, and one pass of the perfbench
+    * `corpus_dedup` pipeline over both of its sources needs ~200 distinct
+    * classes: a whole run (seed 4, local[4]) compiles 205 at this
+    * capacity. At 100 it compiled 343, because the second source
+    * recompiled what the first had compiled: 9, 11, 35 and 34 classes in
+    * its quality, exact, MinHash and JSONL stages, 0 at this capacity.
+    * 1000 holds five such passes, so repeated plan shapes stay compiled
+    * across the calls of one session. */
+  private val CodegenCacheEntries = 1000
+
   def builder(
       master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
@@ -53,6 +65,9 @@ object GraftSession {
       // ProbeStages). Pinned scopes (withPinnedShuffle) and user-numbered
       // repartitions are unaffected — AQE never touches either.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      // Spark's generated-class cache: a static conf that CodeGenerator
+      // reads once per JVM, when it first compiles.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

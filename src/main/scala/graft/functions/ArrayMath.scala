@@ -3,8 +3,9 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.graftshim.ColumnShim
@@ -227,6 +228,26 @@ case class NearestCentroid(child: Expression, table: CentroidTable)
     copy(child = newChild)
 }
 
+/** A driver-computed double that generated code reads through a
+  * reference, never inlines: the [[CentroidTable]] pattern for a scalar.
+  * A `Literal` double is constant-folded into the generated source, so
+  * every distinct value (a probe's query norm) is a new class for Janino
+  * to compile; bound here, every value shares one compiled class. Not
+  * foldable, so the optimizer keeps it as it is. */
+case class BoundDouble(value: Double) extends LeafExpression {
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_bound"
+
+  override def eval(input: InternalRow): Any = value
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("bound", java.lang.Double.valueOf(value))
+    ev.copy(code = code"final double ${ev.value} = $ref.doubleValue();", isNull = FalseLiteral)
+  }
+}
+
 /** Column-API entry points for the vector math expressions. */
 object ArrayMath {
 
@@ -245,6 +266,24 @@ object ArrayMath {
 
   /** L2 norm. */
   def norm2(v: Column): Column = sqrt(dot(v, v))
+
+  /** L2 norm of a driver-side vector by [[DotProduct]]'s sequential fold:
+    * bit-identical to [[norm2]] over the same values. */
+  def norm(v: Seq[Double]): Double = math.sqrt(v.foldLeft(0.0)((acc, x) => acc + x * x))
+
+  /** A driver-side double the generated code reads by reference
+    * ([[BoundDouble]]). */
+  def bound(v: Double): Column = ColumnShim.column(BoundDouble(v))
+
+  /** `array<double>` literal, typed explicitly: `typedLit` derives the same
+    * type through Scala reflection on every call. */
+  def vecLit(v: Seq[Double]): Column =
+    ColumnShim.column(Literal.create(v, ArrayType(DoubleType, containsNull = false)))
+
+  /** `array<array<double>>` literal, the nested [[vecLit]] (outer elements
+    * nullable, as `typedLit` types a `Seq[Seq[Double]]`). */
+  def vecsLit(vs: Seq[Seq[Double]]): Column =
+    ColumnShim.column(Literal.create(vs, ArrayType(ArrayType(DoubleType, containsNull = false))))
 
   /** Cosine similarity, computed exactly as `dot / (sqrt(dot(a,a)) *
     * sqrt(dot(b,b)))` in double — the oracle's association order. */

@@ -128,7 +128,7 @@ object ProductQuantizer {
     * search happens. Pure projection (the C×dim centroid table is one
     * literal), zero shuffles. */
   def residualCol(vecCol: Column, bucketCol: Column, centroids: Seq[Seq[Double]]): Column =
-    zip_with(vecCol, element_at(typedLit(centroids), bucketCol + 1),
+    zip_with(vecCol, element_at(ArrayMath.vecsLit(centroids), bucketCol + 1),
       (a, b) => a.cast("double") - b)
 
   /** Encode the corpus: `idCol`, `pq_code` (array<tinyint>, one cell per
@@ -170,13 +170,15 @@ object ProductQuantizer {
   /** `dotOffset` adds a per-row constant to the approximate dot before
     * normalizing — residual indexes pass `q·centroid(bucket)` here, since
     * their codes reconstruct `v − centroid` and
-    * `q·v ≈ q·c_b + q·residual̂`. */
+    * `q·v ≈ q·c_b + q·residual̂`. The lookup tables are array literals
+    * and the query norm is [[ArrayMath.bound]]: generated code holds both
+    * by reference, so a new query reuses the compiled plan. */
   def adcTopK(
       encoded: DataFrame, idCol: String, model: PqModel,
       query: Seq[Double], k: Int, excludeId: Option[Long] = None,
       dotOffset: Column = lit(0.0)): DataFrame = {
-    val qNorm = math.sqrt(query.map(x => x * x).sum)
-    val luts = typedLit((0 until model.m).map { j =>
+    val qNorm = ArrayMath.bound(ArrayMath.norm(query))
+    val luts = ArrayMath.vecsLit((0 until model.m).map { j =>
       val qj = query.slice(j * model.dsub, (j + 1) * model.dsub)
       model.books(j).map(c => c.zip(qj).map { case (a, b) => a * b }.sum)
     })
@@ -189,7 +191,7 @@ object ProductQuantizer {
       .reduce(_ + _) + dotOffset
     val base = excludeId.map(i => encoded.where(col(idCol) =!= i)).getOrElse(encoded)
     base
-      .withColumn("score", round(dotApprox / (col("pq_norm") * lit(qNorm)), 6))
+      .withColumn("score", round(dotApprox / (col("pq_norm") * qNorm), 6))
       .select(col(idCol), col("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)

@@ -17,9 +17,13 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Cosine between a vector column and a literal query vector. */
+  /** Cosine between a vector column and a literal query vector, with
+    * [[ArrayMath.cosine]]'s arithmetic. The query norm is folded once on
+    * the driver and bound by reference ([[ArrayMath.bound]]), so probes
+    * with different queries share one compiled plan. */
   def cosineToQuery(vecCol: Column, query: Seq[Double]): Column =
-    Dedup.cosine(vecCol, typedLit(query))
+    ArrayMath.dot(vecCol, ArrayMath.vecLit(query)) /
+      (ArrayMath.norm2(vecCol) * ArrayMath.bound(ArrayMath.norm(query)))
 
   /** Exact top-k by cosine against `query` (excluding `excludeId` if set). */
   def bruteTopK(
@@ -164,7 +168,7 @@ object Similarity {
     * no shuffle. */
   def lshBucket(vecCol: Column, planes: Seq[Seq[Double]]): Column =
     planes.zipWithIndex.map { case (p, j) =>
-      when(ArrayMath.dot(vecCol, typedLit(p)) >= 0, lit(1 << j)).otherwise(lit(0))
+      when(ArrayMath.dot(vecCol, ArrayMath.vecLit(p)) >= 0, lit(1 << j)).otherwise(lit(0))
     }.reduce(_ + _)
 
   /** Per-table multiprobe bucket sequence (Lv et al., "Multi-Probe LSH",

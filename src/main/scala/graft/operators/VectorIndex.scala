@@ -162,8 +162,10 @@ object VectorIndex {
     * dirs a probe reads; product codes shrink WHAT the scan of those dirs
     * costs). Each bucket file stores `(id, pq_code, pq_norm, vec)`:
     * parquet column pruning means the ADC pass reads ~8 bytes/row (codes +
-    * norm) and the full-precision `vec` column is touched ONLY by the
-    * shortlist re-rank's pushed-down id filter. Codebooks and coarse
+    * norm). The full-precision `vec` column is read by the shortlist
+    * re-rank, a broadcast left-semi join of the shortlist ids onto the
+    * same pruned dirs: no id filter reaches parquet, so that scan reads
+    * `(id, vec)` of every pruned row. Codebooks and coarse
     * centroids both live in sidecars — a probe (or an append) needs no
     * driver state beyond the path. */
   def writeIvfPq(
@@ -300,9 +302,16 @@ object VectorIndex {
 
   /** Top-k probe: prune to `nprobe` bucket dirs, ADC-score their code
     * columns (m lookups/row off the narrow scan), broadcast the
-    * `shortlist` ids back as a pushed-down semi-join on the SAME pruned
-    * dirs to fetch raw vectors, exact-rank those. Recall is spec-measured;
-    * cost per probe is (pruned rows × 8 B) + (shortlist × dim × 4 B).
+    * `shortlist` ids back as a left-semi join on the SAME pruned dirs to
+    * fetch raw vectors, exact-rank those. Recall is spec-measured. A probe
+    * scans the pruned rows twice: the ADC scan reads `(id, pq_code,
+    * pq_norm)`, 12 + m B a row, and the re-rank scan reads `(id, vec)`,
+    * 8 + dim × 4 B a row, since the semi-join filters after the scan.
+    * Only the shortlist reaches the exact cosine.
+    *
+    * Every per-query value (query norm, ADC lookup tables, residual
+    * offsets) reaches the generated code by reference, so a warm probe
+    * with a new query compiles no class.
     *
     * The path is the only input. Its sidecars (centroids, codebooks,
     * residual flag, rotation) and the corpus read schema come from the
@@ -334,7 +343,7 @@ object VectorIndex {
     val offset =
       if (residual) {
         val qDotC = centroids.map(c => c.zip(query).map { case (a, b) => a * b }.sum)
-        element_at(typedLit(qDotC), col("bucket").cast("int") + 1)
+        element_at(graft.functions.ArrayMath.vecLit(qDotC), col("bucket").cast("int") + 1)
       } else lit(0.0)
     val short = ProductQuantizer.adcTopK(
       pruned.select(col(idCol), col("pq_code"), col("pq_norm"), col("bucket")),

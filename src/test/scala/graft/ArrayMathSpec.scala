@@ -42,6 +42,27 @@ class ArrayMathSpec extends AnyFunSuite {
     assert(java.lang.Double.compare(got, expected) == 0)
   }
 
+  test("vecLit/vecsLit type and hold their values as typedLit does") {
+    val v = Seq(0.5, -1.25, 3.0)
+    val vs = Seq(v, Seq(2.0), Seq.empty[Double])
+    val df = spark.range(1).select(ArrayMath.vecLit(v).as("a"), typedLit(v).as("ta"),
+      ArrayMath.vecsLit(vs).as("b"), typedLit(vs).as("tb"))
+    assert(df.schema("a").dataType == df.schema("ta").dataType)
+    assert(df.schema("b").dataType == df.schema("tb").dataType)
+    val r = df.head()
+    assert(r.getSeq[Double](0) == v && r.getSeq[Seq[Double]](2) == vs)
+  }
+
+  test("BoundDouble: not folded, evaluates to its value in codegen and interpreted") {
+    val x = 0.1 + 0.2
+    val c = ArrayMath.bound(x) * lit(3.0)
+    val df = spark.range(3).select((c + col("id")).as("y"))
+    assert(!org.apache.spark.sql.graftshim.ColumnShim.expression(c).foldable)
+    assert(df.collect().map(_.getDouble(0)).toSeq == (0 until 3).map(i => x * 3.0 + i))
+    val plan = df.queryExecution.optimizedPlan.toString
+    assert(plan.contains("graft_bound"), plan)
+  }
+
   test("RollingMinHash: codegen equals hand fold; null under window size") {
     val s = spark
     import s.implicits._

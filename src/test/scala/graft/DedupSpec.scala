@@ -832,6 +832,38 @@ class DedupSpec extends AnyFunSuite {
     assert(jobs <= 13, s"tier-2 ngramJaccardPairsPrefixFromHashes ran $jobs jobs")
   }
 
+  test("a repeated plan shape compiles nothing after 100+ other classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def corpus(seed: Long): org.apache.spark.sql.DataFrame = {
+      val rnd = new scala.util.Random(seed)
+      val words = (0 until 40).map(i => s"w$i")
+      val base = (1 to 30).map(i =>
+        (i.toLong, Seq.fill(14)(words(rnd.nextInt(words.size))).mkString(" ")))
+      // planted near-dups: each of the first five docs with its last word changed
+      (base ++ base.take(5).map { case (i, t) => (i + 100, t.split(" ").init.mkString(" ") + " x") })
+        .toDF("doc_id", "text")
+    }
+    def minhash(df: org.apache.spark.sql.DataFrame) =
+      MinHashLSH.nearDupPairs(df, "doc_id", "text", n = 3, k = 64, bands = 16, tau = 0.6).collect()
+    minhash(corpus(1L))
+    // other plans in between: a keep-best and a containment pass over
+    // another corpus, then distinct one-literal projections until more than
+    // the default cache capacity (100) of classes has compiled
+    val y = corpus(2L)
+    val before = compiles()
+    Dedup.dedupCorpusBy(y, "doc_id", "text", n = 3, tau = 0.6, score = length(col("text")))
+      .collect()
+    Dedup.ngramContainmentPairs(y, "doc_id", "text", n = 3, tau = 0.6).collect()
+    Iterator.from(0).takeWhile(i => i < 400 && compiles() - before <= 150)
+      .foreach(i => spark.range(2).select(col("id") * lit(7919L * 1000 + i)).collect())
+    assert(compiles() - before > 150, s"${compiles() - before} classes compiled in between")
+    val mark = compiles()
+    assert(minhash(corpus(3L)).nonEmpty)
+    assert(compiles() - mark == 0,
+      s"nearDupPairs on a same-schema corpus recompiled ${compiles() - mark} classes")
+  }
+
   test("candidatePairs/nearDupPairs refuse a non-positive band shape by name") {
     val sigs = Seq((1L, Seq(1L, 2L)), (2L, Seq(1L, 2L))).toDF("_id", "sig")
     for ((bands, rows) <- Seq(0 -> 2, 2 -> 0, -1 -> 2)) {

@@ -293,4 +293,53 @@ class ProductQuantizerSpec extends AnyFunSuite {
     }
     assert(got.last == Seq[Byte](0, 0, 0, 0), "all-equal ties must pick cell 0")
   }
+
+  test("warm probes compile no class and score as the typedLit column form") {
+    import graft.operators.{Dedup, VectorIndex}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, round, typedLit}
+    val (vecs, df) = fixture
+    val centroids = Similarity.kMeans(df, "vec_id", "embedding", c = 8, iters = 2)
+    val model = ProductQuantizer.train(df, "vec_id", "embedding", m = 4, k = 16, iters = 2)
+    def tmp(tag: String) = java.nio.file.Files.createTempDirectory(s"graft-warm-$tag").toString
+    val (ivf, pq, lsh) = (tmp("ivf"), tmp("ivfpq"), tmp("lsh"))
+    VectorIndex.writeIvf(df, "vec_id", "embedding", centroids, ivf)
+    // residual: the probe also carries its per-bucket q·c offsets
+    VectorIndex.writeIvfPq(df, "vec_id", "embedding", centroids, model, pq, residual = true)
+    VectorIndex.writeLsh(df, "vec_id", "embedding", bitsPerTable = 4, tables = 3, seed = 5L, lsh)
+    val probes: Seq[(String, Seq[Double] => DataFrame)] = Seq(
+      "ivfTopKPq" -> (q => VectorIndex.ivfTopKPq(spark, pq, "vec_id", "embedding", q,
+        nprobe = 4, k = 10, shortlist = 40)),
+      "ivfTopK" -> (q => VectorIndex.ivfTopK(spark, ivf, "vec_id", "embedding", q,
+        nprobe = 4, k = 10)),
+      "lshTopK" -> (q => VectorIndex.lshTopK(spark, lsh, "vec_id", "embedding", q,
+        k = 10, nprobe = 2)))
+    // the column form the probes scored with before the norm was bound:
+    // the query's norm constant-folded from norm2(typedLit(q))
+    def reference(ids: Seq[Long], q: Seq[Double]): Map[Long, Double] =
+      df.where(col("vec_id").isin(ids: _*))
+        .select(col("vec_id"), round(Dedup.cosine(col("embedding"), typedLit(q)), 6))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val queries = Seq(3, 77, 200).map(i => vecs(i)._2.map(_.toDouble))
+    val compiled = probes.map { case (name, probe) =>
+      probe(queries.head).collect()
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val warm = queries.tail.map(q => q -> probe(q).collect())
+      val n = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      warm.foreach { case (q, rows) =>
+        val got = rows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        assert(got.size == 10, s"$name: ${got.size} rows")
+        assert(got == reference(got.keys.toSeq, q), s"$name: scores differ from the column form")
+      }
+      name -> n
+    }
+    assert(compiled.forall(_._2 == 0), s"classes compiled by two warm probes: $compiled")
+    // unrounded too: the bound norm is the folded one, bit for bit
+    queries.foreach { q =>
+      val both = df.select(Similarity.cosineToQuery(col("embedding"), q),
+        Dedup.cosine(col("embedding"), typedLit(q))).collect()
+      assert(both.forall(r => r.getDouble(0) == r.getDouble(1)))
+    }
+  }
 }
