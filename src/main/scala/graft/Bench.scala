@@ -353,7 +353,6 @@ object Bench {
     var routeBreach = "" // non-empty => router regression, bench exits 1
     val regimeTail = if (only.isDefined && only != Some(Set("regime"))) "" else try {
       import graft.operators.Dedup
-      import org.apache.spark.sql.functions.{col, count, lit, sum}
       import spark.implicits._
       val rnd = new scala.util.Random(1234L)
       val boiler = (0 until 200).map(t => (0 until 10).map(j => s"b${t}x$j").mkString(" "))
@@ -369,23 +368,24 @@ object Bench {
         (100000L + i, a.mkString(" "))
       }
       val tau = 0.8
-      val shZ = Dedup.shingleHashes(
+      val setsZ = Dedup.shingleSets(
         (zbase ++ fams).toDF("doc_id", "text"), "doc_id", "text", 3).cache()
-      shZ.count()
-      // jaccardRoute IS the production decision path (one code path, so
+      setsZ.count()
+      // route IS the production decision path (one code path, so
       // this probe cannot drift from what the board executes) — and the
       // tier choice is ASSERTED, not just reported: the Zipfian
       // boilerplate corpus must route prefix (tier 2) and the uniform-
       // sharing sf documents must take the tier-0 dense exit, or the
       // bench fails the same way a recall-floor breach does (r8 VERDICT
       // #4 — previously a silently-dense router rode along as numbers).
-      val (tierZ, pfxZ, _) = Dedup.jaccardRoute(shZ, tau, 1 << 20)
+      // its third element is the dense meet mass, and on tier 2 its
+      // prefix yields the very candidates the routed path verifies
+      val (tierZ, pfxZ, meets) = Dedup.route(setsZ, tau, 1 << 20)
+      // (null when the corpus misroutes: no prefix, no candidates)
+      val cand = pfxZ.map(Dedup.prefixPairs(_).count().toString).getOrElse("null")
       pfxZ.foreach(_.unpersist())
       if (tierZ != 2)
         routeBreach += s"boilerplate corpus routed tier $tierZ, expected prefix (2); "
-      val meets = shZ.groupBy("sh").agg(count(lit(1)).as("c"))
-        .agg(graft.core.GraftSession.meetMass(col("c"))).head().getLong(0)
-      val cand = Dedup.prefixCandidates(shZ, tau).count()
       // shuffle bytes per path ride the same listener as the board: on a
       // network-bound cluster the exchange volume — not the local wall,
       // where 32 in-memory cores hide it — is what the candidate
@@ -401,14 +401,14 @@ object Bench {
       }
       var nPairs = 0L
       val (tp, shufP) =
-        timedShuffle { nPairs = Dedup.ngramJaccardPairsPrefixFromHashes(shZ, tau).count() }
+        timedShuffle { nPairs = Dedup.prefixJaccard(setsZ, tau).count() }
       val (td, shufD) =
-        timedShuffle { Dedup.ngramJaccardPairsFromHashes(shZ, tau).count(); () }
-      shZ.unpersist()
-      val shSf = Dedup.shingleHashes(
+        timedShuffle { Dedup.denseJaccard(setsZ, tau).count(); () }
+      setsZ.unpersist()
+      val setsSf = Dedup.shingleSets(
         graft.core.Tables.load(spark, sfDir, "documents"), "doc_id", "text", 3).cache()
-      shSf.count()
-      val (tierSf, pfxSf, _) = Dedup.jaccardRoute(shSf, tau, 1 << 20)
+      setsSf.count()
+      val (tierSf, pfxSf, _) = Dedup.route(setsSf, tau, 1 << 20)
       pfxSf.foreach(_.unpersist())
       // the sf documents must take a DENSE exit at board SFs — tier 0 at
       // sf0.1 (no shingle crosses hotMinDf, mass over the limit) and
@@ -422,7 +422,7 @@ object Bench {
         routeBreach += s"sf0.1 documents routed tier $tierSf, expected tier-0 dense; "
       else if (sfBase.endsWith("sf1") && tierSf == 2)
         routeBreach += s"sf1 documents routed tier 2 (prefix), expected a dense exit; "
-      shSf.unpersist()
+      setsSf.unpersist()
       def s2(x: Double) = math.rint(x * 100) / 100.0
       s""","jaccard_regime":{"boilerplate":{"tier":$tierZ,""" +
         s""""cand":$cand,"meets":$meets,"pairs":$nPairs,""" +

@@ -199,37 +199,38 @@ object Graft {
     * from ONE shared shingle pass. `unpersist()` releases the shared
     * intermediate once the outputs are materialized. */
   final case class DedupSuite(
-      shingleHashes: DataFrame, jaccardPairs: DataFrame,
+      shingleSets: DataFrame, jaccardPairs: DataFrame,
       minhashPairs: DataFrame, topNgrams: DataFrame) {
-    def unpersist(): Unit = { shingleHashes.unpersist(); () }
+    def unpersist(): Unit = { shingleSets.unpersist(); () }
   }
 
   /** Run the shingle-based dedup suite — n-gram Jaccard near-dup pairs,
     * MinHash/LSH near-dup pairs, and corpus top-k n-grams — off ONE
-    * tokenize→hash shingle pass (SURVEY §9's shared-scan plan): the fused
-    * [[operators.Dedup.shingleHashes]] intermediate is persisted
-    * (memory-and-disk, spillable) and every view consumes it; MinHash
-    * and the prefix-tier Jaccard each regroup it once into a per-doc
-    * `_set` table and verify by `_set` intersection. The only other corpus read is [[operators
-    * .Dedup.topNgramsFromHashes]]' winner-string resolution scan, gated to
-    * the broadcast winner set by construction. The Jaccard and MinHash
-    * views run their routing and banding jobs (so the shared pass) when
-    * the suite is built; top-k stays lazy. */
+    * tokenize→hash shingle pass (SURVEY §9's shared-scan plan): the
+    * per-doc (_id, _set) table of [[operators.Dedup.shingleSets]] is
+    * persisted (memory-and-disk, spillable) and every view consumes it.
+    * Prefix-tier Jaccard and MinHash verify by `_set` intersection
+    * against it; the routing vocab and the top-k counts read its exploded
+    * rows, so no view regroups shingle rows by document. The only other
+    * corpus read is top-k's winner-string resolution scan, gated to the
+    * broadcast winner set by construction. The Jaccard and MinHash views
+    * run their routing and banding jobs (so the shared pass) when the
+    * suite is built; top-k stays lazy. */
   def dedupSuite(
       docs: DataFrame, idCol: String, textCol: String, n: Int = 3,
       tau: Double = 0.8, k: Int = 64, bands: Int = 16,
       topK: Int = 20): DedupSuite = {
     import graft.operators.{Dedup, MinHashLSH}
-    val sh = Dedup.shingleHashes(docs, idCol, textCol, n)
+    val sets = Dedup.shingleSets(docs, idCol, textCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     DedupSuite(
-      sh,
+      sets,
       // prefix-filtered generator over the SAME shared pass — identical
       // output to the dense equi-join (spec-proven at every τ), far fewer
       // candidate pairs on near-dup-dense corpora
-      Dedup.ngramJaccardPairsPrefixFromHashes(sh, tau),
-      MinHashLSH.nearDupPairsFromHashes(sh, k, bands, tau),
-      Dedup.topNgramsFromHashes(docs, textCol, sh, n, topK))
+      Dedup.prefixJaccard(sets, tau),
+      MinHashLSH.nearDupPairsOf(sets, k, bands, tau),
+      Dedup.topNgramsOf(docs, textCol, sets, n, topK))
   }
 
   /** Semantic (embedding-space) dedup — SemDeDup: k-means clusters, then

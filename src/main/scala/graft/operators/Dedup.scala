@@ -231,10 +231,13 @@ object Dedup {
     }.toDF("_id", "shingle")
   }
 
-  /** Distinct shingles reduced to 64-bit xxhash64 tokens: (_id, sh) rows.
-    * All downstream set arithmetic (sizes, intersections, equi-joins) runs
-    * on fixed-width longs — the shuffle carries 8-byte keys instead of
-    * full shingle strings. Cross-doc hash collisions are possible in
+  /** Distinct shingles reduced to 64-bit xxhash64 tokens: (_id, sh) rows,
+    * the row form of [[shingleSets]]. The dedup operators read the
+    * per-document set table and explode it where they need rows; these
+    * rows serve callers that aggregate shingle rows themselves (the
+    * column-form MinHash reference, the meet-mass probe). Tokens are
+    * fixed-width longs, so a shuffle carries 8-byte keys instead of full
+    * shingle strings. Cross-doc hash collisions are possible in
     * principle (~1e-6 expected over 10M shingles) but never observed at
     * test scale; the string-keyed `shingles` path remains available.
     *
@@ -255,7 +258,10 @@ object Dedup {
 
   /** [[shingleHashes]] kept per document, from the same pass with no
     * shuffle: (_id, _set) with `_set` the doc's distinct hashes as a sorted
-    * array<long>. Docs shorter than n tokens get no row. */
+    * array<long>. Docs shorter than n tokens get no row. This table is the
+    * one intermediate of every shingle-based dedup operator: sizes are
+    * `size(_set)`, prefixes are slices of `_set`, candidates verify by
+    * `_set` intersection, and shingle rows are its explode ([[setRows]]). */
   private[graft] def shingleSets(
       df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     val spark = df.sparkSession
@@ -265,8 +271,9 @@ object Dedup {
     }.toDF("_id", "_set")
   }
 
-  /** The [[shingleSets]] table of a precomputed pass: (_id, _set, aggs…)
-    * from distinct (_id, sh) rows, in one groupBy(_id). */
+  /** The [[shingleSets]] table of distinct (_id, sh) rows: (_id, _set,
+    * aggs…) in one groupBy(_id), for callers that hold rows or whose own
+    * per-document aggregate `aggs` rides the same regroup. */
   private[graft] def setsOf(sh: DataFrame, aggs: Column*): DataFrame =
     sh.groupBy("_id").agg(sort_array(collect_list(col("sh"))).as("_set"), aggs: _*)
 
@@ -351,10 +358,11 @@ object Dedup {
     * hashed so shingle TEXT never enters a corpus-wide shuffle (SURVEY §9):
     *
     * Phase 1 aggregates per-doc-distinct 8-byte xxhash64 shingle tokens
-    * ([[shingleHashes]]' fused pass — the wide shuffle carries longs); the
-    * k-th document-frequency threshold comes from one TakeOrdered over the
-    * counts, and every hash at-or-above it (winners plus boundary ties) is
-    * collected — bounded by `tieCap`, and a tie width beyond the cap FAILS
+    * (the exploded rows of [[shingleSets]]' fused pass — the wide shuffle
+    * carries longs); the k-th document-frequency threshold comes from one
+    * TakeOrdered over the counts, and every hash at-or-above it (winners
+    * plus boundary ties) is collected — bounded by `tieCap`, and a tie
+    * width beyond the cap FAILS
     * with a clear error rather than silently truncating a boundary whose
     * order needs strings. Phase 2 re-scans the corpus resolving ONLY
     * winner strings through a broadcast hash map (emit-once per
@@ -365,19 +373,19 @@ object Dedup {
   def topNgrams(
       df: DataFrame, idCol: String, textCol: String, n: Int, k: Int,
       tieCap: Int = 10000): DataFrame =
-    topNgramsFromHashes(df, textCol, shingleHashes(df, idCol, textCol, n), n, k, tieCap)
+    topNgramsOf(df, textCol, shingleSets(df, idCol, textCol, n), n, k, tieCap)
 
-  /** [[topNgrams]] over a precomputed (_id, sh) intermediate — the shape
+  /** [[topNgrams]] over a per-doc (_id, _set) table of `df` — the shape
     * [[graft.Graft.dedupSuite]] shares one shingle pass through. `df` /
     * `textCol` are still needed for the phase-2 winner-string resolution
     * scan. */
-  def topNgramsFromHashes(
-      df: DataFrame, textCol: String, shingleHashes: DataFrame, n: Int, k: Int,
+  private[graft] def topNgramsOf(
+      df: DataFrame, textCol: String, sets: DataFrame, n: Int, k: Int,
       tieCap: Int = 10000): DataFrame = {
     require(k > 0, "need k > 0")
     val spark = df.sparkSession
     import spark.implicits._
-    val counts = shingleHashes
+    val counts = setRows(sets)
       .groupBy("sh").agg(count(lit(1)).as("n_docs"))
     val kth = counts.orderBy(col("n_docs").desc, col("sh").asc).limit(k)
       .agg(min(col("n_docs")).as("_kth"))
@@ -419,9 +427,8 @@ object Dedup {
     * equi-join) at a fraction of the candidate volume: the dense
     * shared-shingle join meets every near-dup pair once per COMMON
     * shingle, which is exactly where a near-dup corpus is densest. The
-    * dense generator survives as [[ngramJaccardPairsFromHashes]] for
-    * callers with a precomputed shingle pass (and as the spec's reference
-    * implementation).
+    * dense generator survives as [[denseJaccard]], the router's dense
+    * tiers and the spec's reference implementation.
     *
     * EAGER (r12): the result is materialized (localCheckpoint) at call
     * time — the candidate-volume stages run inside a mass-pinned shuffle
@@ -476,15 +483,18 @@ object Dedup {
     * caller that wants a < b in id space reorients after the call.
     *
     * Shape:
-    *  - Ranks. The sizes pass over `sh` gives each doc its set size; a
-    *    distributed sort on (size, id), materialized once, numbers the
-    *    docs 0..n−1. The key is unique, so the numbering is
-    *    deterministic. Ranks fit an int for any corpus under 2^31 docs
-    *    and ANY long ids; a larger corpus is refused before the postings
-    *    are built.
-    *  - Postings. The ranks join onto `sh` (broadcast up to
-    *    `rankBroadcastLimit` docs, so the shingle rows are not shuffled
-    *    for it) and regroup by shingle into sorted int arrays.
+    *  - Ranks. Each doc's set size is `size(_set)`, a projection of the
+    *    per-doc (_id, _set) table with no aggregate; a distributed sort
+    *    on (size, id), materialized once, numbers the docs 0..n−1. The
+    *    key names one document, so the numbering is deterministic. A
+    *    document repeated whole (a replayed batch) sorts next to its twin
+    *    and takes one rank, and each posting holds a rank once. Ranks fit an int
+    *    for any corpus under 2^31 docs and ANY long ids; a larger corpus
+    *    is refused before the postings are built.
+    *  - Postings. The ranks join the set table, one row per doc
+    *    (broadcast up to `rankBroadcastLimit` docs, so the sets are not
+    *    shuffled for it), before its sets explode into (shingle, rank)
+    *    rows; those regroup by shingle into sorted int arrays.
     *  - Generation fused with the partial count. One mapPartitions pass
     *    enumerates i < j off each primitive posting array, packs the pair
     *    into one long key (a<<32|b) and counts it in a bounded
@@ -529,15 +539,15 @@ object Dedup {
     * enumeration (chunking the OUTER index preserves the i < j
     * enumeration). */
   private[graft] def densePairCounts(
-      sh: DataFrame, massHint: Long,
+      sets: DataFrame, massHint: Long,
       pairsPerPartition: Long = 2L * 1000 * 1000,
       rankBroadcastLimit: Int = 16 * 1000 * 1000)(
       finish: DataFrame => DataFrame): DataFrame = {
-    val spark = sh.sparkSession
+    val spark = sets.sparkSession
     import spark.implicits._
     val mass =
       if (massHint >= 0L) massHint
-      else sh.groupBy("sh").agg(count(lit(1)).as("_df"))
+      else setRows(sets).groupBy("sh").agg(count(lit(1)).as("_df"))
         .agg(meetMass(col("_df")))
         .head().getLong(0)
     // Certify-or-refuse pre-flight (round 14, r12 VERDICT item 6): when
@@ -559,14 +569,14 @@ object Dedup {
     // docs in (set size, id) order, materialized ONCE: a re-run sort may
     // cut its range partitions elsewhere, which would move ranks between
     // the counting pass and the numbering pass below
-    val bySize = sh.groupBy("_id").agg(count(lit(1)).as("sz"))
+    val bySize = sets.select(col("_id"), size(col("_set")).as("sz"))
       .orderBy("sz", "_id").as[(Long, Long)].localCheckpoint()
     // one counting pass: docs per set size in each sorted partition. A
     // partition holds a contiguous size range, so this is about
     // partitions + distinct sizes entries; collect keeps partition order.
     val parts = bySize.rdd.mapPartitions { it =>
       val h = scala.collection.mutable.LongMap.empty[Long]
-      it.foreach { case (_, sz) => h(sz) = h.getOrElse(sz, 0L) + 1L }
+      once(it).foreach { case (_, sz) => h(sz) = h.getOrElse(sz, 0L) + 1L }
       Iterator(h.toArray)
     }.collect()
     val nDocs = parts.iterator.flatMap(_.iterator.map(_._2)).sum
@@ -580,15 +590,16 @@ object Dedup {
     val classSize = classes.map(_._1)
     val numbered = bySize.rdd.mapPartitionsWithIndex { (i, it) =>
       var r = partStart(i).toInt
-      it.map { case (id, _) => r += 1; (id, r - 1) }
+      once(it).map { case (id, _) => r += 1; (id, r - 1) }
     }.toDF("_id", "_r")
     // the doc count is exact here, so no limit probe is needed
     val ranks = if (nDocs <= rankBroadcastLimit) broadcast(numbered) else numbered
     val p = graft.core.GraftSession.iterPartitions(spark, mass, pairsPerPartition)
     graft.core.GraftSession.withPinnedShuffle(spark, p) {
-      val postings = sh.join(ranks, "_id")
+      val postings = sets.join(ranks, "_id")
+        .select(explode(col("_set")).as("sh"), col("_r"))
         .groupBy("sh")
-        .agg(sort_array(collect_list(col("_r"))).as("ps"))
+        .agg(sort_array(collect_set(col("_r"))).as("ps"))
       val counts = postings
         .select(col("ps")).as[Array[Int]]
         .mapPartitions { it =>
@@ -635,6 +646,13 @@ object Dedup {
     }
   }
 
+  /** The rows of a sorted partition without repeats: a row repeated whole
+    * (a replayed batch) sorts next to its twin. */
+  private def once(it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    var last: (Long, Long) = null
+    it.filter { row => val fresh = row != last; last = row; fresh }
+  }
+
   /** Set size of rank `r` under a (size, id) rank order: the size of the
     * last class whose start rank is ≤ r. */
   private def rankSize(classStart: Array[Int], classSize: Array[Long], r: Int): Long = {
@@ -642,17 +660,17 @@ object Dedup {
     classSize(if (i >= 0) i else -i - 2)
   }
 
-  /** [[ngramJaccardPairs]] over a precomputed (_id, sh) intermediate
-    * (caller controls caching — see [[graft.Graft.dedupSuite]]). The
-    * dense postings generator ([[densePairCounts]]) with the Jaccard
-    * threshold ([[jaccardScores]]) applied inside the mass-pinned scope;
-    * result is materialized (localCheckpoint), so the caller may release
-    * `sh` immediately. `massHint` lets the router pass the meet mass it
+  /** Dense Jaccard pairs of a per-doc (_id, _set) table (the router's
+    * dense tiers and the spec's reference implementation): the postings
+    * generator ([[densePairCounts]]) with the Jaccard threshold
+    * ([[jaccardScores]]) applied inside the mass-pinned scope. The result
+    * is materialized (localCheckpoint), so the caller may release `sets`
+    * immediately. `massHint` lets the router pass the meet mass it
     * already computed instead of re-aggregating the vocabulary. Pairs
     * come back as a < b in id space. */
-  def ngramJaccardPairsFromHashes(
-      sh: DataFrame, tau: Double, massHint: Long = -1L): DataFrame =
-    densePairCounts(sh, massHint)(jaccardScores(_, tau))
+  private[graft] def denseJaccard(
+      sets: DataFrame, tau: Double, massHint: Long = -1L): DataFrame =
+    densePairCounts(sets, massHint)(jaccardScores(_, tau))
       .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"),
         col("jaccard"))
 
@@ -697,8 +715,7 @@ object Dedup {
       .select(col("a"), col("b"), round(col(name), 6).as(name))
 
   /** Prefix-filtered exact Jaccard pairs — same output as
-    * [[ngramJaccardPairsFromHashes]], far fewer candidate pairs at corpus
-    * scale.
+    * [[denseJaccard]], far fewer candidate pairs at corpus scale.
     *
     * The shared-shingle equi-join generates one candidate row per COMMON
     * shingle of every meeting pair; near-duplicate pairs (the very pairs
@@ -722,7 +739,7 @@ object Dedup {
     *
     * Everything works off ONE per-document (_id, _set) table, built in
     * the shingling pass ([[shingleSets]], no shuffle) and cached for the
-    * call: the vocab aggregate and the dense generator read its exploded
+    * call: the vocab aggregate and the dense postings read its exploded
     * (_id, sh) rows, the prefixes are slices of its sorted sets, and each
     * candidate pair is verified by an exact intersection of its two sets
     * ([[setPairCounts]], the verifier MinHash uses). Exact completeness
@@ -733,9 +750,7 @@ object Dedup {
   def ngramJaccardPairsPrefix(
       df: DataFrame, idCol: String, textCol: String, n: Int, tau: Double,
       broadcastPairLimit: Int = 1 << 20): DataFrame =
-    withSets(shingleSets(df, idCol, textCol, n)) { sets =>
-      prefixJaccard(setRows(sets), sets, tau, broadcastPairLimit)
-    }
+    withSets(shingleSets(df, idCol, textCol, n))(prefixJaccard(_, tau, broadcastPairLimit))
 
   /** `f` over `sets` cached, released once `f`'s materialized result is
     * back. */
@@ -744,31 +759,17 @@ object Dedup {
     try f(cached) finally cached.unpersist()
   }
 
-  /** Candidate pairs (a, b) from the frequency-ordered prefix×prefix
-    * join alone — exposed so the spec can measure the candidate
-    * reduction vs the full equi-join. The hot set comes from
-    * [[jaccardDfRouting]] ITSELF (not a re-derivation) and the join is
-    * [[prefixPairs]], so the measured candidate set provably is the one
-    * the routed production path verifies; the prefix is cached across the
-    * self-join sides and the materialized result released before
-    * returning (one prefix build in the executed plan, not two). */
-  private[graft] def prefixCandidates(sh: DataFrame, tau: Double): DataFrame = {
-    val (hot, _, _) = jaccardDfRouting(sh, broadcastPairLimit = Int.MaxValue)
-    val prefix = freqOrderedPrefix(setsOf(sh), tau, hot).cache()
-    val out = prefixPairs(prefix).localCheckpoint()
-    prefix.unpersist()
-    out
-  }
-
   /** Distinct pairs (a < b) of docs whose (_id, sh) prefix rows share a
-    * shingle. */
-  private def prefixPairs(prefix: DataFrame): DataFrame =
+    * shingle: the prefix tier's candidates, exposed so the spec and the
+    * Bench regime probe count the very pairs the routed path verifies. */
+  private[graft] def prefixPairs(prefix: DataFrame): DataFrame =
     prefix.as("x").join(prefix.as("y"), col("x.sh") === col("y.sh"))
       .where(col("x._id") < col("y._id"))
       .select(col("x._id").as("a"), col("y._id").as("b"))
       .distinct()
 
-  /** One vocab-sized df aggregate feeding BOTH routing tiers: the hot
+  /** One vocab-sized df aggregate over the exploded rows of a per-doc
+    * (_id, _set) table, feeding BOTH routing tiers: the hot
     * set (df > `hotMinDf`, worst offenders first, capped) and the DENSE
     * meet mass Σ C(df, 2) — the exact row count of the dense equi-join's
     * shared-shingle meets. Returns (hot, tier0Dense): tier0Dense is true
@@ -788,7 +789,7 @@ object Dedup {
     * letting AQE coalesce by input bytes — a stage whose output is
     * 1000× its input must be sized by its output. */
   private[graft] def jaccardDfRouting(
-      sh: DataFrame, broadcastPairLimit: Int,
+      sets: DataFrame, broadcastPairLimit: Int,
       hotMinDf: Int = 64, maxHot: Int = 1 << 16): (Array[Long], Boolean, Long) = {
     // ONE scan, ZERO storage: the dense mass rides the hot-set collect as
     // an Observation (the TakeOrdered child evaluates every vocab row, so
@@ -799,7 +800,7 @@ object Dedup {
     val obs = org.apache.spark.sql.Observation()
     // exact to the pair: a 100M-row vocabulary puts routing decisions near
     // the threshold (r8 ADVICE)
-    val hot = sh.groupBy("sh").agg(count(lit(1)).as("_df"))
+    val hot = setRows(sets).groupBy("sh").agg(count(lit(1)).as("_df"))
       .observe(obs, meetMass(col("_df")).as("mass"))
       .where(col("_df") > hotMinDf)
       .orderBy(col("_df").desc, col("sh").asc).limit(maxHot + 1)
@@ -817,12 +818,11 @@ object Dedup {
     else (hot, hot.isEmpty && denseMass > broadcastPairLimit.toLong, denseMass)
   }
 
-  /** [[ngramJaccardPairsPrefix]] over a precomputed (_id, sh)
-    * intermediate (caller keeps it cached): its per-doc (_id, _set) table
-    * is one groupBy(_id) over `sh` ([[setsOf]]), cached for the call and
-    * built only if the prefix tier is taken.
+  /** The routed Jaccard pairs of a per-doc (_id, _set) table (caller
+    * keeps it cached): the set entry behind [[ngramJaccardPairsPrefix]]
+    * and [[graft.Graft.dedupSuite]].
     *
-    * ADAPTIVE, three tiers ([[jaccardRoute]]): when the prefix join's meet
+    * ADAPTIVE, three tiers ([[route]]): when the prefix join's meet
     * mass outgrows `broadcastPairLimit`, the prefix filter has failed to
     * filter — a corpus whose documents share shingles UNIFORMLY (small
     * vocabularies, templated text; the round-8 sf1 audit measured 57M
@@ -832,24 +832,19 @@ object Dedup {
     * own candidate join. Tier 0 catches the hot-empty degenerate case
     * before any prefix is built; tier 1 decides the rest exactly on the
     * prefix meet mass. Either dense tier runs the single-shuffle dense
-    * aggregate ([[ngramJaccardPairsFromHashes]]) — identical output by the
-    * same theorem, strictly fewer exchanges. On tier 2 (Zipfian corpora,
-    * real text) the candidates verify through [[setPairCounts]] with their
-    * pair rows broadcast: the meet mass bounds the distinct candidates from
-    * above, so the tier itself proves the list fits. */
-  def ngramJaccardPairsPrefixFromHashes(
-      sh: DataFrame, tau: Double, broadcastPairLimit: Int = 1 << 20): DataFrame =
-    withSets(setsOf(sh))(prefixJaccard(sh, _, tau, broadcastPairLimit))
-
-  /** The routed Jaccard pairs of one corpus, given as both its (_id, sh)
-    * rows and its (_id, _set) table. Every tier returns materialized. */
-  private def prefixJaccard(
-      sh: DataFrame, sets: DataFrame, tau: Double, broadcastPairLimit: Int): DataFrame =
-    route(sh, sets, tau, broadcastPairLimit) match {
+    * aggregate ([[denseJaccard]]) — identical output by the same
+    * theorem, strictly fewer exchanges. On tier 2 (Zipfian corpora, real
+    * text) the candidates verify through [[setPairCounts]] with their
+    * pair rows broadcast: the meet mass bounds the distinct candidates
+    * from above, so the tier itself proves the list fits. Every tier
+    * returns materialized. */
+  private[graft] def prefixJaccard(
+      sets: DataFrame, tau: Double, broadcastPairLimit: Int = 1 << 20): DataFrame =
+    route(sets, tau, broadcastPairLimit) match {
       case (_, None, mass) =>
         // already materialized by the dense generator (checkpoint inside
-        // its mass-pinned scope), so releasing `sh` afterwards is safe
-        ngramJaccardPairsFromHashes(sh, tau, mass)
+        // its mass-pinned scope), so releasing `sets` afterwards is safe
+        denseJaccard(sets, tau, mass)
       case (_, Some(prefix), _) =>
         val v = jaccardScores(setPairCounts(sets, prefixPairs(prefix), broadcastPairs = true), tau)
           .localCheckpoint()
@@ -857,11 +852,19 @@ object Dedup {
         v
     }
 
-  /** The full routing decision and, on the prefix tier, the cached
-    * prefix frame it was made from — ONE code path shared by the board
-    * queries and the Bench regime probe, so the probe can never diverge
-    * from what production executes (the probe ASSERTS tier choice and
-    * exits non-zero on a routing regression — r8 VERDICT #4).
+  /** [[route]] for a corpus held as distinct (_id, sh) rows, whose
+    * per-doc table is one groupBy(_id) over them ([[setsOf]]). */
+  private[graft] def jaccardRoute(
+      sh: DataFrame, tau: Double,
+      broadcastPairLimit: Int): (Int, Option[DataFrame], Long) =
+    route(setsOf(sh), tau, broadcastPairLimit)
+
+  /** The full routing decision over a per-doc (_id, _set) table and, on
+    * the prefix tier, the cached prefix frame it was made from — ONE code
+    * path shared by the board queries and the Bench regime probe, so the
+    * probe can never diverge from what production executes (the probe
+    * ASSERTS tier choice and exits non-zero on a routing regression — r8
+    * VERDICT #4).
     * Tiers: 0 = dense before any prefix work (hot set empty AND dense
     * meet mass already over the limit); 1 = dense after the prefix
     * meet-mass probe; 2 = prefix. The tier-1 decision quantity is the
@@ -870,22 +873,14 @@ object Dedup {
     * candidate pairs, so on tier 2 it also proves the candidates'
     * broadcast safe; probing the candidate list itself would execute
     * the very join the fallback exists to avoid. On tier 2 the returned
-    * (_id, sh) prefix frame is CACHED — the caller must unpersist it. The
-    * prefixes are slices of the per-doc sets, here one groupBy(_id) over
-    * `sh` ([[setsOf]]). The third element is the DENSE meet mass
+    * (_id, sh) prefix frame, slices of the sorted sets, is CACHED — the
+    * caller must unpersist it. The third element is the DENSE meet mass
     * Σ C(df, 2) from the routing aggregate — on a dense tier the fallback
     * sizes its explosive stage from it ([[densePairCounts]]). */
-  private[graft] def jaccardRoute(
-      sh: DataFrame, tau: Double,
-      broadcastPairLimit: Int): (Int, Option[DataFrame], Long) =
-    route(sh, setsOf(sh), tau, broadcastPairLimit)
-
-  /** [[jaccardRoute]] over a corpus given as both its (_id, sh) rows and
-    * its (_id, _set) table. */
-  private def route(
-      sh: DataFrame, sets: DataFrame, tau: Double,
+  private[graft] def route(
+      sets: DataFrame, tau: Double,
       broadcastPairLimit: Int): (Int, Option[DataFrame], Long) = {
-    val (hot, tier0Dense, denseMass) = jaccardDfRouting(sh, broadcastPairLimit)
+    val (hot, tier0Dense, denseMass) = jaccardDfRouting(sets, broadcastPairLimit)
     if (tier0Dense) return (0, None, denseMass)
     val prefix = freqOrderedPrefix(sets, tau, hot).cache()
     val prefixMass = prefix.groupBy("sh").agg(count(lit(1)).as("c"))
@@ -924,28 +919,20 @@ object Dedup {
   def ngramContainmentPairs(
       df: DataFrame, idCol: String, textCol: String, n: Int, tau: Double,
       broadcastPairLimit: Int = 1 << 20): DataFrame =
-    withSets(shingleSets(df, idCol, textCol, n)) { sets =>
-      prefixContainment(setRows(sets), sets, tau, broadcastPairLimit)
-    }
+    withSets(shingleSets(df, idCol, textCol, n))(prefixContainment(_, tau, broadcastPairLimit))
 
-  /** [[ngramContainmentPairs]] over a precomputed (_id, sh) intermediate
-    * (caller keeps it cached); its per-doc table is one groupBy(_id) over
-    * `sh` ([[setsOf]]). */
-  def ngramContainmentPairsFromHashes(
-      sh: DataFrame, tau: Double, broadcastPairLimit: Int = 1 << 20): DataFrame =
-    withSets(setsOf(sh))(prefixContainment(sh, _, tau, broadcastPairLimit))
-
-  /** The routed containment pairs of one corpus, given as both its
-    * (_id, sh) rows and its (_id, _set) table. */
-  private def prefixContainment(
-      sh: DataFrame, sets: DataFrame, tau: Double, broadcastPairLimit: Int): DataFrame = {
-    val (hot, hotOverflow, denseMass) = jaccardDfRouting(sh, broadcastPairLimit)
+  /** The routed containment pairs of a per-doc (_id, _set) table (caller
+    * keeps it cached): the set entry behind [[ngramContainmentPairs]]. */
+  private[graft] def prefixContainment(
+      sets: DataFrame, tau: Double, broadcastPairLimit: Int = 1 << 20): DataFrame = {
+    val (hot, hotOverflow, denseMass) = jaccardDfRouting(sets, broadcastPairLimit)
     // the Jaccard twin's tier-0 exit, honored here too (round 10): with
     // the hot set overflowed the prefix filter provably has no lever —
     // building the prefix anyway pays for slices the meet-mass probe
     // immediately throws away
     if (hotOverflow)
-      return denseContainment(sh, tau, denseMass)
+      return denseContainment(sets, tau, denseMass)
+    val sh = setRows(sets)
     val prefix = freqOrderedPrefix(sets, tau, hot).cache()
     // both decision masses from vocab-sized aggregates — never a pair join
     val dfc = sh.groupBy("sh").agg(count(lit(1)).as("_df"))
@@ -960,7 +947,7 @@ object Dedup {
       // the result, so a lazily-returned plan would re-run the whole
       // shingle pass on every action
       if (pm > broadcastPairLimit.toLong)
-        denseContainment(sh, tau, denseMass)
+        denseContainment(sets, tau, denseMass)
       else {
         val cands = prefix.as("x").join(sh.as("y"), col("x.sh") === col("y.sh"))
           .where(col("x._id") =!= col("y._id"))
@@ -981,8 +968,8 @@ object Dedup {
     * all inside the mass-pinned scope. Each row keeps its direction when
     * the ranks map back to ids. */
   private[graft] def denseContainment(
-      sh: DataFrame, tau: Double, massHint: Long = -1L): DataFrame =
-    densePairCounts(sh, massHint) { counts =>
+      sets: DataFrame, tau: Double, massHint: Long = -1L): DataFrame =
+    densePairCounts(sets, massHint) { counts =>
       // filter BEFORE the direction explode (round 15): the explode
       // doubles the ~mass-row aggregated stream only for the per-
       // direction filter to drop almost all of it. Ranks are size-ordered,

@@ -8,8 +8,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale design (SURVEY §4): every path works off ONE per-document table
   * (_id, sig, _set): `_set` holds the doc's distinct shingle tokens as a
-  * sorted array and `sig` its k minhash values, computed from `_set` in the
-  * same row. The table is materialized once. Banding emits b rows per doc
+  * sorted array — the dedup family's per-doc set table
+  * ([[Dedup.shingleSets]]), taken as given — and `sig` its k minhash
+  * values, computed from `_set` in the same row. Only the column-form
+  * [[signatures]]/[[signaturesWith]] references and q162's md5 twin build
+  * the table from shingle rows: an injected k-min aggregate rides that
+  * regroup. The table is materialized once. Banding emits b rows per doc
   * (not k), candidate generation is an equi-join on (band, band_hash)
   * buckets — never a cross join — and each candidate pair is verified by
   * an exact intersection count of its two docs' `_set`s, looked up in that
@@ -111,20 +115,14 @@ object MinHashLSH {
   def nearDupPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int, k: Int, bands: Int, tau: Double): DataFrame =
-    nearDupPairs(df, idCol, textCol, n, k, bands, tau, PairBroadcastLimit)
+    nearDupPairsOf(Dedup.shingleSets(df, idCol, textCol, n), k, bands, tau)
 
-  private[graft] def nearDupPairs(
-      df: DataFrame, idCol: String, textCol: String,
-      n: Int, k: Int, bands: Int, tau: Double, broadcastPairLimit: Int): DataFrame =
-    verifiedCandidates(signed(Dedup.shingleSets(df, idCol, textCol, n), k),
-      k, bands, xxhashBandKey, tau, broadcastPairLimit)
-
-  /** [[nearDupPairs]] over a precomputed (_id, sh) intermediate (caller
-    * controls caching — see [[graft.Graft.dedupSuite]]), regrouped once
-    * into the per-doc table; integer `_id`, `sh` as for [[signatures]]. */
-  def nearDupPairsFromHashes(
-      sh: DataFrame, k: Int, bands: Int, tau: Double): DataFrame =
-    verifiedCandidates(signed(Dedup.setsOf(sh), k), k, bands, xxhashBandKey, tau)
+  /** [[nearDupPairs]] of a per-doc (_id, _set) table ([[Dedup.shingleSets]];
+    * caller controls caching — see [[graft.Graft.dedupSuite]]). */
+  private[graft] def nearDupPairsOf(
+      sets: DataFrame, k: Int, bands: Int, tau: Double,
+      broadcastPairLimit: Int = PairBroadcastLimit): DataFrame =
+    verifiedCandidates(signed(sets, k), k, bands, xxhashBandKey, tau, broadcastPairLimit)
 
   /** The MinHash band/verify machinery under PLANTED md5 mixes — q162's
     * full-oracle twin of q32 (the q156-q160 discipline: the trained/

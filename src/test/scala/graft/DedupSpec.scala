@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.ArrayMath
+import graft.Traced.traced
 import graft.operators.{Banding, Dedup, MinHashLSH, SimHash}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -76,9 +77,10 @@ class DedupSpec extends AnyFunSuite {
     val corpus = (base ++ mutated ++ copies).toDF("doc_id", "text")
     for (tau <- Seq(0.3, 0.6, 0.8, 1.0)) {
       val sh = Dedup.shingleHashes(corpus, "doc_id", "text", n = 3).cache()
-      val exp = Dedup.ngramJaccardPairsFromHashes(sh, tau)
+      val sets = Dedup.shingleSets(corpus, "doc_id", "text", n = 3).cache()
+      val exp = Dedup.denseJaccard(sets, tau)
         .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
-      val got = Dedup.ngramJaccardPairsPrefixFromHashes(sh, tau)
+      val got = Dedup.prefixJaccard(sets, tau)
         .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
       assert(got == exp, s"tau=$tau")
       // the fused path (prefix tagged inside the shingle pass) too
@@ -91,11 +93,14 @@ class DedupSpec extends AnyFunSuite {
         val full = sh.as("x").join(sh.as("y"), col("x.sh") === col("y.sh"))
           .where(col("x._id") < col("y._id"))
           .select(col("x._id"), col("y._id")).distinct().count()
-        val pref = Dedup.prefixCandidates(sh, tau).count()
+        // the routed path's own prefix (limit MaxValue: always tier 2)
+        val prefix = Dedup.jaccardRoute(sh, tau, Int.MaxValue)._2.get
+        val pref = Dedup.prefixPairs(prefix).count()
+        prefix.unpersist()
         assert(pref < full, s"tau=$tau: prefix $pref !< full $full")
       }
       assert(exp.nonEmpty, s"tau=$tau cut above every planted pair")
-      sh.unpersist()
+      sh.unpersist(); sets.unpersist()
     }
   }
 
@@ -137,10 +142,10 @@ class DedupSpec extends AnyFunSuite {
     }
     val corpus = (base ++ containers ++ mutated).toDF("doc_id", "text")
     for (tau <- Seq(0.4, 0.6, 0.8, 1.0)) {
-      val sh = Dedup.shingleHashes(corpus, "doc_id", "text", n = 3).cache()
-      val exp = Dedup.denseContainment(sh, tau)
+      val sets = Dedup.shingleSets(corpus, "doc_id", "text", n = 3).cache()
+      val exp = Dedup.denseContainment(sets, tau)
         .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
-      val got = Dedup.ngramContainmentPairsFromHashes(sh, tau)
+      val got = Dedup.prefixContainment(sets, tau)
         .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
       assert(got == exp, s"tau=$tau")
       assert(exp.nonEmpty, s"tau=$tau cut above every planted containment")
@@ -148,19 +153,19 @@ class DedupSpec extends AnyFunSuite {
       // and nothing broadcast by size) plus the containment divide,
       // candidates = all directed pairs so completeness can't mask a
       // verify bug
-      val allPairs = sh.select(col("_id").as("a"))
-        .crossJoin(sh.select(col("_id").as("b")))
+      val allPairs = sets.select(col("_id").as("a"))
+        .crossJoin(sets.select(col("_id").as("b")))
         .where(col("a") =!= col("b")).distinct().localCheckpoint()
       val conf = spark.conf
       try {
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val (nb, _, plans) = traced(Dedup.containmentScores(
-            Dedup.setPairCounts(Dedup.setsOf(sh), allPairs, broadcastPairs = false), tau)
+        val Trace(nb, _, plans, _, _) = traced(Dedup.containmentScores(
+            Dedup.setPairCounts(sets, allPairs, broadcastPairs = false), tau)
           .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq)
         assert(nb == exp, s"no-broadcast tau=$tau")
         assert(!plans.exists(_.contains("BroadcastHashJoin")), s"tau=$tau: shuffle arm expected")
       } finally conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      sh.unpersist()
+      sets.unpersist()
     }
   }
 
@@ -207,8 +212,8 @@ class DedupSpec extends AnyFunSuite {
     // exact copies keep the identity check non-vacuous at any tau
     val uniform = (base ++ base.take(5).map { case (id, tx) => (id + 500L, tx) })
       .toDF("doc_id", "text")
-    val shU = Dedup.shingleHashes(uniform, "doc_id", "text", n = 3).cache()
-    val (hotU, t0U, _) = Dedup.jaccardDfRouting(shU, broadcastPairLimit = 100)
+    val setsU = Dedup.shingleSets(uniform, "doc_id", "text", n = 3).cache()
+    val (hotU, t0U, _) = Dedup.jaccardDfRouting(setsU, broadcastPairLimit = 100)
     assert(hotU.isEmpty && t0U, s"uniform corpus must tier-0 dense (hot=${hotU.length})")
     // Zipfian-shaped corpus: one stock phrase in >hotMinDf docs plus
     // unique filler — the hot head exists, so tier 0 must NOT fire even
@@ -216,20 +221,28 @@ class DedupSpec extends AnyFunSuite {
     val zipf = (0 until 80).map { i =>
       (i.toLong, s"alpha beta gamma delta o${i}a o${i}b o${i}c o${i}d o${i}e o${i}f")
     }.toDF("doc_id", "text")
-    val shZ = Dedup.shingleHashes(zipf, "doc_id", "text", n = 3).cache()
-    val (hotZ, t0Z, _) = Dedup.jaccardDfRouting(shZ, broadcastPairLimit = 0)
+    val setsZ = Dedup.shingleSets(zipf, "doc_id", "text", n = 3).cache()
+    val (hotZ, t0Z, _) = Dedup.jaccardDfRouting(setsZ, broadcastPairLimit = 0)
     assert(hotZ.nonEmpty && !t0Z, s"hot-headed corpus must not tier-0 (hot=${hotZ.length})")
     // below the limit nothing fires regardless of shape
-    val (_, t0Small, _) = Dedup.jaccardDfRouting(shU, broadcastPairLimit = Int.MaxValue)
+    val (_, t0Small, _) = Dedup.jaccardDfRouting(setsU, broadcastPairLimit = Int.MaxValue)
     assert(!t0Small, "mass under the limit must not tier-0")
     // and the routed output still equals the dense reference on the
     // degenerate corpus (the tier-0 path end-to-end)
-    val exp = Dedup.ngramJaccardPairsFromHashes(shU, 0.5)
+    val exp = Dedup.denseJaccard(setsU, 0.5)
       .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
-    val got = Dedup.ngramJaccardPairsPrefixFromHashes(shU, 0.5, broadcastPairLimit = 100)
+    val got = Dedup.prefixJaccard(setsU, 0.5, broadcastPairLimit = 100)
       .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
     assert(got == exp && exp.nonEmpty, s"tier-0 output mismatch (${exp.size} expected pairs)")
-    shU.unpersist(); shZ.unpersist()
+    // a replayed batch (rows repeated whole, an exact-copy pair's among
+    // them) leaves the tier-0 pairs as they are: no self-pairs, no
+    // double-counted shingles
+    val replayed = uniform.unionByName(uniform.where(col("doc_id") % 7 === 0))
+    val gotReplayed = Dedup.ngramJaccardPairsPrefix(replayed, "doc_id", "text", n = 3, tau = 0.5,
+        broadcastPairLimit = 100)
+      .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
+    assert(gotReplayed == exp, s"replayed rows changed the tier-0 pairs: $gotReplayed")
+    setsU.unpersist(); setsZ.unpersist()
   }
 
   test("dedupCorpusBy keeps the highest-score member per cluster, min id on ties") {
@@ -306,8 +319,9 @@ class DedupSpec extends AnyFunSuite {
       .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
     assert(exact.nonEmpty)
     def run(limit: Int): (Seq[(Long, Long, Double)], Seq[String]) = {
-      val (got, _, plans) = traced(MinHashLSH.nearDupPairs(docs, "doc_id", "text",
-          n = 3, k = 64, bands = 16, tau = 0.6, broadcastPairLimit = limit)
+      val Trace(got, _, plans, _, _) = traced(MinHashLSH.nearDupPairsOf(
+          Dedup.shingleSets(docs, "doc_id", "text", 3), k = 64, bands = 16, tau = 0.6,
+          broadcastPairLimit = limit)
         .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq)
       (got, plans)
     }
@@ -345,16 +359,16 @@ class DedupSpec extends AnyFunSuite {
     // the prefix calls below verify their candidates through the same
     // _set verifier: both must take the prefix tier here, and equal the
     // dense generator
-    val sh = Dedup.shingleHashes(big, "doc_id", "text", 3).cache()
-    val (tier, prefix, _) = Dedup.jaccardRoute(sh, 0.6, 1 << 20)
+    val sets = Dedup.shingleSets(big, "doc_id", "text", 3).cache()
+    val (tier, prefix, _) = Dedup.route(sets, 0.6, 1 << 20)
     prefix.foreach(_.unpersist())
     assert(tier == 2, s"the large-set corpus routed tier $tier")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
-    assert(rows(Dedup.ngramJaccardPairsFromHashes(sh, 0.6)) == exact)
-    val expC = rows(Dedup.denseContainment(sh, 0.6))
+    assert(rows(Dedup.denseJaccard(sets, 0.6)) == exact)
+    val expC = rows(Dedup.denseContainment(sets, 0.6))
     assert(expC.size == 12)
-    sh.unpersist()
+    sets.unpersist()
     import org.apache.spark.sql.catalyst.expressions.ArrayIntersect
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -372,7 +386,7 @@ class DedupSpec extends AnyFunSuite {
         ("prefix containment", () => rows(Dedup.ngramContainmentPairs(big, "doc_id", "text",
           n = 3, tau = 0.6)), expC))
       for ((what, call, expected) <- calls) {
-        val (got, plans) = executedPlans(call())
+        val Trace(got, _, _, plans, _) = traced(call())
         assert(got == expected, what)
         val broadcasts = plans.flatMap(p => helper.collect(p) { case b: BroadcastExchangeExec => b })
         assert(broadcasts.nonEmpty, s"$what: the candidate side should be broadcast")
@@ -483,18 +497,18 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("densePairCounts: refuses loudly when the pair shuffle exceeds the disk budget") {
-    val sh = Dedup.shingleHashes(docs, "doc_id", "text", n = 3)
+    val sets = Dedup.shingleSets(docs, "doc_id", "text", n = 3)
     val conf = spark.conf
     try {
       conf.set("graft.dedup.maxPairShuffleBytes", "1")
       val e = intercept[IllegalStateException](
-        Dedup.ngramJaccardPairsFromHashes(sh, tau = 0.6))
+        Dedup.denseJaccard(sets, tau = 0.6))
       // the refusal names the estimated bytes, the mass, and the knob
       assert(e.getMessage.contains("pairs x 8 B/pair"), e.getMessage)
       assert(e.getMessage.contains("graft.dedup.maxPairShuffleBytes"))
       // -1 disables the budget; the same call then runs to completion
       conf.set("graft.dedup.maxPairShuffleBytes", "-1")
-      assert(Dedup.ngramJaccardPairsFromHashes(sh, tau = 0.6).count() > 0)
+      assert(Dedup.denseJaccard(sets, tau = 0.6).count() > 0)
     } finally conf.unset("graft.dedup.maxPairShuffleBytes")
   }
 
@@ -539,15 +553,15 @@ class DedupSpec extends AnyFunSuite {
                       if j >= 0.5) yield (a, b, j)
       val expC = for ((a, b) <- common.keys.toSeq.sorted;
                       x = common((a, b)).toDouble / sets(a).size if x >= 0.6) yield (a, b, x)
-      val sh = Dedup.shingleHashes(docs0.map { case (id, t) => (f(id), t) }.toDF("doc_id", "text"),
+      val shSets = Dedup.shingleSets(docs0.map { case (id, t) => (f(id), t) }.toDF("doc_id", "text"),
         "doc_id", "text", n = 3).cache()
-      val (tier, prefix, _) = Dedup.jaccardRoute(sh, 0.5, 1 << 20)
+      val (tier, prefix, _) = Dedup.route(shSets, 0.5, 1 << 20)
       prefix.foreach(_.unpersist())
       assert(tier == 2, s"$name: the prefix path must be the routed one")
-      check(s"$name dense jaccard", rows(Dedup.ngramJaccardPairsFromHashes(sh, 0.5)), expJ)
-      check(s"$name prefix jaccard", rows(Dedup.ngramJaccardPairsPrefixFromHashes(sh, 0.5)), expJ)
-      check(s"$name dense containment", rows(Dedup.denseContainment(sh, 0.6)), expC)
-      check(s"$name prefix containment", rows(Dedup.ngramContainmentPairsFromHashes(sh, 0.6)), expC)
+      check(s"$name dense jaccard", rows(Dedup.denseJaccard(shSets, 0.5)), expJ)
+      check(s"$name prefix jaccard", rows(Dedup.prefixJaccard(shSets, 0.5)), expJ)
+      check(s"$name dense containment", rows(Dedup.denseContainment(shSets, 0.6)), expC)
+      check(s"$name prefix containment", rows(Dedup.prefixContainment(shSets, 0.6)), expC)
       // the raw generator, with the rank table forced through shuffle joins
       // and the rank sort left uncoalesced (several sorted partitions to
       // number): every meeting pair once, oriented smaller set first (ties:
@@ -555,7 +569,7 @@ class DedupSpec extends AnyFunSuite {
       val raw = try {
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        Dedup.densePairCounts(sh, -1L, rankBroadcastLimit = 0)(identity)
+        Dedup.densePairCounts(shSets, -1L, rankBroadcastLimit = 0)(identity)
           .as[(Long, Long, Long, Long, Long)].collect().toSet
       } finally {
         conf.unset("spark.sql.autoBroadcastJoinThreshold")
@@ -565,7 +579,7 @@ class DedupSpec extends AnyFunSuite {
           (sets(a).size < sets(b).size || sets(a).size == sets(b).size && a < b) =>
         (a, b, sets(a).size.toLong, sets(b).size.toLong, c.toLong) }.toSet
       assert(raw == expRaw, s"$name raw counts")
-      sh.unpersist()
+      shSets.unpersist()
     }
   }
 
@@ -602,8 +616,9 @@ class DedupSpec extends AnyFunSuite {
       df.orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
     def run(df: org.apache.spark.sql.DataFrame) = {
       val sh = Dedup.shingleHashes(df, "doc_id", "text", n = 3).cache()
-      val j = rows(Dedup.ngramJaccardPairsFromHashes(sh, 0.5))
-      val c = rows(Dedup.denseContainment(sh, 0.6))
+      val sets = Dedup.shingleSets(df, "doc_id", "text", n = 3).cache()
+      val j = rows(Dedup.denseJaccard(sets, 0.5))
+      val c = rows(Dedup.denseContainment(sets, 0.6))
       val wide = wideKeyCounts(sh)
       val legJ = rows(wide
         .withColumn("jaccard",
@@ -619,7 +634,7 @@ class DedupSpec extends AnyFunSuite {
         .select(col("r.a").as("a"), col("r.b").as("b"), col("r.containment"))
         .where(col("containment") >= 0.6)
         .select(col("a"), col("b"), round(col("containment"), 6).as("containment")))
-      sh.unpersist()
+      sh.unpersist(); sets.unpersist()
       (j, c, legJ, legC)
     }
     val (slimJ, slimC, legJ, legC) = run(corpus)
@@ -659,56 +674,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got.toSet == model)
   }
 
-  /** Runs `f`, returning its value, the Spark jobs it started and the
-    * physical plans (AQE re-plans included) of the SQL executions it ran. */
-  private def traced[T](f: => T): (T, Int, Seq[String]) = {
-    import org.apache.spark.graftshim.ListenerShim
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
-      SparkListenerSQLExecutionStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription); ()
-        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.physicalPlanDescription); ()
-        case _ => ()
-      }
-    }
-    ListenerShim.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = f
-      ListenerShim.drain(sc)
-      import scala.jdk.CollectionConverters._
-      (out, jobs.get, plans.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
-
-  /** `f`'s result and the executed plan of every action it ran. */
-  private def executedPlans[T](f: => T): (T, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
-    import org.apache.spark.graftshim.ListenerShim
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-        plans.add(qe.executedPlan); ()
-      }
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    ListenerShim.drain(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try {
-      val out = f
-      ListenerShim.drain(spark.sparkContext)
-      import scala.jdk.CollectionConverters._
-      (out, plans.asScala.toSeq)
-    } finally spark.listenerManager.unregister(listener)
-  }
-
   /** Whether a plan repartitions the banded rows to a user-numbered count
     * on (band, key): the sized arm of Banding.pairs. */
   private def sizedBanding(plans: Seq[String]): Boolean = {
@@ -722,7 +687,7 @@ class DedupSpec extends AnyFunSuite {
   private def assertBothArms(what: String, model: Set[(Long, Long)])(
       run: Long => org.apache.spark.sql.DataFrame): Unit =
     for ((rowsPerTask, sized) <- Seq(1L -> true, Banding.RowsPerTask -> false)) {
-      val (got, _, plans) = traced(
+      val Trace(got, _, plans, _, _) = traced(
         run(rowsPerTask).select("a", "b").as[(Long, Long)].collect())
       assert(got.length == got.distinct.length, s"$what: duplicate pairs")
       assert(got.toSet == model, s"$what, rowsPerTask $rowsPerTask: pairs differ from the model")
@@ -776,9 +741,9 @@ class DedupSpec extends AnyFunSuite {
 
   test("banding sizes itself in one aggregate: MinHash and SimHash job counts per call") {
     val sigs = MinHashLSH.signatures(Dedup.shingleHashes(docs, "doc_id", "text", 3), 64)
-    val (_, minhashJobs, _) = traced(MinHashLSH.candidatePairs(sigs, 16, 4))
+    val Trace(_, minhashJobs, _, _, _) = traced(MinHashLSH.candidatePairs(sigs, 16, 4))
     val simhashes = SimHash.simhashes(docs, "doc_id", "text")
-    val (_, simhashJobs, _) = traced(SimHash.hammingPairs(simhashes, 3))
+    val Trace(_, simhashJobs, _, _, _) = traced(SimHash.hammingPairs(simhashes, 3))
     // the call runs the signature checkpoint and the one sizing aggregate
     // (its AQE map stage, then the result); the pair join stays lazy. A
     // separate row count of the checkpoint would add two more jobs.
@@ -788,7 +753,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("embedding LSH sizes its banded join from its cell aggregate: jobs per call") {
     val emb = graft.core.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val (_, jobs, _) = traced(
+    val Trace(_, jobs, _, _, _) = traced(
       Dedup.embeddingCosinePairsLsh(emb, "vec_id", "embedding", tau = 0.9))
     // the dim probe, the bucketed-row checkpoint (its AQE map stage, then
     // the result), the one cell aggregate (two map stages, the result) and
@@ -800,7 +765,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("minhash nearDupPairs runs from one per-doc table: jobs per call") {
-    val (_, jobs, _) = traced(
+    val Trace(_, jobs, _, _, _) = traced(
       MinHashLSH.nearDupPairs(docs, "doc_id", "text", n = 3, k = 64, bands = 16, tau = 0.6)
         .collect())
     // the shingling pass's width exchange (map stage, then the table
@@ -815,21 +780,22 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("prefix jaccard tier 2 verifies from one per-doc table: jobs per call") {
-    val sh = Dedup.shingleHashes(docs, "doc_id", "text", 3).cache()
-    sh.count()
-    val (tier, prefix, _) = Dedup.jaccardRoute(sh, 0.6, 1 << 20)
+    val sets = Dedup.shingleSets(docs, "doc_id", "text", 3).cache()
+    sets.count()
+    val (tier, prefix, _) = Dedup.route(sets, 0.6, 1 << 20)
     prefix.foreach(_.unpersist())
     assert(tier == 2, s"the fixture routed tier $tier")
-    val (_, jobs, _) = traced(Dedup.ngramJaccardPairsPrefixFromHashes(sh, 0.6).collect())
-    sh.unpersist()
-    // routing (the vocab aggregate's stages and its hot-set collect), the
-    // prefix-mass aggregate (which fills the set and prefix caches as it
-    // runs), the candidate self-join's stages and the end-row broadcast,
-    // the pair regroup's map stage, the checkpoint and the collect: 13.
+    val Trace(_, jobs, _, _, _) = traced(Dedup.prefixJaccard(sets, 0.6).collect())
+    sets.unpersist()
+    // with the set table cached: routing (the vocab aggregate's stages and
+    // its hot-set collect), the prefix-mass aggregate (which fills the
+    // prefix cache as it runs), the candidate self-join's stages and the
+    // end-row broadcast, the pair regroup's map stage, the checkpoint and
+    // the collect: 12.
     // The self-join verifier it replaces (a sizes aggregate, a limit probe
     // over the cached candidates, a candidate-doc semi-join and a counting
     // join semi-joined to the pair list) ran 23 on the same call.
-    assert(jobs <= 13, s"tier-2 ngramJaccardPairsPrefixFromHashes ran $jobs jobs")
+    assert(jobs <= 13, s"tier-2 prefixJaccard ran $jobs jobs")
   }
 
   test("a repeated plan shape compiles nothing after 100+ other classes") {

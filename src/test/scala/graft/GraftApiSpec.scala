@@ -67,6 +67,69 @@ class GraftApiSpec extends AnyFunSuite {
     } finally suite.unpersist()
   }
 
+  test("dedupSuite and the dense tier never regroup shingle rows by document") {
+    import graft.Traced.traced
+    import graft.operators.Dedup
+    import org.apache.spark.sql.catalyst.expressions.NamedExpression
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // every node of an executed plan, through AQE stages and into the
+    // plans that fill the caches it reads
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    def byDocAggregates(plans: Seq[SparkPlan]): Seq[SparkPlan] = plans.flatMap(nodes).filter {
+      case a: BaseAggregateExec => a.groupingExpressions match {
+        case Seq(e: NamedExpression) => e.name == "_id"
+        case _ => false
+      }
+      case _ => false
+    }
+    // the fixture of the shared-pass case above
+    val rnd = new scala.util.Random(3L)
+    val base = "the quick brown fox jumps over the lazy dog near the river"
+    val docs = Seq(
+      (1L, base + " bank"),
+      (2L, base + " shore"),
+      (3L, (1 to 12).map(_ => f"u${rnd.nextInt(100000)}%05d").mkString(" ")),
+      (4L, (1 to 12).map(_ => f"u${rnd.nextInt(100000)}%05d").mkString(" "))
+    ).toDF("doc_id", "text")
+    val Trace(_, suiteJobs, _, suitePlans, _) = traced {
+      val suite = Graft.dedupSuite(docs, "doc_id", "text", n = 3, tau = 0.6,
+        k = 64, bands = 16, topK = 5)
+      try {
+        suite.jaccardPairs.collect(); suite.minhashPairs.collect(); suite.topNgrams.collect()
+      } finally suite.unpersist()
+    }
+    info(s"dedupSuite build + three collects: $suiteJobs jobs")
+    assert(byDocAggregates(suitePlans).isEmpty,
+      s"dedupSuite regrouped by _id: ${byDocAggregates(suitePlans).map(_.nodeName)}")
+    // the uniform corpus of DedupSpec's tier-0 case: hot set empty, dense
+    // mass over the limit
+    val rndU = new scala.util.Random(7L)
+    val vocab = (0 until 12).map(i => s"u$i")
+    val baseU = (0 until 60).map { i =>
+      (i.toLong, (0 until 40).map(_ => vocab(rndU.nextInt(vocab.size))).mkString(" "))
+    }
+    val uniform = (baseU ++ baseU.take(5).map { case (id, tx) => (id + 500L, tx) })
+      .toDF("doc_id", "text")
+    val (tier, _, _) = Dedup.jaccardRoute(
+      Dedup.shingleHashes(uniform, "doc_id", "text", 3), 0.5, 100)
+    assert(tier == 0, s"the uniform corpus routed tier $tier")
+    val Trace(pairs, _, _, densePlans, _) = traced(
+      Dedup.ngramJaccardPairsPrefix(uniform, "doc_id", "text", 3, 0.5, broadcastPairLimit = 100)
+        .collect())
+    assert(pairs.nonEmpty)
+    assert(byDocAggregates(densePlans).isEmpty,
+      s"the dense tier regrouped by _id: ${byDocAggregates(densePlans).map(_.nodeName)}")
+    assert(suiteJobs <= 30, s"dedupSuite ran $suiteJobs jobs")
+  }
+
   test("semDedup and stripDupSpans facades delegate to the operators") {
     val vecs = Seq(
       (0L, Array(1.0f, 0.0f)), (1L, Array(0.0f, 1.0f)),

@@ -70,22 +70,22 @@ class JaccardPropertySpec extends AnyFunSuite {
   test("adaptive jaccard fuzz: routed == dense reference == model, every regime, every tau, both limits") {
     corpora.foreach { case (regime, docs) =>
       val df = docs.toDF("doc_id", "text")
-      val sh = Dedup.shingleHashes(df, "doc_id", "text", n = 3).cache()
+      val sets = Dedup.shingleSets(df, "doc_id", "text", n = 3).cache()
       for (tau <- Seq(0.4, 0.7, 0.9, 1.0)) {
         val model = modelPairs(docs, 3, tau)
-        val dense = Dedup.ngramJaccardPairsFromHashes(sh, tau)
+        val dense = Dedup.denseJaccard(sets, tau)
           .select("a", "b").as[(Long, Long)].collect().toSet
         assert(dense == model, s"$regime tau=$tau: dense != model")
         // default limit (router picks), and limit 0 (forces dense tier-0
         // on hot-empty corpora, tier-1 fallback otherwise)
         for (limit <- Seq(1 << 20, 0)) {
-          val routed = Dedup.ngramJaccardPairsPrefixFromHashes(sh, tau, limit)
+          val routed = Dedup.prefixJaccard(sets, tau, limit)
             .select("a", "b").as[(Long, Long)].collect().toSet
           assert(routed == model, s"$regime tau=$tau limit=$limit: routed != model")
         }
       }
       assert(modelPairs(docs, 3, 0.9).nonEmpty, s"$regime plants must survive tau=0.9")
-      sh.unpersist()
+      sets.unpersist()
     }
   }
 
@@ -115,14 +115,14 @@ class JaccardPropertySpec extends AnyFunSuite {
       }
       val all = docs ++ embeds
       val df = all.toDF("doc_id", "text")
-      val sh = Dedup.shingleHashes(df, "doc_id", "text", n = 3).cache()
+      val sets = Dedup.shingleSets(df, "doc_id", "text", n = 3).cache()
       for (tau <- Seq(0.5, 0.8, 1.0)) {
         val model = modelContainment(all, 3, tau)
         // limit 0 forces the dense fallback; 2^30 forces the prefix
         // path (these corpora's meet masses sit far below it); both must
         // agree with the set model on PAIRS and VALUES
         for (limit <- Seq(0, 1 << 30)) {
-          val got = Dedup.ngramContainmentPairsFromHashes(sh, tau, limit)
+          val got = Dedup.prefixContainment(sets, tau, limit)
             .as[(Long, Long, Double)].collect()
             .map(r => (r._1, r._2) -> r._3).toMap
           assert(got.keySet == model.keySet,
@@ -142,7 +142,7 @@ class JaccardPropertySpec extends AnyFunSuite {
           }
         }
       }
-      sh.unpersist()
+      sets.unpersist()
     }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Traced.traced
 import graft.operators.{Opq, ProductQuantizer, Similarity}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -366,46 +367,6 @@ class OpqSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
   }
 
-  /** Jobs submitted while `f` runs, and the dirs its Dataset actions
-    * scanned (roots of every file relation in the executed plans). */
-  private def traced[T](f: => T): (T, Int, Seq[String]) = {
-    import org.apache.spark.graftshim.ListenerShim
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    val scanListener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        qe.analyzed.foreach {
-          case r: LogicalRelation => r.relation match {
-            case h: HadoopFsRelation =>
-              h.location.rootPaths.foreach(p => scanned.add(p.toUri.getPath.stripSuffix("/")))
-            case _ => ()
-          }
-          case _ => ()
-        }
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    ListenerShim.drain(sc)
-    sc.addSparkListener(jobListener)
-    spark.listenerManager.register(scanListener)
-    try {
-      val out = f
-      ListenerShim.drain(sc)
-      import scala.jdk.CollectionConverters._
-      (out, jobs.get, scanned.asScala.toSeq)
-    } finally {
-      sc.removeSparkListener(jobListener)
-      spark.listenerManager.unregister(scanListener)
-    }
-  }
-
   test("sidecar memo: warm probe == cold probe in fewer jobs; warm appends read no sidecar") {
     import graft.operators.VectorIndex
     import org.apache.spark.sql.functions.col
@@ -417,8 +378,8 @@ class OpqSpec extends AnyFunSuite {
     val sidecars = Seq("meta", "pqmeta", "opqmeta").map(d => s"$path/$d")
     def sidecarScans(dirs: Seq[String]) = dirs.filter(d => sidecars.exists(d.endsWith))
 
-    val (cold, coldJobs, coldScans) = traced(probeOf(path, 3L))
-    val (warm, warmJobs, warmScans) = traced(probeOf(path, 3L))
+    val Trace(cold, coldJobs, _, _, coldScans) = traced(probeOf(path, 3L))
+    val Trace(warm, warmJobs, _, _, warmScans) = traced(probeOf(path, 3L))
     info(s"ivfTopKPq(...).collect(): $coldJobs jobs cold, $warmJobs warm")
     assert(warm == cold, "a memoized probe must return the cold probe's rows")
     assert(sidecarScans(coldScans).toSet.size == 3, s"cold probe scanned $coldScans")
@@ -427,7 +388,7 @@ class OpqSpec extends AnyFunSuite {
     assert(warmJobs <= 3, s"warm probe ran $warmJobs jobs")
 
     // a warm append encodes from the memo: its only jobs are its write's
-    val (_, appendJobs, appendScans) = traced(
+    val Trace(_, appendJobs, _, _, appendScans) = traced(
       VectorIndex.appendIvfPq(df.where(col("vec_id") >= 160), "vec_id", "embedding", path))
     info(s"warm appendIvfPq: $appendJobs jobs")
     assert(sidecarScans(appendScans).isEmpty, s"warm append re-read sidecars: $appendScans")
