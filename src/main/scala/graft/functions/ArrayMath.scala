@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
 /** Codegen'd dot product of two numeric array columns (float or double
   * elements), accumulated in double with a strict left-to-right fold — the
@@ -248,6 +248,23 @@ case class BoundDouble(value: Double) extends LeafExpression {
   }
 }
 
+/** [[BoundDouble]] for a long: a driver-side id (a probe's `excludeId`)
+  * that generated code reads by reference, so every id shares one
+  * compiled class. */
+private[graft] case class BoundLong(value: Long) extends LeafExpression {
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_bound"
+
+  override def eval(input: InternalRow): Any = value
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("bound", java.lang.Long.valueOf(value))
+    ev.copy(code = code"final long ${ev.value} = $ref.longValue();", isNull = FalseLiteral)
+  }
+}
+
 /** Column-API entry points for the vector math expressions. */
 object ArrayMath {
 
@@ -274,6 +291,10 @@ object ArrayMath {
   /** A driver-side double the generated code reads by reference
     * ([[BoundDouble]]). */
   def bound(v: Double): Column = ColumnShim.column(BoundDouble(v))
+
+  /** A driver-side long the generated code reads by reference
+    * ([[BoundLong]]). */
+  private[graft] def bound(v: Long): Column = ColumnShim.column(BoundLong(v))
 
   /** `array<double>` literal, typed explicitly: `typedLit` derives the same
     * type through Scala reflection on every call. */

@@ -283,16 +283,16 @@ object Dedup {
 
   /** The fused per-document pass behind [[shinglesFused]], [[shingleHashes]]
     * and [[shingleSets]]: `rows` gets each doc's id and [[windows]] (docs
-    * with none produce nothing), after a repartition to the session default
-    * parallelism — a local corpus often arrives as one split, which would
-    * serialize this CPU-bound pass on one core. */
+    * with none produce nothing). The input fans out through
+    * [[graft.core.Par.fanOut]]: a local corpus that arrives as one split
+    * would serialize this CPU-bound pass on one core, and an input already
+    * split at least that wide is not shuffled. */
   private def perDocShingles[T: org.apache.spark.sql.Encoder](
       df: DataFrame, idCol: String, textCol: String, n: Int)(
       rows: (Long, Iterator[String]) => Iterator[T]): org.apache.spark.sql.Dataset[T] = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long"), col(textCol))
-      .repartition(spark.sparkContext.defaultParallelism)
+    graft.core.Par.fanOut(df.select(col(idCol).cast("long"), col(textCol)))
       .as[(Long, String)]
       .mapPartitions(_.flatMap { case (id, text) =>
         val ws = windows(text, n)

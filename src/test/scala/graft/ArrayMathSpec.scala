@@ -63,6 +63,16 @@ class ArrayMathSpec extends AnyFunSuite {
     assert(plan.contains("graft_bound"), plan)
   }
 
+  test("BoundLong: not folded, excludes an id from a long or an int column") {
+    val c = ArrayMath.bound(3L)
+    assert(!org.apache.spark.sql.graftshim.ColumnShim.expression(c).foldable)
+    val longs = spark.range(6).toDF().where(col("id") =!= c)
+    assert(longs.collect().map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L, 4L, 5L))
+    assert(longs.queryExecution.optimizedPlan.toString.contains("graft_bound"))
+    val ints = spark.range(6).select(col("id").cast("int").as("i")).where(col("i") =!= c)
+    assert(ints.collect().map(_.getInt(0)).toSeq == Seq(0, 1, 2, 4, 5))
+  }
+
   test("RollingMinHash: codegen equals hand fold; null under window size") {
     val s = spark
     import s.implicits._

@@ -304,6 +304,35 @@ class DedupSpec extends AnyFunSuite {
     } finally conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
+  test("the shingle pass shuffles the text only of an input narrower than the default parallelism") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val par = spark.sparkContext.defaultParallelism
+    val dir = java.nio.file.Files.createTempDirectory("graft-shingle-fanout").toString
+    val corpus = (1 to 64).map(i => (i.toLong, s"doc $i shares the words of doc ${i % 7} and more"))
+      .toDF("doc_id", "text")
+    corpus.repartition(par).write.parquet(s"$dir/wide")
+    corpus.coalesce(1).write.parquet(s"$dir/one")
+    val helper = new AdaptiveSparkPlanHelper {}
+    def shingled(input: org.apache.spark.sql.DataFrame) = {
+      val sets = Dedup.shingleSets(input, "doc_id", "text", 3)
+      val rows = sets.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      val textShuffles = helper.collect(sets.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec if e.output.exists(_.name == "text") => e
+      }
+      (rows, textShuffles.size)
+    }
+    val wide = spark.read.parquet(s"$dir/wide")
+    assert(wide.rdd.getNumPartitions >= par)
+    val (wideSets, wideShuffles) = shingled(wide)
+    assert(wideShuffles == 0, "an input split at least the default parallelism wide shuffled its text")
+    val one = spark.read.parquet(s"$dir/one")
+    assert(one.rdd.getNumPartitions == 1)
+    val (oneSets, oneShuffles) = shingled(one)
+    assert(oneShuffles == 1, "a one-split input must still fan out")
+    assert(wideSets == oneSets && wideSets.size == 64)
+  }
+
   test("minhash LSH candidates verify to the same pairs as exact ngram jaccard") {
     val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.6)
       .orderBy("a", "b").as[(Long, Long, Double)].collect()

@@ -475,6 +475,131 @@ class OpqSpec extends AnyFunSuite {
     assert(probeOf(path, 21L) == healthy)
   }
 
+  // ---------------------------------------------------- training cost
+  // The trainers fit on their bounded sample alone: LAPACK reached through
+  // netlib with breeze's calls (breeze is the test-side reference), the
+  // residual computed after the sample's TakeOrdered, and the dimension
+  // read off the rows each trainer collects anyway.
+
+  private def bitsOf(xs: Seq[Double]): Seq[Long] = xs.map(java.lang.Double.doubleToRawLongBits)
+
+  test("the LAPACK helpers return breeze's eigSym and Procrustes bits") {
+    import breeze.linalg.{eigSym, svd, DenseMatrix}
+    for (d <- Seq(8, 32, 64, 96); seed <- Seq(1L, 2L)) {
+      val rnd = new java.util.Random(seed * 1000 + d)
+      val x = Array.fill(2 * d)(Array.fill(d)(rnd.nextGaussian()))
+      // a sample second moment, column-major (exactly symmetric)
+      val mom = Array.tabulate(d * d) { ij =>
+        val (i, j) = (ij % d, ij / d)
+        x.map(v => v(i) * v(j)).sum / x.length
+      }
+      val (w, v) = Opq.eigSym(mom, d)
+      val es = eigSym(new DenseMatrix(d, d, mom.clone))
+      assert(bitsOf(w.toSeq) == bitsOf(es.eigenvalues.toArray.toSeq), s"eigenvalues d=$d seed=$seed")
+      assert(bitsOf(v.toSeq) == bitsOf(es.eigenvectors.toArray.toSeq), s"eigenvectors d=$d seed=$seed")
+      val b = Array.fill(d * d)(rnd.nextGaussian())
+      val r = Opq.procrustesRotation(b, d)
+      val uv = svd(new DenseMatrix(d, d, b.clone))
+      assert(bitsOf(r.toSeq) == bitsOf((uv.Vt.t * uv.U.t).toArray.toSeq), s"rotation d=$d seed=$seed")
+    }
+  }
+
+  // SHA-256 of the raw bits of rotFlat, then every codebook in order
+  private def modelHash(opq: Opq.OpqModel): String = {
+    val bb = java.nio.ByteBuffer.allocate(8 * (opq.rotFlat.length + opq.pq.books.flatten.flatten.length))
+    (opq.rotFlat.toSeq ++ opq.pq.books.flatten.flatten).foreach(bb.putDouble)
+    java.security.MessageDigest.getInstance("SHA-256").digest(bb.array()).map(b => f"$b%02x").mkString
+  }
+
+  test("trained models keep their bits: Opq.train and trainResidualOpq, opqIters >= 2") {
+    import graft.operators.VectorIndex
+    val (_, df) = fixture
+    val (_, res) = residualFixture
+    val centroids = Similarity.kMeans(res, "vec_id", "embedding", c = 8, iters = 2)
+    val got = Seq(
+      "train" -> Opq.train(df, "vec_id", "embedding", m = 4, k = 16),
+      "train m=8 opqIters=2 maxSample=200" ->
+        Opq.train(df, "vec_id", "embedding", m = 8, k = 16, opqIters = 2, maxSample = 200),
+      "residual" -> VectorIndex.trainResidualOpq(res, "vec_id", "embedding", centroids, m = 4, k = 16),
+      "residual opqIters=2 maxSample=200" -> VectorIndex.trainResidualOpq(res, "vec_id",
+        "embedding", centroids, m = 4, k = 16, opqIters = 2, maxSample = 200),
+      "residual parquet opqIters=2 maxSample=200" -> VectorIndex.trainResidualOpq(
+        residualParquet, "vec_id", "embedding", centroids, m = 4, k = 16, opqIters = 2,
+        maxSample = 200)
+    ).map { case (what, opq) => what -> modelHash(opq) }
+    got.foreach { case (what, h) => info(s"$what: $h") }
+    // recorded from the trainers that fitted through breeze and computed
+    // residuals for every input row
+    val expect = Seq(
+      "train" ->
+        "8c470b80a8c5ae6badb397da5fa28f2c75652a86bc063c96a3076daa77ed0cc7",
+      "train m=8 opqIters=2 maxSample=200" ->
+        "63dfac098d0cb32095da86728ee856c0c88e8b51f0c3c553af8a9d463774e3d6",
+      "residual" ->
+        "360cac8601cb9190edbd2410fc27ed11206f884072cf52b21c2e6058f92f0f9d",
+      "residual opqIters=2 maxSample=200" ->
+        "ab0f76df130c4a13e5bdec8719cd0e2d29fd03b94b7ef7707b4738a256d5d6fc",
+      "residual parquet opqIters=2 maxSample=200" ->
+        "ab0f76df130c4a13e5bdec8719cd0e2d29fd03b94b7ef7707b4738a256d5d6fc")
+    assert(got == expect)
+  }
+
+  // the residual fixture as parquet: a local relation's projections fold on
+  // the driver, and a file scan is what the trainers read in production
+  private lazy val residualParquet = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-opq-sample").toString
+    residualFixture._2.repartition(4).write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("trainResidualOpq runs the centroid kernel on its sample only") {
+    import graft.operators.VectorIndex
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val res = residualParquet
+    val (centroids, _) = residualModels
+    val Trace(_, _, _, executed, _) = traced(VectorIndex.trainResidualOpq(res, "vec_id",
+      "embedding", centroids, m = 4, k = 16, opqIters = 2, maxSample = 100))
+    val helper = new AdaptiveSparkPlanHelper {}
+    def kernels(p: SparkPlan): Seq[SparkPlan] = helper.collect(p) {
+      case n if n.expressions.exists(_.exists(_.prettyName == "graft_nearest_centroid")) => n
+    }
+    assert(executed.flatMap(kernels).nonEmpty, s"no centroid kernel ran: $executed")
+    val belowSample = executed.flatMap(p => helper.collect(p) {
+      case n @ (_: TakeOrderedAndProjectExec | _: SortExec |
+          _: org.apache.spark.sql.execution.LimitExec) => n.children
+    }).flatten.flatMap(kernels)
+    assert(belowSample.isEmpty, s"centroid kernel below the sample's sort/limit: $belowSample")
+  }
+
+  test("trainers take the dimension from the rows they collect: jobs and refusals") {
+    import graft.operators.VectorIndex
+    val res = residualParquet
+    val (centroids, _) = residualModels
+    val kMeansJobs = traced(Similarity.kMeans(res, "vec_id", "embedding", c = 8, iters = 2)).jobs
+    val opqJobs = traced(VectorIndex.trainResidualOpq(res, "vec_id", "embedding", centroids,
+      m = 4, k = 16, opqIters = 2)).jobs
+    info(s"jobs per call: kMeans $kMeansJobs, trainResidualOpq $opqJobs")
+    // one each for a separate dimension probe before the sample took it over
+    assert(kMeansJobs <= 5 && opqJobs <= 1, s"kMeans $kMeansJobs, trainResidualOpq $opqJobs")
+    val s = spark
+    import s.implicits._
+    val empty = res.limit(0)
+    val trainers: Seq[(String, org.apache.spark.sql.DataFrame => Any)] = Seq(
+      "kMeans" -> (df => Similarity.kMeans(df, "vec_id", "embedding", c = 2, iters = 1)),
+      "ProductQuantizer.train" ->
+        (df => ProductQuantizer.train(df, "vec_id", "embedding", m = 1, k = 2)),
+      "Opq.train" -> (df => Opq.train(df, "vec_id", "embedding", m = 1, k = 2)))
+    val ragged = Seq((1L, Seq(1.0, 2.0)), (2L, Seq(1.0, 2.0, 3.0))).toDF("vec_id", "embedding")
+    trainers.foreach { case (who, train) =>
+      val none = intercept[IllegalArgumentException](train(empty))
+      assert(none.getMessage ==
+        s"requirement failed: $who: input has no rows - cannot infer vector dimension")
+      val mixed = intercept[IllegalArgumentException](train(ragged))
+      assert(mixed.getMessage.contains(s"$who: ragged sample vectors"), mixed.getMessage)
+    }
+  }
+
   test("planted reversal rotation (q160 fixture): mat-vec == exact element reversal") {
     // The q160 oracle's load-bearing identity: with a permutation matrix
     // the codegen'd mat-vec fold produces EXACTLY the permuted elements

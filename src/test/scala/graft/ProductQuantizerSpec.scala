@@ -335,6 +335,36 @@ class ProductQuantizerSpec extends AnyFunSuite {
       name -> n
     }
     assert(compiled.forall(_._2 == 0), s"classes compiled by two warm probes: $compiled")
+    // the excluded id is bound too: a new id per warm probe compiles no
+    // class, and the rows are those of the same plan with the id a literal
+    import graft.functions.BoundLong
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graftshim.ColumnShim
+    def literalForm(probe: DataFrame): DataFrame =
+      ColumnShim.ofRows(spark, probe.queryExecution.analyzed.transformAllExpressions {
+        case BoundLong(v) => Literal(v)
+      })
+    val excluding: Seq[(String, (Seq[Double], Long) => DataFrame)] = Seq(
+      "bruteTopK" -> ((q, id) => Similarity.bruteTopK(df, "vec_id", "embedding", q, 10, Some(id))),
+      "ivfTopKPq" -> ((q, id) => VectorIndex.ivfTopKPq(spark, pq, "vec_id", "embedding", q,
+        nprobe = 4, k = 10, shortlist = 40, excludeId = Some(id))))
+    val ids = Seq(3, 77, 200).map(i => vecs(i)._1)
+    val compiledExcluding = excluding.map { case (name, probe) =>
+      probe(queries.head, ids.head).collect()
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val warm = queries.tail.zip(ids.tail).map { case (q, id) =>
+        val p = probe(q, id)
+        (id, p, p.collect())
+      }
+      val n = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      warm.foreach { case (id, p, rows) =>
+        assert(rows.length == 10 && !rows.exists(_.getLong(0) == id), s"$name: $id kept")
+        assert(rows.toSeq == literalForm(p).collect().toSeq, s"$name: rows differ from the literal form")
+      }
+      name -> n
+    }
+    assert(compiledExcluding.forall(_._2 == 0),
+      s"classes compiled by two warm probes with new excluded ids: $compiledExcluding")
     // unrounded too: the bound norm is the folded one, bit for bit
     queries.foreach { q =>
       val both = df.select(Similarity.cosineToQuery(col("embedding"), q),

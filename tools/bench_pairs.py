@@ -12,11 +12,15 @@ hash of their sources, so each side compiles once.
 
 Prints one row per metric: each side's median and quartiles, the working
 tree's wins out of the pairs that reported the metric on both sides (ties
-count for neither), and whether the gain rule holds (wins in at least nine
+count for neither), whether the gain rule holds (wins in at least nine
 tenths of the pairs, medians further apart than the parent's quartile
-distance). The last line says whether every run exited 0 with
-`"correct": true`. `--out` also writes every run's result as JSON. Run from the
-root of a checkout; nothing under perfbench/ is changed.
+distance), and, for an end-to-end metric, whether the working tree is worse:
+its median is worse than the parent's by more than the metric's `bound` (from
+BENCHMARK.json) times the parent's median. The last lines say whether any
+end-to-end metric was worse and whether every run exited 0 with
+`"correct": true`; the exit status is 1 if either fails. `--out` also writes
+every run's result as JSON. Run from the root of a checkout; nothing under
+perfbench/ is changed.
 """
 import argparse
 import json
@@ -66,6 +70,7 @@ def main():
     root = pathlib.Path.cwd()
     bench = json.loads((root / "BENCHMARK.json").read_text())
     better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench.get("per_layer", [])}
+    bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]}
     env = dict(os.environ)
     target = pathlib.Path(env.get("CARGO_TARGET_DIR", root / ".bench_build"))
     env["CARGO_TARGET_DIR"] = str(target if target.is_absolute() else root / target)
@@ -99,7 +104,8 @@ def main():
     print(f"{a.workload}: {a.pairs} pairs, seeds {a.seed}-{a.seed + a.pairs - 1}, "
           f"--seconds {a.seconds} --trace {a.trace}, parent {a.parent}")
     print(f"{'metric':34s} {'parent median [Q1, Q3]':>36s} {'change median [Q1, Q3]':>36s}"
-          f" {'wins':>7s} gain")
+          f" {'wins':>7s} gain worse")
+    worse_rows = []
     for name in names:
         pairs = [(value(p, name), value(c, name)) for p, c in zip(runs["parent"], runs["change"])]
         pairs = [(p, c) for p, c in pairs if p is not None and c is not None]
@@ -110,17 +116,23 @@ def main():
         pq1, pmed, pq3 = quartiles([p for p, _ in pairs])
         cq1, cmed, cq3 = quartiles([c for _, c in pairs])
         gain = wins >= 0.9 * len(pairs) and abs(cmed - pmed) > pq3 - pq1
+        worse = None
+        if name in bounds:
+            worse = (cmed - pmed if lower else pmed - cmed) > bounds[name] * abs(pmed)
+            if worse:
+                worse_rows.append(name)
         print(f"{name:34s} {pmed:12.5g} [{pq1:10.5g}, {pq3:10.5g}] "
               f"{cmed:12.5g} [{cq1:10.5g}, {cq3:10.5g}] {wins:3d}/{len(pairs):<3d} "
-              f"{'yes' if gain else 'no'}")
+              f"{'yes' if gain else 'no ':4s} {'-' if worse is None else 'WORSE' if worse else 'no'}")
     ok = all(r["exit"] == 0 and r["result"].get("correct") is True
              for side in runs.values() for r in side)
+    print(f"end-to-end metrics worse than their bound: {', '.join(worse_rows) or 'none'}")
     print(f"every run exit 0 and correct: {'yes' if ok else 'NO'}")
     if a.out:
         pathlib.Path(a.out).write_text(json.dumps(
             {"workload": a.workload, "seconds": a.seconds, "trace": a.trace,
              "parent": a.parent, "runs": runs}, indent=1) + "\n")
-    sys.exit(0 if ok else 1)
+    sys.exit(0 if ok and not worse_rows else 1)
 
 
 if __name__ == "__main__":
