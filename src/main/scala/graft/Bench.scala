@@ -226,12 +226,8 @@ object Bench {
       val encP = ProductQuantizer.encode(emb, "vec_id", "embedding", pqPlain).cache()
       val pqRes = VectorIndex.trainResidualPq(emb, "vec_id", "embedding", centroids, 4, 16, 2)
       val encR = Similarity.assignBuckets(emb, "vec_id", "embedding", centroids)
-        .select(col("vec_id"),
-          ProductQuantizer.codeCol(
-            ProductQuantizer.residualCol(col("embedding"), col("bucket"), centroids),
-            pqRes).as("pq_code"),
-          ProductQuantizer.normCol(col("embedding")).as("pq_norm"),
-          col("bucket")).cache()
+        .select((col("vec_id") +: ProductQuantizer.codeCols(col("embedding"), pqRes,
+          Some(col("bucket") -> centroids))) :+ col("bucket"): _*).cache()
       // OPQ (Ge et al. 2013): same 4-byte payload, learned rotation. Two
       // variants — k=16 isolates what the ROTATION buys over pqPlain
       // (nothing on isotropic embeddings, by design), k=256 fills the four

@@ -12,8 +12,7 @@ import org.apache.spark.sql.DataFrame
   * default parallelism first; inputs that already have enough partitions
   * pass through untouched, so on a real cluster — where a 100 TB table
   * arrives as thousands of splits — this is a no-op, and the operators'
-  * shuffle topology claims hold exactly as documented. Dedup's shingle
-  * pass fans out through it; SimHash still repartitions unconditionally.
+  * shuffle topology claims hold exactly as documented.
   */
 object Par {
 

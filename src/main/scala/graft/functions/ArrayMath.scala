@@ -105,6 +105,23 @@ final class RotMat(val d: Int, val flat: Array[Double]) extends Serializable {
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
+
+  /** R·q driver-side, with [[apply]]'s folds: a query rotates once here,
+    * not per row. */
+  def rotate(q: Array[Double]): Array[Double] = {
+    require(q.length == d, s"query dim ${q.length} != model dim $d")
+    val out = new Array[Double](d)
+    var r = 0
+    while (r < d) {
+      val base = r * d
+      var s = 0.0
+      var i = 0
+      while (i < d) { s += flat(base + i) * q(i); i += 1 }
+      out(r) = s
+      r += 1
+    }
+    out
+  }
 }
 
 /** Rotate a numeric array column by a literal orthogonal matrix — the OPQ

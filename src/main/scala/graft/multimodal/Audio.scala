@@ -128,14 +128,13 @@ object Audio {
       df: DataFrame, idCol: String, seedCol: String, samplesCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as(idCol), col(seedCol).cast("long"),
-        col(samplesCol).cast("int"))
-      // spread the CPU-bound codec pass across every core BEFORE the
-      // fused mapPartitions: a small-file corpus arrives as one parquet
-      // split, which pinned the whole encode+decode family to a single
-      // core (the round-10 sf10 audit's 25× wall on q152) — three slim
-      // columns shuffle, payloads are born distributed
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
+    // spread the CPU-bound codec pass across every core BEFORE the
+    // fused mapPartitions: a small-file corpus arrives as one parquet
+    // split, which pinned the whole encode+decode family to a single
+    // core (the round-10 sf10 audit's 25× wall on q152) — three slim
+    // columns shuffle, payloads are born distributed
+    graft.core.Par.fanOut(df.select(col(idCol).cast("long").as(idCol),
+        col(seedCol).cast("long"), col(samplesCol).cast("int")))
       .as[(Long, Long, Int)]
       .mapPartitions(_.map { case (id, seed, n) => (id, wavPayload(seed, n)) })
       .toDF(idCol, "payload")

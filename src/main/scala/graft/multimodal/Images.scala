@@ -91,12 +91,11 @@ object Images {
   def withPatternPayload(df: DataFrame, idCol: String, w: Int, h: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // repartition BEFORE the codec pass (round 10): a small-file corpus
+    // fan out BEFORE the codec pass (round 10): a small-file corpus
     // arrives as one parquet split, which pinned the whole PNG
     // encode family to a single core — one slim id column shuffles,
     // payloads are born distributed across every core
-    df.select(col(idCol).cast("long").as(idCol))
-      .repartition(spark.sparkContext.defaultParallelism)
+    graft.core.Par.fanOut(df.select(col(idCol).cast("long").as(idCol)))
       .as[Long]
       .mapPartitions(_.map(id => (id, patternPayload(id, w, h))))
       .toDF(idCol, "payload")
@@ -109,8 +108,8 @@ object Images {
       df: DataFrame, idCol: String, seedCol: String, w: Int, h: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as(idCol), col(seedCol).cast("long"))
-      .repartition(spark.sparkContext.defaultParallelism) // q152's lesson
+    graft.core.Par.fanOut( // q152's lesson
+        df.select(col(idCol).cast("long").as(idCol), col(seedCol).cast("long")))
       .as[(Long, Long)]
       .mapPartitions(_.map { case (id, seed) => (id, patternPayload(seed, w, h)) })
       .toDF(idCol, "payload")
@@ -364,9 +363,9 @@ object Images {
       w: Int, h: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as(idCol), col(seedCol).cast("long"),
-        col(framesCol).cast("int"))
-      .repartition(spark.sparkContext.defaultParallelism) // q152's lesson
+    graft.core.Par.fanOut( // q152's lesson
+        df.select(col(idCol).cast("long").as(idCol), col(seedCol).cast("long"),
+          col(framesCol).cast("int")))
       .as[(Long, Long, Int)]
       .mapPartitions { it =>
         // ONE writer per partition (not per payload): the registry walk +

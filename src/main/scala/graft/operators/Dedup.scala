@@ -1387,9 +1387,9 @@ object Dedup {
     import graft.functions.ArrayMath
     val withNorm = df.select(col(idCol), col(vecCol))
       .withColumn("_n", ArrayMath.norm2(col(vecCol)))
-    // stream side repartitioned: a single-file corpus would otherwise probe
+    // stream side fanned out: a single-file corpus would otherwise probe
     // the whole broadcast nested loop from one task
-    val x = withNorm.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    val x = graft.core.Par.fanOut(withNorm)
       .select(col(idCol).as("a"), col(vecCol).as("_va"), col("_n").as("_na"))
     val y = withNorm.select(col(idCol).as("b"), col(vecCol).as("_vb"), col("_n").as("_nb"))
     x.join(y, col("a") < col("b"))

@@ -61,43 +61,18 @@ object Opq {
     /** R·v as a column (codegen mat-vec; fuses into the encode projection). */
     def rotateCol(v: Column): Column = ArrayMath.matVec(v, rot)
     /** R·q driver-side (queries rotate once, not per row). */
-    def rotate(q: Seq[Double]): Seq[Double] = {
-      require(q.length == d, s"query dim ${q.length} != model dim $d")
-      val out = new Array[Double](d)
-      var r = 0
-      while (r < d) {
-        var s = 0.0
-        var i = 0
-        while (i < d) { s += rotFlat(r * d + i) * q(i); i += 1 }
-        out(r) = s
-        r += 1
-      }
-      out.toSeq
-    }
+    def rotate(q: Seq[Double]): Seq[Double] = rot.rotate(q.toArray).toSeq
   }
 
   // ------------------------------------------------------- driver math
 
-  private def matvec(m: Array[Array[Double]], x: Array[Double]): Array[Double] = {
-    val out = new Array[Double](m.length)
-    var r = 0
-    while (r < m.length) {
-      val row = m(r)
-      var s = 0.0
-      var i = 0
-      while (i < row.length) { s += row(i) * x(i); i += 1 }
-      out(r) = s
-      r += 1
-    }
-    out
-  }
-
   /** Eigenvalue-allocation init (Ge et al. §4): eigenvectors of the
     * sample second moment, greedily dealt (descending eigenvalue) to the
     * bucket with the smallest running log-eigenvalue sum that still has
-    * room — balancing per-subspace signal. Rows of R = the bucketed
-    * eigenvectors, so subspace j of R·x spans bucket j's eigendirections. */
-  private def eigAllocInit(x: Array[Array[Double]], m: Int, dsub: Int): Array[Array[Double]] = {
+    * room — balancing per-subspace signal. Rows of R (row-major) = the
+    * bucketed eigenvectors, so subspace j of R·x spans bucket j's
+    * eigendirections. */
+  private def eigAllocInit(x: Array[Array[Double]], m: Int, dsub: Int): Array[Double] = {
     val d = x.head.length
     val mom = new Array[Double](d * d)
     x.foreach { v =>
@@ -121,7 +96,7 @@ object Opq {
       fill(j) += 1
       logSum(j) += math.log(math.max(evals(ei), 1e-12))
     }
-    buckets.flatMap(_.result()).map(ei => java.util.Arrays.copyOfRange(evecs, ei * d, ei * d + d))
+    buckets.flatMap(_.result()).flatMap(ei => evecs.slice(ei * d, ei * d + d))
   }
 
   /** Per-subspace Lloyd with the [[ProductQuantizer]] conventions: init =
@@ -183,9 +158,9 @@ object Opq {
   }
 
   /** Orthogonal Procrustes: R = argmin_{RᵀR=I} Σ‖R·xᵢ − yᵢ‖², solved as
-    * R = V·Uᵀ for B = Σ xᵢ·yᵢᵀ = U·S·Vᵀ (maximizes tr(R·B)). */
+    * R = V·Uᵀ for B = Σ xᵢ·yᵢᵀ = U·S·Vᵀ (maximizes tr(R·B)); R row-major. */
   private def procrustes(
-      x: Array[Array[Double]], y: Array[Array[Double]]): Array[Array[Double]] = {
+      x: Array[Array[Double]], y: Array[Array[Double]]): Array[Double] = {
     val d = x.head.length
     val b = new Array[Double](d * d)
     var n = 0
@@ -200,7 +175,7 @@ object Opq {
       n += 1
     }
     val r = procrustesRotation(b, d)
-    Array.tabulate(d)(i => Array.tabulate(d)(j => r(i + j * d)))
+    Array.tabulate(d * d)(k => r(k / d + (k % d) * d))
   }
 
   // LAPACK and BLAS through netlib (in Spark's own jars) on column-major
@@ -266,28 +241,28 @@ object Opq {
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     val dsub = dim / m
     require(x.length >= k, s"need >= $k sample rows to seed codebooks, got ${x.length}")
-    var r = eigAllocInit(x, m, dsub)
+    var r = new RotMat(dim, eigAllocInit(x, m, dsub))
     var books: Array[Array[Array[Double]]] = null
     var t = 0
     while (t < opqIters) {
-      val xr = x.map(matvec(r, _))
+      val xr = x.map(r.rotate)
       books = trainBooks(xr, m, k, dsub, lloydIters)
-      if (t < opqIters - 1) r = procrustes(x, xr.map(reconstruct(books, _, dsub)))
+      if (t < opqIters - 1)
+        r = new RotMat(dim, procrustes(x, xr.map(reconstruct(books, _, dsub))))
       t += 1
     }
-    OpqModel(dim, r.flatten,
+    OpqModel(dim, r.flat,
       ProductQuantizer.PqModel(m, dsub,
         books.toSeq.map(_.toSeq.map(_.toSeq))))
   }
 
   /** Encode the corpus: one fused rotate+assign projection per row —
-    * (idCol, pq_code array<tinyint>, pq_norm float). ‖R·v‖ = ‖v‖, so the
-    * norm comes off the raw vector without a second mat-vec. */
+    * (idCol, pq_code array<tinyint>, pq_norm float), through
+    * [[ProductQuantizer.codeCols]]. ‖R·v‖ = ‖v‖, so the norm comes off the
+    * raw vector without a second mat-vec. */
   def encode(df: DataFrame, idCol: String, vecCol: String, model: OpqModel): DataFrame =
-    df.select(
-      col(idCol),
-      ProductQuantizer.codeCol(model.rotateCol(col(vecCol)), model.pq).as("pq_code"),
-      ProductQuantizer.normCol(col(vecCol)).as("pq_norm"))
+    df.select(col(idCol) +:
+      ProductQuantizer.codeCols(col(vecCol), model.pq, rotation = Some(model.rot)): _*)
 
   /** ADC top-k over an [[encode]]d corpus: rotate the query once, then the
     * plain-PQ scorer — same TakeOrdered, zero shuffles. */
@@ -296,18 +271,14 @@ object Opq {
       query: Seq[Double], k: Int, excludeId: Option[Long] = None): DataFrame =
     ProductQuantizer.adcTopK(encoded, idCol, model.pq, model.rotate(query), k, excludeId)
 
-  /** ADC shortlist + exact re-rank (the deployed form, mirroring
-    * [[ProductQuantizer.rerankTopK]]): codes shortlist in rotated space,
-    * the exact cosine runs on the RAW vectors of the shortlist only. */
+  /** ADC shortlist + exact re-rank (the deployed form, through
+    * [[ProductQuantizer.rerankTopK]]'s re-ranker): codes shortlist in
+    * rotated space, the exact cosine runs on the RAW vectors of the
+    * shortlist only. */
   def rerankTopK(
       raw: DataFrame, idCol: String, vecCol: String,
       encoded: DataFrame, model: OpqModel, query: Seq[Double],
-      k: Int, shortlist: Int = 100, excludeId: Option[Long] = None): DataFrame = {
-    require(shortlist >= k, "shortlist must cover k")
-    val short = adcTopK(encoded, idCol, model, query, shortlist, excludeId)
-      .select(col(idCol))
-    Similarity.bruteTopK(
-      raw.join(broadcast(short), Seq(idCol), "left_semi"),
-      idCol, vecCol, query, k, excludeId)
-  }
+      k: Int, shortlist: Int = 100, excludeId: Option[Long] = None): DataFrame =
+    ProductQuantizer.rerank(raw, idCol, vecCol, encoded, model.pq,
+      model.rotate(query), lit(0.0), query, k, shortlist, excludeId)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{ArrayMath, PqBooks, PqCodec}
+import graft.functions.{ArrayMath, PqBooks, PqCodec, RotMat}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -130,20 +130,26 @@ object ProductQuantizer {
     zip_with(vecCol, element_at(ArrayMath.vecsLit(centroids), bucketCol + 1),
       (a, b) => a.cast("double") - b)
 
+  /** The PQ row encoding every encoder and index writer shares:
+    * `pq_code` of `vec` — of its residual against `centroids` by
+    * `bucket` when `residual` is `(bucket, centroids)`, then rotated by
+    * `rotation` when one is given — and `pq_norm`, the float L2 norm of
+    * the raw `vec` (‖R·v‖ = ‖v‖, so a rotation needs no second norm). */
+  private[graft] def codeCols(
+      vec: Column, model: PqModel,
+      residual: Option[(Column, Seq[Seq[Double]])] = None,
+      rotation: Option[RotMat] = None): Seq[Column] = {
+    val src = residual.fold(vec) { case (bucket, centroids) => residualCol(vec, bucket, centroids) }
+    Seq(codeCol(rotation.fold(src)(ArrayMath.matVec(src, _)), model).as("pq_code"),
+      normCol(vec).as("pq_norm"))
+  }
+
   /** Encode the corpus: `idCol`, `pq_code` (array<tinyint>, one cell per
     * subspace) and `pq_norm` (float L2 norm, for cosine at query time) —
     * m + 4 bytes of payload per row. Pure projection, zero shuffles. */
   def encode(df: DataFrame, idCol: String, vecCol: String, model: PqModel): DataFrame =
-    df.select(
-      col(idCol),
-      codeCol(col(vecCol), model).as("pq_code"),
-      normCol(col(vecCol)).as("pq_norm"))
+    df.select(col(idCol) +: codeCols(col(vecCol), model): _*)
 
-  /** Approximate cosine top-k over an encoded corpus (asymmetric distance):
-    * the query's m×k dot-product table becomes literal arrays, each row
-    * costs m `element_at` lookups + one divide, and the result is a
-    * TakeOrdered — no shuffle, no reconstruction, the raw vectors never
-    * load. Ties break by id ascending (the brute/IVF/LSH convention). */
   /** ADC shortlist + exact re-rank — how PQ deploys in practice. ADC alone
     * cannot rank WITHIN a quantization cell (every vector snapping to the
     * same code tuple scores identically — on clustered data that is exactly
@@ -157,16 +163,32 @@ object ProductQuantizer {
   def rerankTopK(
       raw: DataFrame, idCol: String, vecCol: String,
       encoded: DataFrame, model: PqModel, query: Seq[Double],
-      k: Int, shortlist: Int = 100, excludeId: Option[Long] = None): DataFrame = {
+      k: Int, shortlist: Int = 100, excludeId: Option[Long] = None): DataFrame =
+    rerank(raw, idCol, vecCol, encoded, model, query, lit(0.0), query, k, shortlist, excludeId)
+
+  /** The one shortlist re-ranker ([[rerankTopK]], [[Opq.rerankTopK]],
+    * [[VectorIndex.ivfTopKPq]]): [[adcTopK]] of `adcQuery` (the query in
+    * code space — rotated for OPQ) plus `dotOffset` picks `shortlist` ids,
+    * and the exact cosine to `query` ranks their raw rows. */
+  private[graft] def rerank(
+      raw: DataFrame, idCol: String, vecCol: String,
+      encoded: DataFrame, model: PqModel, adcQuery: Seq[Double], dotOffset: Column,
+      query: Seq[Double], k: Int, shortlist: Int, excludeId: Option[Long]): DataFrame = {
     require(shortlist >= k, "shortlist must cover k")
-    val short = adcTopK(encoded, idCol, model, query, shortlist, excludeId)
+    val short = adcTopK(encoded, idCol, model, adcQuery, shortlist, excludeId, dotOffset)
       .select(col(idCol))
     Similarity.bruteTopK(
       raw.join(broadcast(short), Seq(idCol), "left_semi"),
       idCol, vecCol, query, k, excludeId)
   }
 
-  /** `dotOffset` adds a per-row constant to the approximate dot before
+  /** Approximate cosine top-k over an encoded corpus (asymmetric distance):
+    * the query's m×k dot-product table becomes literal arrays, each row
+    * costs m `element_at` lookups + one divide, and the result is a
+    * TakeOrdered — no shuffle, no reconstruction, the raw vectors never
+    * load. Ties break by id ascending (the brute/IVF/LSH convention).
+    *
+    * `dotOffset` adds a per-row constant to the approximate dot before
     * normalizing — residual indexes pass `q·centroid(bucket)` here, since
     * their codes reconstruct `v − centroid` and
     * `q·v ≈ q·c_b + q·residual̂`. The lookup tables are array literals,

@@ -53,14 +53,14 @@ object SimHash {
     sim
   }
 
-  /** (_id, simhash long) per document — one fused pass. The input is
-    * repartitioned to default parallelism first: local single-file corpora
-    * otherwise run this CPU-bound pass on one core. */
+  /** (_id, simhash long) per document — one fused pass. An input split
+    * narrower than the default parallelism fans out first
+    * ([[graft.core.Par.fanOut]]): local single-file corpora otherwise run
+    * this CPU-bound pass on one core. */
   def simhashes(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long"), col(textCol))
-      .repartition(spark.sparkContext.defaultParallelism)
+    graft.core.Par.fanOut(df.select(col(idCol).cast("long"), col(textCol)))
       .as[(Long, String)]
       .mapPartitions(_.flatMap { case (id, text) =>
         // null text emits nothing — the SQL twin's explode(null) semantics

@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.ArrayMath
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -89,7 +90,11 @@ object Similarity {
     // Lloyd re-scans the corpus every round (init + one agg per
     // iteration): cache the two columns it reads for the loop's lifetime —
     // the classic iterative-ML persist — and release before returning.
-    val vecs = df.select(col(idCol), col(vecCol)).cache()
+    // A caller's frame cached with exactly these columns is the same cache
+    // entry: read it, and leave it cached.
+    val selected = df.select(col(idCol), col(vecCol))
+    val owned = selected.storageLevel == StorageLevel.NONE
+    val vecs = if (owned) selected.cache() else selected
     try {
       val (init, dim) =
         sampleVectors(vecs.orderBy(col(idCol)).limit(c).select(col(vecCol)), "kMeans")
@@ -111,7 +116,7 @@ object Similarity {
         centroids = next.toSeq
       }
       centroids
-    } finally { vecs.unpersist(); () }
+    } finally { if (owned) vecs.unpersist(); () }
   }
 
   /** Vector dimensionality from the first row — a loud, named refusal on

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.RotMat
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -29,6 +30,13 @@ import org.apache.spark.sql.types._
   * call. Spark part-file names carry a per-write UUID, so any rewrite of a
   * sidecar misses the memo; appends touch only `corpus/bucket=*`, whose
   * files are listed afresh by every probe.
+  *
+  * Each layout decision lives in one place. Every corpus write (build,
+  * append, [[compact]], repair) goes through one partitioned writer, and
+  * both corpus rewrites through one checked stage-and-swap. IVF-PQ rows are
+  * encoded by [[ProductQuantizer.codeCols]], the encoder
+  * [[ProductQuantizer.encode]] and [[Opq.encode]] use, and the probe
+  * re-ranks through [[ProductQuantizer.rerankTopK]]'s shortlist re-ranker.
   */
 object VectorIndex {
 
@@ -42,9 +50,8 @@ object VectorIndex {
   def writeIvf(
       df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]], path: String): Unit = {
-    Similarity.assignBuckets(df, idCol, vecCol, centroids)
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/corpus")
+    writeCorpus(Similarity.assignBuckets(df, idCol, vecCol, centroids), "overwrite",
+      s"$path/corpus")
     writeCentroidMeta(df.sparkSession, centroids, path)
   }
 
@@ -69,9 +76,8 @@ object VectorIndex {
   def appendIvf(
       df: DataFrame, idCol: String, vecCol: String, path: String): Unit = {
     val centroids = readIvfCentroids(df.sparkSession, path)
-    Similarity.assignBuckets(df, idCol, vecCol, centroids)
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(s"$path/corpus")
+    writeCorpus(Similarity.assignBuckets(df, idCol, vecCol, centroids), "append",
+      s"$path/corpus")
   }
 
   /** Compact an appended index ([[TextIndex.compact]]'s twin): each
@@ -80,23 +86,37 @@ object VectorIndex {
     * per partition directory via stage + swap. Sidecar meta (centroids /
     * hyperplane params) is untouched, so probes and future appends keep
     * working unchanged. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val live = s"$path/corpus"
-    val staged = s"$path/corpus_compact"
-    val df = spark.read.parquet(live)
-    val partCols = Seq("table", "bucket").filter(df.columns.contains)
-    df.repartition(partCols.map(col): _*)
-      .write.mode("overwrite").partitionBy(partCols: _*).parquet(staged)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p0 = new org.apache.hadoop.fs.Path(live)
-    val fs = p0.getFileSystem(conf)
+  def compact(spark: SparkSession, path: String): Unit =
+    swapCorpus(spark.read.parquet(s"$path/corpus"), path, "compact")
+
+  /** The index corpus write every builder, append, [[compact]] and
+    * [[repairIvfPqOpq]] shares: `rows` hive-partitioned under `dir` by
+    * `bucket`, or by `(table, bucket)` when `rows` has a `table` column
+    * (the LSH layout), and repartitioned by the same columns, so each
+    * partition directory gets one task's single file — parallel across
+    * buckets, no small-file spray, whatever the input split count. */
+  private def writeCorpus(rows: DataFrame, mode: String, dir: String): Unit = {
+    val partCols = Seq("table", "bucket").filter(rows.columns.contains)
+    rows.repartition(partCols.map(col): _*)
+      .write.mode(mode).partitionBy(partCols: _*).parquet(dir)
+  }
+
+  /** Replaces `<path>/corpus` with `rows` (which may read it): stage the
+    * write at `<path>/corpus_<verb>`, rename the live corpus out to
+    * `corpus_old` and the stage in, then drop `corpus_old`. A crashed
+    * prior swap may have left a stale `corpus_old`, so it is cleared
+    * first, and EACH rename is checked — a silent false would swap in
+    * nothing. */
+  private def swapCorpus(rows: DataFrame, path: String, verb: String): Unit = {
+    val staged = s"$path/corpus_$verb"
+    writeCorpus(rows, "overwrite", staged)
+    val live = new org.apache.hadoop.fs.Path(s"$path/corpus")
+    val fs = live.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
     val old = new org.apache.hadoop.fs.Path(s"$path/corpus_old")
-    // a crashed prior compact may leave a stale _old dir; clear it, and
-    // CHECK each rename — a silent false here would swap in nothing
     fs.delete(old, true)
-    require(fs.rename(p0, old), s"compact: could not stage out $live")
-    require(fs.rename(new org.apache.hadoop.fs.Path(staged), p0),
-      s"compact: could not swap in $staged (live data is at ${old})")
+    require(fs.rename(live, old), s"$verb: could not stage out $live")
+    require(fs.rename(new org.apache.hadoop.fs.Path(staged), live),
+      s"$verb: could not swap in $staged (live data is at $old)")
     fs.delete(old, true)
     ()
   }
@@ -109,10 +129,7 @@ object VectorIndex {
       spark: SparkSession, path: String, idCol: String, vecCol: String,
       query: Seq[Double], nprobe: Int, k: Int,
       excludeId: Option[Long] = None): DataFrame = {
-    val centroids = readIvfCentroids(spark, path)
-    val probe = Similarity.probeBuckets(centroids, query, nprobe)
-    val corpus = readIvfCorpus(spark, path)
-      .where(col("bucket").isin(probe: _*))
+    val corpus = probedCorpus(spark, path, readIvfCentroids(spark, path), query, nprobe)
     Similarity.bruteTopK(corpus, idCol, vecCol, query, k, excludeId)
   }
 
@@ -128,12 +145,10 @@ object VectorIndex {
       centroids: Seq[Seq[Double]], path: String): Unit = {
     val q8 = transform(col(vecCol),
       x => round(x.cast("double") / col("scale") * 127.0).cast("byte"))
-    Similarity.assignBuckets(df, idCol, vecCol, centroids)
+    writeCorpus(Similarity.assignBuckets(df, idCol, vecCol, centroids)
       .withColumn("scale",
         greatest(array_max(transform(col(vecCol), x => abs(x))), lit(1e-30f)))
-      .select(col(idCol), q8.as("q8"), col("scale"), col("bucket"))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/corpus")
+      .select(col(idCol), q8.as("q8"), col("scale"), col("bucket")), "overwrite", s"$path/corpus")
     writeCentroidMeta(df.sparkSession, centroids, path)
   }
 
@@ -146,10 +161,7 @@ object VectorIndex {
       spark: SparkSession, path: String, idCol: String,
       query: Seq[Double], nprobe: Int, k: Int,
       excludeId: Option[Long] = None): DataFrame = {
-    val centroids = readIvfCentroids(spark, path)
-    val probe = Similarity.probeBuckets(centroids, query, nprobe)
-    val corpus = readIvfCorpus(spark, path)
-      .where(col("bucket").isin(probe: _*))
+    val corpus = probedCorpus(spark, path, readIvfCentroids(spark, path), query, nprobe)
       .withColumn("_vec",
         transform(col("q8"), b => b.cast("double") * col("scale") / 127.0))
     Similarity.bruteTopK(corpus, idCol, "_vec", query, k, excludeId)
@@ -171,21 +183,8 @@ object VectorIndex {
   def writeIvfPq(
       df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]], model: ProductQuantizer.PqModel,
-      path: String, residual: Boolean = false): Unit = {
-    // a prior OPQ index at this path would leave a stale rotation sidecar
-    // that readers would wrongly apply to the fresh plain codes. Publish
-    // order mirrors [[writeIvfPqOpq]] (r9 ADVICE): pending marker FIRST —
-    // a crash anywhere inside this rewrite (old rotation deleted, corpus
-    // half-overwritten) must refuse loudly, not read torn state — then the
-    // stale rotation out, then the corpus, then the marker's removal. A
-    // completed plain publish is a valid index, so the final clear also
-    // absorbs any flag a crashed earlier OPQ publish left behind.
-    markOpqPending(df.sparkSession, path)
-    deleteOpqMeta(df.sparkSession, path)
-    writeIvfPqEncoded(df, idCol, vecCol, centroids, model, path, residual,
-      rotation = None)
-    clearOpqPending(df.sparkSession, path)
-  }
+      path: String, residual: Boolean = false): Unit =
+    publishIvfPq(df, idCol, vecCol, centroids, model, path, residual, rotation = None)
 
   /** [[writeIvfPq]] with an OPQ rotation composed in (Ge et al. 2013,
     * [[Opq]]): codes quantize `R·v` (or `R·(v − c_b)` when `residual`) so
@@ -199,42 +198,48 @@ object VectorIndex {
   def writeIvfPqOpq(
       df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]], opq: Opq.OpqModel,
-      path: String, residual: Boolean = false): Unit = {
-    // publish order: PENDING marker FIRST, then the stale rotation out,
-    // then the corpus, the new rotation, and the marker's removal LAST.
-    // The marker must precede the sidecar delete (r9 ADVICE): deleting
-    // first left a window where a crash strands a previously-OPQ index's
-    // rotated codes with neither sidecar nor marker — readable as plain,
-    // silently degrading recall. With the marker up before ANY mutation,
-    // every crash inside the publish leaves the path refusing loudly
-    // until [[repairIvfPqOpq]] (or a publish re-run) restores consistency.
-    markOpqPending(df.sparkSession, path)
-    deleteOpqMeta(df.sparkSession, path)
-    writeIvfPqEncoded(df, idCol, vecCol, centroids, opq.pq, path, residual,
-      rotation = Some(opq))
-    writeOpqMeta(df.sparkSession, opq, path)
-    clearOpqPending(df.sparkSession, path)
-  }
+      path: String, residual: Boolean = false): Unit =
+    publishIvfPq(df, idCol, vecCol, centroids, opq.pq, path, residual, Some(opq))
 
-  private def writeIvfPqEncoded(
+  /** The publish [[writeIvfPq]] and [[writeIvfPqOpq]] share. Order: the
+    * PENDING marker FIRST, then the stale rotation out, then the corpus,
+    * the sidecars (the new rotation, if any) and the marker's removal
+    * LAST. The marker must precede the sidecar delete (r9 ADVICE):
+    * deleting first left a window where a crash strands a previously-OPQ
+    * index's rotated codes with neither sidecar nor marker — readable as
+    * plain, silently degrading recall. A plain publish removes the
+    * rotation too: a prior OPQ index at this path would otherwise leave a
+    * stale rotation sidecar that readers would wrongly apply to the fresh
+    * plain codes. With the marker up before ANY mutation, every crash
+    * inside the publish leaves the path refusing loudly until
+    * [[repairIvfPqOpq]] (or a publish re-run) restores consistency. A
+    * completed publish is a valid index, so the final clear also absorbs
+    * any flag a crashed earlier publish left behind. */
+  private def publishIvfPq(
       df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]], model: ProductQuantizer.PqModel,
-      path: String, residual: Boolean,
-      rotation: Option[Opq.OpqModel]): Unit = {
-    val raw =
-      if (residual) ProductQuantizer.residualCol(col(vecCol), col("bucket"), centroids)
-      else col(vecCol)
-    val codeSrc = rotation.map(_.rotateCol(raw)).getOrElse(raw)
-    Similarity.assignBuckets(df, idCol, vecCol, centroids)
-      .select(col(idCol),
-        ProductQuantizer.codeCol(codeSrc, model).as("pq_code"),
-        ProductQuantizer.normCol(col(vecCol)).as("pq_norm"),
-        col(vecCol), col("bucket"))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/corpus")
-    writeCentroidMeta(df.sparkSession, centroids, path)
-    writePqMeta(df.sparkSession, model, path, residual)
+      path: String, residual: Boolean, rotation: Option[Opq.OpqModel]): Unit = {
+    val spark = df.sparkSession
+    markOpqPending(spark, path)
+    deleteOpqMeta(spark, path)
+    writeCorpus(pqRows(Similarity.assignBuckets(df, idCol, vecCol, centroids), idCol, vecCol,
+      centroids, model, residual, rotation.map(_.rot)), "overwrite", s"$path/corpus")
+    writeCentroidMeta(spark, centroids, path)
+    writePqMeta(spark, model, path, residual)
+    rotation.foreach(writeOpqMeta(spark, _, path))
+    clearOpqPending(spark, path)
   }
+
+  /** Bucket-assigned `(id, vec, bucket)` rows in the stored IVF-PQ layout
+    * `(id, pq_code, pq_norm, vec, bucket)`, encoded by
+    * [[ProductQuantizer.codeCols]] — the one row builder of every publish,
+    * append and repair. */
+  private def pqRows(
+      rows: DataFrame, idCol: String, vecCol: String, centroids: Seq[Seq[Double]],
+      model: ProductQuantizer.PqModel, residual: Boolean, rotation: Option[RotMat]): DataFrame =
+    rows.select((col(idCol) +: ProductQuantizer.codeCols(col(vecCol), model,
+      Option.when(residual)(col("bucket") -> centroids), rotation)) :+
+      col(vecCol) :+ col("bucket"): _*)
 
   /** Incremental append to a written IVF-PQ index — [[appendIvf]]'s twin
     * for the coded layout: the batch is assigned, (residual-)rotated, and
@@ -247,25 +252,9 @@ object VectorIndex {
     * the probes that follow. */
   def appendIvfPq(
       df: DataFrame, idCol: String, vecCol: String, path: String): Unit = {
-    val spark = df.sparkSession
-    // first: the pending-marker refusal runs before any memo lookup
-    val rotation = readOpqRotation(spark, path)
-    val centroids = readIvfCentroids(spark, path)
-    val (model, residual) = readPq(spark, path)
-    val raw =
-      if (residual) ProductQuantizer.residualCol(col(vecCol), col("bucket"), centroids)
-      else col(vecCol)
-    val codeSrc = rotation match {
-      case Some((d, flat)) => graft.functions.ArrayMath.matVec(raw, new graft.functions.RotMat(d, flat))
-      case None => raw
-    }
-    Similarity.assignBuckets(df, idCol, vecCol, centroids)
-      .select(col(idCol),
-        ProductQuantizer.codeCol(codeSrc, model).as("pq_code"),
-        ProductQuantizer.normCol(col(vecCol)).as("pq_norm"),
-        col(vecCol), col("bucket"))
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(s"$path/corpus")
+    val (rotation, centroids, model, residual) = readPqIndex(df.sparkSession, path)
+    writeCorpus(pqRows(Similarity.assignBuckets(df, idCol, vecCol, centroids), idCol, vecCol,
+      centroids, model, residual, rotation), "append", s"$path/corpus")
   }
 
   /** OPQ codebooks for a RESIDUAL rotated index — [[trainResidualPq]]'s
@@ -305,7 +294,9 @@ object VectorIndex {
   /** Top-k probe: prune to `nprobe` bucket dirs, ADC-score their code
     * columns (m lookups/row off the narrow scan), broadcast the
     * `shortlist` ids back as a left-semi join on the SAME pruned dirs to
-    * fetch raw vectors, exact-rank those. Recall is spec-measured. A probe
+    * fetch raw vectors, exact-rank those — the shortlist re-ranker of
+    * [[ProductQuantizer.rerankTopK]] and [[Opq.rerankTopK]], given the
+    * rotated query and the residual offsets. Recall is spec-measured. A probe
     * scans the pruned rows twice: the ADC scan reads `(id, pq_code,
     * pq_norm)`, 12 + m B a row, and the re-rank scan reads `(id, vec)`,
     * 8 + dim × 4 B a row, since the semi-join filters after the scan.
@@ -325,20 +316,8 @@ object VectorIndex {
       spark: SparkSession, path: String, idCol: String, vecCol: String,
       query: Seq[Double], nprobe: Int, k: Int, shortlist: Int = 100,
       excludeId: Option[Long] = None): DataFrame = {
-    require(shortlist >= k, "shortlist must cover k")
-    // first: the pending-marker refusal runs before any memo lookup
-    val rotation = readOpqRotation(spark, path)
-    val centroids = readIvfCentroids(spark, path)
-    val (model, residual) = readPq(spark, path)
-    // OPQ index: codes live in rotated space, so the ADC query rotates
-    // ONCE here; the exact re-rank below stays in raw space untouched
-    val adcQuery = rotation match {
-      case Some((d, flat)) => Opq.OpqModel(d, flat, model).rotate(query)
-      case None => query
-    }
-    val probe = Similarity.probeBuckets(centroids, query, nprobe)
-    val pruned = readIvfCorpus(spark, path)
-      .where(col("bucket").isin(probe: _*))
+    val (rotation, centroids, model, residual) = readPqIndex(spark, path)
+    val pruned = probedCorpus(spark, path, centroids, query, nprobe)
     // residual codes reconstruct v − c_b, so the ADC dot gets the
     // per-bucket constant q·c_b back (C-length literal, indexed by the
     // partition column — still a narrow codes+norm scan)
@@ -347,34 +326,37 @@ object VectorIndex {
         val qDotC = centroids.map(c => c.zip(query).map { case (a, b) => a * b }.sum)
         element_at(graft.functions.ArrayMath.vecLit(qDotC), col("bucket").cast("int") + 1)
       } else lit(0.0)
-    val short = ProductQuantizer.adcTopK(
-      pruned.select(col(idCol), col("pq_code"), col("pq_norm"), col("bucket")),
-      idCol, model, adcQuery, shortlist, excludeId, dotOffset = offset)
-      .select(col(idCol))
-    Similarity.bruteTopK(
-      pruned.join(broadcast(short), Seq(idCol), "left_semi"),
-      idCol, vecCol, query, k, excludeId)
+    // OPQ index: codes live in rotated space, so the ADC query rotates
+    // ONCE here; the exact re-rank stays in raw space untouched
+    ProductQuantizer.rerank(pruned, idCol, vecCol,
+      pruned.select(col(idCol), col("pq_code"), col("pq_norm"), col("bucket")), model,
+      rotation.fold(query)(_.rotate(query.toArray).toSeq), offset, query, k, shortlist,
+      excludeId)
+  }
+
+  /** An IVF-PQ index's sidecars as probes and appends read them:
+    * (rotation, centroids, codebooks, residual flag). The pending-marker
+    * refusal ([[readOpqRotation]]) runs first, before any memo lookup. */
+  private def readPqIndex(spark: SparkSession, path: String)
+      : (Option[RotMat], Seq[Seq[Double]], ProductQuantizer.PqModel, Boolean) = {
+    val rotation = checkedRotation(spark, path)
+    val centroids = readIvfCentroids(spark, path)
+    val (model, residual) = readPq(spark, path)
+    (rotation, centroids, model, residual)
   }
 
   private def writePqMeta(
       spark: SparkSession, model: ProductQuantizer.PqModel, path: String,
-      residual: Boolean = false): Unit = {
-    val rows = for {
+      residual: Boolean): Unit =
+    writeSidecar(spark, s"$path/pqmeta", PqMetaSchema, for {
       (book, j) <- model.books.zipWithIndex
       (cent, c) <- book.zipWithIndex
-    } yield Row(j, c, cent, residual)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), PqMetaSchema)
-      .write.mode("overwrite").parquet(s"$path/pqmeta")
-  }
+    } yield Row(j, c, cent, residual))
 
-  private def writeOpqMeta(
-      spark: SparkSession, opq: Opq.OpqModel, path: String): Unit = {
-    val rows = (0 until opq.d).map { r =>
+  private def writeOpqMeta(spark: SparkSession, opq: Opq.OpqModel, path: String): Unit =
+    writeSidecar(spark, s"$path/opqmeta", OpqMetaSchema, (0 until opq.d).map { r =>
       Row(r, opq.rotFlat.slice(r * opq.d, (r + 1) * opq.d).toSeq)
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), OpqMetaSchema)
-      .write.mode("overwrite").parquet(s"$path/opqmeta")
-  }
+    })
 
   private def deleteOpqMeta(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$path/opqmeta")
@@ -410,7 +392,12 @@ object VectorIndex {
     * memo is consulted: a torn publish refuses on a warm memo exactly as
     * on a cold one. The decoded rotation is memoized per `opqmeta`
     * version (object doc); each call gets its own copy of the array. */
-  def readOpqRotation(spark: SparkSession, path: String): Option[(Int, Array[Double])] = {
+  def readOpqRotation(spark: SparkSession, path: String): Option[(Int, Array[Double])] =
+    checkedRotation(spark, path).map(r => (r.d, r.flat.clone()))
+
+  /** [[readOpqRotation]]'s refusal and memo, the memoized [[RotMat]]
+    * itself (readers here never write into it). */
+  private def checkedRotation(spark: SparkSession, path: String): Option[RotMat] = {
     val fs = opqPendingPath(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(!fs.exists(opqPendingPath(path)),
@@ -421,24 +408,22 @@ object VectorIndex {
     val dir = s"$path/opqmeta"
     val files = listing(spark, dir)
     rotationMemo(dir, files)(decodeRotation(spark, dir, files))
-      .map { case (d, flat) => (d, flat.clone()) }
   }
 
   /** [[readOpqRotation]] WITHOUT the pending-marker refusal and without
     * the memo — only the repair path may look at a torn publish's
     * sidecar state, and it reads what is on disk now. */
-  private def readOpqRotationUnchecked(
-      spark: SparkSession, path: String): Option[(Int, Array[Double])] = {
+  private def readOpqRotationUnchecked(spark: SparkSession, path: String): Option[RotMat] = {
     val dir = s"$path/opqmeta"
     decodeRotation(spark, dir, listing(spark, dir))
   }
 
   private def decodeRotation(
-      spark: SparkSession, dir: String, files: Seq[FileId]): Option[(Int, Array[Double])] =
+      spark: SparkSession, dir: String, files: Seq[FileId]): Option[RotMat] =
     if (files.isEmpty) None
     else {
       val rows = readSidecar(spark, dir, OpqMetaSchema).sortBy(_.getInt(0))
-      Some((rows.length, rows.flatMap(_.getSeq[Double](1)).toArray))
+      Some(new RotMat(rows.length, rows.flatMap(_.getSeq[Double](1)).toArray))
     }
 
   /** Recovery verb for a torn publish ([[readOpqRotation]]'s refusal):
@@ -477,32 +462,10 @@ object VectorIndex {
         "partial set repair would silently bless. Re-run the original " +
         "writeIvfPq/writeIvfPqOpq publish (repair only re-derives " +
         "consistent CODES from a complete corpus; it cannot restore rows)")
-    val centroids = readIvfCentroids(spark, path)
-    val model = readPqMeta(spark, path)
-    val residual = readPqResidual(spark, path)
-    val corpus = spark.read.parquet(s"$path/corpus")
-    val raw =
-      if (residual) ProductQuantizer.residualCol(col(vecCol), col("bucket"), centroids)
-      else col(vecCol)
-    val codeSrc = readOpqRotationUnchecked(spark, path) match {
-      case Some((d, flat)) =>
-        graft.functions.ArrayMath.matVec(raw, new graft.functions.RotMat(d, flat))
-      case None => raw
-    }
-    val staged = s"$path/corpus_repair"
-    corpus.select(col(idCol),
-        ProductQuantizer.codeCol(codeSrc, model).as("pq_code"),
-        ProductQuantizer.normCol(col(vecCol)).as("pq_norm"),
-        col(vecCol), col("bucket"))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(staged)
-    val live = new org.apache.hadoop.fs.Path(s"$path/corpus")
-    val old = new org.apache.hadoop.fs.Path(s"$path/corpus_old")
-    fs.delete(old, true)
-    require(fs.rename(live, old), s"repair: could not stage out $live")
-    require(fs.rename(new org.apache.hadoop.fs.Path(staged), live),
-      s"repair: could not swap in $staged (live data is at $old)")
-    fs.delete(old, true)
+    val (model, residual) = readPq(spark, path)
+    swapCorpus(pqRows(spark.read.parquet(s"$path/corpus"), idCol, vecCol,
+      readIvfCentroids(spark, path), model, residual, readOpqRotationUnchecked(spark, path)),
+      path, "repair")
     clearOpqPending(spark, path)
   }
 
@@ -529,11 +492,9 @@ object VectorIndex {
   }
 
   private[graft] def writeCentroidMeta(
-      spark: SparkSession, centroids: Seq[Seq[Double]], path: String): Unit = {
-    val rows = centroids.zipWithIndex.map { case (c, i) => Row(i, c) }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), CentroidMetaSchema)
-      .write.mode("overwrite").parquet(s"$path/meta")
-  }
+      spark: SparkSession, centroids: Seq[Seq[Double]], path: String): Unit =
+    writeSidecar(spark, s"$path/meta", CentroidMetaSchema,
+      centroids.zipWithIndex.map { case (c, i) => Row(i, c) })
 
   // ------------------------------------------------------ sidecar memo
 
@@ -550,6 +511,18 @@ object VectorIndex {
   private val OpqMetaSchema = StructType(Seq(
     StructField("row", IntegerType, nullable = false),
     StructField("coeffs", ArrayType(DoubleType), nullable = false)))
+  private val LshMetaSchema = StructType(Seq(
+    StructField("bits_per_table", IntegerType, nullable = false),
+    StructField("tables", IntegerType, nullable = false),
+    StructField("seed", LongType, nullable = false),
+    StructField("dim", IntegerType, nullable = false)))
+
+  /** `rows` as the one-file sidecar `dir`, under the writer's fixed
+    * `schema`. */
+  private def writeSidecar(
+      spark: SparkSession, dir: String, schema: StructType, rows: Seq[Row]): Unit =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+      .write.mode("overwrite").parquet(dir)
 
   /** A sidecar's rows in file order (callers sort on the driver: a
     * handful of rows needs no sort job). Read nullable, so a column an
@@ -594,12 +567,20 @@ object VectorIndex {
   private val MemoEntries = 64
   private val centroidMemo = new SidecarMemo[Seq[Seq[Double]]]
   private val pqMemo = new SidecarMemo[(ProductQuantizer.PqModel, Boolean)]
-  private val rotationMemo = new SidecarMemo[Option[(Int, Array[Double])]]
+  private val rotationMemo = new SidecarMemo[Option[RotMat]]
   private val corpusSchemaMemo = new SidecarMemo[StructType]
+
+  /** The IVF corpus pruned to the `nprobe` bucket directories whose
+    * centroids are closest to `query`. */
+  private def probedCorpus(
+      spark: SparkSession, path: String, centroids: Seq[Seq[Double]],
+      query: Seq[Double], nprobe: Int): DataFrame =
+    readIvfCorpus(spark, path)
+      .where(col("bucket").isin(Similarity.probeBuckets(centroids, query, nprobe): _*))
 
   /** An IVF corpus as a probe reads it. The read schema is inferred once
     * per `meta` version: every writer that replaces the corpus
-    * (`writeIvf*`, [[writeIvfPqEncoded]]) also rewrites `meta`, and
+    * (`writeIvf*`, [[publishIvfPq]]) also rewrites `meta`, and
     * appends add rows of the same schema. The files are listed on every
     * call, so appended rows are scanned. */
   private def readIvfCorpus(spark: SparkSession, path: String): DataFrame = {
@@ -622,24 +603,10 @@ object VectorIndex {
       bitsPerTable: Int, tables: Int, seed: Long, path: String): Unit = {
     require(bitsPerTable > 0 && bitsPerTable < 31 && tables > 0, "bad LSH shape")
     val dim = Similarity.vecDim(df, vecCol, "VectorIndex")
-    val byTable = Similarity.hyperplanes(bitsPerTable * tables, dim, seed)
-      .grouped(bitsPerTable).toSeq
-    val entries = byTable.zipWithIndex.map { case (planes, t) =>
-      struct(lit(t).as("table"), Similarity.lshBucket(col(vecCol), planes).as("bucket"))
-    }
-    df.select(col(idCol), col(vecCol), explode(array(entries: _*)).as("_e"))
-      .select(col(idCol), col(vecCol), col("_e.table").as("table"), col("_e.bucket").as("bucket"))
-      .repartition(col("table"), col("bucket"))
-      .write.mode("overwrite").partitionBy("table", "bucket").parquet(s"$path/corpus")
-    val spark = df.sparkSession
-    val schema = StructType(Seq(
-      StructField("bits_per_table", IntegerType, nullable = false),
-      StructField("tables", IntegerType, nullable = false),
-      StructField("seed", LongType, nullable = false),
-      StructField("dim", IntegerType, nullable = false)))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(Row(bitsPerTable, tables, seed, dim)), 1), schema)
-      .write.mode("overwrite").parquet(s"$path/meta")
+    writeCorpus(lshRows(df, idCol, vecCol, bitsPerTable, tables, seed, dim), "overwrite",
+      s"$path/corpus")
+    writeSidecar(df.sparkSession, s"$path/meta", LshMetaSchema,
+      Seq(Row(bitsPerTable, tables, seed, dim)))
   }
 
   /** Incremental append to a written LSH index — [[appendIvf]]'s twin:
@@ -649,18 +616,8 @@ object VectorIndex {
     * old + new rows. O(batch × tables) writes. */
   def appendLsh(
       df: DataFrame, idCol: String, vecCol: String, path: String): Unit = {
-    val spark = df.sparkSession
-    val m = spark.read.parquet(s"$path/meta").head()
-    val (bits, tables, seed, dim) = (m.getInt(0), m.getInt(1), m.getLong(2), m.getInt(3))
-    val byTable = Similarity.hyperplanes(bits * tables, dim, seed)
-      .grouped(bits).toSeq
-    val entries = byTable.zipWithIndex.map { case (planes, t) =>
-      struct(lit(t).as("table"), Similarity.lshBucket(col(vecCol), planes).as("bucket"))
-    }
-    df.select(col(idCol), col(vecCol), explode(array(entries: _*)).as("_e"))
-      .select(col(idCol), col(vecCol), col("_e.table").as("table"), col("_e.bucket").as("bucket"))
-      .repartition(col("table"), col("bucket"))
-      .write.mode("append").partitionBy("table", "bucket").parquet(s"$path/corpus")
+    val (bits, tables, seed, dim) = readLshMeta(df.sparkSession, path)
+    writeCorpus(lshRows(df, idCol, vecCol, bits, tables, seed, dim), "append", s"$path/corpus")
   }
 
   /** Top-k probe against a written LSH index: the query's probe buckets
@@ -676,14 +633,11 @@ object VectorIndex {
       spark: SparkSession, path: String, idCol: String, vecCol: String,
       query: Seq[Double], k: Int, excludeId: Option[Long] = None,
       nprobe: Int = 1): DataFrame = {
-    val m = spark.read.parquet(s"$path/meta").head()
-    val (bits, tables, seed, dim) = (m.getInt(0), m.getInt(1), m.getLong(2), m.getInt(3))
+    val (bits, tables, seed, dim) = readLshMeta(spark, path)
     require(query.length == dim, s"query dim ${query.length} != index dim $dim")
     require(nprobe >= 1 && nprobe <= bits + 1,
       s"nprobe must be in [1, bits_per_table + 1 = ${bits + 1}]")
-    val byTable = Similarity.hyperplanes(bits * tables, dim, seed)
-      .grouped(bits).toSeq
-    val cond = byTable.zipWithIndex.map { case (planes, t) =>
+    val cond = lshPlanes(bits, tables, seed, dim).zipWithIndex.map { case (planes, t) =>
       val probes = Similarity.multiprobeBuckets(planes, query, nprobe)
       col("table") === lit(t) && col("bucket").isin(probes: _*)
     }.reduce(_ || _)
@@ -691,5 +645,30 @@ object VectorIndex {
       .where(cond)
       .dropDuplicates(idCol)
     Similarity.bruteTopK(candidates, idCol, vecCol, query, k, excludeId)
+  }
+
+  /** The seeded hyperplanes of an LSH index, `byTable(t)` = table `t`'s
+    * `bits` planes. */
+  private def lshPlanes(bits: Int, tables: Int, seed: Long, dim: Int): Seq[Seq[Seq[Double]]] =
+    Similarity.hyperplanes(bits * tables, dim, seed).grouped(bits).toSeq
+
+  /** `(id, vec, table, bucket)`: each row once per table, under its sign
+    * bucket in that table — one projection + explode, the LSH layout
+    * [[writeLsh]] and [[appendLsh]] write. */
+  private def lshRows(
+      df: DataFrame, idCol: String, vecCol: String,
+      bits: Int, tables: Int, seed: Long, dim: Int): DataFrame = {
+    val entries = lshPlanes(bits, tables, seed, dim).zipWithIndex.map { case (planes, t) =>
+      struct(lit(t).as("table"), Similarity.lshBucket(col(vecCol), planes).as("bucket"))
+    }
+    df.select(col(idCol), col(vecCol), explode(array(entries: _*)).as("_e"))
+      .select(col(idCol), col(vecCol), col("_e.table").as("table"), col("_e.bucket").as("bucket"))
+  }
+
+  /** `(bits_per_table, tables, seed, dim)` from the `meta` sidecar, read
+    * with its fixed schema (no footer inference job). */
+  private def readLshMeta(spark: SparkSession, path: String): (Int, Int, Long, Int) = {
+    val m = readSidecar(spark, s"$path/meta", LshMetaSchema).head
+    (m.getInt(0), m.getInt(1), m.getLong(2), m.getInt(3))
   }
 }

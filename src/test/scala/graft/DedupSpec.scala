@@ -333,6 +333,35 @@ class DedupSpec extends AnyFunSuite {
     assert(wideSets == oneSets && wideSets.size == 64)
   }
 
+  test("simhashes shuffles the text only of an input narrower than the default parallelism") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val par = spark.sparkContext.defaultParallelism
+    val dir = java.nio.file.Files.createTempDirectory("graft-simhash-fanout").toString
+    val corpus = (1 to 64).map(i => (i.toLong, s"doc $i shares the words of doc ${i % 7} and more"))
+      .toDF("doc_id", "text")
+    corpus.repartition(par).write.parquet(s"$dir/wide")
+    corpus.coalesce(1).write.parquet(s"$dir/one")
+    val helper = new AdaptiveSparkPlanHelper {}
+    def hashed(input: org.apache.spark.sql.DataFrame) = {
+      val sims = SimHash.simhashes(input, "doc_id", "text")
+      val rows = sims.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val textShuffles = helper.collect(sims.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec if e.output.exists(_.name == "text") => e
+      }
+      (rows, textShuffles.size)
+    }
+    val wide = spark.read.parquet(s"$dir/wide")
+    assert(wide.rdd.getNumPartitions >= par)
+    val (wideHashes, wideShuffles) = hashed(wide)
+    assert(wideShuffles == 0, "an input split at least the default parallelism wide shuffled its text")
+    val one = spark.read.parquet(s"$dir/one")
+    assert(one.rdd.getNumPartitions == 1)
+    val (oneHashes, oneShuffles) = hashed(one)
+    assert(oneShuffles == 1, "a one-split input must still fan out")
+    assert(wideHashes == oneHashes && wideHashes.size == 64)
+  }
+
   test("minhash LSH candidates verify to the same pairs as exact ngram jaccard") {
     val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.6)
       .orderBy("a", "b").as[(Long, Long, Double)].collect()

@@ -142,6 +142,54 @@ class ProductQuantizerSpec extends AnyFunSuite {
     assert(probe() == current, "a legacy pqmeta must probe as the plain index it describes")
   }
 
+  test("the index stores what the in-memory encoders compute, row for row") {
+    import graft.operators.{Opq, VectorIndex}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    val (_, df) = fixture
+    val centroids = Similarity.kMeans(df, "vec_id", "embedding", c = 8, iters = 2)
+    val plain = ProductQuantizer.train(df, "vec_id", "embedding", m = 4, k = 16, iters = 2)
+    val res = VectorIndex.trainResidualPq(df, "vec_id", "embedding", centroids, m = 4, k = 16)
+    val opq = VectorIndex.trainResidualOpq(df, "vec_id", "embedding", centroids, m = 4, k = 16,
+      opqIters = 2)
+    def rows(d: DataFrame): Map[Long, (Seq[Byte], Float)] =
+      d.select("vec_id", "pq_code", "pq_norm").collect()
+        .map(r => r.getLong(0) -> (r.getSeq[Byte](1).toSeq, r.getFloat(2))).toMap
+    def stored(path: String) = rows(spark.read.parquet(s"$path/corpus"))
+    def tmp(tag: String) = java.nio.file.Files.createTempDirectory(s"graft-stored-$tag").toString
+    // residual indexes code v − c_b, and keep the raw vector's norm
+    val residuals = Similarity.assignBuckets(df, "vec_id", "embedding", centroids)
+      .select(col("vec_id"),
+        ProductQuantizer.residualCol(col("embedding"), col("bucket"), centroids).as("_res"))
+    def codesWithRawNorms(codes: DataFrame, norms: DataFrame) = {
+      val n = rows(norms)
+      rows(codes).map { case (id, (code, _)) => id -> (code, n(id)._2) }
+    }
+
+    val pathPlain = tmp("plain")
+    VectorIndex.writeIvfPq(df, "vec_id", "embedding", centroids, plain, pathPlain)
+    val wantPlain = rows(ProductQuantizer.encode(df, "vec_id", "embedding", plain))
+    assert(wantPlain.size == 320 && stored(pathPlain) == wantPlain)
+
+    val pathRes = tmp("res")
+    VectorIndex.writeIvfPq(df, "vec_id", "embedding", centroids, res, pathRes, residual = true)
+    assert(stored(pathRes) == codesWithRawNorms(
+      ProductQuantizer.encode(residuals, "vec_id", "_res", res),
+      ProductQuantizer.encode(df, "vec_id", "embedding", res)))
+
+    val wantOpq = codesWithRawNorms(Opq.encode(residuals, "vec_id", "_res", opq),
+      Opq.encode(df, "vec_id", "embedding", opq))
+    val pathOpq = tmp("opq")
+    VectorIndex.writeIvfPqOpq(df, "vec_id", "embedding", centroids, opq, pathOpq, residual = true)
+    assert(stored(pathOpq) == wantOpq)
+    // one append batch encodes from the sidecars alone, to the same rows
+    val pathApp = tmp("append")
+    VectorIndex.writeIvfPqOpq(df.where(col("vec_id") < 160), "vec_id", "embedding",
+      centroids, opq, pathApp, residual = true)
+    VectorIndex.appendIvfPq(df.where(col("vec_id") >= 160), "vec_id", "embedding", pathApp)
+    assert(stored(pathApp) == wantOpq)
+  }
+
   test("shortlist+rerank recall vs brute force on clustered vectors") {
     // ADC alone cannot rank inside a quantization cell (cluster members
     // collapse to one code tuple — measured recall@10 ~0.2 here), which is

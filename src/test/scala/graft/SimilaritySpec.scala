@@ -622,4 +622,43 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got == want, s"got=$got want=$want")
     assert(got.nonEmpty)
   }
+
+  test("kMeans keeps its caller's cache and leaves no cache of its own") {
+    import org.apache.spark.storage.StorageLevel
+    val rnd = new java.util.Random(3L)
+    val vecs = (0 until 100).map(i => (i.toLong, Seq.fill(8)(rnd.nextGaussian().toFloat)))
+    val cached = vecs.toDF("id", "vec").cache()
+    cached.count()
+    val level = cached.storageLevel
+    assert(level != StorageLevel.NONE)
+    val fromCached = Similarity.kMeans(cached, "id", "vec", c = 4, iters = 2)
+    assert(cached.storageLevel == level, "kMeans evicted its caller's cache entry")
+    cached.unpersist()
+
+    val fresh = vecs.toDF("id", "vec")
+    assert(Similarity.kMeans(fresh, "id", "vec", c = 4, iters = 2) == fromCached)
+    assert(fresh.select(col("id"), col("vec")).storageLevel == StorageLevel.NONE,
+      "kMeans left its own cache entry behind")
+  }
+
+  test("VectorIndex LSH: warm probes and appends read the meta sidecar in one job") {
+    import graft.Traced.traced
+    import graft.operators.VectorIndex
+    val emb = graft.core.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val q = emb.where(col("vec_id") === 0L)
+      .select("embedding").collect()(0).getSeq[Float](0).map(_.toDouble).toSeq
+    val path = java.nio.file.Files.createTempDirectory("graft-lshmeta").toString
+    VectorIndex.writeLsh(emb.where(col("vec_id") < 100), "vec_id", "embedding",
+      bitsPerTable = 3, tables = 4, seed = 7L, path = path)
+    def probe() = VectorIndex.lshTopK(spark, path, "vec_id", "embedding", q, k = 10,
+      excludeId = Some(0L)).collect().toSeq
+    val cold = probe()
+    val Trace(warm, probeJobs, _, _, _) = traced(probe())
+    assert(warm == cold)
+    val Trace(_, appendJobs, _, _, _) = traced(VectorIndex.appendLsh(
+      emb.where(col("vec_id") >= 100 && col("vec_id") < 150), "vec_id", "embedding", path))
+    info(s"warm lshTopK(...).collect(): $probeJobs jobs; appendLsh: $appendJobs jobs")
+    assert(probeJobs <= 4 && appendJobs <= 3,
+      s"warm probe ran $probeJobs jobs, append $appendJobs")
+  }
 }
