@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
-import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
-import org.apache.spark.sql.functions.sqrt
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.functions.{array_contains, sqrt}
 import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
@@ -203,6 +203,21 @@ final class CentroidTable private (val c: Int, val dim: Int, val flat: Array[Dou
     }
     bestB
   }
+
+  /** `vec − centroid(b)` in double, a null element of `vec` kept null;
+    * refuses a bucket outside `[0, c)` and a vector whose length is not
+    * `dim` by name. */
+  def residual(vec: ArrayData, b: Int, isFloat: Boolean): ArrayData = {
+    if (b < 0 || b >= c) throw new IllegalArgumentException(
+      s"centroid residual: bucket $b outside [0, $c)")
+    val n = vec.numElements()
+    if (n != dim) throw new IllegalArgumentException(
+      s"centroid residual: vector length $n != centroid dim $dim")
+    new GenericArrayData(Array.tabulate[Any](dim) { i =>
+      if (vec.isNullAt(i)) null
+      else (if (isFloat) vec.getFloat(i).toDouble else vec.getDouble(i)) - flat(b * dim + i)
+    })
+  }
 }
 
 object CentroidTable {
@@ -245,6 +260,38 @@ case class NearestCentroid(child: Expression, table: CentroidTable)
     copy(child = newChild)
 }
 
+/** `vec − centroid(bucket)` (array<double>) of a numeric array column and
+  * an int bucket column: one codegen node calling
+  * [[CentroidTable.residual]], the table held by reference; null when
+  * either input is. */
+case class CentroidResidual(left: Expression, right: Expression, table: CentroidTable)
+    extends BinaryExpression {
+
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "graft_centroid_residual"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (PqCodecCheck.arrayOk(left) && right.dataType == IntegerType)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires (array<float|double>, int), got " +
+        s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
+
+  override def nullSafeEval(vec: Any, bucket: Any): Any =
+    table.residual(vec.asInstanceOf[ArrayData], bucket.asInstanceOf[Int], PqCodecCheck.isFloat(left))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("centroids", table, classOf[CentroidTable].getName)
+    val f = PqCodecCheck.isFloat(left)
+    nullSafeCodeGen(ctx, ev, (vec, b) => s"${ev.value} = $ref.residual($vec, $b, $f);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
 /** A driver-computed double that generated code reads through a
   * reference, never inlines: the [[CentroidTable]] pattern for a scalar.
   * A `Literal` double is constant-folded into the generated source, so
@@ -282,6 +329,27 @@ private[graft] case class BoundLong(value: Long) extends LeafExpression {
   }
 }
 
+/** [[BoundDouble]] for a driver-side int list (a probe's bucket ids): an
+  * `array<int>` that generated code reads by reference, so every list
+  * shares one compiled class where an `isin` of literals compiles one per
+  * list. */
+private[graft] case class BoundInts(values: Seq[Int]) extends LeafExpression {
+
+  private lazy val array: ArrayData = ArrayData.toArrayData(values.toArray)
+
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_bound"
+
+  override def eval(input: InternalRow): Any = array
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = classOf[ArrayData].getName
+    val ref = ctx.addReferenceObj("bound", array, cls)
+    ev.copy(code = code"final $cls ${ev.value} = $ref;", isNull = FalseLiteral)
+  }
+}
+
 /** Column-API entry points for the vector math expressions. */
 object ArrayMath {
 
@@ -312,6 +380,11 @@ object ArrayMath {
   /** A driver-side long the generated code reads by reference
     * ([[BoundLong]]). */
   private[graft] def bound(v: Long): Column = ColumnShim.column(BoundLong(v))
+
+  /** `c` is one of `values` (null for a null `c`, as `isin`), with the
+    * list bound by reference ([[BoundInts]]). */
+  private[graft] def isIn(c: Column, values: Seq[Int]): Column =
+    array_contains(ColumnShim.column(BoundInts(values)), c)
 
   /** `array<double>` literal, typed explicitly: `typedLit` derives the same
     * type through Scala reflection on every call. */

@@ -2,14 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 
 /** Flattened product-quantization codebooks plus the tight argmin loops the
-  * PQ expressions below execute per row.
+  * PQ encode expression below and training's Lloyd rounds execute per row.
   *
   * The column-combinator formulation of PQ cell assignment (an
   * `argmax(greatest, coalesce(when...))` tree over m×k `graft_dot` columns)
@@ -17,12 +17,13 @@ import org.apache.spark.sql.types._
   * at index-build shapes (m=4..8, k=16..256) Janino spends multiple seconds
   * compiling the tree — a fixed cost per QUERY that dominated the measured
   * wall time of the PQ benchmarks, and on a 1000-executor cluster is paid
-  * once per executor too. These expressions collapse the whole assignment
+  * once per executor too. [[PqEncode]] collapses the whole assignment
   * to ONE codegen node whose generated body is a single call into
-  * [[PqBooks.nearest]]/[[PqBooks.encode]] — the codebooks ride along as a
+  * [[PqBooks.encode]] — the codebooks ride along as a
   * broadcast-by-reference object (`ctx.addReferenceObj`), the loop runs in
   * plain JVM arrays, and whole-stage codegen keeps fusing the surrounding
-  * projection.
+  * projection. Training's Lloyd rounds call [[PqBooks.nearest]] from
+  * their partition loop directly.
   *
   * Scoring math is IDENTICAL to the column formulation (and spec-pinned so):
   * cell = argmax_c (sv·c − |c|²/2) with a strict sequential-fold dot (the
@@ -90,39 +91,6 @@ private object PqCodecCheck {
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 }
 
-/** Cell assignment for ONE subvector under a runtime subspace index —
-  * the training-loop shape, where rows arrive exploded as (subspace,
-  * subvector). Replaces a coalesce-of-m-whens over m×k dot columns. */
-case class PqNearestCell(left: Expression, right: Expression, books: PqBooks)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_pq_cell"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (PqCodecCheck.arrayOk(left) && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<float|double>, int), got " +
-        s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
-
-  override def nullSafeEval(sv: Any, j: Any): Any =
-    books.nearest(j.asInstanceOf[Int], sv.asInstanceOf[ArrayData], 0,
-      PqCodecCheck.isFloat(left))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqBooks", books, classOf[PqBooks].getName)
-    val f = PqCodecCheck.isFloat(left)
-    nullSafeCodeGen(ctx, ev, (sv, j) =>
-      s"${ev.value} = $ref.nearest($j, $sv, 0, $f);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Full-vector PQ encoding: m cells in one pass over the concatenated
   * vector, no per-subspace `slice` columns. */
 case class PqEncode(child: Expression, books: PqBooks) extends UnaryExpression {
@@ -152,11 +120,6 @@ case class PqEncode(child: Expression, books: PqBooks) extends UnaryExpression {
 
 /** Column-API entry points for the PQ codec expressions. */
 object PqCodec {
-
-  /** Cell of `sv` in subspace `j` (int column) under `books`. */
-  def nearestCell(sv: Column, j: Column, books: PqBooks): Column =
-    ColumnShim.column(
-      PqNearestCell(ColumnShim.expression(sv), ColumnShim.expression(j), books))
 
   /** All m cells of full vector `vec` as array<tinyint>. */
   def encode(vec: Column, books: PqBooks): Column =

@@ -1,8 +1,9 @@
 package graft.operators
 
-import graft.functions.{ArrayMath, PqBooks, PqCodec, RotMat}
+import graft.functions.{ArrayMath, CentroidResidual, CentroidTable, PqBooks, PqCodec, RotMat}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
 
 /** Product quantization (Jégou et al., "Product Quantization for Nearest
   * Neighbor Search", TPAMI 2011) — the memory-side ANN scale path.
@@ -21,10 +22,12 @@ import org.apache.spark.sql.functions._
   * first-k-by-id init, fixed Lloyd rounds, empty cells keep their
   * centroid) but runs ALL `m` subspace k-means in the same jobs: the
   * corpus explodes once into (row, subspace, subvector) and every Lloyd
-  * round is ONE argmin projection + ONE (subspace, cell)-keyed aggregate —
-  * map-side combining leaves m×k×dsub doubles per partition on the wire,
-  * regardless of corpus size. L2 cells (the PQ objective), via the
-  * |v−c|² = |c|²−2v·c expansion so each candidate costs one codegen'd dot.
+  * round is ONE job through kMeans' reduction ([[Similarity.lloydSums]]):
+  * each partition assigns and sums its subvectors into m×k×dsub doubles,
+  * regardless of corpus size, and a shuffle keyed by (subspace, cell)
+  * merges them on the executors, so m×k×dsub doubles reach the driver.
+  * L2 cells (the PQ objective), via the |v−c|² = |c|²−2v·c expansion so
+  * each candidate costs one dot.
   *
   * Approximate by construction; recall against [[Similarity.bruteTopK]]
   * is spec-measured (clustered fixture pinned, corpus measured), like the
@@ -65,11 +68,15 @@ object ProductQuantizer {
   /** Train m×k subspace codebooks with `iters` Lloyd rounds.
     *
     * One cached (row, subspace, subvector) explode feeds every round; a
-    * round is one projection (m×k dots per row — the PQ training cost) and
-    * one hash aggregate keyed by (subspace, cell) whose map-side partials
-    * bound the shuffle at m×k×dsub doubles per partition. Collected results
-    * are m×k×dsub doubles — driver-trivial at any corpus size. The
-    * dimension is the seed rows' (the first k by id). */
+    * round is ONE job ([[Similarity.lloydSums]] keyed by (subspace, cell)):
+    * m×k dots per row — the PQ training cost — through the
+    * [[graft.functions.PqBooks]] kernel, and m×k×dsub doubles of partial
+    * sums per partition, merged on the executors. No round reads the
+    * explode's `_id`, but the fan-out's round-robin exchange sorts rows by
+    * their hash, `_id` included, before dealing them out: without it
+    * subvectors change partitions, and double sums (the residual
+    * trainer's) change their order of addition. The dimension is the
+    * seed rows' (the first k by id). */
   def train(
       df: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int = 16, iters: Int = 2): PqModel = {
@@ -88,20 +95,18 @@ object ProductQuantizer {
         (0 until m).map(j => first.toSeq.map(v => v.slice(j * dsub, (j + 1) * dsub).toSeq))
       (1 to iters).foreach { _ =>
         val bk = flatten(m, dsub, books)
-        val sums = subRows
-          .select(col("_j"), PqCodec.nearestCell(col("_sv"), col("_j"), bk).as("_cell"),
-            col("_sv"))
-          .groupBy("_j", "_cell")
-          .agg(count(lit(1)).as("_n"),
-            array((0 until dsub).map(i =>
-              sum(col("_sv").getItem(i).cast("double"))): _*).as("_s"))
-          .collect()
-        val next = books.map(_.toArray).toArray
-        sums.foreach { r =>
-          val (j, c, n) = (r.getInt(0), r.getInt(1), r.getLong(2).toDouble)
-          next(j)(c) = r.getSeq[Double](3).map(_ / n).toSeq
+        val (n, s) = Similarity.lloydSums(subRows.select(col("_sv"), col("_j")), m * k, dsub) {
+          (row, sv, f) =>
+            val j = row.getInt(1)
+            j * k + bk.nearest(j, sv, 0, f)
         }
-        books = next.map(_.toSeq).toSeq
+        books = books.zipWithIndex.map { case (book, j) =>
+          book.indices.map { c =>
+            val cell = j * k + c
+            if (n(cell) == 0) book(c)
+            else (0 until dsub).map(i => s(cell * dsub + i) / n(cell).toDouble)
+          }
+        }
       }
       PqModel(m, dsub, books)
     } finally { subRows.unpersist(); () }
@@ -124,11 +129,14 @@ object ProductQuantizer {
     * quantizes the (much smaller) within-bucket offsets instead of
     * absolute positions — on clustered data plain PQ spends its codes
     * re-stating the cluster and collapses within it, exactly where the
-    * search happens. Pure projection (the C×dim centroid table is one
-    * literal), zero shuffles. */
+    * search happens. Pure projection, zero shuffles: one codegen node
+    * reading the C×dim centroids by reference
+    * ([[graft.functions.CentroidTable]]), so a new centroid set compiles
+    * no class. A vector whose length is not the centroids' is refused by
+    * name. */
   def residualCol(vecCol: Column, bucketCol: Column, centroids: Seq[Seq[Double]]): Column =
-    zip_with(vecCol, element_at(ArrayMath.vecsLit(centroids), bucketCol + 1),
-      (a, b) => a.cast("double") - b)
+    ColumnShim.column(CentroidResidual(ColumnShim.expression(vecCol),
+      ColumnShim.expression(bucketCol.cast("int")), CentroidTable(centroids)))
 
   /** The PQ row encoding every encoder and index writer shares:
     * `pq_code` of `vec` — of its residual against `centroids` by

@@ -1,8 +1,11 @@
 package graft.operators
 
-import graft.functions.ArrayMath
+import graft.functions.{ArrayMath, CentroidTable}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 import org.apache.spark.storage.StorageLevel
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -76,18 +79,21 @@ object Similarity {
   /** Deterministic k-means-lite (Lloyd) centroid training for IVF.
     *
     * Init is the first C vectors by id (deterministic, no RNG); each round
-    * assigns every vector through [[assignBuckets]] and recomputes
-    * centroids as per-bucket means — ONE groupBy shuffle per round carrying
-    * C×dim doubles per partition after map-side partial aggregation. The
-    * assignment is one codegen node at any C, so this one loop serves
-    * every C. Rounds are few and fixed (the centroids only gate recall, not
-    * correctness). Empty buckets keep their previous centroid. The
-    * dimension is the init rows'. */
+    * is ONE Spark job, [[lloydSums]]: every partition assigns its vectors
+    * through the [[graft.functions.CentroidTable]] kernel [[assignBuckets]]
+    * runs and folds a (count, sum) per bucket, C×dim doubles at most; a
+    * shuffle keyed by bucket merges the partials on the executors, and
+    * the driver turns the C merged sums into per-bucket means. No
+    * aggregate to compile, so this one loop serves every C. Rounds are
+    * few and fixed (the centroids only gate recall, not correctness).
+    * Empty buckets keep their previous centroid. The dimension is the init
+    * rows'. `kMeans(iters = 2)` runs 3 jobs: the init collect, which also
+    * fills the loop's cache, and one per round. */
   def kMeans(
       df: DataFrame, idCol: String, vecCol: String,
       c: Int, iters: Int): Seq[Seq[Double]] = {
     require(c > 0, s"kMeans: c must be > 0, got $c")
-    // Lloyd re-scans the corpus every round (init + one agg per
+    // Lloyd re-scans the corpus every round (init + one pass per
     // iteration): cache the two columns it reads for the loop's lifetime —
     // the classic iterative-ML persist — and release before returning.
     // A caller's frame cached with exactly these columns is the same cache
@@ -100,23 +106,87 @@ object Similarity {
         sampleVectors(vecs.orderBy(col(idCol)).limit(c).select(col(vecCol)), "kMeans")
       var centroids: Seq[Seq[Double]] = init.map(_.toSeq).toSeq
       (1 to iters).foreach { _ =>
-        val sums = assignBuckets(vecs, idCol, vecCol, centroids)
-          .select(col("bucket"), transform(col(vecCol), x => x.cast("double")).as("_v"))
-          .groupBy("bucket")
-          .agg(
-            count(lit(1)).as("_n"),
-            array((0 until dim).map(i => sum(col("_v").getItem(i))): _*).as("_s"))
-          .collect()
-        val next = centroids.toArray
-        sums.foreach { r =>
-          val b = r.getInt(0)
-          val n = r.getLong(1).toDouble
-          next(b) = r.getSeq[Double](2).map(_ / n).toSeq
-        }
-        centroids = next.toSeq
+        val table = CentroidTable(centroids)
+        val (n, s) = lloydSums(vecs.select(col(vecCol)), c, dim)((_, v, f) => table.nearest(v, f))
+        centroids = centroids.indices.map(b =>
+          if (n(b) == 0) centroids(b) else (0 until dim).map(i => s(b * dim + i) / n(b).toDouble))
       }
       centroids
     } finally { if (owned) vecs.unpersist(); () }
+  }
+
+  /** One Lloyd round's per-cell `(count, sum vector)` over `rows`, whose
+    * column 0 is a float or double vector of length `width`: ONE Spark job,
+    * shared by [[kMeans]] and [[ProductQuantizer.train]].
+    * `cell(row, vec, isFloat)` picks a row's cell in `[0, cells)`; a null
+    * vector is skipped. Each partition reads its vectors as primitive
+    * floats or doubles and folds them in row order, from 0.0, into
+    * `cells × width` sums, then emits only the cells it touched, keyed by
+    * (cell, partition index). A shuffle routes each cell's partials to one
+    * reducer, sorted by that key, which adds them in partition-index order,
+    * from 0.0. These are the bits of a `groupBy(cell)` sum aggregate whose
+    * shuffle delivers its map-side partials in map order, whatever order
+    * the blocks actually arrive in. The partials merge on the executors:
+    * the driver receives at most `cells × width` sums, however many
+    * partitions the input has. Sums are flat: `sums(c * width + i)`. */
+  private[graft] def lloydSums(rows: DataFrame, cells: Int, width: Int)(
+      cell: (InternalRow, ArrayData, Boolean) => Int): (Array[Long], Array[Double]) = {
+    val isFloat = rows.schema.head.dataType match {
+      case ArrayType(FloatType, _) => true
+      case ArrayType(DoubleType, _) => false
+      case t => throw new IllegalArgumentException(
+        s"Lloyd round: vectors must be array<float|double>, got ${t.catalogString}")
+    }
+    val input = rows.queryExecution.toRdd
+    val partials = input.mapPartitionsWithIndex { (p, it) =>
+      val n = new Array[Long](cells)
+      val s = new Array[Double](cells * width)
+      it.foreach { row =>
+        if (!row.isNullAt(0)) {
+          val v = row.getArray(0)
+          require(v.numElements() == width,
+            s"Lloyd round: vector length ${v.numElements()} != $width")
+          val c = cell(row, v, isFloat)
+          n(c) += 1
+          val base = c * width
+          var i = 0
+          while (i < width) {
+            if (!v.isNullAt(i)) s(base + i) += (if (isFloat) v.getFloat(i).toDouble else v.getDouble(i))
+            i += 1
+          }
+        }
+      }
+      Iterator.range(0, cells).filter(n(_) > 0).map(c =>
+        ((c, p), (n(c), java.util.Arrays.copyOfRange(s, c * width, (c + 1) * width))))
+    }
+    val merged = partials
+      .repartitionAndSortWithinPartitions(new CellPartitioner(math.min(cells, input.getNumPartitions)))
+      .mapPartitions { it =>
+        val in = it.buffered
+        new Iterator[(Int, Long, Array[Double])] {
+          override def hasNext: Boolean = in.hasNext
+          override def next(): (Int, Long, Array[Double]) = {
+            val c = in.head._1._1
+            var n = 0L
+            val s = new Array[Double](width)
+            while (in.hasNext && in.head._1._1 == c) {
+              val (pn, ps) = in.next()._2
+              n += pn
+              var i = 0
+              while (i < width) { s(i) += ps(i); i += 1 }
+            }
+            (c, n, s)
+          }
+        }
+      }
+      .collect()
+    val n = new Array[Long](cells)
+    val s = new Array[Double](cells * width)
+    merged.foreach { case (c, cn, cs) =>
+      n(c) = cn
+      System.arraycopy(cs, 0, s, c * width, width)
+    }
+    (n, s)
   }
 
   /** Vector dimensionality from the first row — a loud, named refusal on
@@ -164,14 +234,16 @@ object Similarity {
     * for ad-hoc queries over data that is already in memory or queried once;
     * for repeated queries at scale use [[VectorIndex.writeIvf]] +
     * [[VectorIndex.ivfTopK]], where the probe reads only nprobe
-    * bucket-partitioned directories. */
+    * bucket-partitioned directories. The probed-bucket list is bound by
+    * reference ([[ArrayMath.isIn]]), like the query norm, so a warm probe
+    * with a new query compiles no class. */
   def ivfTopK(
       df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]], query: Seq[Double],
       nprobe: Int, k: Int, excludeId: Option[Long] = None): DataFrame = {
     val probe = probeBuckets(centroids, query, nprobe)
     val buckets = assignBuckets(df, idCol, vecCol, centroids)
-      .where(col("bucket").isin(probe: _*))
+      .where(ArrayMath.isIn(col("bucket"), probe))
     bruteTopK(buckets, idCol, vecCol, query, k, excludeId)
   }
 
@@ -240,7 +312,9 @@ object Similarity {
     * `b` of table `t`) instead of seed-derived — the exact same bucketing
     * ([[lshBucket]]), multiprobe ([[multiprobeBuckets]]) and re-rank
     * machinery, exposed so a caller (q158's full-oracle gate) can plant
-    * engine-replicable planes. */
+    * engine-replicable planes. Each table's probed-bucket list is bound
+    * by reference ([[ArrayMath.isIn]]), so a warm probe with a new query
+    * compiles no class. */
   def lshTopKPlanes(
       df: DataFrame, idCol: String, vecCol: String,
       query: Seq[Double], byTable: Seq[Seq[Seq[Double]]], k: Int,
@@ -253,8 +327,15 @@ object Similarity {
       s"nprobe must be in [1, bitsPerTable + 1 = ${bitsPerTable + 1}]")
     val candidateCond = byTable.map { planes =>
       val probes = multiprobeBuckets(planes, query, nprobe)
-      lshBucket(col(vecCol), planes).isin(probes: _*)
+      ArrayMath.isIn(lshBucket(col(vecCol), planes), probes)
     }.reduce(_ || _)
     bruteTopK(df.where(candidateCond), idCol, vecCol, query, k, excludeId)
   }
+}
+
+/** Routes a Lloyd partial keyed by (cell, partition index) by its cell
+  * alone, so every partial of a cell meets on one reducer. */
+private final class CellPartitioner(parts: Int) extends org.apache.spark.Partitioner {
+  override def numPartitions: Int = math.max(1, parts)
+  override def getPartition(key: Any): Int = key.asInstanceOf[(Int, Int)]._1 % numPartitions
 }

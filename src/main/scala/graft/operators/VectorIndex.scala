@@ -1,7 +1,12 @@
 package graft.operators
 
 import graft.functions.RotMat
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,9 +32,11 @@ import org.apache.spark.sql.types._
   * per call: each reader decodes its sidecar once per sidecar VERSION and
   * memoizes the result by file identity — the (name, mtime, length) of
   * every file in the sidecar dir, checked with one `listStatus` on every
-  * call. Spark part-file names carry a per-write UUID, so any rewrite of a
-  * sidecar misses the memo; appends touch only `corpus/bucket=*`, whose
-  * files are listed afresh by every probe.
+  * call. The driver writes each sidecar itself, with no Spark job
+  * ([[writeSidecar]]): one parquet file, renamed into place from a hidden
+  * temp name, under a fresh `part-00000-<uuid>` name on every write, so
+  * any rewrite of a sidecar misses the memo; appends touch only
+  * `corpus/bucket=*`, whose files are listed afresh by every probe.
   *
   * Each layout decision lives in one place. Every corpus write (build,
   * append, [[compact]], repair) goes through one partitioned writer, and
@@ -110,12 +117,12 @@ object VectorIndex {
   private def swapCorpus(rows: DataFrame, path: String, verb: String): Unit = {
     val staged = s"$path/corpus_$verb"
     writeCorpus(rows, "overwrite", staged)
-    val live = new org.apache.hadoop.fs.Path(s"$path/corpus")
+    val live = new Path(s"$path/corpus")
     val fs = live.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(s"$path/corpus_old")
+    val old = new Path(s"$path/corpus_old")
     fs.delete(old, true)
     require(fs.rename(live, old), s"$verb: could not stage out $live")
-    require(fs.rename(new org.apache.hadoop.fs.Path(staged), live),
+    require(fs.rename(new Path(staged), live),
       s"$verb: could not swap in $staged (live data is at $old)")
     fs.delete(old, true)
     ()
@@ -359,7 +366,7 @@ object VectorIndex {
     })
 
   private def deleteOpqMeta(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/opqmeta")
+    val p = new Path(s"$path/opqmeta")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(p, true)
     ()
@@ -370,7 +377,7 @@ object VectorIndex {
     * before the first sidecar/corpus mutation until the matched pair is
     * fully on disk (both the OPQ and the plain-over-OPQ rewrite paths). */
   private def opqPendingPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_opq_pending")
+    new Path(s"$path/_opq_pending")
 
   private def markOpqPending(spark: SparkSession, path: String): Unit = {
     val p = opqPendingPath(path)
@@ -456,7 +463,7 @@ object VectorIndex {
     // re-encoding those would republish a hole-y index as "sound" (r10
     // ADVICE). The _SUCCESS marker is the committer's own completeness
     // receipt; nothing short of a finished corpus job writes it.
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/corpus/_SUCCESS")),
+    require(fs.exists(new Path(s"$path/corpus/_SUCCESS")),
       s"$path: corpus has no _SUCCESS commit marker — the crashed publish " +
         "died inside its corpus write, so the rows on disk may be a " +
         "partial set repair would silently bless. Re-run the original " +
@@ -518,11 +525,30 @@ object VectorIndex {
     StructField("dim", IntegerType, nullable = false)))
 
   /** `rows` as the one-file sidecar `dir`, under the writer's fixed
-    * `schema`. */
+    * `schema`, written by the driver with no Spark job: Spark's own
+    * parquet output writer, as a write task would run it, so the bytes
+    * read back as a job-written file's do. The file is written under a
+    * hidden name (a leading `.`, which readers skip), every other entry of
+    * `dir` is then removed and the file renamed to a fresh
+    * `part-00000-<uuid>` name: a half-written file is never read, and each
+    * rewrite changes the dir's listing, the memo's key. */
   private def writeSidecar(
-      spark: SparkSession, dir: String, schema: StructType, rows: Seq[Row]): Unit =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .write.mode("overwrite").parquet(dir)
+      spark: SparkSession, dir: String, schema: StructType, rows: Seq[Row]): Unit = {
+    // the session's Hadoop conf, `spark.hadoop.*` settings included: the
+    // one `DataFrameWriter` and `readSidecar`'s `spark.read` use
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val files = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val name = s"part-00000-${java.util.UUID.randomUUID}-c000${files.getFileExtension(ctx)}"
+    val d = new Path(dir)
+    val (tmp, out) = (new Path(d, s".$name"), new Path(d, name))
+    val toRow = CatalystTypeConverters.createToCatalystConverter(schema)
+    val w = files.newInstance(tmp.toString, schema, ctx)
+    try rows.foreach(r => w.write(toRow(r).asInstanceOf[InternalRow])) finally w.close()
+    val fs = d.getFileSystem(job.getConfiguration)
+    fs.listStatus(d).map(_.getPath).filter(_.getName != tmp.getName).foreach(fs.delete(_, true))
+    require(fs.rename(tmp, out), s"sidecar: could not rename $tmp to $out")
+  }
 
   /** A sidecar's rows in file order (callers sort on the driver: a
     * handful of rows needs no sort job). Read nullable, so a column an
@@ -536,7 +562,7 @@ object VectorIndex {
   /** Every entry of `dir` (data files, checksums, commit markers) by
     * identity; empty when the dir does not exist. */
   private def listing(spark: SparkSession, dir: String): Seq[FileId] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try fs.listStatus(p).toSeq
       .map(s => (s.getPath.getName, s.getModificationTime, s.getLen)).sorted

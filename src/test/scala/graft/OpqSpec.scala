@@ -475,6 +475,112 @@ class OpqSpec extends AnyFunSuite {
     assert(probeOf(path, 21L) == healthy)
   }
 
+  /** The `spark.sql.execution.id` of every job `f` starts (None for a
+    * job outside any SQL execution). */
+  private def jobExecutions(f: => Unit): Seq[Option[String]] = {
+    import org.apache.spark.graftshim.ListenerShim
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val ids = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        ids.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
+        ()
+      }
+    }
+    ListenerShim.drain(sc)
+    sc.addSparkListener(listener)
+    try { f; ListenerShim.drain(sc) } finally sc.removeSparkListener(listener)
+    ids.asScala.toSeq
+  }
+
+  test("sidecars are written by the driver: no job, read back as job-written files") {
+    import graft.operators.VectorIndex
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    val (_, df) = residualFixture
+    val (centroids, opq) = residualModels
+    val path = tempIndex("sidecar")
+    // every job of a publish belongs to one SQL execution: the corpus write
+    val executions = jobExecutions(
+      VectorIndex.writeIvfPqOpq(df, "vec_id", "embedding", centroids, opq, path, residual = true))
+    info(s"writeIvfPqOpq: ${executions.size} jobs in executions ${executions.distinct}")
+    assert(executions.nonEmpty && executions.forall(_.isDefined) && executions.distinct.size == 1,
+      s"publish jobs by SQL execution: $executions")
+    // the first probe after a publish reads the three sidecars; a warm one
+    // reads none
+    val (cold, warm) = (traced(probeOf(path, 21L)), traced(probeOf(path, 21L)))
+    def reads(t: graft.Trace[_]) = t.scanned.map(_.stripPrefix(path))
+    info(s"first probe after the publish: ${cold.jobs} jobs reading ${reads(cold)}; " +
+      s"warm probe: ${warm.jobs} jobs reading ${reads(warm)}")
+    assert(traced(VectorIndex.writeCentroidMeta(spark, centroids, path)).jobs == 0)
+    val lsh = tempIndex("sidecar-lsh")
+    // the dimension probe and the corpus write; the meta write adds none
+    val lshExecutions = jobExecutions(
+      VectorIndex.writeLsh(df, "vec_id", "embedding", bitsPerTable = 3, tables = 2, seed = 9L, lsh))
+    assert(lshExecutions.forall(_.isDefined) && lshExecutions.distinct.size == 2,
+      s"writeLsh jobs by SQL execution: $lshExecutions")
+
+    // each kind, read through spark.read under its fixed schema and with
+    // the schema its footer carries, equals the same rows written by a
+    // Spark job
+    val kinds: Seq[(String, StructType, Seq[Row])] = Seq(
+      (s"$path/meta", StructType(Seq(
+        StructField("bucket", IntegerType, nullable = false),
+        StructField("centroid", ArrayType(DoubleType), nullable = false))),
+        centroids.zipWithIndex.map { case (c, i) => Row(i, c) }),
+      (s"$path/pqmeta", StructType(Seq(
+        StructField("subspace", IntegerType, nullable = false),
+        StructField("cell", IntegerType, nullable = false),
+        StructField("centroid", ArrayType(DoubleType), nullable = false),
+        StructField("residual", BooleanType, nullable = false))),
+        for {
+          (book, j) <- opq.pq.books.zipWithIndex
+          (cent, c) <- book.zipWithIndex
+        } yield Row(j, c, cent, true)),
+      (s"$path/opqmeta", StructType(Seq(
+        StructField("row", IntegerType, nullable = false),
+        StructField("coeffs", ArrayType(DoubleType), nullable = false))),
+        (0 until opq.d).map(r => Row(r, opq.rotFlat.slice(r * opq.d, (r + 1) * opq.d).toSeq))),
+      (s"$lsh/meta", StructType(Seq(
+        StructField("bits_per_table", IntegerType, nullable = false),
+        StructField("tables", IntegerType, nullable = false),
+        StructField("seed", LongType, nullable = false),
+        StructField("dim", IntegerType, nullable = false))),
+        Seq(Row(3, 2, 9L, 64))))
+    def rows(d: DataFrame): Seq[Row] = d.collect().toSeq.sortBy(_.getInt(0))
+    kinds.foreach { case (dir, schema, want) =>
+      val byJob = tempIndex("sidecar-job")
+      spark.createDataFrame(spark.sparkContext.parallelize(want, 1), schema)
+        .write.mode("overwrite").parquet(byJob)
+      val (fixed, footer, job) = (spark.read.schema(schema).parquet(dir),
+        spark.read.parquet(dir), spark.read.parquet(byJob))
+      assert(rows(fixed) == want, dir)
+      assert(footer.schema == job.schema, s"$dir: ${footer.schema} vs ${job.schema}")
+      assert(rows(footer) == rows(job), dir)
+      val parts = new java.io.File(dir).list().filter(_.startsWith("part-"))
+      assert(parts.length == 1 && parts.head.endsWith(".snappy.parquet"), parts.mkString(", "))
+    }
+
+    // a leftover hidden temp file (a crashed write's) is invisible to
+    // readers and probes, and the next write of that sidecar removes it
+    val meta = new java.io.File(s"$path/meta")
+    val before = meta.list().filter(_.startsWith("part-")).toSeq
+    val leftover = new java.io.File(meta, s".part-00000-${java.util.UUID.randomUUID}-c000.snappy.parquet")
+    java.nio.file.Files.write(leftover.toPath, "torn".getBytes)
+    val healthy = probeOf(path, 21L)
+    assert(rows(spark.read.parquet(meta.toString)) == kinds.head._3)
+    assert(VectorIndex.readIvfCentroids(spark, path) == centroids)
+    assert(probeOf(path, 21L) == healthy)
+    VectorIndex.writeCentroidMeta(spark, centroids, path)
+    val after = meta.list().toSeq
+    assert(!leftover.exists(), s"leftover kept: $after")
+    assert(after.count(_.startsWith("part-")) == 1 && !after.exists(before.contains),
+      s"a rewrite must take a fresh part name: $before -> $after")
+    assert(probeOf(path, 21L) == healthy)
+  }
+
   // ---------------------------------------------------- training cost
   // The trainers fit on their bounded sample alone: LAPACK reached through
   // netlib with breeze's calls (breeze is the test-side reference), the

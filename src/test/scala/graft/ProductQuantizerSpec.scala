@@ -304,16 +304,15 @@ class ProductQuantizerSpec extends AnyFunSuite {
       assert(code == want, s"v=$v got=$code want=$want")
     }
     assert(got.last == Seq[Byte](1, 1), "tie must resolve to the lowest cell index")
-    // Runtime-j shape (the training loop's expression): same cells.
-    val subRows = vecs.zipWithIndex.flatMap { case (v, r) =>
-      (0 until 2).map(j => (r, j, v.slice(j * 2, (j + 1) * 2)))
-    }
-    val gotJ = subRows.toDF("r", "_j", "_sv")
-      .select(col("r"), col("_j"),
-        graft.functions.PqCodec.nearestCell(col("_sv"), col("_j"), model.toBooks).as("c"))
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getInt(2)).toMap
-    subRows.foreach { case (r, j, sv) =>
-      assert(gotJ((r, j)) == cell(j, sv.map(_.toDouble)), s"row=$r j=$j")
+    // Runtime-j shape (the training loop's kernel call, one subvector
+    // under a subspace index it reads per row): same cells.
+    val flat = model.toBooks
+    vecs.zipWithIndex.foreach { case (v, r) =>
+      (0 until 2).foreach { j =>
+        val sv = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v.slice(j * 2, (j + 1) * 2).toArray)
+        assert(flat.nearest(j, sv, 0, isFloat = true) == cell(j, v.slice(j * 2, (j + 1) * 2).map(_.toDouble)),
+          s"row=$r j=$j")
+      }
     }
   }
 
@@ -413,6 +412,40 @@ class ProductQuantizerSpec extends AnyFunSuite {
     }
     assert(compiledExcluding.forall(_._2 == 0),
       s"classes compiled by two warm probes with new excluded ids: $compiledExcluding")
+    // the unindexed probes bind their probed-bucket lists as well: a new
+    // query's buckets compile no class, and the rows, ties included, are
+    // those of the same plan with each list an `isin` of literals
+    import graft.functions.BoundInts
+    import org.apache.spark.sql.catalyst.expressions.{ArrayContains, In}
+    def isinForm(probe: DataFrame): DataFrame =
+      ColumnShim.ofRows(spark, probe.queryExecution.analyzed.transformAllExpressions {
+        case ArrayContains(BoundInts(vs), c) => In(c, vs.map(v => Literal(v)))
+      })
+    val unindexed: Seq[(String, Seq[Double] => DataFrame)] = Seq(
+      "Similarity.ivfTopK" -> (q => Similarity.ivfTopK(df, "vec_id", "embedding", centroids, q,
+        nprobe = 3, k = 10)),
+      "Similarity.lshTopK" -> (q => Similarity.lshTopK(df, "vec_id", "embedding", q,
+        bitsPerTable = 4, tables = 3, seed = 5L, k = 10, nprobe = 2)))
+    val compiledUnindexed = unindexed.map { case (name, probe) =>
+      probe(queries.head).collect()
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val warm = queries.tail.map { q =>
+        val p = probe(q)
+        (p, p.collect())
+      }
+      val n = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      warm.foreach { case (p, rows) =>
+        val literal = isinForm(p)
+        assert(literal.queryExecution.analyzed.collect { case n => n.expressions }.flatten
+          .exists(_.exists(_.isInstanceOf[In])),
+          s"$name: no bound bucket list in ${p.queryExecution.analyzed}")
+        assert(rows.length == 10, s"$name: ${rows.length} rows")
+        assert(rows.toSeq == literal.collect().toSeq, s"$name: rows differ from the isin form")
+      }
+      name -> n
+    }
+    assert(compiledUnindexed.forall(_._2 == 0),
+      s"classes compiled by two warm unindexed probes: $compiledUnindexed")
     // unrounded too: the bound norm is the folded one, bit for bit
     queries.foreach { q =>
       val both = df.select(Similarity.cosineToQuery(col("embedding"), q),

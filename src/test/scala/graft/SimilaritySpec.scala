@@ -83,6 +83,76 @@ class SimilaritySpec extends AnyFunSuite {
     centroids.map(_.toSeq).toSeq
   }
 
+  /** The `groupBy` aggregate a Lloyd round of `kMeans` ran before its
+    * one-job reduction, kept as a reference model: per-bucket
+    * `count` and one `sum` per dimension over the cached `(id, vec)`
+    * select, the means collected, empty buckets keep their centroid. */
+  private def aggregateKMeans(
+      df: DataFrame, idCol: String, vecCol: String, c: Int, iters: Int): Seq[Seq[Double]] = {
+    val vecs = df.select(col(idCol), col(vecCol)).cache()
+    try {
+      val (init, dim) =
+        Similarity.sampleVectors(vecs.orderBy(col(idCol)).limit(c).select(col(vecCol)), "kMeans")
+      var centroids: Seq[Seq[Double]] = init.map(_.toSeq).toSeq
+      (1 to iters).foreach { _ =>
+        val sums = Similarity.assignBuckets(vecs, idCol, vecCol, centroids)
+          .select(col("bucket"), transform(col(vecCol), x => x.cast("double")).as("_v"))
+          .groupBy("bucket")
+          .agg(count(lit(1)).as("_n"),
+            array((0 until dim).map(i => sum(col("_v").getItem(i))): _*).as("_s"))
+          .collect()
+        val next = centroids.toArray
+        sums.foreach { r =>
+          next(r.getInt(0)) = r.getSeq[Double](2).map(_ / r.getLong(1).toDouble).toSeq
+        }
+        centroids = next.toSeq
+      }
+      centroids
+    } finally { vecs.unpersist(); () }
+  }
+
+  /** `ProductQuantizer.train`'s aggregate form, the same way: the cached
+    * `(id, subspace, subvector)` explode, each subvector's cell from the
+    * codebook kernel, one `(subspace, cell)`-keyed `count` and per-dimension
+    * `sum` per round. */
+  private def aggregateTrain(
+      df: DataFrame, idCol: String, vecCol: String, m: Int, k: Int, iters: Int)
+      : graft.operators.ProductQuantizer.PqModel = {
+    import graft.operators.ProductQuantizer.PqModel
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    val (first, dim) = Similarity.sampleVectors(
+      df.orderBy(col(idCol)).limit(k).select(col(vecCol)), "ProductQuantizer.train")
+    val dsub = dim / m
+    val subRows = graft.core.Par.fanOut(
+      df.select(col(idCol).as("_id"),
+        posexplode(array((0 until m).map(j =>
+          slice(col(vecCol), j * dsub + 1, dsub)): _*)).as(Seq("_j", "_sv"))))
+      .cache()
+    try {
+      var books: Seq[Seq[Seq[Double]]] =
+        (0 until m).map(j => first.toSeq.map(v => v.slice(j * dsub, (j + 1) * dsub).toSeq))
+      (1 to iters).foreach { _ =>
+        val bk = PqModel(m, dsub, books).toBooks
+        val cell = udf((j: Int, sv: Seq[Double]) =>
+          bk.nearest(j, ArrayData.toArrayData(sv.toArray), 0, false))
+        val sums = subRows
+          .select(col("_j"), cell(col("_j"), col("_sv").cast("array<double>")).as("_cell"),
+            col("_sv"))
+          .groupBy("_j", "_cell")
+          .agg(count(lit(1)).as("_n"),
+            array((0 until dsub).map(i =>
+              sum(col("_sv").getItem(i).cast("double"))): _*).as("_s"))
+          .collect()
+        val next = books.map(_.toArray).toArray
+        sums.foreach { r =>
+          next(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](3).map(_ / r.getLong(2).toDouble).toSeq
+        }
+        books = next.map(_.toSeq).toSeq
+      }
+      PqModel(m, dsub, books)
+    } finally { subRows.unpersist(); () }
+  }
+
   /** Whether `e` or any of its causes carries `text` in its message. */
   private def named(e: Throwable, text: String): Boolean =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
@@ -660,5 +730,100 @@ class SimilaritySpec extends AnyFunSuite {
     info(s"warm lshTopK(...).collect(): $probeJobs jobs; appendLsh: $appendJobs jobs")
     assert(probeJobs <= 4 && appendJobs <= 3,
       s"warm probe ran $probeJobs jobs, append $appendJobs")
+  }
+
+  test("the Lloyd reduction keeps the aggregate's bits: kMeans and PQ train, jobs") {
+    import graft.Traced.traced
+    import graft.operators.ProductQuantizer
+    def bits(xs: Seq[Seq[Double]]): Seq[Seq[Long]] =
+      xs.map(_.map(java.lang.Double.doubleToRawLongBits))
+    val rnd = new java.util.Random(41L)
+    val centers = IndexedSeq.fill(8)(Array.fill(32)(rnd.nextGaussian()))
+    val rows = (0 until 600).map { i =>
+      (i.toLong, centers(rnd.nextInt(8)).map(x => (x + 0.3 * rnd.nextGaussian()).toFloat).toSeq)
+    }
+    val local = rows.toDF("id", "vec")
+    def parquet(parts: Int): DataFrame = {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-lloyd-$parts").toString
+      local.repartition(parts).write.mode("overwrite").parquet(dir)
+      val df = spark.read.parquet(dir)
+      assert(df.rdd.getNumPartitions == parts)
+      df
+    }
+    val inputs = Seq("local" -> local, "parquet x1" -> parquet(1), "parquet x4" -> parquet(4))
+    inputs.foreach { case (what, df) =>
+      for ((c, iters) <- Seq(8 -> 2, 16 -> 3)) {
+        assert(bits(Similarity.kMeans(df, "id", "vec", c, iters)) ==
+          bits(aggregateKMeans(df, "id", "vec", c, iters)), s"kMeans c = $c on $what")
+      }
+      for ((m, k) <- Seq(4 -> 16, 8 -> 8)) {
+        val got = ProductQuantizer.train(df, "id", "vec", m, k, iters = 2)
+        val want = aggregateTrain(df, "id", "vec", m, k, iters = 2)
+        assert(got.books.map(bits) == want.books.map(bits), s"train m = $m, k = $k on $what")
+      }
+    }
+
+    // a duplicate among the first C rows by id: its twin wins every tie,
+    // so in the first round bucket (and cell) 1 stays empty and keeps its
+    // seed
+    val a = Seq(1f, 0.5f, -0.25f, 2f)
+    val twins = ((0L, a) +: (1L, a) +: (2L, Seq(-1f, 2f, 0.5f, -0.5f)) +:
+      (3 until 60).map(i => (i.toLong, Seq.fill(4)(rnd.nextGaussian().toFloat)))).toDF("id", "vec")
+    val seed = a.map(_.toDouble)
+    val km = Similarity.kMeans(twins, "id", "vec", c = 3, iters = 1)
+    assert(km(1) == seed, s"empty bucket moved: $km")
+    assert(bits(km) == bits(aggregateKMeans(twins, "id", "vec", c = 3, iters = 1)))
+    val pq = ProductQuantizer.train(twins, "id", "vec", m = 2, k = 3, iters = 1)
+    assert(pq.books.map(_(1)) == Seq(seed.take(2), seed.drop(2)), s"empty cell moved: $pq")
+    assert(pq.books.map(bits) ==
+      aggregateTrain(twins, "id", "vec", m = 2, k = 3, iters = 1).books.map(bits))
+
+    // one job per round, plus the init collect that fills the loop's cache
+    val df = inputs.last._2
+    val kMeansJobs = traced(Similarity.kMeans(df, "id", "vec", c = 8, iters = 2)).jobs
+    val trainJobs = traced(ProductQuantizer.train(df, "id", "vec", 4, 16, iters = 2)).jobs
+    info(s"jobs: kMeans(iters = 2) $kMeansJobs, ProductQuantizer.train(iters = 2) $trainJobs")
+    assert(kMeansJobs <= 3, s"kMeans(iters = 2) ran $kMeansJobs jobs")
+    assert(trainJobs <= 3, s"ProductQuantizer.train(iters = 2) ran $trainJobs jobs")
+  }
+
+  test("the Lloyd reduction merges on the executors: the driver gets C x dim sums, not a set per partition") {
+    import org.apache.spark.graftshim.ListenerShim
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val (cells, width, parts) = (512, 64, 16)
+    // one row per cell in every partition, so each partition's partials
+    // cover all C cells: merged on the driver, that would be 16 × C × dim
+    val rows = spark.range(0, cells.toLong * parts, 1, parts)
+      .select(array((0 until width).map(i => ((col("id") * (i + 1)) % 97 - 48).cast("float")): _*)
+        .as("vec"), col("id"))
+    assert(rows.rdd.getNumPartitions == parts)
+    val sc = spark.sparkContext
+    val resultBytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) { resultBytes.addAndGet(e.taskMetrics.resultSize); () }
+    }
+    ListenerShim.drain(sc)
+    sc.addSparkListener(listener)
+    val (n, s) =
+      try {
+        val out = Similarity.lloydSums(rows, cells, width)((row, _, _) => (row.getLong(1) % cells).toInt)
+        ListenerShim.drain(sc)
+        out
+      } finally sc.removeSparkListener(listener)
+    val sums = cells.toLong * width * 8
+    info(s"result bytes to the driver: ${resultBytes.get} (C x dim x 8 = $sums, x $parts partitions = ${sums * parts})")
+    assert(resultBytes.get <= 2 * sums, s"${resultBytes.get} result bytes for $sums bytes of sums")
+    // and the sums are the partition-order fold: row `p * C + c` is
+    // partition p's one row of cell c
+    assert(n.toSeq == Seq.fill(cells)(parts.toLong))
+    val want = (0 until cells).flatMap { c =>
+      (0 until width).map { i =>
+        (0 until parts).foldLeft(0.0) { (acc, p) =>
+          acc + ((p.toLong * cells + c) * (i + 1) % 97 - 48).toFloat.toDouble
+        }
+      }
+    }
+    assert(s.toSeq.map(java.lang.Double.doubleToRawLongBits) == want.map(java.lang.Double.doubleToRawLongBits))
   }
 }
